@@ -8,6 +8,7 @@ import contextlib
 import os
 import resource
 import statistics
+import subprocess
 import time
 from dataclasses import dataclass, field
 
@@ -154,7 +155,7 @@ class Context:
                 proc.stdin.close()  # the JVM exits when its stdin closes
             try:
                 proc.wait(timeout=30)
-            except Exception:
+            except subprocess.TimeoutExpired:
                 proc.kill()
                 proc.wait(timeout=30)
 
