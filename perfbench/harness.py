@@ -1,12 +1,11 @@
 """Run plumbing shared by the workloads: machine-sized settings, the Spark
-session's life cycle, timed set-up repetitions, measuring windows, memory
-readings and the engine-layer patches of a traced run."""
+session's life cycle, timed set-up repetitions, fixed-size measuring
+windows, memory readings and the engine-layer patches of a traced run."""
 
 from __future__ import annotations
 
 import contextlib
 import os
-import resource
 import statistics
 import subprocess
 import time
@@ -18,9 +17,6 @@ from perfbench.trace import NAME, PARENT, Tracer
 PACKAGE = "bytewax_iceberg_connector_spark"
 #: set-up repetitions per run; ``setup_s`` reports their median
 SETUP_REPS = 3
-#: fewest op samples a measuring window collects, so the tail rule can
-#: report a percentile at or above p50
-MIN_SAMPLES = 20
 
 
 def machine_settings() -> dict:
@@ -108,6 +104,9 @@ class Context:
         self.session_start_s = 0.0
         self.setup_times: list[float] = []
         self.tracer: Tracer | None = None
+        self.ops = 0
+        #: high-water marks in MiB, read right after the untraced window
+        self.peaks: dict[str, float] = {}
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.run_dir, *parts)
@@ -174,38 +173,54 @@ class Context:
     def setup_s(self) -> float:
         return self.session_start_s + statistics.median(self.setup_times)
 
-    def windows(self, measure) -> list[Window]:
-        """Untraced run: one window of ``seconds``. Traced run: an untraced
-        half, then a traced half with the layer patches installed; the
-        difference between the two is the tracing overhead."""
+    def windows(self, measure, units_per_s: float, floor: int) -> list[Window]:
+        """Measure windows of a fixed amount of work: ``measure(units)``
+        runs that many whole units (rounds, decks or passes) and returns
+        their window. An untraced run measures one window of
+        ``units_per_s`` units per second of ``--seconds``, at least
+        ``floor``; the count depends on the arguments only, never on the
+        engine's speed, so every run and commit reports the same tail
+        percentile. A traced run measures an untraced half, then a traced
+        half with the layer patches installed; the difference between the
+        two is the tracing overhead."""
         if not self.traced:
             steal = cpu_steal_s()
-            window = measure(self.seconds, MIN_SAMPLES)
+            window = measure(max(floor, round(self.seconds * units_per_s)))
             window.extra["cpu_steal_s"] = cpu_steal_s() - steal
+            self.peaks = self.peak_rss_mb()
             return [window]
-        half = self.seconds / 2.0
-        plain = measure(half, 1)
+        half = max(1, round(self.seconds / 2.0 * units_per_s))
+        plain = measure(half)
         self.tracer = Tracer()
         install_layers(self.tracer)
         try:
-            traced = measure(half, 1)
+            traced = measure(half)
         finally:
             self.tracer.unpatch()
         return [plain, traced]
+
+    def begin_op(self) -> None:
+        """Start the next op; spans opened from now on carry its index."""
+        self.ops += 1
+        if self.tracer is not None:
+            self.tracer.op = self.ops
 
     def span(self, name: str):
         """A span when tracing, else a no-op context."""
         return self.tracer.span(name) if self.tracer else contextlib.nullcontext()
 
-    def peak_rss_mb(self) -> float:
-        """Peak resident memory of the driver, the JVM and the JVM's child
-        processes (Spark's Python workers), in MiB."""
-        total_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    def peak_rss_mb(self) -> dict[str, float]:
+        """Peak resident memory in MiB: ``engine`` sums the JVM and its
+        child processes (Spark's Python workers); ``driver`` is this
+        process, which holds the benchmark's generators, model and checks
+        beside the engine's client code, so it is reported apart."""
+        engine_kb = 0
         pid = self.jvm_pid()
         if pid is not None:
             for p in _process_tree(pid):
-                total_kb += _vm_hwm_kb(p)
-        return total_kb / 1024.0
+                engine_kb += _vm_hwm_kb(p)
+        return {"engine": engine_kb / 1024.0,
+                "driver": _vm_hwm_kb(os.getpid()) / 1024.0}
 
 
 def _process_tree(root: int) -> list[int]:

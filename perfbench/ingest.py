@@ -6,9 +6,17 @@ drains each round of landed files through ``validate_schema`` ->
 partitioned table, so every micro-batch is one snapshot commit. The
 checkpoint carries over between rounds, as a long-lived stream's would.
 
+The sink runs on the reference's default configuration: a landed file
+holds one default flush (``batch_size`` rows, 1000), and the engine's own
+admission cap (``IcebergSinkConfig.source_admission_options``) turns that
+into one file per trigger. ``FILES_PER_ROUND`` and the window's round count
+were picked only to fit the run into the time budget with enough
+micro-batches for a tail well above the median.
+
 One op is one micro-batch; its latency is the trigger duration Spark's
 streaming progress reports for it. Throughput counts micro-batches over
-the client's wall time inside rounds, query start included.
+the client's wall time inside rounds, query start included. A window is
+a fixed number of rounds.
 """
 
 from __future__ import annotations
@@ -25,16 +33,33 @@ import pyarrow.parquet as pq
 from perfbench import gen, harness, stats
 from perfbench.harness import Outcome, Window
 
-ROWS_PER_FILE = 2000
-FILES_PER_ROUND = 6
-WARM_ROUNDS = 2
+FILES_PER_ROUND = 7
+#: files set-up lands for the untimed warm-up round; one round suffices,
+#: as only the first round runs slower than the rest
+WARM_FILES = 3
+#: rounds per second of ``--seconds``: 10 s give 4 rounds, 28 micro-batches,
+#: a tail at p64; never fewer than 3 rounds (21 micro-batches, p52)
+ROUNDS_PER_S = 0.4
+MIN_ROUNDS = 3
 SOURCE_DDL = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
               "event_type STRING, value DOUBLE, props STRING")
 COLUMNS = ("event_id", "ts", "user_id", "event_type", "value", "props",
            "props_k", "event_date")
-#: a round may overrun its window; stop starting rounds after this many
-#: window lengths even if the sample floor is not reached
-_MAX_WINDOW_FACTOR = 4
+
+
+def sink_config(warehouse: str):
+    """The reference's default sink configuration on a ``day(ts)``
+    partitioned table, with the landed files' size as the admission hint
+    so ``source_admission_options`` admits one file per trigger."""
+    from bytewax_iceberg_connector_spark import IcebergSinkConfig
+
+    batch = IcebergSinkConfig.model_fields["batch_size"].default
+    return IcebergSinkConfig(
+        table_name="lake.events",
+        warehouse_path=warehouse,
+        partition_spec=[("ts", "day")],
+        extra_options={"rows_per_file_hint": batch},
+    )
 
 
 class State:
@@ -43,6 +68,7 @@ class State:
         self.landing = os.path.join(base, "landing")
         self.checkpoint = os.path.join(base, "checkpoint")
         self.sink = sink
+        self.rows_per_file = sink.config.batch_size
         self.next_file = 0
         self.valid: list[pa.Table] = []
         os.makedirs(self.landing)
@@ -56,7 +82,7 @@ def land(ctx, st: State, n: int) -> int:
     """Producer side: write ``n`` new landing files; returns their bytes."""
     nbytes = 0
     for _ in range(n):
-        table, ok = gen.event_file(ctx.seed, st.next_file, ROWS_PER_FILE)
+        table, ok = gen.event_file(ctx.seed, st.next_file, st.rows_per_file)
         tmp = os.path.join(st.base, "incoming.parquet")
         nbytes += gen.write_parquet(table, tmp)
         # rename in, so the stream never lists a half-written file
@@ -66,16 +92,21 @@ def land(ctx, st: State, n: int) -> int:
     return nbytes
 
 
-def start_stream(ctx, st: State, checkpoint: str, files_per_trigger: int = 1):
+def start_stream(ctx, st: State, checkpoint: str,
+                 files_per_trigger: int | None = None):
     """The ingest pipeline; names are looked up at call time so a traced
-    run sees the patched operators."""
+    run sees the patched operators. The admission cap is the config's
+    unless ``files_per_trigger`` overrides it."""
     from pyspark.sql import functions as F
 
     from bytewax_iceberg_connector_spark import operators as ops
 
+    admission = st.sink.config.source_admission_options("parquet")
+    if files_per_trigger is not None:
+        admission = {"maxFilesPerTrigger": str(files_per_trigger)}
     src = (
         ctx.spark.readStream.schema(SOURCE_DDL)
-        .option("maxFilesPerTrigger", files_per_trigger)
+        .options(**admission)
         .parquet(st.landing)
     )
     checked = ops.validate_schema(src, {
@@ -91,7 +122,7 @@ def start_stream(ctx, st: State, checkpoint: str, files_per_trigger: int = 1):
 
 
 def run_round(ctx, st: State, checkpoint: str | None = None,
-              files_per_trigger: int = 1) -> list:
+              files_per_trigger: int | None = None) -> list:
     """Drain everything landed so far; returns the progress reports of the
     micro-batches that read rows."""
     q = start_stream(ctx, st, checkpoint or st.checkpoint, files_per_trigger)
@@ -103,19 +134,13 @@ def run_round(ctx, st: State, checkpoint: str | None = None,
             if _progress_value(p, "numInputRows") > 0]
 
 
-def measure(ctx, st: State, seconds: float, min_samples: int,
-            outcome: Outcome) -> Window:
+def measure(ctx, st: State, rounds: int, outcome: Outcome) -> Window:
     w = Window(extra={"progress": [], "rows": 0, "landed_bytes": 0,
                       "rounds": 0})
-    t_start = time.perf_counter()
-    while True:
-        elapsed = time.perf_counter() - t_start
-        if elapsed >= seconds and len(w.samples) >= min_samples:
-            break
-        if elapsed >= _MAX_WINDOW_FACTOR * seconds:
-            break
+    for _ in range(rounds):
         w.extra["landed_bytes"] += land(ctx, st, FILES_PER_ROUND)
         outcome.attempted += FILES_PER_ROUND
+        ctx.begin_op()
         t0 = time.perf_counter()
         try:
             with ctx.span("op.round"):
@@ -195,29 +220,24 @@ def check(ctx, st: State, outcome: Outcome) -> None:
 
 
 def run(ctx) -> Outcome:
-    from bytewax_iceberg_connector_spark import IcebergSinkConfig, LakeSink
+    from bytewax_iceberg_connector_spark import LakeSink
 
     def build(rep: int) -> State:
         base = ctx.path(f"ingest{rep}")
-        sink = LakeSink(ctx.spark, IcebergSinkConfig(
-            table_name="lake.events",
-            warehouse_path=os.path.join(base, "warehouse"),
-            partition_spec=[("ts", "day")],
-        ))
+        sink = LakeSink(ctx.spark,
+                        sink_config(os.path.join(base, "warehouse")))
         st = State(base, sink)
-        land(ctx, st, FILES_PER_ROUND)
+        land(ctx, st, WARM_FILES)
         return st
 
     st = ctx.setups(build)
     outcome = Outcome()
     phase = harness.Phases(outcome)
-    run_round(ctx, st)  # the files landed during set-up
-    for _ in range(WARM_ROUNDS - 1):
-        land(ctx, st, FILES_PER_ROUND)
-        run_round(ctx, st)
+    run_round(ctx, st)  # warm-up: the files landed during set-up
     phase("warm")
     outcome.windows = ctx.windows(
-        lambda secs, n: measure(ctx, st, secs, n, outcome)
+        lambda rounds: measure(ctx, st, rounds, outcome),
+        ROUNDS_PER_S, MIN_ROUNDS,
     )
     phase("measure")
     check(ctx, st, outcome)
@@ -225,13 +245,13 @@ def run(ctx) -> Outcome:
 
     main = outcome.windows[-1]
     lat = main.latencies()
-    summary = stats.summarize(lat) if len(lat) >= harness.MIN_SAMPLES else None
     outcome.detail.update({
         "op": "one micro-batch of one landed file "
-              f"({ROWS_PER_FILE} rows, trigger duration from Spark progress)",
+              f"({st.rows_per_file} rows, trigger duration from Spark "
+              "progress)",
         "ingest_rows_per_s": main.extra["rows"] / main.busy_s,
         "commit_p50_s": harness.p50(lat),
-        "commit_tail": summary,
+        "commit_tail": stats.tail_summary(lat),
         "rounds": main.extra["rounds"],
         "files_per_round": FILES_PER_ROUND,
     })

@@ -13,7 +13,17 @@ keeps (outside the op timer), and at the end the whole table is compared
 with the model before and after a final ``compact()``.
 
 One op is one client call, including building the input DataFrame of a
-write and collecting the result of a read.
+write and collecting the result of a read. A window is a fixed number of
+decks.
+
+Sizes: an append writes one flush of the reference's default sink
+configuration (``batch_size`` rows, 1000), and a merge upserts one flush,
+half updates of live ids and half new ids, as a streaming merge of one
+micro-batch would. The rest were picked only to fit the run into the time
+budget: the six preload commits, the 2000-id range scan, keeping six
+snapshots, and the deck of 11 reads, 4 writes and 1 maintenance op
+(reads the majority, as the mix intends; every read kind at least twice
+per deck).
 """
 
 from __future__ import annotations
@@ -30,8 +40,6 @@ from perfbench.harness import Outcome, Window
 from perfbench.model import LakeModel, check as model_check
 
 PRELOAD_COMMITS = 6
-ROWS_PER_APPEND = 1500
-MERGE_ROWS = 400
 RANGE_WIDTH = 2000
 KEEP_SNAPSHOTS = 6
 #: one deck: 11 reads, 4 writes, then one maintenance op
@@ -40,13 +48,18 @@ DECK = (("read_range", 5), ("read_agg", 2), ("read_asof", 2),
 READS = ("read_range", "read_agg", "read_asof", "read_incr")
 WRITES = ("append", "merge")
 COLUMNS = ("id", "ts", "grp", "val", "note")
+#: decks per second of ``--seconds``: 10 s give 2 decks, 32 ops, a tail at
+#: p68; never fewer than 2
+DECKS_PER_S = 0.2
+MIN_DECKS = 2
 _OPS_STREAM = 7
-_MAX_WINDOW_FACTOR = 4
 
 
 class State:
     def __init__(self, ctx, sink) -> None:
         self.sink = sink
+        #: rows per append and per merge: one default flush
+        self.batch = sink.config.batch_size
         self.model = LakeModel()
         self.next_id = 0
         self.op_index = 0  # seeds each op's generated rows
@@ -94,12 +107,12 @@ def _timed(ctx, name: str, call):
 
 
 def do_append(ctx, st: State) -> tuple[float, None]:
-    ids = np.arange(st.next_id, st.next_id + ROWS_PER_APPEND)
+    ids = np.arange(st.next_id, st.next_id + st.batch)
     table = gen.lake_rows(ctx.seed, st.op_index, ids)
     st.op_index += 1
     dt, _ = _timed(ctx, "op.append", lambda: st.sink.append(
         ctx.spark.createDataFrame(table)))
-    st.next_id += ROWS_PER_APPEND
+    st.next_id += st.batch
     rows = _rows(table)
     st.model.append(rows)
     st.user_bytes += _plain_bytes(table)
@@ -109,14 +122,14 @@ def do_append(ctx, st: State) -> tuple[float, None]:
 
 def do_merge(ctx, st: State) -> tuple[float, None]:
     r = st.mix_rng
-    old = r.choice(np.fromiter(st.model.rows, np.int64), MERGE_ROWS // 2,
-                   replace=False)
-    new = np.arange(st.next_id, st.next_id + MERGE_ROWS // 2)
+    half = st.batch // 2
+    old = r.choice(np.fromiter(st.model.rows, np.int64), half, replace=False)
+    new = np.arange(st.next_id, st.next_id + half)
     table = gen.lake_rows(ctx.seed, st.op_index, np.concatenate([old, new]))
     st.op_index += 1
     dt, _ = _timed(ctx, "op.merge", lambda: st.sink.merge(
         ctx.spark.createDataFrame(table), keys=["id"]))
-    st.next_id += MERGE_ROWS // 2
+    st.next_id += half
     st.model.merge(_rows(table))
     _after_commit(st, True, (0, 0.0))
     return dt, None
@@ -203,6 +216,7 @@ def step(ctx, st: State, kind: str, outcome: Outcome,
     """One op. Only the engine call is timed: input generation and the
     model upkeep and check run outside it."""
     outcome.attempted += w is not None
+    ctx.begin_op()
     try:
         if kind == "append":
             dt, mismatch = do_append(ctx, st)
@@ -224,16 +238,9 @@ def step(ctx, st: State, kind: str, outcome: Outcome,
         w.busy_s += dt
 
 
-def measure(ctx, st: State, seconds: float, min_samples: int,
-            outcome: Outcome) -> Window:
+def measure(ctx, st: State, decks: int, outcome: Outcome) -> Window:
     w = Window(extra={"user_bytes": st.user_bytes})
-    t_start = time.perf_counter()
-    while True:
-        elapsed = time.perf_counter() - t_start
-        if elapsed >= seconds and len(w.samples) >= min_samples:
-            break
-        if elapsed >= _MAX_WINDOW_FACTOR * seconds:
-            break
+    for _ in range(decks):
         run_deck(ctx, st, outcome, w)
     w.extra["user_bytes"] = st.user_bytes - w.extra["user_bytes"]
     return w
@@ -263,6 +270,7 @@ def run(ctx) -> Outcome:
     from bytewax_iceberg_connector_spark import IcebergSinkConfig, LakeSink
 
     def build(rep: int) -> State:
+        # the reference's defaults: batch_size sets the append and merge size
         sink = LakeSink(ctx.spark, IcebergSinkConfig(
             table_name="lake.mixed",
             warehouse_path=ctx.path(f"lake{rep}"),
@@ -281,7 +289,7 @@ def run(ctx) -> Outcome:
         step(ctx, st, kind, outcome, None)
     phase("warm")
     outcome.windows = ctx.windows(
-        lambda secs, n: measure(ctx, st, secs, n, outcome)
+        lambda decks: measure(ctx, st, decks, outcome), DECKS_PER_S, MIN_DECKS,
     )
     phase("measure")
     final_check(ctx, st, outcome)
@@ -294,23 +302,15 @@ def run(ctx) -> Outcome:
         "op": "one client call of the mix, maintenance included",
         "mixed_ops_per_s": main.ops_per_s(),
         "read_p50_s": harness.p50(reads),
-        "read_tail": _tail_or_none(reads),
+        "read_tail": stats.tail_summary(reads),
         "write_p50_s": harness.p50(writes),
-        "write_tail": _tail_or_none(writes),
+        "write_tail": stats.tail_summary(writes),
         "op_counts": {k: sum(1 for s in main.samples if s[0] == k)
                       for k in (*READS, *WRITES, "maintain")},
     })
     if ctx.tracer is not None:
         outcome.layers = layers(ctx, outcome)
     return outcome
-
-
-def _tail_or_none(values: list[float]):
-    pct = stats.tail_percentile(len(values))
-    if pct is None or pct < 50:
-        return {"n": len(values), "tail": None,
-                "why": "fewer than 20 samples"}
-    return stats.summarize(values)
 
 
 def layers(ctx, outcome: Outcome) -> dict[str, tuple[float, str]]:

@@ -9,7 +9,9 @@ registry queries). Each runs in this one process on ``local[<cpus>]`` with
 one closed-loop client. Inputs come only from ``--seed``.
 
 ``--trace 0`` prints the end-to-end metrics, measured with tracing off
-after an untimed warm-up. ``--trace 1`` measures an untraced half-window
+after an untimed warm-up, over a window of a fixed number of ops that
+``--seconds`` sets (see README.md), so the tail percentile never depends
+on the engine's speed. ``--trace 1`` measures an untraced half-window
 and then a traced half-window, and prints the per-layer metrics of the
 traced half plus the tracing overhead (traced minus untraced end-to-end
 figures); the spans are written to ``.perfbench_out/``.
@@ -51,16 +53,17 @@ def _args(argv: list[str]) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
-def _metrics(ctx: harness.Context, outcome: harness.Outcome) -> dict:
+def _metrics(ctx: harness.Context, outcome: harness.Outcome,
+             spec: dict) -> dict:
     if not ctx.traced:
         e2e = harness.e2e_metrics(outcome.windows[0])
         e2e["setup_s"] = (ctx.setup_s(), "s")
-        e2e["peak_rss_mb"] = (ctx.peak_rss_mb(), "MB")
+        e2e["peak_rss_mb"] = (ctx.peaks["engine"], "MB")
         return e2e
     plain, traced = outcome.windows
-    layers = harness.common_layers(ctx, ctx.tracer)
-    for name, value in all_layer_defaults().items():
-        layers.setdefault(name, value)
+    # a layer the workload does not reach reads 0
+    layers = {m["name"]: (0.0, m["unit"]) for m in spec["per_layer"]}
+    layers.update(harness.common_layers(ctx, ctx.tracer))
     layers.update(outcome.layers)
     p50 = harness.p50
     layers["trace.overhead_op_p50_s"] = (
@@ -70,36 +73,12 @@ def _metrics(ctx: harness.Context, outcome: harness.Outcome) -> dict:
     return layers
 
 
-def all_layer_defaults() -> dict:
-    """Every per-layer metric a workload may leave unreached, at 0."""
-    zero_s = ("operators.prep_s", "streaming.trigger_s",
-              "streaming.add_batch_s", "streaming.overhead_s",
-              "sources.load_s", "sink.scan_s",
-              "plans.build_s.relational", "plans.build_s.llm",
-              "plans.execute_s.relational", "plans.execute_s.llm")
-    out = {n: (0.0, "s") for n in zero_s}
-    for n in ("streaming.batches", "sources.load_calls",
-              "plans.jobs_per_query.relational", "plans.jobs_per_query.llm",
-              "plans.tasks_per_query.relational",
-              "plans.tasks_per_query.llm"):
-        out[n] = (0.0, "count")
-    out["sink.bytes_per_user_byte"] = (0.0, "ratio")
-    out["sink.space_amp"] = (0.0, "ratio")
-    return out
-
-
-def _declared_metrics(traced: bool) -> set[str] | None:
-    """Metric names BENCHMARK.json declares for this mode, if present."""
-    path = os.path.join(ROOT, "BENCHMARK.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        spec = json.load(f)
-    return {m["name"] for m in spec["per_layer" if traced else "end_to_end"]}
-
-
 def main(argv: list[str]) -> int:
     args = _args(argv)
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    declared = {m["name"]: m["unit"]
+                for m in spec["per_layer" if args.trace else "end_to_end"]}
     settings = harness.machine_settings()
     os.makedirs(os.path.join(ROOT, ".perfbench_run"), exist_ok=True)
     run_dir = tempfile.mkdtemp(prefix=f"{args.workload}-",
@@ -118,7 +97,7 @@ def main(argv: list[str]) -> int:
         workload = importlib.import_module(f"perfbench.{args.workload}")
         ctx.start_session()
         outcome = workload.run(ctx)
-        metrics = _metrics(ctx, outcome)
+        metrics = _metrics(ctx, outcome, spec)
         if ctx.tracer is not None:
             out_dir = os.path.join(ROOT, ".perfbench_out")
             os.makedirs(out_dir, exist_ok=True)
@@ -136,10 +115,10 @@ def main(argv: list[str]) -> int:
                 os.rmdir(os.path.dirname(run_dir))  # only when no other run
             except OSError:
                 pass
-    declared = _declared_metrics(bool(args.trace))
-    if declared is not None and set(metrics) != declared:
-        print(f"metrics {sorted(set(metrics) ^ declared)} differ from "
-              "BENCHMARK.json", file=sys.stderr)
+    measured = {k: u for k, (_v, u) in metrics.items()}
+    if measured != declared:
+        print(f"metrics {sorted(set(measured.items()) ^ set(declared.items()))}"
+              " differ from BENCHMARK.json", file=sys.stderr)
         return 1
     windows = outcome.windows
     detail = {
@@ -163,6 +142,10 @@ def main(argv: list[str]) -> int:
         lat = windows[0].latencies()
         detail["op_tail_percentile"] = harness.stats.tail(lat)[0]
         detail["cpu_steal_s"] = windows[0].extra["cpu_steal_s"]
+        detail["peak_rss_mb"] = {
+            **ctx.peaks,
+            "read": "right after the window, before the checks; the metric "
+                    "is the engine's (JVM and Python workers)"}
     else:
         detail["functions"] = (
             "functions/ kernels run inside Spark's Python workers and "

@@ -55,3 +55,13 @@ def summarize(values: list[float]) -> dict:
         "tail_pct": pct,
         "n": len(values),
     }
+
+
+def tail_summary(values: list[float]) -> dict:
+    """``summarize`` where the sample supports the tail rule at or above
+    p50; otherwise the sample count and why no tail is given."""
+    pct = tail_percentile(len(values))
+    if pct is None or pct < 50:
+        return {"n": len(values), "tail": None,
+                "why": f"fewer than {2 * TAIL_BEYOND} samples"}
+    return summarize(values)

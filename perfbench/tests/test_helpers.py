@@ -38,6 +38,28 @@ def test_tail_refuses_a_sample_too_small_for_p50():
         stats.tail([1.0] * 19)
 
 
+def test_tail_summary_gives_no_tail_below_twenty_samples():
+    assert stats.tail_summary([1.0] * 19)["tail"] is None
+    assert stats.tail_summary([1.0] * 20)["tail_pct"] == 50
+
+
+def test_window_size_depends_on_seconds_only():
+    from perfbench.harness import Context, Window
+
+    def measure(units):
+        sizes.append(units)
+        return Window()
+
+    for seconds, want in ((10, 4), (20, 8), (1, 3)):
+        sizes = []
+        ctx = Context("analytics", 1, seconds, False, "", {})
+        ctx.windows(measure, 0.4, 3)
+        assert sizes == [want]
+    sizes = []
+    Context("analytics", 1, 10, True, "", {}).windows(measure, 0.4, 3)
+    assert sizes == [2, 2]
+
+
 def test_summarize_is_order_insensitive():
     values = [0.3, 0.1, 0.2] * 10
     assert stats.summarize(values) == stats.summarize(sorted(values))
