@@ -9,15 +9,19 @@ planner gain.
 
 The lists are short because each query's first run costs 1.5-4x its later
 runs, so every query added lengthens the untimed warm-up as well as the
-window. A window is a fixed number of passes over both lists: four at
-``--seconds 10`` (28 queries; the nearest-rank median is a sample of the
-fourth fastest query, the tail at p64 one of the fifth), never fewer than
-three (21 queries, the fewest the tail rule accepts).
+window. A window is a fixed number of passes over both lists: five at
+``--seconds 10`` (35 queries; the nearest-rank median is the middle
+sample of the fourth fastest query, the tail at p71 the slowest sample
+of the fifth, where it meets the sixth), never fewer than three (21
+queries, the fewest the tail rule accepts). Four passes put the median
+on the second of four samples, which spread 0.26 over ten seeds on a
+shared 4-vCPU host against 0.18 for the query's own median.
 
 The warm-up pass collects every query's result and checks it against the
-query's ``oracle_sql()`` on DuckDB over the same parquet files. The
-measured window then alternates one pass over each list; one op is one
-query (plan build plus execution).
+query's ``oracle_sql()`` on DuckDB over the same parquet files; a second,
+untimed pass runs the queries as the window does. The measured window
+then alternates one pass over each list; one op is one query (plan build
+plus execution).
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ LLM = ("heavy_hitters", "text_analysis", "doc_fingerprint", "dedup_exact")
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 #: passes over both lists per second of ``--seconds``
-PASSES_PER_S = 0.4
+PASSES_PER_S = 0.5
 MIN_PASSES = 3
 
 
@@ -196,6 +200,9 @@ def run(ctx) -> Outcome:
             results[name] = (df.columns, [tuple(r) for r in df.collect()])
         except Exception as exc:  # noqa: BLE001 - a failed check, not a crash
             outcome.errors.append(f"{name}: warm-up failed: {exc!r}"[:300])
+    # one more untimed pass the way the window runs its queries: the
+    # first noop-forced pass still ran 1.2-1.5x slower than the later ones
+    measure(ctx, sf_dir, fns, 1, Outcome())
     phase("warm")
     outcome.windows = ctx.windows(
         lambda passes: measure(ctx, sf_dir, fns, passes, outcome),

@@ -116,10 +116,14 @@ class Context:
     def start_session(self) -> None:
         from bytewax_iceberg_connector_spark.session import get_spark
 
+        heap = self.settings["driver_memory"]
         conf = {
             "spark.sql.warehouse.dir": self.path("warehouse"),
             "spark.local.dir": self.path("local"),
+            # a fixed, pre-touched heap: the collector's sizing decisions,
+            # which follow timing noise, stay out of the resident size
             "spark.driver.extraJavaOptions": (
+                f"-Xms{heap} -XX:+AlwaysPreTouch "
                 f"-Dderby.system.home={self.run_dir} "
                 f"-Djava.io.tmpdir={self.path('tmp')}"
             ),
@@ -175,7 +179,7 @@ class Context:
 
     def windows(self, measure, units_per_s: float, floor: int) -> list[Window]:
         """Measure windows of a fixed amount of work: ``measure(units)``
-        runs that many whole units (rounds, decks or passes) and returns
+        runs that many whole units (decks or passes) and returns
         their window. An untraced run measures one window of
         ``units_per_s`` units per second of ``--seconds``, at least
         ``floor``; the count depends on the arguments only, never on the

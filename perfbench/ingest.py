@@ -1,46 +1,39 @@
-"""``ingest``: the reference's own traffic. A producer lands small
-event-schema parquet files (a share of them invalid); one closed-loop client
-drains each round of landed files through ``validate_schema`` ->
-``enrich_with_metadata`` -> ``LakeSink.write_stream`` with an
-``availableNow`` trigger and one file per trigger, into a ``day(ts)``
-partitioned table, so every micro-batch is one snapshot commit. The
-checkpoint carries over between rounds, as a long-lived stream's would.
+"""The streaming ingest path of ``lake_mixed``: the reference's own traffic.
+A producer lands small event-schema parquet files (a share of them
+invalid); an ``ingest`` op drains the files landed since the last one
+through ``validate_schema`` -> ``enrich_with_metadata`` ->
+``LakeSink.write_stream`` with an ``availableNow`` trigger and one file
+per trigger, into a ``day(ts)`` partitioned events table, so every
+micro-batch is one snapshot commit. The checkpoint carries over between
+ops, as a long-lived stream's would.
 
 The sink runs on the reference's default configuration: a landed file
 holds one default flush (``batch_size`` rows, 1000), and the engine's own
 admission cap (``IcebergSinkConfig.source_admission_options``) turns that
-into one file per trigger. ``FILES_PER_ROUND`` and the window's round count
-were picked only to fit the run into the time budget with enough
-micro-batches for a tail well above the median.
+into one file per trigger.
 
-One op is one micro-batch; its latency is the trigger duration Spark's
-streaming progress reports for it. Throughput counts micro-batches over
-the client's wall time inside rounds, query start included. A window is
-a fixed number of rounds.
+An op's latency is the client's call, query start to drained; each
+micro-batch's trigger duration comes from Spark's streaming progress
+reports and feeds the ``commit_*`` figures and the streaming layers.
 """
 
 from __future__ import annotations
 
 import io
 import os
-import time
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from perfbench import gen, harness, stats
-from perfbench.harness import Outcome, Window
+from perfbench import gen, harness
 
-FILES_PER_ROUND = 7
-#: files set-up lands for the untimed warm-up round; one round suffices,
-#: as only the first round runs slower than the rest
+#: files set-up lands for the untimed warm-up op
 WARM_FILES = 3
-#: rounds per second of ``--seconds``: 10 s give 4 rounds, 28 micro-batches,
-#: a tail at p64; never fewer than 3 rounds (21 micro-batches, p52)
-ROUNDS_PER_S = 0.4
-MIN_ROUNDS = 3
+#: files per trigger of the exactly-once replay check; wider triggers keep
+#: the replay short, and every epoch they issue was committed before
+REPLAY_FILES_PER_TRIGGER = 7
 SOURCE_DDL = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
               "event_type STRING, value DOUBLE, props STRING")
 COLUMNS = ("event_id", "ts", "user_id", "event_type", "value", "props",
@@ -62,7 +55,10 @@ def sink_config(warehouse: str):
     )
 
 
-class State:
+class Stream:
+    """The events table, its landing directory and checkpoint, and what
+    the producer has landed so far."""
+
     def __init__(self, base: str, sink) -> None:
         self.base = base
         self.landing = os.path.join(base, "landing")
@@ -71,6 +67,10 @@ class State:
         self.rows_per_file = sink.config.batch_size
         self.next_file = 0
         self.valid: list[pa.Table] = []
+        #: landed bytes, and per drained micro-batch its Spark progress
+        #: durations (ms) and input rows
+        self.landed_bytes = 0
+        self.batches: list[tuple[dict, int]] = []
         os.makedirs(self.landing)
 
 
@@ -78,21 +78,19 @@ def _progress_value(p, key: str):
     return p[key] if isinstance(p, dict) else getattr(p, key)
 
 
-def land(ctx, st: State, n: int) -> int:
-    """Producer side: write ``n`` new landing files; returns their bytes."""
-    nbytes = 0
+def land(ctx, st: Stream, n: int) -> None:
+    """Producer side: write ``n`` new landing files."""
     for _ in range(n):
         table, ok = gen.event_file(ctx.seed, st.next_file, st.rows_per_file)
         tmp = os.path.join(st.base, "incoming.parquet")
-        nbytes += gen.write_parquet(table, tmp)
+        st.landed_bytes += gen.write_parquet(table, tmp)
         # rename in, so the stream never lists a half-written file
         os.replace(tmp, os.path.join(st.landing, f"part-{st.next_file:06d}.parquet"))
         st.valid.append(table.filter(pa.array(ok)))
         st.next_file += 1
-    return nbytes
 
 
-def start_stream(ctx, st: State, checkpoint: str,
+def start_stream(ctx, st: Stream, checkpoint: str,
                  files_per_trigger: int | None = None):
     """The ingest pipeline; names are looked up at call time so a traced
     run sees the patched operators. The admission cap is the config's
@@ -121,8 +119,8 @@ def start_stream(ctx, st: State, checkpoint: str,
                                 trigger_override={"availableNow": True})
 
 
-def run_round(ctx, st: State, checkpoint: str | None = None,
-              files_per_trigger: int | None = None) -> list:
+def drain(ctx, st: Stream, checkpoint: str | None = None,
+          files_per_trigger: int | None = None) -> list:
     """Drain everything landed so far; returns the progress reports of the
     micro-batches that read rows."""
     q = start_stream(ctx, st, checkpoint or st.checkpoint, files_per_trigger)
@@ -134,30 +132,11 @@ def run_round(ctx, st: State, checkpoint: str | None = None,
             if _progress_value(p, "numInputRows") > 0]
 
 
-def measure(ctx, st: State, rounds: int, outcome: Outcome) -> Window:
-    w = Window(extra={"progress": [], "rows": 0, "landed_bytes": 0,
-                      "rounds": 0})
-    for _ in range(rounds):
-        w.extra["landed_bytes"] += land(ctx, st, FILES_PER_ROUND)
-        outcome.attempted += FILES_PER_ROUND
-        ctx.begin_op()
-        t0 = time.perf_counter()
-        try:
-            with ctx.span("op.round"):
-                progress = run_round(ctx, st)
-        except Exception as exc:  # noqa: BLE001 - counted, run goes on
-            outcome.failed += FILES_PER_ROUND
-            outcome.detail.setdefault("op_errors", []).append(repr(exc)[:300])
-            continue
-        finally:
-            w.busy_s += time.perf_counter() - t0
-        w.extra["rounds"] += 1
-        for p in progress:
-            dur = _progress_value(p, "durationMs")
-            w.samples.append(("commit", dur["triggerExecution"] / 1000.0))
-            w.extra["progress"].append(dur)
-            w.extra["rows"] += _progress_value(p, "numInputRows")
-    return w
+def ingest(ctx, st: Stream) -> None:
+    """Drain the landed files and keep each micro-batch's progress."""
+    for p in drain(ctx, st):
+        st.batches.append((_progress_value(p, "durationMs"),
+                           _progress_value(p, "numInputRows")))
 
 
 def _canonical(table: pa.Table) -> pd.DataFrame:
@@ -173,7 +152,7 @@ def _canonical(table: pa.Table) -> pd.DataFrame:
     return df
 
 
-def expected_rows(st: State) -> pa.Table:
+def expected_rows(st: Stream) -> pa.Table:
     valid = pa.concat_tables(st.valid)
     props_k = [int(s[6:-1]) for s in valid.column("props").to_pylist()]
     days = valid.column("ts").cast(pa.int64()).to_numpy() // 86_400_000_000
@@ -187,97 +166,50 @@ def content_hash(df: pd.DataFrame) -> int:
                .to_numpy().astype(np.uint64).sum())
 
 
-def check(ctx, st: State, outcome: Outcome) -> None:
+def check(ctx, st: Stream) -> tuple[list[str], float]:
+    """The events table against the generated valid rows (count and
+    order-insensitive hash), then the exactly-once contract: a replay from
+    a fresh checkpoint commits nothing. Returns the problems found and the
+    table's space amplification."""
+    problems = []
     back = st.sink.read().select(*COLUMNS).toArrow()
     got, want = _canonical(back), _canonical(expected_rows(st))
     if len(got) != len(want):
-        outcome.errors.append(f"read-back has {len(got)} rows, "
-                              f"expected {len(want)}")
+        problems.append(f"events read-back has {len(got)} rows, "
+                        f"expected {len(want)}")
     elif content_hash(got) != content_hash(want):
-        outcome.errors.append("read-back content hash differs from the "
-                              "generated valid rows")
-    outcome.detail["rows_read_back"] = len(got)
+        problems.append("events read-back content hash differs from the "
+                        "generated valid rows")
     plain = io.BytesIO()
     pq.write_table(back, plain, compression="snappy")
-    outcome.detail["space_amp"] = (
-        harness.dir_bytes(st.sink._path) / plain.getbuffer().nbytes
-    )
-    # exactly-once: a fresh checkpoint replays the landing dir from the
-    # start, re-issuing epochs 0, 1, ...; each must be recognised as
-    # committed and skipped. Wider triggers keep the replay short; every
-    # epoch they issue was committed before.
+    space_amp = harness.dir_bytes(st.sink._path) / plain.getbuffer().nbytes
+    # a fresh checkpoint replays the landing dir from the start,
+    # re-issuing epochs 0, 1, ...; each must be recognised as committed
     snaps_before = len(st.sink._log.snapshots())
-    run_round(ctx, st, checkpoint=os.path.join(st.base, "replay-checkpoint"),
-              files_per_trigger=FILES_PER_ROUND)
+    drain(ctx, st, checkpoint=os.path.join(st.base, "replay-checkpoint"),
+          files_per_trigger=REPLAY_FILES_PER_TRIGGER)
     snaps_after = len(st.sink._log.snapshots())
     rows_after = st.sink.read().count()
     if snaps_after != snaps_before or rows_after != len(got):
-        outcome.errors.append(
+        problems.append(
             f"replay from a fresh checkpoint committed "
             f"{snaps_after - snaps_before} snapshots and "
             f"{rows_after - len(got)} rows; expected none"
         )
+    return problems, space_amp
 
 
-def run(ctx) -> Outcome:
-    from bytewax_iceberg_connector_spark import LakeSink
-
-    def build(rep: int) -> State:
-        base = ctx.path(f"ingest{rep}")
-        sink = LakeSink(ctx.spark,
-                        sink_config(os.path.join(base, "warehouse")))
-        st = State(base, sink)
-        land(ctx, st, WARM_FILES)
-        return st
-
-    st = ctx.setups(build)
-    outcome = Outcome()
-    phase = harness.Phases(outcome)
-    run_round(ctx, st)  # warm-up: the files landed during set-up
-    phase("warm")
-    outcome.windows = ctx.windows(
-        lambda rounds: measure(ctx, st, rounds, outcome),
-        ROUNDS_PER_S, MIN_ROUNDS,
-    )
-    phase("measure")
-    check(ctx, st, outcome)
-    phase("check")
-
-    main = outcome.windows[-1]
-    lat = main.latencies()
-    outcome.detail.update({
-        "op": "one micro-batch of one landed file "
-              f"({st.rows_per_file} rows, trigger duration from Spark "
-              "progress)",
-        "ingest_rows_per_s": main.extra["rows"] / main.busy_s,
-        "commit_p50_s": harness.p50(lat),
-        "commit_tail": stats.tail_summary(lat),
-        "rounds": main.extra["rounds"],
-        "files_per_round": FILES_PER_ROUND,
-    })
-    if ctx.tracer is not None:
-        outcome.layers = layers(ctx, outcome)
-    return outcome
-
-
-def layers(ctx, outcome: Outcome) -> dict[str, tuple[float, str]]:
-    tracer = ctx.tracer
-    traced = outcome.windows[-1]
-    durs = traced.extra["progress"]
-    trig = [d["triggerExecution"] / 1000.0 for d in durs]
-    add = [d.get("addBatch", 0) / 1000.0 for d in durs]
+def layers(tracer, batches: list[tuple[dict, int]], ops: int,
+           ) -> dict[str, tuple[float, str]]:
+    """Operator and streaming layers of the ingest ops in ``batches``."""
+    trig = [d["triggerExecution"] / 1000.0 for d, _ in batches]
+    add = [d.get("addBatch", 0) / 1000.0 for d, _ in batches]
     prep = harness.top_level(tracer, "operators.prep")
-    c = tracer.counts
     return {
-        "operators.prep_s": (harness.ratio(sum(prep),
-                                           traced.extra["rounds"]), "s"),
+        "operators.prep_s": (harness.ratio(sum(prep), ops), "s"),
         "streaming.trigger_s": (harness.p50(trig), "s"),
         "streaming.add_batch_s": (harness.p50(add), "s"),
         "streaming.overhead_s": (
             harness.p50([t - a for t, a in zip(trig, add)]), "s"),
-        "streaming.batches": (float(len(durs)), "count"),
-        "sink.bytes_per_user_byte": (
-            harness.ratio(c.get("sink.append_bytes", 0),
-                          traced.extra["landed_bytes"]), "ratio"),
-        "sink.space_amp": (outcome.detail["space_amp"], "ratio"),
+        "streaming.batches": (float(len(batches)), "count"),
     }

@@ -1,63 +1,73 @@
-"""``lake_mixed``: reads beside writes and maintenance on one table.
+"""``lake_mixed``: reads beside writes, streaming ingest and maintenance.
 
-Set-up preloads a ``day(ts)``-partitioned table with many small append
+Set-up preloads a ``day(ts)``-partitioned table with small append
 commits. One closed-loop client then runs decks of ops over it, mostly
 reads: a pruned id-range scan (``read(prune=...)``), a full group-by
 aggregate, an ``as_of`` time-travel read and a ``read_incremental``; the
 writes are small ``append``s and ``merge`` upserts; each deck ends with
-``compact()`` + ``expire_snapshots()`` as one op. A deck has a fixed
+``compact()`` + ``expire_snapshots()`` as one op. Beside that table, the
+deck's ``ingest`` ops stream landed event files into an events table
+through the reference's own pipeline (``ingest.py``: validate, enrich,
+``write_stream``, one snapshot commit per micro-batch). A deck has a fixed
 composition and a seeded order, and windows hold whole decks, so every
 run measures the same mix whatever its seed or speed. Every
 read result is checked against a model of the op sequence the benchmark
-keeps (outside the op timer), and at the end the whole table is compared
-with the model before and after a final ``compact()``.
+keeps (outside the op timer); at the end the whole table is compared
+with the model before and after a final ``compact()``, and the events
+table with the generated valid rows and a replay from a fresh checkpoint.
 
 One op is one client call, including building the input DataFrame of a
-write and collecting the result of a read. A window is a fixed number of
-decks.
+write and collecting the result of a read; an ingest call counts one op
+per micro-batch, timed by Spark's progress report, while its whole call,
+stream start included, counts as busy time. A window is a fixed number
+of decks.
 
 Sizes: an append writes one flush of the reference's default sink
 configuration (``batch_size`` rows, 1000), and a merge upserts one flush,
 half updates of live ids and half new ids, as a streaming merge of one
 micro-batch would. The rest were picked only to fit the run into the time
-budget: the six preload commits, the 2000-id range scan, keeping six
-snapshots, and the deck of 11 reads, 4 writes and 1 maintenance op
-(reads the majority, as the mix intends; every read kind at least twice
-per deck).
+budget: the three preload commits, the 2000-id range scan, keeping six
+snapshots, two landed files per ingest op, and the deck of 11 reads,
+4 writes, 2 ingest ops and 1 maintenance op (reads the majority, as the
+mix intends; every read kind at least twice per deck).
 """
 
 from __future__ import annotations
 
 import io
+import os
 import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from perfbench import gen, harness, stats
+from perfbench import gen, harness, ingest, stats
 from perfbench.harness import Outcome, Window
 from perfbench.model import LakeModel, check as model_check
 
-PRELOAD_COMMITS = 6
+PRELOAD_COMMITS = 3
 RANGE_WIDTH = 2000
 KEEP_SNAPSHOTS = 6
-#: one deck: 11 reads, 4 writes, then one maintenance op
+#: one deck: 11 reads, 4 writes, 2 ingest ops, then one maintenance op
 DECK = (("read_range", 5), ("read_agg", 2), ("read_asof", 2),
-        ("read_incr", 2), ("append", 3), ("merge", 1))
+        ("read_incr", 2), ("append", 3), ("merge", 1), ("ingest", 2))
 READS = ("read_range", "read_agg", "read_asof", "read_incr")
 WRITES = ("append", "merge")
+#: landed files an ingest op drains, one micro-batch and commit each
+FILES_PER_INGEST = 2
 COLUMNS = ("id", "ts", "grp", "val", "note")
-#: decks per second of ``--seconds``: 10 s give 2 decks, 32 ops, a tail at
-#: p68; never fewer than 2
+#: decks per second of ``--seconds``: 10 s give 2 decks, 40 ops, a tail at
+#: p75; never fewer than 2
 DECKS_PER_S = 0.2
 MIN_DECKS = 2
 _OPS_STREAM = 7
 
 
 class State:
-    def __init__(self, ctx, sink) -> None:
+    def __init__(self, ctx, sink, events: ingest.Stream) -> None:
         self.sink = sink
+        self.events = events
         #: rows per append and per merge: one default flush
         self.batch = sink.config.batch_size
         self.model = LakeModel()
@@ -132,6 +142,12 @@ def do_merge(ctx, st: State) -> tuple[float, None]:
     st.next_id += half
     st.model.merge(_rows(table))
     _after_commit(st, True, (0, 0.0))
+    return dt, None
+
+
+def do_ingest(ctx, st: State) -> tuple[float, None]:
+    ingest.land(ctx, st.events, FILES_PER_INGEST)
+    dt, _ = _timed(ctx, "op.ingest", lambda: ingest.ingest(ctx, st.events))
     return dt, None
 
 
@@ -217,11 +233,14 @@ def step(ctx, st: State, kind: str, outcome: Outcome,
     model upkeep and check run outside it."""
     outcome.attempted += w is not None
     ctx.begin_op()
+    batches = len(st.events.batches)
     try:
         if kind == "append":
             dt, mismatch = do_append(ctx, st)
         elif kind == "merge":
             dt, mismatch = do_merge(ctx, st)
+        elif kind == "ingest":
+            dt, mismatch = do_ingest(ctx, st)
         elif kind == "maintain":
             dt, mismatch = do_maintain(ctx, st)
         else:
@@ -233,16 +252,28 @@ def step(ctx, st: State, kind: str, outcome: Outcome,
         return
     if mismatch:
         outcome.errors.append(mismatch)
-    if w is not None:
+    if w is None:
+        return
+    w.busy_s += dt
+    if kind == "ingest":
+        # the stream's unit of work is the micro-batch, one snapshot commit
+        # each: one sample per batch, timed by Spark's progress report
+        w.extra.setdefault("ingest_calls", []).append(dt)
+        w.samples.extend(("commit", d["triggerExecution"] / 1000.0)
+                         for d, _ in st.events.batches[batches:])
+    else:
         w.samples.append((kind, dt))
-        w.busy_s += dt
 
 
 def measure(ctx, st: State, decks: int, outcome: Outcome) -> Window:
-    w = Window(extra={"user_bytes": st.user_bytes})
+    w = Window()
+    user_bytes, landed = st.user_bytes, st.events.landed_bytes
+    batches = len(st.events.batches)
     for _ in range(decks):
         run_deck(ctx, st, outcome, w)
-    w.extra["user_bytes"] = st.user_bytes - w.extra["user_bytes"]
+    w.extra["user_bytes"] = (st.user_bytes - user_bytes
+                             + st.events.landed_bytes - landed)
+    w.extra["batches"] = st.events.batches[batches:]
     return w
 
 
@@ -264,6 +295,9 @@ def final_check(ctx, st: State, outcome: Outcome) -> None:
     if problem:
         outcome.errors.append(f"compact() changed content: {problem}")
     outcome.detail["rows"] = len(st.model.rows)
+    problems, events_amp = ingest.check(ctx, st.events)
+    outcome.errors.extend(problems)
+    outcome.detail["events_space_amp"] = events_amp
 
 
 def run(ctx) -> Outcome:
@@ -276,7 +310,11 @@ def run(ctx) -> Outcome:
             warehouse_path=ctx.path(f"lake{rep}"),
             partition_spec=[("ts", "day")],
         ))
-        st = State(ctx, sink)
+        base = ctx.path(f"ingest{rep}")
+        events = ingest.Stream(base, LakeSink(
+            ctx.spark, ingest.sink_config(os.path.join(base, "warehouse"))))
+        ingest.land(ctx, events, ingest.WARM_FILES)
+        st = State(ctx, sink, events)
         for _ in range(PRELOAD_COMMITS):
             do_append(ctx, st)
         return st
@@ -285,7 +323,7 @@ def run(ctx) -> Outcome:
     st = ctx.setups(build)
     phase = harness.Phases(outcome)
     # warm-up: every op kind once, so each code path is compiled
-    for kind in ("append", *READS, "merge", "maintain"):
+    for kind in ("append", *READS, "merge", "ingest", "maintain"):
         step(ctx, st, kind, outcome, None)
     phase("warm")
     outcome.windows = ctx.windows(
@@ -298,15 +336,23 @@ def run(ctx) -> Outcome:
     main = outcome.windows[-1]
     reads = [t for k, t in main.samples if k in READS]
     writes = [t for k, t in main.samples if k in WRITES]
+    ingests = main.extra.get("ingest_calls", [])
+    batches = main.extra["batches"]
+    commits = main.latencies("commit")
     outcome.detail.update({
-        "op": "one client call of the mix, maintenance included",
+        "op": "one client call of the mix, or one micro-batch of an ingest call",
         "mixed_ops_per_s": main.ops_per_s(),
         "read_p50_s": harness.p50(reads),
         "read_tail": stats.tail_summary(reads),
         "write_p50_s": harness.p50(writes),
         "write_tail": stats.tail_summary(writes),
-        "op_counts": {k: sum(1 for s in main.samples if s[0] == k)
-                      for k in (*READS, *WRITES, "maintain")},
+        "ingest_rows_per_s": harness.ratio(sum(n for _, n in batches),
+                                           sum(ingests)),
+        "ingest_call_p50_s": harness.p50(ingests),
+        "commit_p50_s": harness.p50(commits),
+        "commit_tail": stats.tail_summary(commits),
+        "op_s": {k: sorted(round(t, 4) for t in main.latencies(k))
+                 for k in (*READS, *WRITES, "commit", "maintain")},
     })
     if ctx.tracer is not None:
         outcome.layers = layers(ctx, outcome)
@@ -323,4 +369,6 @@ def layers(ctx, outcome: Outcome) -> dict[str, tuple[float, str]]:
             harness.ratio(c.get("sink.append_bytes", 0),
                           traced.extra["user_bytes"]), "ratio"),
         "sink.space_amp": (outcome.detail["space_amp"], "ratio"),
+        **ingest.layers(tracer, traced.extra["batches"],
+                        len(traced.extra.get("ingest_calls", []))),
     }

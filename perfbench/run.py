@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Lake benchmark: run one named workload and print its metrics.
 
-    python3 perfbench/run.py --workload ingest --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload lake_mixed --seed 1 --seconds 10 --trace 0
 
-Workloads: ``ingest`` (streaming sink), ``lake_mixed`` (reads beside writes
-and maintenance on one table), ``analytics`` (relational and LLM-kernel
-registry queries). Each runs in this one process on ``local[<cpus>]`` with
-one closed-loop client. Inputs come only from ``--seed``.
+Workloads: ``lake_mixed`` (reads beside writes and maintenance on one
+table, and the streaming ingest path into another), ``analytics``
+(relational and LLM-kernel registry queries). Each runs in this one
+process on ``local[<cpus>]`` with one closed-loop client. Inputs come
+only from ``--seed``.
 
 ``--trace 0`` prints the end-to-end metrics, measured with tracing off
 after an untimed warm-up, over a window of a fixed number of ops that
@@ -41,7 +42,7 @@ sys.path.insert(0, ROOT)
 
 from perfbench import harness  # noqa: E402
 
-WORKLOADS = ("ingest", "lake_mixed", "analytics")
+WORKLOADS = ("lake_mixed", "analytics")
 
 
 def _args(argv: list[str]) -> argparse.Namespace:

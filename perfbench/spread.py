@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run-to-run spread of the end-to-end metrics.
 
-    python3 perfbench/spread.py --workload ingest --seeds 1-10 --seconds 10
+    python3 perfbench/spread.py --workload lake_mixed --seeds 1-10 --seconds 10
 
 Runs ``run.py`` once per seed, one run at a time, and prints per metric
 the median, the quartiles and the interquartile range as a share of the
