@@ -18,13 +18,16 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import sql_helper
+
 #: decimal(18, s) holds +/-9.99e(17-s) — cents-exact up to ~1e13 rows of
 #: 1e4-magnitude values, enough for 100 TB fact tables; Spark widens the
 #: accumulator to decimal(28+, s) during SUM so overflow is not a concern.
 _PREC = 18
 
 
-def dec(col: Column | str, scale: int = 2) -> Column:
+@sql_helper
+def dec(expr: str, scale: int = 2) -> str:
     """Decimal-exact cast with a NON-FINITE ABORT guard.
 
     Spark casts NaN/±Inf to decimal as NULL even under ANSI (checked on
@@ -35,25 +38,30 @@ def dec(col: Column | str, scale: int = 2) -> Column:
     so this guard also keeps the two engines' contracts identical.
     NULL passes through (absent ≠ poisoned); the branch is two codegen
     comparisons per value — measured noise-level on the hot aggregates.
+
+    ``dec.sql`` is the same guard as text for plans built from ``F.expr``
+    strings (r12 sweep find: a bare ``cast(x as decimal)`` there NULLed a
+    NaN price on Spark while DuckDB aborted). The DuckDB oracle side needs
+    no twin: its bare CAST aborts on non-finite input natively.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    d = c.cast("double")
-    bad = F.isnan(d) | (F.abs(d) == F.lit(float("inf")))
-    return F.when(
-        c.isNull() | ~bad, c.cast(f"decimal({_PREC},{scale})")
-    ).otherwise(
-        F.raise_error(
-            F.lit("non-finite value in decimal-exact measure")
-        )
+    e = f"({expr})"
+    return (
+        f"CASE WHEN {e} IS NULL OR NOT (isnan(cast({e} as double)) "
+        f"OR abs(cast({e} as double)) = cast('Infinity' as double)) "
+        f"THEN cast({e} as decimal({_PREC},{scale})) "
+        f"ELSE raise_error('non-finite value in decimal-exact measure') "
+        f"END"
     )
 
 
-def dsum(col: Column | str, scale: int = 2) -> Column:
+@sql_helper
+def dsum(expr: str, scale: int = 2) -> str:
     """Exact decimal sum, surfaced as double."""
-    return F.sum(dec(col, scale)).cast("double")
+    return f"cast(sum({dec.sql(expr, scale)}) as double)"
 
 
-def davg(col: Column | str, scale: int = 2) -> Column:
+@sql_helper
+def davg(expr: str, scale: int = 2) -> str:
     """Deterministic average: exact decimal sum / exact count, in double.
 
     IEEE-754 double division of identical operands is deterministic across
@@ -63,28 +71,7 @@ def davg(col: Column | str, scale: int = 2) -> Column:
     ANSI Spark would throw DIVIDE_BY_ZERO there while DuckDB's x/0 is
     NULL; dividing by NULL instead yields the oracle's NULL average.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(dec(c, scale)).cast("double") / F.nullif(
-        F.count(c), F.lit(0)
-    )
-
-
-def dec_sql(expr: str, scale: int = 2) -> str:
-    """Spark-dialect EXPRESSION-STRING twin of dec(): the guarded decimal
-    cast for plans that build aggregates via F.expr strings (r12 sweep
-    find: order_reconciliation and a dozen siblings cast measures with
-    bare `cast(x as decimal)` inside expr text, so a NaN-poisoned price
-    silently NULLed value mass on Spark while DuckDB's native CAST
-    aborted — a one-sided abort OUTSIDE the documented shared-text sql_*
-    boundary). The DuckDB oracle side needs no twin: its bare CAST
-    aborts on non-finite input natively."""
-    return (
-        f"CASE WHEN {expr} IS NULL OR NOT (isnan(cast({expr} as double)) "
-        f"OR abs(cast({expr} as double)) = cast('Infinity' as double)) "
-        f"THEN cast({expr} as decimal({_PREC},{scale})) "
-        f"ELSE raise_error('non-finite value in decimal-exact measure') "
-        f"END"
-    )
+    return f"{dsum.sql(expr, scale)} / nullif(count({expr}), 0)"
 
 
 def sql_dsum(expr: str, scale: int = 2) -> str:

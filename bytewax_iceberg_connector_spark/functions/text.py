@@ -1,7 +1,8 @@
 """Text-analysis primitives for training-data pipelines (north-star surface).
 
-All JVM-side Column expressions (split/transform/aggregate — codegen, no
+All JVM-side expressions (split/transform/aggregate — codegen, no
 Python), designed so each has a DuckDB-expressible mirror for the oracle.
+The token family is SQL text (``sql_helper``): one parse per call.
 
 Scale: everything here is embarrassingly parallel row-wise work; the only
 shuffles appear downstream (groupBy / self-join in the dedup plans). Shingle
@@ -16,6 +17,8 @@ import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from . import sql_helper
 
 #: tiny embedded stopword lists for the language-ID heuristic. Deliberately
 #: minimal: real lang-id (fastText etc.) is a model dependency; the heuristic
@@ -34,21 +37,22 @@ STOPWORDS = {
 #: RE2 does NOT — so a \v-separated document tokenized differently on
 #: the two engines (28 token-count divergences from one codepoint).
 #: Same rendered class everywhere: JVM split, Python kernels, and every
-#: DuckDB oracle (WS_CLASS_SQL).
+#: DuckDB oracle (WS_CLASS_SQL). Engine SQL text quotes it as a raw
+#: literal (r'...'): a plain Spark literal would unescape \x0B to x0B.
 WS_CLASS = r"[ \t\n\x0B\f\r]"
 WS_CLASS_SQL = r"[ \t\n\x0b\f\r]"
 
 
-def tokens(col: Column | str, lowercase: bool = True) -> Column:
+@sql_helper
+def tokens(expr: str, lowercase: bool = True) -> str:
     """Whitespace tokenization → array<string> (empties removed)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
-    return F.filter(F.split(c, WS_CLASS + "+"), lambda t: t != "")
+    text = f"lower({expr})" if lowercase else expr
+    return f"filter(split({text}, r'{WS_CLASS}+'), t -> t != '')"
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col)).cast("long")
+@sql_helper
+def token_count(expr: str) -> str:
+    return f"cast(size({tokens.sql(expr)}) as bigint)"
 
 
 _BPE_RUNS = r"[a-z]+|[0-9]+|[^a-z0-9 \t\n\x0B\f\r]"
@@ -93,55 +97,61 @@ SQL_BPE_COUNT = (
 )
 
 
-def stopword_hits(col: Column | str, lang: str = "en") -> Column:
+@sql_helper
+def stopword_hits(expr: str, lang: str = "en") -> str:
     """Count of tokens that are stopwords of ``lang``."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(sw, t))).cast("long")
+    sw = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
+    return (f"cast(size(filter({tokens.sql(expr)}, "
+            f"t -> array_contains(array({sw}), t))) as bigint)")
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    n = token_count(col)
-    return F.when(n > 0, stopword_hits(col, lang) / n).otherwise(F.lit(0.0))
+@sql_helper
+def stopword_ratio(expr: str, lang: str = "en") -> str:
+    n = token_count.sql(expr)
+    return (f"CASE WHEN {n} > 0 THEN {stopword_hits.sql(expr, lang)} / {n} "
+            f"ELSE 0D END")
 
 
-def lang_id(col: Column | str, min_ratio: float = 0.05) -> Column:
+@sql_helper
+def lang_id(expr: str, min_ratio: float = 0.05) -> str:
     """Heuristic language ID: argmax stopword ratio across embedded lists,
     'und' (undetermined) when no language clears ``min_ratio``.
 
     Deterministic tie-break: language list order en > es > de (strictly-
     greater comparison keeps the earlier winner on ties).
     """
-    n = token_count(col)
-    best_lang = F.lit("und")
-    best_hits = F.lit(int(0)).cast("long")
+    n = token_count.sql(expr)
+    best_lang, best_hits = "'und'", "0L"
     for code in STOPWORDS:  # insertion order: en, es, de
-        h = stopword_hits(col, code)
-        is_better = (h > best_hits) & (h >= F.lit(min_ratio) * n)
-        best_lang = F.when(is_better, F.lit(code)).otherwise(best_lang)
-        best_hits = F.when(is_better, h).otherwise(best_hits)
+        h = stopword_hits.sql(expr, code)
+        better = f"({h} > {best_hits} AND {h} >= {min_ratio!r}D * {n})"
+        best_lang = f"CASE WHEN {better} THEN '{code}' ELSE {best_lang} END"
+        best_hits = f"CASE WHEN {better} THEN {h} ELSE {best_hits} END"
     return best_lang
 
 
-def quality_criteria_met(col: Column | str) -> Column:
+@sql_helper
+def quality_criteria_met(expr: str) -> str:
     """Integer count (0-3) of quality criteria met: length band +
     mean-token-length band + stopword presence. The integer form is what
     downstream thresholds should compare against (``crit >= 2`` is exact;
     ``score >= 2/3.0`` drags float representation into a boundary test)."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_tok = token_count(col)
-    n_chars = F.length(c).cast("long")
-    mean_tok = F.when(n_tok > 0, n_chars / n_tok).otherwise(F.lit(0.0))
-    len_ok = (n_chars >= 100) & (n_chars <= 20_000)
-    tok_ok = (mean_tok >= 3.0) & (mean_tok <= 12.0)
-    sw_ok = stopword_ratio(col) >= 0.05
-    return len_ok.cast("int") + tok_ok.cast("int") + sw_ok.cast("int")
+    n_tok = token_count.sql(expr)
+    n_chars = f"cast(length({expr}) as bigint)"
+    mean_tok = f"CASE WHEN {n_tok} > 0 THEN {n_chars} / {n_tok} ELSE 0D END"
+    return (
+        f"cast({n_chars} >= 100 AND {n_chars} <= 20000 as int)"
+        f" + cast({mean_tok} >= 3D AND {mean_tok} <= 12D as int)"
+        f" + cast({stopword_ratio.sql(expr)} >= 0.05D as int)"
+    )
 
 
-def quality_score(col: Column | str) -> Column:
+@sql_helper
+def quality_score(expr: str) -> str:
     """Composite [0,1] quality heuristic (criteria/3). Mirrors the shape of
     production quality filters (C4/Gopher-style rules) with exactly
     reproducible arithmetic."""
-    return quality_criteria_met(col).cast("double") / 3.0
+    return f"cast({quality_criteria_met.sql(expr)} as double) / 3D"
 
 
 #: PII patterns — RE2-safe (no lookbehind, DuckDB-compatible) so the same
@@ -170,20 +180,21 @@ def redact_pii(col: Column | str) -> Column:
     return F.regexp_replace(out, PII_PHONE_RE, "<PHONE>")
 
 
-def normalize_text(col: Column | str) -> Column:
+@sql_helper
+def normalize_text(expr: str) -> str:
     """Dedup normalization: lowercase, collapse whitespace, trim."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), WS_CLASS + "+", " "))
+    return f"trim(regexp_replace(lower({expr}), r'{WS_CLASS}+', ' '))"
 
 
-def fingerprint(col: Column | str) -> Column:
+@sql_helper
+def fingerprint(expr: str) -> str:
     """Deterministic 128-bit content fingerprint of normalized text (md5
     hex). Cross-engine stable (DuckDB md5() matches), unlike murmur3 whose
     seeds differ between engines."""
-    return F.md5(normalize_text(col).cast("binary"))
+    return f"md5(cast({normalize_text.sql(expr)} as binary))"
 
 
-def shingles(col: Column | str, n: int = 3) -> Column:
+def shingles(col: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles → array<string>.
 
     Documents with fewer than ``n`` tokens yield an EMPTY array and null
@@ -211,7 +222,7 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def shingle_hashes(col: Column | str, n: int = 3) -> Column:
+def shingle_hashes(col: str, n: int = 3) -> Column:
     """Distinct n-gram shingles as 64-bit hashes (array<bigint>).
 
     The scale form: downstream minhash/LSH only needs hash identity, and a

@@ -73,8 +73,10 @@ class ContinuousAggregate:
             (F.col(e) if isinstance(e, str) else e).alias(name)
             for name, e in self.group_exprs.items()
         ]
+        # dec() takes SQL text: quote the user's column name as one identifier
         sums = [
-            F.sum(dec(src, _SUM_SCALE)).cast(f"decimal(18,{_SUM_SCALE})").alias(out)
+            F.sum(dec(f"`{src.replace('`', '``')}`", _SUM_SCALE))
+            .cast(f"decimal(18,{_SUM_SCALE})").alias(out)
             for out, src in self.measures.items()
         ]
         return df.groupBy(*keys).agg(*sums, F.count("*").alias("n_rows"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_sql, measure_domain, sql_measure_domain
+from ..functions.numeric import dec, measure_domain, sql_measure_domain
 from ..sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -167,8 +167,6 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value column (or one with the input cached), never a wide
     exchange. The classic two-pass parallel z-score plan.
     """
-    from ..functions.numeric import dec
-
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     stats = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -951,8 +949,6 @@ def ab_test_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing else moves. The bucket expression composes into the scan
     projection (codegen), so assignment costs zero extra passes.
     """
-    from ..functions.numeric import dec
-
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("value").isNotNull())
@@ -1209,7 +1205,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.expr(
-                f"cast(floor(sum({dec_sql('o_totalprice')}) * 100)"
+                f"cast(floor(sum({dec.sql('o_totalprice')}) * 100)"
                 " as bigint)"
             ).alias("cents"),
         )
@@ -1314,7 +1310,7 @@ def quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             F.year("o_orderdate").cast("long").alias("o_year"),
             F.expr(
-                f"cast(floor({dec_sql('o_totalprice')} * 100)"
+                f"cast(floor({dec.sql('o_totalprice')} * 100)"
                 " as bigint)"
             ).alias("cents"),
         )
@@ -1645,7 +1641,7 @@ def cohort_revenue_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "year(o_orderdate) * 12 + month(o_orderdate) - 1"
         ).cast("long").alias("m"),
         F.expr(
-            f"cast(floor({dec_sql('o_totalprice')} * 100) as bigint)"
+            f"cast(floor({dec.sql('o_totalprice')} * 100) as bigint)"
         ).alias("cents"),
     )
     wc = Window.partitionBy("o_custkey")

@@ -124,7 +124,7 @@ ORDER BY token_id
 _SPAN_K = 3
 
 
-def _pos_grams(col, k: int):
+def _pos_grams(col: str, k: int):
     """Positional (NON-distinct) word k-grams → array<string>, gram i
     starting at token i. Same O(tokens) zip_with construction as
     ``X.shingles`` (n whole-array slices, one concat per gram) minus the
@@ -190,7 +190,7 @@ def span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = docs.select(
         "doc_id",
         "source",
-        F.posexplode(_pos_grams(F.col("text"), k)).alias("pos0", "gram"),
+        F.posexplode(_pos_grams("text", k)).alias("pos0", "gram"),
     ).select("doc_id", "source", (F.col("pos0") + 1).alias("pos"),
              F.xxhash64("gram").alias("h"))
     wh = Window.partitionBy("h")
@@ -1264,7 +1264,7 @@ def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id").isNotNull()
     )
-    t = X.tokens(F.col("text"))
+    t = X.tokens("text")
     cnt = F.greatest(F.size(t) - (_WINNOW_K - 1), F.lit(0))
     grams = F.slice(t, 1, cnt)
     for i in range(1, _WINNOW_K):

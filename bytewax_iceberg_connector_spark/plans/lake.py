@@ -488,9 +488,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("quality").isNull().cast("long"))
             .cast("long")
             .alias("n_pre_evolution"),
-            dsum(F.coalesce(F.col("quality"), F.lit(0.0))).alias(
-                "quality_mass"
-            ),
+            dsum("coalesce(quality, 0D)").alias("quality_mass"),
         )
         .orderBy("event_type")
     )

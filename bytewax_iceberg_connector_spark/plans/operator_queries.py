@@ -177,7 +177,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("event_type", "weight")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            dsum(F.col("value") * F.col("weight")).alias("weighted_value"),
+            dsum("value * weight").alias("weighted_value"),
         )
         .orderBy("event_type")
     )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec_sql
+from ..functions.numeric import dec
 from ..sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -523,8 +523,6 @@ def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     `table_profile`'s shape with zero distincts, so no Expand and no
     shuffle beyond the single-partition final combine.
     """
-    from ..functions.numeric import dec
-
     li = load_table(spark, sf_dir, "lineitem")
     aggs = []
     for x, y, sx, sy in _CORR_PAIRS:
@@ -628,7 +626,7 @@ def benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.substring(
                 F.expr(
-                    f"cast(cast(floor({dec_sql('o_totalprice')}"
+                    f"cast(cast(floor({dec.sql('o_totalprice')}"
                     " * 100) as bigint) as string)"
                 ),
                 1,
@@ -708,12 +706,10 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks broadcast vs shuffle by size), then a 1-row rollup. A full
     outer join carries the lineless/headless tails.
     """
-    from ..functions.numeric import dec
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.expr(
-            f"cast(floor({dec_sql('o_totalprice')} * 100)"
+            f"cast(floor({dec.sql('o_totalprice')} * 100)"
             " as bigint)"
         ).alias("head_cents"),
     )
@@ -723,9 +719,9 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_orderkey").alias("o_orderkey"))
         .agg(
             F.expr(
-                f"cast(floor(sum({dec_sql('l_extendedprice')}"
-                f" * (1 - {dec_sql('l_discount')})"
-                f" * (1 + {dec_sql('l_tax')})) * 100) as bigint)"
+                f"cast(floor(sum({dec.sql('l_extendedprice')}"
+                f" * (1 - {dec.sql('l_discount')})"
+                f" * (1 + {dec.sql('l_tax')})) * 100) as bigint)"
             ).alias("line_cents")
         )
     )
@@ -868,7 +864,7 @@ def revenue_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.expr(
-                f"cast(floor(sum({dec_sql('o_totalprice')}) * 100)"
+                f"cast(floor(sum({dec.sql('o_totalprice')}) * 100)"
                 " as bigint)"
             ).alias("cents")
         )
@@ -1049,7 +1045,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_nationkey",
             "c_mktsegment",
             F.expr(
-                f"cast(floor({dec_sql('c_acctbal')} * 100)"
+                f"cast(floor({dec.sql('c_acctbal')} * 100)"
                 " as bigint) div 10000"
             ).alias("bal_bucket"),
         )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import (davg, dec, dec_sql, dsum, finite,
+from ..functions.numeric import (davg, dec, dsum, finite,
                                  finite_expr, measure_domain, sql_davg,
                                  sql_dsum, sql_finite, sql_measure_domain)
 from ..sources.tables import load_table, register_views
@@ -31,9 +31,12 @@ from ..sources.tables import load_table, register_views
 # shared expressions (Spark + SQL mirrors)
 # ---------------------------------------------------------------------------
 
-def _disc_price():
-    """l_extendedprice * (1 - l_discount), exact in decimal (scale 4)."""
-    return dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))
+#: l_extendedprice * (1 - l_discount), exact in decimal (scale 4)
+_DISC_PRICE = (
+    f"{dec.sql('l_extendedprice')}"
+    f" * (cast(1 as decimal(18,2)) - {dec.sql('l_discount')})"
+)
+_SUM_DISC_PRICE = f"cast(sum({_DISC_PRICE}) as double)"
 
 
 _SQL_DISC_PRICE = (
@@ -85,8 +88,9 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the result deterministic under any reduction order.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    charge = _disc_price().cast("decimal(18,4)") * (
-        F.lit(1).cast("decimal(18,2)") + dec("l_tax")
+    charge = (
+        f"cast({_DISC_PRICE} as decimal(18,4))"
+        f" * (cast(1 as decimal(18,2)) + {dec.sql('l_tax')})"
     )
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -94,8 +98,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             dsum("l_quantity").alias("sum_qty"),
             dsum("l_extendedprice").alias("sum_base_price"),
-            F.sum(_disc_price()).cast("double").alias("sum_disc_price"),
-            F.sum(charge).cast("double").alias("sum_charge"),
+            F.expr(_SUM_DISC_PRICE).alias("sum_disc_price"),
+            F.expr(f"cast(sum({charge}) as double)").alias("sum_charge"),
             davg("l_quantity").alias("avg_qty"),
             davg("l_extendedprice").alias("avg_price"),
             davg("l_discount").alias("avg_disc"),
@@ -153,7 +157,7 @@ def join_inner_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(t["region"]).where(F.col("r_name") == "AMERICA"),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(F.sum(_disc_price()).cast("double").alias("revenue"),
+        .agg(F.expr(_SUM_DISC_PRICE).alias("revenue"),
              F.count("*").alias("n_items"))
         .orderBy("n_name")
     )
@@ -1082,7 +1086,7 @@ def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _correlated_sql(cast_fn) -> str:
     """One template, two decimal-cast dialects: the oracle's bare CAST
-    aborts on non-finite input natively; the Spark arm needs dec_sql's
+    aborts on non-finite input natively; the Spark arm needs dec.sql's
     raise_error guard or a NaN price silently NULLs out of the sum
     (r12 measure-poisoning sweep)."""
     c = cast_fn("o_totalprice")
@@ -1099,7 +1103,7 @@ ORDER BY o_orderpriority
 
 
 _SQL_CORRELATED = _correlated_sql(lambda c: f"CAST({c} AS DECIMAL(18,2))")
-_SQL_CORRELATED_SPARK = _correlated_sql(dec_sql)
+_SQL_CORRELATED_SPARK = _correlated_sql(dec.sql)
 
 # ---------------------------------------------------------------------------
 # registry
@@ -2005,7 +2009,7 @@ _PCTL_APPROX_CENTS = """
 # non-finite input natively; Spark's silently NULLs (r12 measure sweep)
 _PCTL_APPROX_CENTS_SPARK = f"""
   SELECT o_orderpriority,
-         CAST({dec_sql('o_totalprice')} * 100 AS BIGINT) AS cents
+         CAST({dec.sql('o_totalprice')} * 100 AS BIGINT) AS cents
   FROM orders
 """
 
@@ -2096,7 +2100,8 @@ def semi_reduced_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             dsum(
-                dec("l_extendedprice", 2) * (1 - dec("l_discount", 2)), 4
+                f"{dec.sql('l_extendedprice')}"
+                f" * (1 - {dec.sql('l_discount')})", 4
             ).alias("revenue"),
         )
         .orderBy("p_brand")
@@ -2909,8 +2914,6 @@ def supplier_share_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k filter applies LAST so rank deltas see the full field.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    from ..functions.numeric import dec
-
     ys = (
         li.where(F.col("l_shipdate").isNotNull())
         .groupBy(
@@ -3017,14 +3020,12 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (unknown coordinates cannot be ranked).
     """
     part = load_table(spark, sf_dir, "part")
-    from ..functions.numeric import dec
-
     pts = part.where(
         F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull()
     ).select(
         "p_partkey",
         F.expr(
-            f"cast(floor({dec_sql('p_retailprice')} * 100)"
+            f"cast(floor({dec.sql('p_retailprice')} * 100)"
             " as bigint)"
         ).alias("price_cents"),
         F.col("p_size").cast("long").alias("size"),

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import dec, dec_sql, dsum, sql_dsum
+from ..functions.numeric import dec, dsum, sql_dsum
 from ..operators.asof import asof_join
 from ..sources.tables import load_table
 
@@ -172,7 +172,10 @@ def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_items"),
             # exact-decimal product & sum (functions/numeric.py): double
             # products round half-differently across engines
-            dsum(dec("l_extendedprice") * (1 - dec("l_discount")), 4).alias("revenue"),
+            dsum(
+                f"{dec.sql('l_extendedprice')}"
+                f" * (1 - {dec.sql('l_discount')})", 4
+            ).alias("revenue"),
         )
         .orderBy("band")
     )
@@ -918,7 +921,7 @@ def seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
             F.expr(
-                f"cast(floor(sum({dec_sql('o_totalprice')}) * 100)"
+                f"cast(floor(sum({dec.sql('o_totalprice')}) * 100)"
                 " as bigint)"
             ).alias("cents")
         )
@@ -1059,7 +1062,7 @@ def cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name", F.to_date("o_orderdate").alias("day"))
         .agg(
             F.expr(
-                f"cast(floor(sum({dec_sql('o_totalprice')}) * 100)"
+                f"cast(floor(sum({dec.sql('o_totalprice')}) * 100)"
                 " as bigint)"
             ).alias("cents")
         )
@@ -1179,7 +1182,7 @@ def rolling_median_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
             F.expr(
-                f"cast(floor(sum({dec_sql('o_totalprice')}) * 100)"
+                f"cast(floor(sum({dec.sql('o_totalprice')}) * 100)"
                 " as bigint)"
             ).alias("cents")
         )
@@ -1370,7 +1373,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(
             F.expr(
-                f"cast(floor(sum({dec_sql('o_totalprice')}) * 100)"
+                f"cast(floor(sum({dec.sql('o_totalprice')}) * 100)"
                 " as bigint)"
             ).alias("cents")
         )

@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import ensure_engine_conf
 
@@ -125,7 +126,7 @@ def table_stats(sf_dir: str, name: str) -> tuple[int, int]:
     serve stale stats. Drives kernel fan-out calibration
     (``widen_for_kernel``); at 100 TB this is the table-metadata lookup
     a real deployment reads from the catalog."""
-    key = (os.path.abspath(sf_dir), name, _table_stamp(sf_dir, name))
+    key = _table_key(sf_dir, name)
     if key not in _TABLE_STATS_MEMO:
         import pyarrow.parquet as pq
 
@@ -148,8 +149,17 @@ def table_stats(sf_dir: str, name: str) -> tuple[int, int]:
     return _TABLE_STATS_MEMO[key]
 
 
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table; normalizes types to engine conventions.
+
+    The parquet schema Spark infers (one job over the footers) is
+    memoized on the table's file stamp, like ``table_stats`` and the
+    modal dim, and every later load of the unchanged table passes it to
+    ``spark.read.schema``: no inference job, the way a table-format
+    reader takes its schema from table metadata rather than data files.
 
     - ``events.ts`` as parquet timestamp[ns]: Spark reads it as a long
       (nanosAsLong) and we truncate to microseconds — identical to DuckDB's
@@ -163,7 +173,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       matter which physical annotation the test-data generator emitted.
     """
     ensure_engine_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _table_key(sf_dir, name)
+    if key in _SCHEMA_MEMO:
+        df = spark.read.schema(_SCHEMA_MEMO[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _SCHEMA_MEMO[key] = df.schema
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
@@ -247,10 +263,16 @@ def _table_stamp(sf_dir: str, name: str) -> tuple:
     return tuple(sorted(entries))
 
 
+def _table_key(sf_dir: str, name: str) -> tuple:
+    """Memo key of one version of a corpus table: its schema, footer
+    stats and modal dim are memoized on it."""
+    return (os.path.abspath(sf_dir), name, _table_stamp(sf_dir, name))
+
+
 def _modal_dim(spark: SparkSession, sf_dir: str) -> int | None:
     """Most frequent embedding dimension (ties → larger), one bounded
     1-row aggregate per DISTINCT corpus per process."""
-    key = (os.path.abspath(sf_dir), _table_stamp(sf_dir, "embeddings"))
+    key = _table_key(sf_dir, "embeddings")
     if key not in _MODAL_DIM_MEMO:
         row = (
             load_table(spark, sf_dir, "embeddings")

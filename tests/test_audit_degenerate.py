@@ -145,3 +145,31 @@ def test_semantic_audit_planted_identical_vectors_are_dropped(spark, tmp_path):
         and r.cells_ok == 1
     )
     _diff(sp, _oracle(tmp_path, L._SQL_SEMANTIC_AUDIT))
+
+
+def test_semantic_census_null_labels_through_fused_assign(spark, tmp_path):
+    """NULL labels ride through the fused ``_assign_carry`` Arrow pass
+    (int32-with-nulls arrives in pandas as float64 NaN and must leave as
+    int32 NULL) into ``_prune_cell``, which buckets them as -1. Odd ids
+    carry NULL labels and the planted duplicate pairs of the audit
+    fixture keep the prune non-vacuous; the census must conserve every
+    vector and the audit must still match the oracle."""
+    from bytewax_iceberg_connector_spark.sources.tables import load_vectors
+
+    n = 40
+    adm = _admitted_ids(n)
+    vecs = [[1.0 if j == i else 0.0 for j in range(n)] for i in range(n)]
+    for a, b in zip(adm[:3], adm[-3:]):
+        vecs[b] = vecs[a][:]
+    labels = [None if i % 2 else 7 for i in range(n)]
+    d = _emb_dir(tmp_path, vecs, labels)
+
+    cells = L._semantic_census(load_vectors(spark, d)).toPandas()
+    assert cells.n_members.sum() == n
+    assert (cells.n_kept + cells.n_dropped == cells.n_members).all()
+    assert set(cells.top_label) <= {-1, 7} and -1 in set(cells.top_label)
+    assert (cells.top_label_n <= cells.n_members).all()
+
+    sp = L.semantic_dedup(spark, d).toPandas()
+    assert sp.iloc[0].n_dup_reach == 3
+    _diff(sp, _oracle(tmp_path, L._SQL_SEMANTIC_AUDIT))

@@ -29,6 +29,27 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _node_name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _output(node) -> set[str]:
+    cols = node.output()
+    return {cols.apply(i).name() for i in range(cols.size())}
+
+
+def _tree(node, stop: str | None = None):
+    """Pre-order walk of a Catalyst plan through Py4J; nodes named
+    ``stop`` are yielded but not descended into."""
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        yield node
+        if _node_name(node) != stop:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
 def test_scan_pushes_filter_and_prunes_columns(spark, sf_dir):
     from bytewax_iceberg_connector_spark.plans.relational import scan_project_filter
 
@@ -1646,7 +1667,8 @@ def test_semantic_audit_narrow_scans_no_row_udf(spark, sf_dir):
         semantic_dedup,
     )
 
-    plan = _plan(semantic_dedup(spark, sf_dir))
+    df = semantic_dedup(spark, sf_dir)
+    plan = _plan(df)
     assert "BatchEvalPython" not in plan
     for mm in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         cols = {c.split(":")[0] for c in mm.group(1).split(",") if c}
@@ -1661,14 +1683,25 @@ def test_semantic_audit_narrow_scans_no_row_udf(spark, sf_dir):
     # the narrow assignment — the census branch plans NO join between
     # the kernel and the per-cell applyInPandas.
     assert "InMemoryTableScan" in plan, "kmeans slice cache stranded"
-    fmg = plan.find("FlatMapGroupsInPandas")
-    assert fmg != -1
-    # tree text renders the census subtree contiguously below the node;
-    # the first MapInPandas after it is the fused assignment kernel
-    between = plan[fmg:].split("MapInPandas", 1)[0]
-    assert "Join" not in between, (
+    # anchored on the census subtree of the optimized logical plan, not
+    # on plan-text order: the cell prune is the grouped-pandas node that
+    # outputs n_kept; walking down from it, every path must reach the
+    # fused assignment kernel (one MapInPandas carrying embedding and
+    # label) without crossing a join
+    census = [
+        n for n in _tree(df._jdf.queryExecution().optimizedPlan())
+        if _node_name(n) == "FlatMapGroupsInPandas"
+        and "n_kept" in _output(n)
+    ]
+    assert len(census) == 1, "census cell prune not found"
+    between = list(_tree(census[0], stop="MapInPandas"))
+    kernels = [n for n in between if _node_name(n) == "MapInPandas"]
+    assert len(kernels) == 1, "fused assignment kernel not found"
+    assert {"embedding", "label", "cluster"} <= _output(kernels[0])
+    joins = [_node_name(n) for n in between if "Join" in _node_name(n)]
+    assert not joins, (
         "label/embedding join-back reappeared between the assignment "
-        "kernel and the cell prune"
+        f"kernel and the cell prune: {joins}"
     )
 
 

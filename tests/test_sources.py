@@ -185,3 +185,90 @@ def test_table_stats_footer_only_and_stamp_tracked(spark, tmp_path):
     )
     rows2, _ = table_stats(str(tmp_path), "documents")
     assert rows2 == 11
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs that ``fn()`` starts, counted through a job group. Job
+    events reach the status tracker asynchronously, so a marker job in a
+    second group is awaited first: once it shows, every earlier job has
+    shown too (the listener bus delivers in order)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, marker = f"memo-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table")
+    try:
+        fn()
+        sc.setJobGroup(marker, "marker")
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never reported"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _write_ns_events(path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array([-1500, 1500, 1_700_000_000_123_456_789],
+                           type=pa.timestamp("ns")),
+        }),
+        path,
+    )
+
+
+def test_repeat_load_of_unchanged_corpus_runs_no_job(spark, sf_dir, tmp_path):
+    """The inferred schema is memoized on the file stamp: once a table
+    has been loaded, loading it again runs no Spark job (no footer
+    inference), and the ns-timestamp normalisation still applies to the
+    memoized read."""
+    for name in TABLE_NAMES:
+        load_table(spark, sf_dir, name)
+    assert _jobs_run_by(
+        spark, lambda: [load_table(spark, sf_dir, n) for n in TABLE_NAMES]
+    ) == 0
+
+    _write_ns_events(tmp_path / "events.parquet")
+    first = load_table(spark, str(tmp_path), "events")
+    memo = []
+    assert _jobs_run_by(
+        spark, lambda: memo.append(load_table(spark, str(tmp_path), "events"))
+    ) == 0
+    assert memo[0].dtypes == first.dtypes == [
+        ("event_id", "bigint"), ("ts", "timestamp")]
+    assert sorted(memo[0].collect()) == sorted(first.collect())
+
+
+def test_rewritten_table_reinfers_its_schema(spark, tmp_path):
+    """A rewritten file has a new stamp, so the next load infers its
+    schema again: a stale memo would hide the new column."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": pa.array([1, 2], pa.int64())}), p)
+    assert load_table(spark, str(tmp_path), "documents").columns == ["doc_id"]
+    time.sleep(0.01)  # ensure a distinct mtime_ns
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.int64()),
+                  "text": pa.array(["a", "b"])}),
+        p,
+    )
+    got = []
+    assert _jobs_run_by(
+        spark,
+        lambda: got.append(load_table(spark, str(tmp_path), "documents")),
+    ) >= 1
+    assert got[0].columns == ["doc_id", "text"]
+    assert got[0].count() == 2
