@@ -38,7 +38,6 @@ manifest lists make this O(1), the documented small-scale trade-off.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -420,11 +419,7 @@ class LakeSink:
             return
         new_keyed = partition_key(df, self._spec)
         affected = new_keyed.select(*[qcol(c) for c in pcols]).distinct()
-        # merge_schema: the copy-on-write rewrite must carry EVERY column
-        # ever committed — a plain read takes one file's schema and
-        # silently WIPES evolved columns from the survivors (r06 find:
-        # a no-op delete on an evolved table nulled the evolved column)
-        current = self.read(merge_schema=True, branch=self._ref(branch))
+        current = self.read(branch=self._ref(branch))
         data_cols = [c for c in current.columns if not c.startswith("_p_")]
         # partition membership is LOGICAL — the current spec's transforms
         # over the data columns — not the stored _p_* layout: rows from
@@ -484,8 +479,8 @@ class LakeSink:
         # WRITTEN — encoding after the sort replaced the sorted attribute
         # and the V1 writer re-sorted by partition columns only,
         # clobbering config.sort_order / z-order file ordering (r10
-        # self-review find). Footer stats and schema_fp are unaffected:
-        # _p_ columns are dir-encoded, never stored in files.
+        # self-review find). Footer stats and the marker's fields are
+        # unaffected: _p_ columns are dir-encoded, never stored in files.
         for c, t in keyed.dtypes:
             if c in pcols and t == "string":
                 keyed = keyed.withColumn(
@@ -546,28 +541,15 @@ class LakeSink:
                 col, eq, val = dn.partition("=")
                 if eq and val.startswith(ESC_MARK):
                     esc_pcols.add(unescape_path_name(col))
-        # schema_fp: a fingerprint of the commit's write schema (Iceberg's
-        # per-manifest schema-id). Readers force a footer merge whenever one
-        # load group spans >1 fingerprint, so NO read path — plain read(),
-        # read_incremental(), CDC — can ever footer-pick an arbitrary file's
-        # schema across an additive evolution (the r07 judge's
-        # order-dependent silent-column-drop class). Fingerprint identity =
-        # sorted (name, type) pairs — the SAME identity _check_write_schema
-        # enforces: hashing the raw jsonValue would split fingerprints on
-        # nullability/field-order/metadata differences between otherwise
-        # identical batches and permanently force the footer-merge pass the
-        # single-schema fast path exists to skip.
-        schema_fp = hashlib.sha256(
-            json.dumps(
-                sorted((f.name, f.dataType.simpleString())
-                       for f in keyed.schema.fields)
-            ).encode()
-        ).hexdigest()[:16]
         marker = {"spec_id": self._log.current_spec_id()
                   if self._log.exists() else 0,
                   "pcols": pcols,
                   "n_files": n_files,
-                  "schema_fp": schema_fp}
+                  # the commit's data fields as written (Iceberg's
+                  # per-manifest schema): read() hands their union to the
+                  # reader, so no read infers a schema from footers
+                  "fields": [f.jsonValue() for f in keyed.schema.fields
+                             if f.name not in pcols]}
         if esc_pcols:
             marker["esc_pcols"] = sorted(esc_pcols)
         # atomic rename-in: our own crashes can then never leave a TORN
@@ -598,9 +580,9 @@ class LakeSink:
         # commits: a failed write can then never leave a declared column
         # with no data, and a staged WAP branch's new columns don't leak
         # into main's declared shape before publish (snapshots.publish
-        # folds the branch-carried new_fields in; reads are fingerprint-
-        # auto-merged either way, so the declared schema is validation/
-        # convenience, never load-bearing for correctness)
+        # folds the branch-carried new_fields in; reads take each
+        # commit's own marker fields, so the declared schema is only
+        # the fallback for markers that predate them)
         if new_fields and branch == "main":
             log.evolve_schema([f.jsonValue() for f in new_fields])
             log.retire_fold_flag(sid)  # fold done; crash above → heal
@@ -615,9 +597,10 @@ class LakeSink:
         ``evolve_schema`` (schema union), so later conflicts on evolved
         columns are also caught here. Before this check, a long→double
         rewrite of an existing column committed fine and every subsequent
-        read failed with CANNOT_MERGE_SCHEMAS (loud, thanks to the
-        fingerprint auto-merge — but the bad commit was already in
-        history); now the WRITE fails and history stays readable.
+        read failed with CANNOT_MERGE_SCHEMAS (loud, but the bad commit
+        was already in history); now the WRITE fails and history stays
+        readable — which is also why the read side's union of commit
+        marker fields can never hold two types for one name.
         Nullability is not compared (parquet unions relax it anyway).
 
         Branch writes ALSO check against the branch's own pending column
@@ -810,11 +793,7 @@ class LakeSink:
                 "WHEN NOT MATCHED THEN INSERT *"
             )
             return
-        # merge_schema: the copy-on-write rewrite must carry EVERY column
-        # ever committed — a plain read takes one file's schema and
-        # silently WIPES evolved columns from the survivors (r06 find:
-        # a no-op delete on an evolved table nulled the evolved column)
-        current = self.read(merge_schema=True, branch=self._ref(branch))
+        current = self.read(branch=self._ref(branch))
         data_cols = [c for c in current.columns if not c.startswith("_p_")]
         # project updates to THEIR OWN data columns only — merge_upsert
         # null-fills target columns the update batch predates (schema
@@ -965,11 +944,7 @@ class LakeSink:
                 f"DELETE FROM {self._qualified} WHERE {condition}"
             )
             return
-        # merge_schema: the copy-on-write rewrite must carry EVERY column
-        # ever committed — a plain read takes one file's schema and
-        # silently WIPES evolved columns from the survivors (r06 find:
-        # a no-op delete on an evolved table nulled the evolved column)
-        current = self.read(merge_schema=True, branch=self._ref(branch))
+        current = self.read(branch=self._ref(branch))
         data_cols = [c for c in current.columns if not c.startswith("_p_")]
         # coalesce: SQL DELETE removes only cond=TRUE rows; a bare
         # NOT(cond) would also drop rows where cond is NULL (NOT NULL is
@@ -1009,11 +984,7 @@ class LakeSink:
                     f"CALL {cat}.system.rewrite_data_files('{self.config.table_name}')"
                 )
             return
-        # merge_schema: the copy-on-write rewrite must carry EVERY column
-        # ever committed — a plain read takes one file's schema and
-        # silently WIPES evolved columns from the survivors (r06 find:
-        # a no-op delete on an evolved table nulled the evolved column)
-        current = self.read(merge_schema=True, branch=self._ref(branch))
+        current = self.read(branch=self._ref(branch))
         data_cols = [c for c in current.columns if not c.startswith("_p_")]
         live = current.select(*[qcol(c) for c in data_cols])
         cluster = zorder_key(live, zorder_by) if zorder_by else None
@@ -1213,9 +1184,6 @@ class LakeSink:
                 )
         base = set(self._log.live_commits(from_snapshot))
         new = [c for c in self._log.live_commits(head) if c not in base]
-        if not new:
-            schema = StructType.fromJson(self._log.table_meta()["schema_json"])
-            return self.spark.createDataFrame([], schema)
         dirs = [os.path.join(self._log.data_dir, c) for c in new]
         # layout-aware: an incremental range can cross a partition-spec
         # evolution (evolve is metadata-only, not a replacing commit)
@@ -1246,18 +1214,14 @@ class LakeSink:
                 + "), changelog_view => '_bic_changes')"
             )
             return self.spark.table("_bic_changes")
-        # merge_schema on BOTH sides: a CDC window crossing a schema-
-        # evolution boundary must align columns (pre-evolution rows diff
-        # with NULL in the added column, not against a truncated schema).
-        # merge_schema only merges WITHIN each snapshot's own files, so a
-        # column added between the two snapshots exists on one side only
-        # — null-fill it on the other (both directions), exactly how the
-        # evolved read null-fills pre-evolution rows. (Found by the lake
-        # model's CDC closure: changes() across an append_evolved
-        # crashed UNRESOLVED_COLUMN on the pre-evolution side.)
-        old = self.read(as_of=from_snapshot, merge_schema=True)
-        new = self.read(as_of=to_snapshot, merge_schema=True) \
-            if to_snapshot is not None else self.read(merge_schema=True)
+        # each side reads its own snapshot's columns, so a column added
+        # between the two snapshots exists on one side only — null-fill
+        # it on the other (both directions), exactly how the evolved read
+        # null-fills pre-evolution rows. (Found by the lake model's CDC
+        # closure: changes() across an append_evolved crashed
+        # UNRESOLVED_COLUMN on the pre-evolution side.)
+        old = self.read(as_of=from_snapshot)
+        new = self.read(as_of=to_snapshot)
         new_types = dict(new.dtypes)
         old_types = dict(old.dtypes)
         for c, t in new_types.items():
@@ -1299,8 +1263,7 @@ class LakeSink:
         ]
         return max(ids, default=None)
 
-    def read(self, merge_schema: bool = False,
-             as_of: int | None = None,
+    def read(self, as_of: int | None = None,
              as_of_timestamp_ms: int | None = None,
              tag: str | None = None,
              branch: str | None = None,
@@ -1310,12 +1273,15 @@ class LakeSink:
         Iceberg ``VERSION AS OF``) and ``as_of_timestamp_ms`` pins the
         latest snapshot at or before a wall-clock instant (``TIMESTAMP AS
         OF``); ``tag`` pins a named ref (``VERSION AS OF 'tag'`` — see
-        :meth:`tag`); ``merge_schema=True`` unions schemas across files so batches
-        appended with ADDED columns surface (nulls for older rows) — the
+        :meth:`tag`).
+
+        The schema comes from metadata, never from data files (Iceberg's
+        rule): the union of the read commits' recorded fields, so columns
+        ADDED by later batches surface with nulls for older rows — the
         additive schema evolution the reference forbids ("Static schemas
-        only", reference README.md:68). Iceberg handles this through table
-        metadata; the parquet backend pays a footer merge pass, so keep it
-        off for fixed-schema hot paths.
+        only", reference README.md:68) — and a snapshot from before an
+        add reads without the column. Building the frame runs no Spark
+        job.
 
         ``prune={"col": (lo, hi)}`` (parquet backend) skips whole commit
         dirs whose recorded min/max stats cannot intersect the bounds
@@ -1353,9 +1319,8 @@ class LakeSink:
         if tag is not None and self.backend != "iceberg":
             as_of = self._log.resolve_tag(tag)
         if self.backend == "iceberg":
-            # merge_schema and prune are NATIVELY satisfied here (schema
-            # union comes from table metadata; file pruning from footer
-            # metrics) — accepting them is not a silent drop. The one
+            # prune is NATIVELY satisfied here (file pruning from footer
+            # metrics) — accepting it is not a silent drop. The one
             # argument that changes the RESULT schema, with_spec_id, is
             # honored by selecting the runtime's own _spec_id metadata
             # column so no path silently returns a narrower frame than
@@ -1379,22 +1344,9 @@ class LakeSink:
         dirs = self._log.commit_paths(as_of)
         if prune:
             dirs = self._prune_dirs(dirs, prune)
-        if not dirs:
-            schema = StructType.fromJson(self._log.table_meta()["schema_json"])
-            empty = self.spark.createDataFrame([], schema)
-            if with_spec_id:
-                # keep the zero-commit empty frame schema-identical to the
-                # all-fileless fallback inside _load_commit_dirs — a
-                # consumer selecting _spec_id must not AnalysisException
-                # on only one of the two empty paths
-                empty = empty.withColumn("_spec_id", F.lit(None).cast("int"))
-            return empty
-        return self._load_commit_dirs(
-            dirs, merge_schema=merge_schema, with_spec_id=with_spec_id
-        )
+        return self._load_commit_dirs(dirs, with_spec_id=with_spec_id)
 
     def _load_commit_dirs(self, dirs: list[str],
-                          merge_schema: bool = False,
                           with_spec_id: bool = False) -> DataFrame:
         """Load commit dirs, layout-aware. Commits written under different
         partition specs carry different ``_p_*`` directory keys; Spark's
@@ -1402,6 +1354,17 @@ class LakeSink:
         each spec's dirs separately and union with null-fill — exactly
         how Iceberg reads across spec boundaries (each manifest knows
         its own spec).
+
+        Each scan is handed its schema — the union of its commits'
+        recorded ``fields`` in first-appearance order, oldest commit
+        first — so no read infers one from parquet footers, and the scan
+        sees exactly the columns its commits wrote (a snapshot from
+        before a column add reads without it). Writes are additive-only
+        (_check_write_schema), so the union never holds two types for
+        one name. A marker without ``fields`` (a dir from before the
+        field existed) contributes the declared data columns of
+        ``table.json``. ``_p_*`` and ``_c`` stay out of the given schema:
+        partition discovery adds them from the directory names.
 
         ``with_spec_id=True`` materializes Iceberg's ``_spec_id`` metadata
         column (the spec each row's commit was written under) — the ONLY
@@ -1414,8 +1377,9 @@ class LakeSink:
         commit, an empty micro-batch) produces a fileless dir that made
         every later read die with UNABLE_TO_INFER_SCHEMA (r06 model-based
         find); a fileless commit contributes no rows by construction, and
-        an all-empty dir list falls back to the declared-schema empty
-        frame in read()."""
+        an all-empty dir list reads as the declared-schema empty frame."""
+        meta = self._log.table_meta()
+        declared = StructType.fromJson(meta["schema_json"])
 
         def _marker(d: str) -> dict:
             try:
@@ -1429,31 +1393,52 @@ class LakeSink:
                 # marker from our own crashes — unparseable means
                 # EXTERNAL damage, and degrading to {} here would
                 # silently skip the esc_pcols recompute (marker values
-                # leaking into reads) and mis-group the schema
-                # fingerprint. Refuse loudly instead.
+                # leaking into reads) and mis-read the commit's layout
+                # and fields. Refuse loudly instead.
                 raise ValueError(
                     f"corrupt commit marker {d}/_bic_spec.json — external "
                     "damage; restore the file or expire the snapshot(s) "
                     f"referencing this commit: {exc}"
                 ) from exc
 
+        ext = f".{self._file_format()}"
+
+        def _has_files(d: str, marker: dict) -> bool:
+            # commit-time metadata first (n_files in _bic_spec.json) —
+            # one small json read instead of walking the data tree; dirs
+            # from before the field existed fall back to the walk
+            n = marker.get("n_files")
+            if n is not None:
+                return n > 0
+            return any(
+                f.endswith(ext)
+                for _, _, files in os.walk(d)
+                for f in files
+            )
+
         markers = {d: _marker(d) for d in dirs}
+        markers = {d: m for d, m in markers.items() if _has_files(d, m)}
+        if not markers:
+            empty = self.spark.createDataFrame([], declared)
+            if with_spec_id:
+                empty = empty.withColumn(
+                    "_spec_id", F.lit(None).cast("int")
+                )
+            return empty
+        legacy_fields = [f for f in declared.fields
+                         if f.name != "_c" and not f.name.startswith("_p_")]
 
         def _load(group: list[str], spec_id: int) -> DataFrame:
-            reader = self.spark.read.option("basePath", self._log.data_dir)
-            # auto-merge whenever this group's commits span more than one
-            # recorded write schema (or any commit predates the
-            # fingerprint): with mergeSchema off Spark infers the result
-            # schema from an ARBITRARY parquet footer, so a range crossing
-            # a column-add would nondeterministically drop the evolved
-            # column (judge-reproduced order-dependent failure, r07). The
-            # fingerprint is commit metadata, so the common single-schema
-            # case still skips the footer merge pass entirely.
-            fps = {markers[d].get("schema_fp") for d in group}
-            if merge_schema or len(fps) > 1 or (
-                None in fps and len(group) > 1
-            ):
-                reader = reader.option("mergeSchema", "true")
+            fields: dict[str, StructField] = {}
+            for d in group:
+                recorded = markers[d].get("fields")
+                for f in (legacy_fields if recorded is None
+                          else map(StructField.fromJson, recorded)):
+                    fields.setdefault(f.name, f)
+            reader = (
+                self.spark.read.option("basePath", self._log.data_dir)
+                .schema(StructType(list(fields.values())))
+            )
             # `_c` is the commit-dir partition component — implementation
             # detail, dropped from the user-visible schema
             df = reader.format(self._file_format()).load(group).drop("_c")
@@ -1470,36 +1455,12 @@ class LakeSink:
                 for c in markers[d].get("esc_pcols", []):
                     esc.add(c)
                     esc.add(unescape_path_name(c))
-            df = self._restore_pcols(df, spec_id, esc)
+            df = self._restore_pcols(df, spec_id, esc, meta)
             if with_spec_id:
                 df = df.withColumn("_spec_id", F.lit(spec_id).cast("int"))
             return df
 
-        ext = f".{self._file_format()}"
-
-        def _has_files(d: str) -> bool:
-            # commit-time metadata first (n_files in _bic_spec.json) —
-            # one small json read instead of walking the data tree; dirs
-            # from before the field existed fall back to the walk
-            n = markers[d].get("n_files")
-            if n is not None:
-                return n > 0
-            return any(
-                f.endswith(ext)
-                for _, _, files in os.walk(d)
-                for f in files
-            )
-
-        dirs = [d for d in dirs if _has_files(d)]
-        if not dirs:
-            schema = StructType.fromJson(self._log.table_meta()["schema_json"])
-            empty = self.spark.createDataFrame([], schema)
-            if with_spec_id:
-                empty = empty.withColumn(
-                    "_spec_id", F.lit(None).cast("int")
-                )
-            return empty
-        groups = self._dirs_by_layout(dirs)
+        groups = self._dirs_by_layout(markers, meta)
         if len(groups) == 1:
             (key, group), = groups.items()
             return _load(group, key[0])
@@ -1511,15 +1472,16 @@ class LakeSink:
             )
         return out
 
-    def _dirs_by_layout(self, dirs: list[str]) -> dict[tuple, list[str]]:
+    def _dirs_by_layout(self, markers: dict[str, dict],
+                        meta: dict) -> dict[tuple, list[str]]:
         """Group commit dirs by (spec_id, partition layout) as written at
-        commit time (``_bic_spec.json``) — the per-manifest spec id of
-        Iceberg. Keys are ``(spec_id, pcols...)``. Dirs from before the
-        marker existed group under the table's ORIGINAL spec (id 0) —
-        markerless dirs can only predate evolution support, so their
-        layout is whatever the table was created with (``spec_history
-        ['0']`` once evolved, else the current spec)."""
-        meta = self._log.table_meta() if self._log.exists() else {}
+        commit time (their parsed ``_bic_spec.json`` markers) — the
+        per-manifest spec id of Iceberg. Keys are ``(spec_id, pcols...)``.
+        Dirs from before the marker existed (marker ``{}``) group under
+        the table's ORIGINAL spec (id 0) — markerless dirs can only
+        predate evolution support, so their layout is whatever the table
+        was created with (``spec_history['0']`` once evolved, else the
+        current spec)."""
         original = meta.get("spec_history", {}).get(
             "0", meta.get("partition_spec")
         )
@@ -1530,33 +1492,21 @@ class LakeSink:
         else:
             fallback = tuple(partition_columns(self._spec))
         groups: dict[tuple, list[str]] = {}
-        for d in dirs:
-            try:
-                with open(os.path.join(d, "_bic_spec.json")) as f:
-                    marker = json.load(f)
+        for d, marker in markers.items():
+            if marker:
                 key = (int(marker.get("spec_id", 0)),
                        *marker.get("pcols", []))
-            except FileNotFoundError:
+            else:
                 key = (0, *fallback)  # pre-marker-era commit dir
-            except json.JSONDecodeError as exc:
-                # unparseable = external damage (marker writes are
-                # atomic); mis-grouping under the fallback spec would
-                # silently mis-read partitioned history — refuse loudly
-                raise ValueError(
-                    f"corrupt commit marker {d}/_bic_spec.json — external "
-                    f"damage; restore or expire: {exc}"
-                ) from exc
             groups.setdefault(key, []).append(d)
         return groups
 
-    def _spec_fields_for_id(self, spec_id: int) -> list[PartitionField]:
+    def _spec_fields_for_id(self, spec_id: int,
+                            meta: dict) -> list[PartitionField]:
         """The partition spec a commit group was written under: the
         current spec when ids match, else the archived entry in
         ``spec_history`` (evolve_spec archives the outgoing spec under
         its id — Iceberg's per-manifest spec lookup)."""
-        if not self._log.exists():
-            return list(self._spec)
-        meta = self._log.table_meta()
         if spec_id == int(meta.get("spec_id", 0)):
             raw = meta.get("partition_spec", [])
         else:
@@ -1564,7 +1514,7 @@ class LakeSink:
         return [PartitionField(*f) for f in raw]
 
     def _restore_pcols(self, df: DataFrame, spec_id: int,
-                       esc_cols: set) -> DataFrame:
+                       esc_cols: set, meta: dict) -> DataFrame:
         """Make directory-decoded ``_p_*`` columns exact again (r10
         hostile-partition-values sweep):
 
@@ -1583,18 +1533,14 @@ class LakeSink:
            commits pay this (and lose dir-pruning on that column); clean
            commits keep the raw dir column and full pruning.
         """
-        declared: dict[str, str] = {}
-        if self._log.exists():
-            declared = {
-                f.name: f.dataType.simpleString()
-                for f in StructType.fromJson(
-                    self._log.table_meta()["schema_json"]
-                ).fields
-            }
+        declared = {
+            f.name: f.dataType.simpleString()
+            for f in StructType.fromJson(meta["schema_json"]).fields
+        }
         dtypes = dict(df.dtypes)
         fields = {
             f"_p_{f.field_name}": f
-            for f in self._spec_fields_for_id(spec_id)
+            for f in self._spec_fields_for_id(spec_id, meta)
         }
 
         def _spec_type(c: str) -> str | None:

@@ -449,9 +449,10 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive schema evolution end-to-end (the upgrade over the
     reference's "Static schemas only", reference README.md:68): half the
     events commit under the original schema, the second half commits with
-    an ADDED ``quality`` column, and one ``read(merge_schema=True)`` scan
-    surfaces both eras — nulls for pre-evolution rows, exactly Iceberg's
-    add-column semantics. Per-type accounting of row counts, null counts,
+    an ADDED ``quality`` column, and one plain ``read()`` scan — its
+    schema the union of the commits' recorded fields — surfaces both
+    eras: nulls for pre-evolution rows, exactly Iceberg's add-column
+    semantics. Per-type accounting of row counts, null counts,
     and the decimal-exact quality mass proves no row is lost, duplicated,
     or mis-filled at the schema boundary.
 
@@ -480,7 +481,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(batch == 1)
         .withColumn("quality", F.coalesce(F.col("value"), F.lit(0.0)) * 2)
     )
-    back = sink.read(merge_schema=True)
+    back = sink.read()
     out = (
         back.groupBy("event_type")
         .agg(

@@ -50,7 +50,7 @@ _OPS = st.lists(
         st.tuples(st.just("overwrite_partitions"), st.integers(1, 4)),
         # additive schema evolution interleaved with everything else:
         # rows committed WITH an extra column must survive rollback/
-        # delete/expire like any others (merge_schema read)
+        # delete/expire like any others (the default read)
         st.tuples(st.just("append_evolved"), st.integers(1, 3)),
         # write-audit-publish lifecycle interleaved with main traffic:
         # staged rows are invisible on main until publish; publish
@@ -211,7 +211,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
             # the audit read: the staged branch shows fork-state + staged
             got_b = {
                 r.event_id
-                for r in sink.read(branch="wap", merge_schema=True)
+                for r in sink.read(branch="wap")
                 .select("event_id")
                 .collect()
             }
@@ -239,7 +239,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
                 branch_live |= set(ids)
             got_b = {
                 r.event_id
-                for r in sink.read(branch="wap", merge_schema=True)
+                for r in sink.read(branch="wap")
                 .select("event_id")
                 .collect()
             }
@@ -265,7 +265,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
                 tags[name] = set(history[i])
             got_t = {
                 r.event_id
-                for r in sink.read(tag=name, merge_schema=True)
+                for r in sink.read(tag=name)
                 .select("event_id")
                 .collect()
             }
@@ -333,7 +333,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
             committed(op)
         elif published:
             committed("publish")  # publish is itself a main snapshot
-        got = {r.event_id for r in sink.read(merge_schema=True).select("event_id").collect()}
+        got = {r.event_id for r in sink.read().select("event_id").collect()}
         assert got == live, (op, arg, got, live)
 
     # every retained snapshot must still read back exactly (expire trims
@@ -341,7 +341,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
     for snap_id, want in zip(snap_ids, history):
         got = {
             r.event_id
-            for r in sink.read(as_of=snap_id, merge_schema=True).select("event_id").collect()
+            for r in sink.read(as_of=snap_id).select("event_id").collect()
         }
         assert got == want, (snap_id, got, want, snap_ids)
 
@@ -423,7 +423,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
         want_ts = history[max(cand)]
         got_ts = {
             r.event_id
-            for r in sink.read(as_of_timestamp_ms=t, merge_schema=True)
+            for r in sink.read(as_of_timestamp_ms=t)
             .select("event_id")
             .collect()
         }
@@ -438,7 +438,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
         hi = float(sorted(live)[len(live) // 2])
         got_p = {
             r.event_id
-            for r in sink.read(prune={"v": (lo, hi)}, merge_schema=True)
+            for r in sink.read(prune={"v": (lo, hi)})
             .where(f"v >= {lo} AND v <= {hi}")
             .select("event_id")
             .collect()
@@ -451,7 +451,7 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
     for name, want in tags.items():
         got = {
             r.event_id
-            for r in sink.read(tag=name, merge_schema=True)
+            for r in sink.read(tag=name)
             .select("event_id")
             .collect()
         }

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from bytewax_iceberg_connector_spark.config import IcebergSinkConfig
 from bytewax_iceberg_connector_spark.operators.sink import LakeSink
 import time
+from _sparkjobs import jobs_run_by
 
 from bytewax_iceberg_connector_spark.operators.snapshots import (
     CommitConflict,
@@ -761,7 +762,7 @@ def test_copy_on_write_preserves_evolved_columns(spark, tmp_path, batches):
     def q_map():
         return {
             r.event_id: r.asDict().get("q")
-            for r in sink.read(merge_schema=True).collect()
+            for r in sink.read().collect()
         }
 
     want = {i: None for i in range(10)} | {i + 100: float(i) * 2
@@ -898,27 +899,39 @@ def test_read_incremental_across_schema_evolution(spark, tmp_path):
     must load as one union with the added column null-filled on older
     rows (the CDC twin of this crossing crashed UNRESOLVED_COLUMN before
     the r07 model closure; the incremental path merges within its loaded
-    group and is pinned here)."""
+    group and is pinned here).
+
+    The write schema carries decimal, timestamp_ntz, array, struct and
+    map columns: reads take every type from the commit markers, so each
+    read's dtypes must equal the written ones exactly, and a snapshot
+    from before the add must lack the added column."""
     import datetime as dt
+    from decimal import Decimal
 
-    from pyspark.sql import Row
-
+    schema = (
+        "event_id BIGINT, ts TIMESTAMP, v DOUBLE, amount DECIMAL(38,18), "
+        "local_ts TIMESTAMP_NTZ, emb ARRAY<FLOAT>, "
+        "src STRUCT<host: STRING, port: INT>, tags MAP<STRING, BIGINT>"
+    )
     sink = _sink(spark, tmp_path)
 
     def rows(ids, ev=False):
-        if ev:
-            return spark.createDataFrame(
-                [Row(event_id=i, ts=dt.datetime(2024, 1, 1, 9),
-                     v=float(i), q=float(i) * 2) for i in ids]
-            )
+        data = [
+            (i, dt.datetime(2024, 1, 1, 9), float(i),
+             Decimal(i) + Decimal("0.125"), dt.datetime(2024, 1, 1, i),
+             [float(i), 0.5], (f"h{i}", i), {"k": i})
+            + ((float(i) * 2,) if ev else ())
+            for i in ids
+        ]
         return spark.createDataFrame(
-            [Row(event_id=i, ts=dt.datetime(2024, 1, 1, 9), v=float(i))
-             for i in ids]
+            data, schema + (", q DOUBLE" if ev else "")
         )
 
+    written = rows([0]).dtypes
     sink.append(rows([0, 1]))
     v1 = sink._log.current_id()
     sink.append(rows([2, 3]))
+    v2 = sink._log.current_id()
     sink.append(rows([4, 5], ev=True))
     v3 = sink._log.current_id()
 
@@ -927,12 +940,23 @@ def test_read_incremental_across_schema_evolution(spark, tmp_path):
     got = {(r.event_id, r.q) for r in inc.select("event_id", "q").collect()}
     assert got == {(2, None), (3, None), (4, 8.0), (5, 10.0)}
 
-    # plain read() with merge_schema left at its default must ALSO surface
-    # the evolved column (schema-fingerprint auto-merge): with it off,
-    # Spark footer-picks an arbitrary file's schema, which the r07 judge
-    # showed is order-dependent across a session — passes alone, silently
-    # drops `q` when other reads ran first. The auto-merge makes the
-    # default read deterministic, so this asserts full contents.
+    def data_dtypes(df):
+        return [d for d in df.dtypes if not d[0].startswith("_p_")]
+
+    assert data_dtypes(sink.read()) == written + [("q", "double")]
+    assert data_dtypes(inc) == written + [("q", "double")]
+    assert data_dtypes(sink.read(as_of=v1)) == written
+    assert data_dtypes(sink.read(as_of=v2)) == written
+    back = {r.event_id: r for r in sink.read().collect()}
+    assert back[5].amount == Decimal("5.125")
+    assert back[5].local_ts == dt.datetime(2024, 1, 1, 5)
+    assert back[5].emb == [5.0, 0.5]
+    assert back[5].src.host == "h5" and back[5].tags == {"k": 5}
+
+    # plain read() must ALSO surface the evolved column: a schema taken
+    # from one file's footer is order-dependent across a session (r07:
+    # passes alone, silently drops `q` when other reads ran first), so
+    # this asserts full contents.
     plain = sink.read()
     assert "q" in plain.columns
     got = {(r.event_id, r.q)
@@ -942,13 +966,13 @@ def test_read_incremental_across_schema_evolution(spark, tmp_path):
 
 
 def test_every_reader_survives_schema_evolution(spark, tmp_path):
-    """Caller-list pin for the schema-fingerprint auto-merge: EVERY reader
-    API — default read(), time travel, changes(), read_incremental(),
-    and every copy-on-write op's internal read (delete / compact /
-    merge) — must carry the evolved column with old rows null-filled,
-    and time travel to a PRE-evolution snapshot must keep the old schema
-    (no q). This replaces a brittle source-grep of merge_schema call
-    sites: a future reader that footer-picks fails here functionally."""
+    """Caller-list pin for metadata-schema reads: EVERY reader API —
+    default read(), time travel, changes(), read_incremental(), and
+    every copy-on-write op's internal read (delete / compact / merge) —
+    must carry the evolved column with old rows null-filled, and time
+    travel to a PRE-evolution snapshot must keep the old schema (no q).
+    A future reader that takes its schema from one file's footer fails
+    here functionally."""
     import datetime as dt
 
     from pyspark.sql import Row
@@ -999,13 +1023,50 @@ def test_every_reader_survives_schema_evolution(spark, tmp_path):
     assert got == {(1, 2.0), (2, 4.0), (3, 6.0)}
 
 
+def test_reads_build_without_a_spark_job(spark, tmp_path, batches):
+    """Reads take their schema from the commit markers, never from parquet
+    footers: building a plain, time-travel, branch or incremental read of
+    an evolved multi-commit table runs no Spark job. The frames still
+    carry each read's own columns: the added column on head, none before
+    the add, the staged column on the branch only."""
+    b1, b2 = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    pre = sink._log.current_id()
+    sink.append(b2)
+    sink.append(b1.withColumn("q", F.col("v") * 2))
+    sink.append(b2.withColumn("q", F.col("v") * 3))
+    sink.append(b1.withColumn("r", F.lit("x")), branch="audit")
+
+    reads = {
+        "read": lambda: sink.read(),
+        "as_of": lambda: sink.read(as_of=pre),
+        "branch": lambda: sink.read(branch="audit"),
+        "incremental": lambda: sink.read_incremental(pre),
+    }
+    built = {}
+    for name, build in reads.items():
+        assert jobs_run_by(
+            spark, lambda: built.__setitem__(name, build())
+        ) == 0, name
+    data = {name: {c for c in df.columns if not c.startswith("_p_")}
+            for name, df in built.items()}
+    assert data == {
+        "read": {"event_id", "ts", "v", "q"},
+        "as_of": {"event_id", "ts", "v"},
+        "branch": {"event_id", "ts", "v", "q", "r"},
+        "incremental": {"event_id", "ts", "v", "q"},
+    }
+    assert built["read"].where("q IS NULL").count() == 30
+
+
 def test_type_change_rejected_at_write_history_stays_readable(spark, tmp_path):
     """Schema evolution is ADDITIVE-only (the Iceberg contract): a batch
     that rewrites an existing column's TYPE is rejected at WRITE time
     with an actionable error, and the table stays fully readable — the
     pre-r08 behavior committed the conflicting file and every later read
-    died with CANNOT_MERGE_SCHEMAS (loud thanks to the fingerprint
-    auto-merge, but history was already poisoned). Column ADDS still
+    died with CANNOT_MERGE_SCHEMAS (loud, but history was already
+    poisoned). Column ADDS still
     evolve the declared schema, so a type conflict on an EVOLVED column
     is caught at write too."""
     import datetime as dt
@@ -1148,7 +1209,7 @@ def test_torn_publish_fold_self_heals(spark, tmp_path, batches):
         SnapshotLog.evolve_schema = orig
 
     # torn state: q is main-visible data but NOT in the declared schema
-    assert "q" in sink.read(merge_schema=True).columns
+    assert "q" in sink.read().columns
     declared = {f["name"] for f in
                 sink._log.table_meta()["schema_json"]["fields"]}
     assert "q" not in declared
@@ -1218,7 +1279,7 @@ def test_torn_main_evolve_self_heals(spark, tmp_path, batches):
         [Row(event_id=102, ts=dt.datetime(2024, 1, 4, 10),
              v=3.0, q=4.5, r="x")]))
     assert _pending_flags(log) == []
-    back = sink.read(merge_schema=True)
+    back = sink.read()
     assert back.count() == 12 and {"q", "r"} <= set(back.columns)
 
 
@@ -1449,24 +1510,15 @@ def test_hostile_name_AND_value_partition_column_recomputes(spark, tmp_path):
 def test_wide_schema_evolution_fifty_commits_scales(spark, tmp_path):
     """Metadata scaling probe (r09 VERDICT item 5): 50 commits, each
     ADDING a fresh column, then every reader crosses all 50 evolution
-    boundaries at once. The schema-fingerprint merge and footer-harvest
+    boundaries at once. The marker-fields union and footer-harvest
     paths had only ever seen 1-2 boundaries.
 
     Pins: (a) the union schema is exactly base + all 50 added columns
     with the right null pattern; (b) incremental / CDC / time-travel
     reads across the full history agree; (c) NO per-commit plan blowup —
-    same-layout commits load as ONE mergeSchema scan (one FileScan over
-    50 dirs), not 50 unioned scans, so driver work stays O(files) not
-    O(commits^2).
-
-    Measured read amplification at this scale (50 commits x 10 rows,
-    local[4], warm, best-of-3): plain read 0.59 s vs merge_schema read
-    0.49 s — NO amplification, because a 50-fingerprint load group
-    already forces the footer merge on BOTH paths (the fingerprint
-    auto-merge that prevents order-dependent column drops); only
-    single-fingerprint (fixed-schema) tables take the cheaper
-    footer-pick path, and they by construction have no boundary to
-    cross."""
+    same-layout commits load as ONE scan (one FileScan over 50 dirs,
+    its schema the union of the 50 markers' fields), not 50 unioned
+    scans, so driver work stays O(files) not O(commits^2)."""
     import datetime as dt
 
     sink = _sink(spark, tmp_path)
@@ -1484,7 +1536,7 @@ def test_wide_schema_evolution_fifty_commits_scales(spark, tmp_path):
         sink.append(spark.createDataFrame(rows))
     first = sink.snapshots().agg(F.min("snapshot_id")).collect()[0][0]
 
-    back = sink.read(merge_schema=True)
+    back = sink.read()
     added = {f"c{i}" for i in range(n_commits)}
     assert added <= set(back.columns)
     assert back.count() == n_commits * n_rows
@@ -1520,7 +1572,7 @@ def test_wide_schema_evolution_fifty_commits_scales(spark, tmp_path):
 
     # time travel to the midpoint sees exactly the first half's columns
     mid_snap = first + mid - 1
-    half = sink.read(as_of=mid_snap, merge_schema=True)
+    half = sink.read(as_of=mid_snap)
     assert half.count() == mid * n_rows
     assert f"c{mid - 1}" in half.columns
     assert f"c{mid}" not in half.columns
@@ -1890,7 +1942,7 @@ def test_crash_sweep_torn_publish(spark, tmp_path, batches):
         warehouse_path=str(tmp_path), num_partitions=2,
         partition_spec=[("ts", "day")], location=converged[-1],
     ))
-    back = reopened.read(merge_schema=True)
+    back = reopened.read()
     assert back.count() == 11 and "q" in back.columns
 
 
@@ -2048,7 +2100,7 @@ def test_crash_sweep_torn_publish_then_audit_fail_drop(spark, tmp_path,
         assert not log.table_meta().get("pending_publish_folds"), k
         assert _pending_flags(log) == [], k
         want = 10 + (1 if published else 0) + 1
-        assert reopened.read(merge_schema=True).count() == want, k
+        assert reopened.read().count() == want, k
 
 
 def test_torn_fold_survives_expiry_of_its_carrier(spark, tmp_path, batches):

@@ -80,8 +80,8 @@ def test_roundtrip_values_survive(spark, tmp_path, events_df):
 def test_schema_evolution_additive(spark, tmp_path, events_df):
     """Additive schema evolution — the upgrade over the reference's
     'Static schemas only' constraint (reference README.md:68): a later
-    batch with a NEW column appends cleanly and merge-schema reads
-    surface it (nulls for pre-evolution rows)."""
+    batch with a NEW column appends cleanly and the default read
+    surfaces it (nulls for pre-evolution rows)."""
     from pyspark.sql import functions as F
 
     sink = _sink(spark, tmp_path)
@@ -89,12 +89,10 @@ def test_schema_evolution_additive(spark, tmp_path, events_df):
     evolved = events_df.withColumn("quality", F.col("v") / 10.0)
     sink.append(evolved)
 
-    back = sink.read(merge_schema=True)
+    back = sink.read()
     assert "quality" in back.columns
     assert back.count() == 60
     assert back.where(F.col("quality").isNull()).count() == 30
-    # default read keeps working (schema from latest footer subset)
-    assert sink.read().count() == 60
 
 
 def test_orc_file_format_roundtrip(spark, tmp_path, events_df):
@@ -347,7 +345,7 @@ def test_publish_folds_branch_added_columns(spark, tmp_path, events_df):
         sink.append(bad)
     # same type still appends fine
     sink.append(events_df.withColumn("quality", F.lit(7).cast("long")))
-    back = sink.read(merge_schema=True)
+    back = sink.read()
     assert back.where("quality IS NOT NULL").count() == 60
 
 
@@ -382,7 +380,7 @@ def test_dropped_branch_leaves_schema_undeclared(spark, tmp_path, events_df):
     assert "q" not in declared
     # main may now declare q as double — the staged long never landed
     sink.append(events_df.withColumn("q", F.lit(0.5)))
-    assert sink.read(merge_schema=True).where("q = 0.5").count() == 30
+    assert sink.read().where("q = 0.5").count() == 30
 
 
 def test_wap_routing_guard_covers_all_write_paths(spark, tmp_path, events_df):

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bytewax_iceberg_connector_spark.sources.tables import TABLE_NAMES, load_table
+from _sparkjobs import jobs_run_by
 
 
 def test_no_table_exposes_timestamp_ntz(spark, sf_dir):
@@ -187,31 +188,6 @@ def test_table_stats_footer_only_and_stamp_tracked(spark, tmp_path):
     assert rows2 == 11
 
 
-def _jobs_run_by(spark, fn) -> int:
-    """Spark jobs that ``fn()`` starts, counted through a job group. Job
-    events reach the status tracker asynchronously, so a marker job in a
-    second group is awaited first: once it shows, every earlier job has
-    shown too (the listener bus delivers in order)."""
-    import time
-    import uuid
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, marker = f"memo-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "load_table")
-    try:
-        fn()
-        sc.setJobGroup(marker, "marker")
-        sc.parallelize([0], 1).count()
-        deadline = time.monotonic() + 60
-        while not tracker.getJobIdsForGroup(marker):
-            assert time.monotonic() < deadline, "marker job never reported"
-            time.sleep(0.05)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(tracker.getJobIdsForGroup(group))
-
-
 def _write_ns_events(path):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -233,14 +209,14 @@ def test_repeat_load_of_unchanged_corpus_runs_no_job(spark, sf_dir, tmp_path):
     memoized read."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name)
-    assert _jobs_run_by(
+    assert jobs_run_by(
         spark, lambda: [load_table(spark, sf_dir, n) for n in TABLE_NAMES]
     ) == 0
 
     _write_ns_events(tmp_path / "events.parquet")
     first = load_table(spark, str(tmp_path), "events")
     memo = []
-    assert _jobs_run_by(
+    assert jobs_run_by(
         spark, lambda: memo.append(load_table(spark, str(tmp_path), "events"))
     ) == 0
     assert memo[0].dtypes == first.dtypes == [
@@ -266,7 +242,7 @@ def test_rewritten_table_reinfers_its_schema(spark, tmp_path):
         p,
     )
     got = []
-    assert _jobs_run_by(
+    assert jobs_run_by(
         spark,
         lambda: got.append(load_table(spark, str(tmp_path), "documents")),
     ) >= 1

@@ -3,29 +3,42 @@
 Usage: python3 tools/ab_perfbench.py <parent-ref> <workload> <seeds>
                                      [--seconds S] [--trace 0|1]
 
-<seeds> is a range (``11-15``) or a comma list (``3,7``). The parent is
-checked out as a detached ``git worktree`` in a temp dir that is removed
-on exit. For every seed, ``perfbench/run.py`` runs once on each tree, one
-run at a time, the order swapping from seed to seed (ABBA) so slow drift
-of the host's load falls on both sides alike. Each run builds from its own
-tree's source.
+<seeds> is a range (``11-15``) or a comma list (``3,7``). The parent's
+committed files are exported with ``git archive`` into a temp dir that is
+removed on exit. For every seed, ``perfbench/run.py`` runs once on each
+tree, one run at a time, the order swapping from seed to seed (ABBA) so
+slow drift of the host's load falls on both sides alike. Each run builds
+from its own tree's source.
 
 Prints one line per run (end-to-end metrics, ``cpu_steal_s``, the oracle
-verdict), then per metric the parent and change medians, their ratio and
-on how many seeds the change was better (direction from BENCHMARK.json).
-With ``--trace 1`` the median table covers every per-layer metric too.
+verdict), then per metric:
+
+- each side's median with its quartiles (q1-q3) and the change/parent
+  ratio;
+- on how many seeds (pairs) the change was better, direction from
+  BENCHMARK.json;
+- the parent's interquartile range (IQR) and the gain rule: ``gain`` when
+  at least ten pairs ran, the change is better on at least 9 of 10 of
+  them AND its median is better than the parent's by more than the
+  parent's IQR;
+- for the end-to-end metrics, ``WORSE`` when the change's median is worse
+  than the parent's by more than the metric's bound.
+
+With ``--trace 1`` the table covers every per-layer metric too.
 Exit code 0 only when every run passed its checks.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
 import shutil
 import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,6 +67,29 @@ def _run(tree: str, workload: str, seed: int, seconds: float,
     return json.loads(lines[-2]), json.loads(lines[-1])
 
 
+def _quartiles(vals: list[float]) -> tuple[float, float, float]:
+    """(q1, median, q3), the quartiles perfbench/spread.py reports."""
+    if len(vals) < 2:
+        return vals[0], vals[0], vals[0]
+    return tuple(statistics.quantiles(vals, n=4))
+
+
+def _verdict(pv: list[float], cv: list[float], better: str | None,
+             bound: float | None) -> str:
+    """Pair wins, the parent's IQR and the gain rule for one metric."""
+    q1, pm, q3 = _quartiles(pv)
+    if better is None:
+        return f"{'':>6s} {q3 - q1:10.4g}"
+    sign = 1 if better == "higher" else -1
+    wins = sum(sign * (c - p) > 0 for p, c in zip(pv, cv))
+    gap = sign * (statistics.median(cv) - pm)
+    gain = len(cv) >= 10 and wins >= 0.9 * len(cv) and gap > q3 - q1
+    out = f"{wins:2d}/{len(cv):<3d} {q3 - q1:10.4g} {'gain' if gain else '-'}"
+    if bound is not None and pm and -gap / abs(pm) > bound:
+        out += " WORSE"
+    return out
+
+
 def main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("parent_ref")
@@ -67,6 +103,7 @@ def main(argv: list[str]) -> int:
     end_to_end = [m["name"] for m in bench["end_to_end"]]
     better = {m["name"]: m["better"]
               for m in bench["end_to_end"] + bench["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
 
     tmp = tempfile.mkdtemp(prefix="ab_perfbench_")
     parent = os.path.join(tmp, "parent")
@@ -74,8 +111,11 @@ def main(argv: list[str]) -> int:
     values: dict[str, dict[str, list[float]]] = {"parent": {}, "change": {}}
     ok = True
     try:
-        subprocess.run(["git", "worktree", "add", "--detach", parent,
-                        args.parent_ref], cwd=ROOT, check=True)
+        archive = subprocess.run(["git", "archive", args.parent_ref],
+                                 cwd=ROOT, check=True,
+                                 capture_output=True).stdout
+        with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+            tar.extractall(parent)
         for i, seed in enumerate(_seeds(args.seeds)):
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
@@ -94,25 +134,23 @@ def main(argv: list[str]) -> int:
                       + (f" cpu_steal_s={steal:.2f}" if steal is not None
                          else ""), flush=True)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", parent],
-                       cwd=ROOT, capture_output=True)
-        subprocess.run(["git", "worktree", "prune"], cwd=ROOT,
-                       capture_output=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
-    print(f"{'metric':34s} {'parent':>10s} {'change':>10s} {'ratio':>7s} "
-          f"better")
+    def side(vals: list[float]) -> str:
+        q1, med, q3 = _quartiles(vals)
+        return f"{med:10.4g} [{q1:.4g}-{q3:.4g}]"
+
+    print(f"{'metric':34s} {'parent median [q1-q3]':>30s} "
+          f"{'change median [q1-q3]':>30s} {'ratio':>7s} {'better':>6s} "
+          f"{'parent IQR':>10s} rule")
     for name, pv in values["parent"].items():
         cv = values["change"].get(name)
         if not cv:
             continue
         pm, cm = statistics.median(pv), statistics.median(cv)
         ratio = f"{cm / pm:7.3f}" if pm else "      -"
-        wins = ""
-        if name in better:
-            sign = 1 if better[name] == "higher" else -1
-            wins = f"{sum(sign * (c - q) > 0 for q, c in zip(pv, cv))}/{len(cv)}"
-        print(f"{name:34s} {pm:10.4g} {cm:10.4g} {ratio} {wins}")
+        print(f"{name:34s} {side(pv):>30s} {side(cv):>30s} {ratio} "
+              + _verdict(pv, cv, better.get(name), bounds.get(name)))
     return 0 if ok else 1
 
 
