@@ -516,20 +516,14 @@ class LakeSink:
         if pcols:
             w = w.partitionBy(*pcols)
         w.save(path)
-        self._write_commit_stats(keyed, path)
-        # record which partition layout this commit dir was written under —
-        # the per-manifest spec_id of Iceberg: read() groups dirs by it so
-        # a table whose spec EVOLVED mid-history still scans cleanly.
-        # n_files is the commit's data-file count, counted ONCE here at
-        # write time so readers can skip fileless commits from metadata
-        # instead of re-walking every commit dir per read (the manifest's
-        # added-data-files count in Iceberg) — at scale the per-read walk
-        # is an O(total files) driver-side stat storm.
+        # ONE walk of the written tree feeds the footer stats, n_files and
+        # esc_pcols
         ext = f".{self._file_format()}"
-        n_files = 0
+        data_files: list[str] = []
         esc_pcols: set[str] = set()
-        for _, dirnames, files in os.walk(path):
-            n_files += sum(1 for fname in files if fname.endswith(ext))
+        for root, dirnames, files in os.walk(path):
+            data_files += [os.path.join(root, fname) for fname in files
+                           if fname.endswith(ext)]
             # any "_p_col=__BIC_ESC__..." component marks that column as
             # write-escaped in THIS commit; the read side recomputes it.
             # The component's NAME portion is Hive-escaped on disk too —
@@ -541,10 +535,19 @@ class LakeSink:
                 col, eq, val = dn.partition("=")
                 if eq and val.startswith(ESC_MARK):
                     esc_pcols.add(unescape_path_name(col))
+        self._write_commit_stats(keyed, path, data_files)
+        # record which partition layout this commit dir was written under —
+        # the per-manifest spec_id of Iceberg: read() groups dirs by it so
+        # a table whose spec EVOLVED mid-history still scans cleanly.
+        # n_files is the commit's data-file count, counted ONCE here at
+        # write time so readers can skip fileless commits from metadata
+        # instead of re-walking every commit dir per read (the manifest's
+        # added-data-files count in Iceberg) — at scale the per-read walk
+        # is an O(total files) driver-side stat storm.
         marker = {"spec_id": self._log.current_spec_id()
                   if self._log.exists() else 0,
                   "pcols": pcols,
-                  "n_files": n_files,
+                  "n_files": len(data_files),
                   # the commit's data fields as written (Iceberg's
                   # per-manifest schema): read() hands their union to the
                   # reader, so no read infers a schema from footers
@@ -651,7 +654,8 @@ class LakeSink:
                 )
         return new_fields
 
-    def _write_commit_stats(self, df: DataFrame, commit_path: str) -> None:
+    def _write_commit_stats(self, df: DataFrame, commit_path: str,
+                            data_files: list[str] | None = None) -> None:
         """Record per-commit column min/max into ``_bic_stats.json`` inside
         the commit dir — the manifest-stats analogue of Iceberg's file
         metrics, harvested the same way Iceberg does: from the already-
@@ -661,7 +665,8 @@ class LakeSink:
         data-file listing; co-locating stats with data (not in the
         snapshot json) means they survive snapshot expiry for as long as
         the dir itself is live. Non-parquet commit formats skip stats
-        (pruning then keeps their dirs — never lossy).
+        (pruning then keeps their dirs — never lossy). ``data_files`` is
+        the commit's files when the caller has already walked the tree.
         """
         if self._file_format() != "parquet":
             return
@@ -680,38 +685,42 @@ class LakeSink:
         # entirely — _prune_dirs' "col not in stats" path then keeps the
         # dir conservatively.
         bad: set = set()
-        for root, _dirs, files in os.walk(commit_path):
-            for fn in files:
-                if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                    continue
-                md = pq.ParquetFile(os.path.join(root, fn)).metadata
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        name = col.path_in_schema
-                        try:
-                            st = col.statistics
-                            if st is None or not st.has_min_max:
-                                bad.add(name)
-                                continue
-                            mn, mx = st.min, st.max
-                        except Exception:
-                            # stats not extractable for this physical type
-                            # (pyarrow raises on some logical annotations)
+        if data_files is None:
+            data_files = [os.path.join(root, fn)
+                          for root, _dirs, files in os.walk(commit_path)
+                          for fn in files]
+        for fpath in data_files:
+            fn = os.path.basename(fpath)
+            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
+                continue
+            md = pq.ParquetFile(fpath).metadata
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                for ci in range(g.num_columns):
+                    col = g.column(ci)
+                    name = col.path_in_schema
+                    try:
+                        st = col.statistics
+                        if st is None or not st.has_min_max:
                             bad.add(name)
                             continue
-                        if isinstance(mn, bytes):
-                            try:
-                                mn, mx = mn.decode(), mx.decode()
-                            except UnicodeDecodeError:
-                                bad.add(name)
-                                continue
-                        if not isinstance(mn, (int, float, str)):
-                            bad.add(name)  # timestamps/decimals: not prunable
+                        mn, mx = st.min, st.max
+                    except Exception:
+                        # stats not extractable for this physical type
+                        # (pyarrow raises on some logical annotations)
+                        bad.add(name)
+                        continue
+                    if isinstance(mn, bytes):
+                        try:
+                            mn, mx = mn.decode(), mx.decode()
+                        except UnicodeDecodeError:
+                            bad.add(name)
                             continue
-                        lo[name] = mn if name not in lo else min(lo[name], mn)
-                        hi[name] = mx if name not in hi else max(hi[name], mx)
+                    if not isinstance(mn, (int, float, str)):
+                        bad.add(name)  # timestamps/decimals: not prunable
+                        continue
+                    lo[name] = mn if name not in lo else min(lo[name], mn)
+                    hi[name] = mx if name not in hi else max(hi[name], mx)
         stats = {c: [lo[c], hi[c]] for c in lo if c not in bad}
         if not stats:
             return

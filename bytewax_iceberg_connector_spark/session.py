@@ -18,9 +18,20 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
 
 # SQL confs that are runtime-settable and that the engine depends on.
 # Applied defensively in ensure_engine_conf() because the driver may hand us
@@ -154,6 +165,100 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# In-process local filesystem (InProcessLocalFileSystem.java). pyspark
+# ships without libhadoop, so Hadoop's local filesystem starts a `chmod`
+# child process for every mkdir and file create, and FileContext (Spark's
+# checkpoint logs) a `readlink` process on every rename: 9-55 ms each, many
+# times per sink commit and streaming trigger. The helper does both inside
+# the JVM. It is compiled once per source and Spark version into a per-user
+# cache, and only joins a session whose JVM get_spark itself launches: the
+# classpath is fixed once the JVM runs, so a session built elsewhere (the
+# __spark_entry__ contract) keeps the stock filesystem.
+_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "InProcessLocalFileSystem.java")
+_FS_CLASS = "bytewax_iceberg_connector_spark.InProcessLocalFileSystem"
+_fs_warned = False
+
+
+def _warn_fs_once(reason: str) -> None:
+    global _fs_warned
+    if not _fs_warned:
+        _fs_warned = True
+        logger.warning("in-process local filesystem not added: %s", reason)
+
+
+def _javac() -> str | None:
+    home = os.environ.get("JAVA_HOME")
+    javac = home and os.path.join(home, "bin", "javac")
+    return javac if javac and os.access(javac, os.X_OK) else \
+        shutil.which("javac")
+
+
+def _local_fs_jar() -> str | None:
+    """The helper jar, compiled on first use; None (with one warning) when
+    there is no JDK or the build fails."""
+    javac = _javac()
+    if javac is None:
+        _warn_fs_once("no javac found; Hadoop's stock local filesystem "
+                      "starts a child process per chmod and readlink")
+        return None
+    with open(_FS_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + pyspark.__version__.encode())
+    cache = os.path.join(os.path.expanduser("~"), ".cache",
+                         "bytewax_iceberg_connector_spark")
+    jar = os.path.join(cache, f"localfs-{key.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars")
+    cp = glob.glob(os.path.join(jars, "hadoop-client-api-*.jar")) or \
+        [os.path.join(jars, "*")]
+    try:
+        os.makedirs(cache, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=cache) as tmp:
+            subprocess.run([javac, "--release", "17", "-nowarn", "-d", tmp,
+                            "-cp", os.pathsep.join(cp), _FS_SOURCE],
+                           check=True, capture_output=True, text=True)
+            part = os.path.join(tmp, "helper.jar")
+            with zipfile.ZipFile(part, "w") as z:
+                for root, _dirs, files in os.walk(tmp):
+                    for fn in files:
+                        if fn.endswith(".class"):
+                            full = os.path.join(root, fn)
+                            z.write(full, os.path.relpath(full, tmp))
+            os.replace(part, jar)  # concurrent builds: last one wins
+    except (OSError, subprocess.CalledProcessError) as e:
+        _warn_fs_once(f"building it failed: "
+                      f"{getattr(e, 'stderr', None) or e}")
+        return None
+    return jar
+
+
+def _launch_conf(extra_conf: dict, jvm_running: bool) -> dict:
+    """Every conf get_spark passes to ``SparkSession.builder``. The tuning
+    defaults go in with ``extra_conf`` taking precedence; the sentinel
+    stops ensure_engine_conf from re-applying them over a caller's
+    explicit override. When this call launches the JVM (``jvm_running``
+    False), the in-process local filesystem is added too, its jar joined
+    to any classpath the caller passed."""
+    conf = {**_BUILD_CONF, **_RUNTIME_CONF, **_TUNING_CONF,
+            _TUNING_SENTINEL: "true", **extra_conf}
+    if jvm_running:
+        _warn_fs_once("a JVM is already running; the session keeps the "
+                      "local filesystem it was launched with")
+        return conf
+    jar = _local_fs_jar()
+    if jar is None:
+        return conf
+    for k in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+        conf[k] = os.pathsep.join(filter(None, [extra_conf.get(k), jar]))
+    conf["spark.hadoop.fs.file.impl"] = _FS_CLASS
+    conf["spark.hadoop.fs.AbstractFileSystem.file.impl"] = \
+        f"{_FS_CLASS}$Context"
+    return conf
+
+
 def get_spark(
     app_name: str = "bytewax-iceberg-spark",
     master: str | None = None,
@@ -164,11 +269,9 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.master(master).appName(app_name)
-    # the builder applies tuning defaults with extra_conf taking
-    # precedence; the sentinel stops ensure_engine_conf from re-applying
-    # them over a caller's explicit override
-    for k, v in {**_BUILD_CONF, **_RUNTIME_CONF, **_TUNING_CONF,
-                 _TUNING_SENTINEL: "true", **extra_conf}.items():
+    jvm_running = (SparkContext._gateway is not None
+                   or "PYSPARK_GATEWAY_PORT" in os.environ)
+    for k, v in _launch_conf(extra_conf, jvm_running).items():
         builder = builder.config(k, str(v))
     spark = builder.getOrCreate()
     return ensure_engine_conf(spark)

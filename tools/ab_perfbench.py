@@ -25,6 +25,13 @@ verdict), then per metric:
   than the parent's by more than the metric's bound.
 
 With ``--trace 1`` the table covers every per-layer metric too.
+
+For ``lake_mixed`` the table also has one row per op kind, ``op_s.<kind>``:
+the four reads, ``append``, ``merge``, ``commit`` (one ingest micro-batch)
+and ``maintain`` (compact + expire). Each run gives it one value, the median
+of that run's samples of the kind, taken from the detail line's ``op_s``. A
+shift in one op kind then shows without a traced run.
+
 Exit code 0 only when every run passed its checks.
 """
 
@@ -125,6 +132,10 @@ def main(argv: list[str]) -> int:
                 for k, v in metrics.items():
                     values[side].setdefault(k, []).append(v)
                 ok = ok and result["correct"]
+                for kind, ts in detail.get("op_s", {}).items():
+                    if ts:
+                        values[side].setdefault(f"op_s.{kind}", []).append(
+                            statistics.median(ts))
                 steal = detail.get("cpu_steal_s")
                 if steal is not None:
                     values[side].setdefault("cpu_steal_s", []).append(steal)
@@ -149,8 +160,9 @@ def main(argv: list[str]) -> int:
             continue
         pm, cm = statistics.median(pv), statistics.median(cv)
         ratio = f"{cm / pm:7.3f}" if pm else "      -"
+        direction = "lower" if name.startswith("op_s.") else better.get(name)
         print(f"{name:34s} {side(pv):>30s} {side(cv):>30s} {ratio} "
-              + _verdict(pv, cv, better.get(name), bounds.get(name)))
+              + _verdict(pv, cv, direction, bounds.get(name)))
     return 0 if ok else 1
 
 
