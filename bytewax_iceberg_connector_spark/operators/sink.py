@@ -29,9 +29,11 @@ Two backends behind one API:
   so the Iceberg *contract* is proven under test even where the runtime
   cannot load.
 
-Scale: the append path repartitions by partition key before writing
+Scale: the write path repartitions by partition key before writing
 (`write.distribution-mode=hash` equivalent) so 1000 executors produce
-|partitions| files per commit, not |executors|×|partitions| small files.
+|partitions| files per commit, not |executors|×|partitions| small files;
+a single-writer append (``num_partitions=1``) gets the same files from
+``coalesce(1)`` without the shuffle.
 Snapshot JSONs carry the cumulative commit list — O(commits); real Iceberg's
 manifest lists make this O(1), the documented small-scale trade-off.
 """
@@ -42,8 +44,10 @@ import json
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 from ..config import IcebergSinkConfig
@@ -94,6 +98,26 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
 _REPLACING_OPS = frozenset({"overwrite", "replace", "delete"})
 
 
+def _local_frame(spark: SparkSession, schema: StructType,
+                 rows: list[tuple] | tuple = ()) -> DataFrame:
+    """A driver-built frame of ``rows`` with exactly ``schema``, as a
+    ``LocalRelation``, so running it starts no Python worker
+    (``createDataFrame`` of a Python list runs Python-worker tasks, and
+    its first use in a process forks the PySpark daemon). No rows: the
+    JVM builds it from the schema alone, which takes any Spark type.
+    Rows: they reach the JVM as one Arrow table."""
+    if not rows:
+        js = spark._jsparkSession
+        return DataFrame(js.createDataFrame(
+            spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
+        ), spark)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def _sort_exprs(sort_order: list[str]):
     """Compile config.sort_order entries ('col' | 'col desc') to Columns."""
     out = []
@@ -110,7 +134,8 @@ class LakeSink:
     """A1 ``IcebergSink`` equivalent: batch append + streaming micro-batch.
 
     The reference's ``num_partitions`` fixed writer fan-out (A2 list_parts,
-    connector.py:456-468) maps to ``repartition(num_partitions, keys)``; its
+    connector.py:456-468) maps to ``repartition(num_partitions, keys)``,
+    or to ``coalesce(1)`` for a single-writer append; its
     dual size/time flush trigger (A4, connector.py:187-191) maps to the
     streaming trigger interval (time) + the source admission cap compiled
     from ``batch_size`` (config.source_admission_options) — together the
@@ -234,7 +259,7 @@ class LakeSink:
                     "DataFrame or set config.table_schema (reference "
                     "connector.py:389-392 parity)"
                 )
-            like = self.spark.createDataFrame([], declared)
+            like = _local_frame(self.spark, declared)
         if self.backend == "iceberg":
             from pyspark.sql.functions import col, partitioning as PT
 
@@ -295,8 +320,9 @@ class LakeSink:
         """Atomic-append a batch (the reference's _flush, collapsed).
 
         Partition-key grouping (A6) + per-group Arrow write + commit (A5)
-        become: compute transform columns → hash-repartition on them →
-        (sort within partitions per config.sort_order) → columnar write →
+        become: compute transform columns → hash-repartition on them (one
+        writer: coalesce(1)) → (sort within partitions per
+        config.sort_order) → columnar write →
         ONE snapshot commit (operators/snapshots.py), optimistic-retried
         exactly like the reference's commit loop (connector.py:242-257).
 
@@ -497,6 +523,14 @@ class LakeSink:
                 .sortWithinPartitions(*[qcol(c) for c in pcols], "_bic_z")
                 .drop("_bic_z")
             )
+        elif operation == "append" and self.config.num_partitions == 1:
+            # a single writer for an append: coalesce(1) gives the same
+            # files as the hash exchange below (one task, one file per
+            # partition value) without its shuffle-map job, so a batch
+            # append or micro-batch runs ONE Spark job instead of two.
+            # Rewrites keep the exchange: their join and full-scan inputs
+            # need its parallelism upstream of the writer
+            keyed = keyed.coalesce(1)
         else:
             keyed = keyed.repartition(
                 self.config.num_partitions, *[qcol(c) for c in pcols]
@@ -535,7 +569,7 @@ class LakeSink:
                 col, eq, val = dn.partition("=")
                 if eq and val.startswith(ESC_MARK):
                     esc_pcols.add(unescape_path_name(col))
-        self._write_commit_stats(keyed, path, data_files)
+        self._write_commit_stats(path, data_files)
         # record which partition layout this commit dir was written under —
         # the per-manifest spec_id of Iceberg: read() groups dirs by it so
         # a table whose spec EVOLVED mid-history still scans cleanly.
@@ -654,7 +688,7 @@ class LakeSink:
                 )
         return new_fields
 
-    def _write_commit_stats(self, df: DataFrame, commit_path: str,
+    def _write_commit_stats(self, commit_path: str,
                             data_files: list[str] | None = None) -> None:
         """Record per-commit column min/max into ``_bic_stats.json`` inside
         the commit dir — the manifest-stats analogue of Iceberg's file
@@ -830,11 +864,10 @@ class LakeSink:
              s["operation"], s.get("batch_id"), len(s["live"]))
             for s in self._log.snapshots()
         ]
-        return self.spark.createDataFrame(
-            rows,
+        return _local_frame(self.spark, StructType.fromDDL(
             "snapshot_id BIGINT, parent_id BIGINT, timestamp_ms BIGINT, "
-            "operation STRING, batch_id BIGINT, n_live_commits INT",
-        )
+            "operation STRING, batch_id BIGINT, n_live_commits INT"
+        ), rows)
 
     def current_snapshot_id(self, branch: str = "main") -> int:
         """Head snapshot id of ``branch`` (0 = no commits). Callers that
@@ -1428,7 +1461,7 @@ class LakeSink:
         markers = {d: _marker(d) for d in dirs}
         markers = {d: m for d, m in markers.items() if _has_files(d, m)}
         if not markers:
-            empty = self.spark.createDataFrame([], declared)
+            empty = _local_frame(self.spark, declared)
             if with_spec_id:
                 empty = empty.withColumn(
                     "_spec_id", F.lit(None).cast("int")

@@ -645,7 +645,7 @@ def test_commit_stats_omit_column_with_partial_coverage(spark, tmp_path, batches
         write_statistics=["event_id"],
     )
     _os.unlink(stats_file)
-    sink._write_commit_stats(None, d)
+    sink._write_commit_stats(d)
     with open(stats_file) as f:
         after = _json.load(f)
     # v=9000 is invisible to v's stats now — recording the old [0,9] bound
@@ -1058,6 +1058,87 @@ def test_reads_build_without_a_spark_job(spark, tmp_path, batches):
         "incremental": {"event_id", "ts", "v", "q"},
     }
     assert built["read"].where("q IS NULL").count() == 30
+
+
+def _leaf_nodes(df) -> list[str]:
+    """Node names of the leaves of ``df``'s optimized logical plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_empty_reads_are_local_relations(spark, tmp_path, batches):
+    """A read whose live set is empty (no new commit for an incremental
+    read, or only a fileless delete-all commit) is a JVM-side
+    ``LocalRelation`` of exactly the declared schema, never an RDD of a
+    Python list, whose execution runs Python-worker tasks. The same holds
+    for the snapshot history frame."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    b1, _ = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    head = sink._log.current_id()
+    incremental = sink.read_incremental(head)  # no commit after head
+    sink.delete("true")  # a partitioned write of no rows: a fileless commit
+    emptied = sink._log.current_id()
+    declared = StructType.fromJson(sink._log.table_meta()["schema_json"])
+    with_spec = StructType(
+        declared.fields + [StructField("_spec_id", IntegerType())]
+    )
+
+    reads = {
+        "incremental": (incremental, declared),
+        "read": (sink.read(), declared),
+        "as_of": (sink.read(as_of=emptied), declared),
+        "with_spec_id": (sink.read(with_spec_id=True), with_spec),
+    }
+    for name, (df, schema) in reads.items():
+        assert df.schema == schema, name
+        assert _leaf_nodes(df) == ["LocalRelation"], name
+        assert df.count() == 0, name
+    history = sink.snapshots()
+    assert _leaf_nodes(history) == ["LocalRelation"]
+    assert [(r.snapshot_id, r.operation, r.n_live_commits)
+            for r in history.orderBy("snapshot_id").collect()] == [
+        (head, "append", 1), (emptied, "delete", 1)]
+
+
+def test_single_writer_append_runs_one_job(spark, tmp_path):
+    """With ``num_partitions=1`` an append needs no shuffle: a 4-partition
+    frame over 3 ``day(ts)`` partitions is written by ONE Spark job, as
+    one data file per partition value, each ordered by
+    ``config.sort_order``."""
+    import pyarrow.parquet as pq
+
+    sink = LakeSink(spark, IcebergSinkConfig(
+        table_name="db.single_writer",
+        warehouse_path=str(tmp_path),
+        num_partitions=1,
+        partition_spec=[("ts", "day")],
+        sort_order=["v desc"],
+    ))
+    df = spark.range(0, 40, 1, numPartitions=4).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(
+            F.lit(1704103200) + F.col("id") % 3 * 86400
+        ).alias("ts"),
+        (F.col("id") * 7 % 40).cast("double").alias("v"),
+    )
+    assert df.rdd.getNumPartitions() == 4
+    assert jobs_run_by(spark, lambda: sink.append(df)) == 1
+    (commit,) = sink._log.commit_paths()
+    files_by_day = {}
+    for root, _dirs, files in os.walk(commit):
+        for f in files:
+            if f.endswith(".parquet"):
+                files_by_day.setdefault(os.path.basename(root), []).append(
+                    os.path.join(root, f))
+    assert len(files_by_day) == 3
+    for day, files in files_by_day.items():
+        assert len(files) == 1, day
+        vs = pq.read_table(files[0], columns=["v"]).column("v").to_pylist()
+        assert vs == sorted(vs, reverse=True), day
+    assert sorted(r.event_id for r in sink.read().collect()) == list(range(40))
 
 
 def test_type_change_rejected_at_write_history_stays_readable(spark, tmp_path):

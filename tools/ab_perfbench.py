@@ -26,11 +26,13 @@ verdict), then per metric:
 
 With ``--trace 1`` the table covers every per-layer metric too.
 
-For ``lake_mixed`` the table also has one row per op kind, ``op_s.<kind>``:
-the four reads, ``append``, ``merge``, ``commit`` (one ingest micro-batch)
-and ``maintain`` (compact + expire). Each run gives it one value, the median
-of that run's samples of the kind, taken from the detail line's ``op_s``. A
-shift in one op kind then shows without a traced run.
+For ``lake_mixed`` the table also has two rows per op kind (the four
+reads, ``append``, ``merge``, ``commit`` (one ingest micro-batch) and
+``maintain`` (compact + expire)), taken from the detail line's ``op_s``:
+``op_s.<kind>``, each run's median sample of the kind, and
+``op_max_s.<kind>``, each run's slowest one. A shift in one op kind then
+shows without a traced run, and so does a one-off stall (a kind has about
+four samples a run, so its median hides one).
 
 Exit code 0 only when every run passed its checks.
 """
@@ -136,6 +138,8 @@ def main(argv: list[str]) -> int:
                     if ts:
                         values[side].setdefault(f"op_s.{kind}", []).append(
                             statistics.median(ts))
+                        values[side].setdefault(f"op_max_s.{kind}",
+                                                []).append(max(ts))
                 steal = detail.get("cpu_steal_s")
                 if steal is not None:
                     values[side].setdefault("cpu_steal_s", []).append(steal)
@@ -160,7 +164,8 @@ def main(argv: list[str]) -> int:
             continue
         pm, cm = statistics.median(pv), statistics.median(cv)
         ratio = f"{cm / pm:7.3f}" if pm else "      -"
-        direction = "lower" if name.startswith("op_s.") else better.get(name)
+        direction = ("lower" if name.startswith(("op_s.", "op_max_s."))
+                     else better.get(name))
         print(f"{name:34s} {side(pv):>30s} {side(cv):>30s} {ratio} "
               + _verdict(pv, cv, direction, bounds.get(name)))
     return 0 if ok else 1
