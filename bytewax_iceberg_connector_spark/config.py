@@ -10,8 +10,7 @@ writer; here they COMPILE to Spark/Iceberg writer settings —
   batch_size             → per-trigger source admission cap (maxOffsetsPerTrigger
                            / maxFilesPerTrigger — Spark has no exact count
                            trigger; documented gap, SURVEY.md §7)
-  num_partitions         → writer fan-out (A2 list_parts): coalesce(1) for a
-                           single-writer append, hash repartition(n) otherwise
+  num_partitions         → repartition(n) before the write (A2 list_parts)
   file_format            → Iceberg `write.format.default` table property
   catalog_*              → spark.sql.catalog.<name>.* conf
 Guardrail ranges and the >60 s / >50 partitions warnings mirror

@@ -29,11 +29,9 @@ Two backends behind one API:
   so the Iceberg *contract* is proven under test even where the runtime
   cannot load.
 
-Scale: the write path repartitions by partition key before writing
+Scale: the append path repartitions by partition key before writing
 (`write.distribution-mode=hash` equivalent) so 1000 executors produce
-|partitions| files per commit, not |executors|×|partitions| small files;
-a single-writer append (``num_partitions=1``) gets the same files from
-``coalesce(1)`` without the shuffle.
+|partitions| files per commit, not |executors|×|partitions| small files.
 Snapshot JSONs carry the cumulative commit list — O(commits); real Iceberg's
 manifest lists make this O(1), the documented small-scale trade-off.
 """
@@ -98,24 +96,16 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
 _REPLACING_OPS = frozenset({"overwrite", "replace", "delete"})
 
 
-def _local_frame(spark: SparkSession, schema: StructType,
-                 rows: list[tuple] | tuple = ()) -> DataFrame:
-    """A driver-built frame of ``rows`` with exactly ``schema``, as a
-    ``LocalRelation``, so running it starts no Python worker
-    (``createDataFrame`` of a Python list runs Python-worker tasks, and
-    its first use in a process forks the PySpark daemon). No rows: the
-    JVM builds it from the schema alone, which takes any Spark type.
-    Rows: they reach the JVM as one Arrow table."""
-    if not rows:
-        js = spark._jsparkSession
-        return DataFrame(js.createDataFrame(
-            spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
-        ), spark)
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows],
-        schema=to_arrow_schema(schema),
-    )
-    return spark.createDataFrame(table, schema=schema)
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of exactly ``schema``, built by the JVM from the
+    schema alone as a ``LocalRelation`` (it takes any Spark type), so
+    running it starts no Python worker: ``createDataFrame`` of a Python
+    list runs Python-worker tasks, and its first use in a process forks
+    the PySpark daemon."""
+    js = spark._jsparkSession
+    return DataFrame(js.createDataFrame(
+        spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
+    ), spark)
 
 
 def _sort_exprs(sort_order: list[str]):
@@ -134,8 +124,7 @@ class LakeSink:
     """A1 ``IcebergSink`` equivalent: batch append + streaming micro-batch.
 
     The reference's ``num_partitions`` fixed writer fan-out (A2 list_parts,
-    connector.py:456-468) maps to ``repartition(num_partitions, keys)``,
-    or to ``coalesce(1)`` for a single-writer append; its
+    connector.py:456-468) maps to ``repartition(num_partitions, keys)``; its
     dual size/time flush trigger (A4, connector.py:187-191) maps to the
     streaming trigger interval (time) + the source admission cap compiled
     from ``batch_size`` (config.source_admission_options) — together the
@@ -259,7 +248,7 @@ class LakeSink:
                     "DataFrame or set config.table_schema (reference "
                     "connector.py:389-392 parity)"
                 )
-            like = _local_frame(self.spark, declared)
+            like = _empty_frame(self.spark, declared)
         if self.backend == "iceberg":
             from pyspark.sql.functions import col, partitioning as PT
 
@@ -320,9 +309,8 @@ class LakeSink:
         """Atomic-append a batch (the reference's _flush, collapsed).
 
         Partition-key grouping (A6) + per-group Arrow write + commit (A5)
-        become: compute transform columns → hash-repartition on them (one
-        writer: coalesce(1)) → (sort within partitions per
-        config.sort_order) → columnar write →
+        become: compute transform columns → hash-repartition on them →
+        (sort within partitions per config.sort_order) → columnar write →
         ONE snapshot commit (operators/snapshots.py), optimistic-retried
         exactly like the reference's commit loop (connector.py:242-257).
 
@@ -523,14 +511,6 @@ class LakeSink:
                 .sortWithinPartitions(*[qcol(c) for c in pcols], "_bic_z")
                 .drop("_bic_z")
             )
-        elif operation == "append" and self.config.num_partitions == 1:
-            # a single writer for an append: coalesce(1) gives the same
-            # files as the hash exchange below (one task, one file per
-            # partition value) without its shuffle-map job, so a batch
-            # append or micro-batch runs ONE Spark job instead of two.
-            # Rewrites keep the exchange: their join and full-scan inputs
-            # need its parallelism upstream of the writer
-            keyed = keyed.coalesce(1)
         else:
             keyed = keyed.repartition(
                 self.config.num_partitions, *[qcol(c) for c in pcols]
@@ -864,10 +844,15 @@ class LakeSink:
              s["operation"], s.get("batch_id"), len(s["live"]))
             for s in self._log.snapshots()
         ]
-        return _local_frame(self.spark, StructType.fromDDL(
+        schema = StructType.fromDDL(
             "snapshot_id BIGINT, parent_id BIGINT, timestamp_ms BIGINT, "
             "operation STRING, batch_id BIGINT, n_live_commits INT"
-        ), rows)
+        )
+        # one Arrow table, so the frame is a LocalRelation (no Python worker)
+        return self.spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows],
+            schema=to_arrow_schema(schema),
+        ), schema=schema)
 
     def current_snapshot_id(self, branch: str = "main") -> int:
         """Head snapshot id of ``branch`` (0 = no commits). Callers that
@@ -1461,7 +1446,7 @@ class LakeSink:
         markers = {d: _marker(d) for d in dirs}
         markers = {d: m for d, m in markers.items() if _has_files(d, m)}
         if not markers:
-            empty = _local_frame(self.spark, declared)
+            empty = _empty_frame(self.spark, declared)
             if with_spec_id:
                 empty = empty.withColumn(
                     "_spec_id", F.lit(None).cast("int")
