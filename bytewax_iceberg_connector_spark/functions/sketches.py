@@ -1,13 +1,12 @@
 """Frequency-sketch helpers: Misra–Gries heavy-hitter candidates.
 
 The scalable exact-top-k recipe for columns whose distinct-value universe
-is too large to shuffle (n-grams at 100 TB): a per-partition Misra–Gries
-summary of size ``s`` retains every item whose PARTITION count exceeds
-n_p/s; by pigeonhole any item with GLOBAL count > N/s exceeds that bound
-in at least one partition, so the UNION of per-partition candidate keys
-is a superset of all global heavy hitters. Candidates (≤ s·partitions
-keys, tiny) broadcast back for an exact recount of only those keys — the
-word-count shuffle shrinks from |distinct terms| to |candidates|.
+is too large to shuffle (n-grams at 100 TB): a Misra–Gries summary of
+``s`` counters retains every item whose count exceeds N/s. The summary is
+mergeable, so each task sketches its partition and the partial summaries
+fold into one. The candidates (≤ s keys, tiny) then broadcast back for an
+exact recount of only those keys — the word-count shuffle shrinks from
+|distinct terms| to |candidates|.
 
 Exactness guarantee: if the k-th largest global count f_k > N/s, the
 top-k is provably inside the candidate set and the recount is exact —
@@ -17,31 +16,20 @@ still a certified subset (every returned count is exact).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
-def misra_gries_candidates(df: DataFrame, col: str, s: int = 256) -> list:
-    """Union of per-partition Misra–Gries summary keys for ``df[col]``.
+def misra_gries_candidates(df: DataFrame, col: str, s: int = 256) -> DataFrame:
+    """Lazy one-column frame (``col``) of Misra–Gries candidates for
+    ``df[col]``: every value with count > N/s is in it.
 
-    One zero-shuffle scan; driver receives ≤ s keys per task. Uses the
-    mergeable-summary form (batch value_counts folded in, then the
-    (s+1)-th largest counter subtracted from all and non-positives
-    evicted) — vectorized per Arrow batch instead of the per-row counter
-    dance, same retention guarantee.
+    Spark's ``freqItems`` is this summary as a JVM aggregate
+    (``CollectFrequentItems``, partial per task, merged on one): it keeps
+    ``int(1/support)`` counters, s or (where 1/(1/s) rounds down) s - 1,
+    and every decrement takes the same amount from one more counter than
+    that, so from at least s, and an item loses at most N/s. Spark takes s up to 10⁴ (support ≥ 1e-4).
+    Nothing runs until the frame does.
     """
-
-    def _mg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        counters: dict = {}
-        for pdf in batches:
-            for v, c in pdf[col].value_counts().items():
-                counters[v] = counters.get(v, 0) + int(c)
-            if len(counters) > s:
-                thresh = sorted(counters.values(), reverse=True)[s]
-                counters = {k: c - thresh for k, c in counters.items() if c > thresh}
-        yield pd.DataFrame({col: list(counters.keys())})
-
-    out = df.select(col).mapInPandas(_mg, schema=df.select(col).schema)
-    return [r[0] for r in out.distinct().collect()]
+    summary = df.stat.freqItems([col], 1 / s)
+    return summary.select(F.explode(f"{col}_freqItems").alias(col))

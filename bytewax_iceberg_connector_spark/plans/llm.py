@@ -2409,19 +2409,21 @@ ORDER BY id_a, id_b
 
 def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 corpus tokens via Misra–Gries candidate pruning
-    (functions/sketches.py): one zero-shuffle sketch scan yields a
-    candidate superset of every term with count > N/s, the candidate list
-    broadcasts back as an ``isin`` scan filter, and only candidate rows
-    enter the word-count shuffle — |candidates| keys instead of the full
-    distinct-term universe.
+    (functions/sketches.py), as one plan that runs in the JVM: the
+    ``freqItems`` aggregate sketches each token partition and merges the
+    summaries on one task into a candidate superset of every term with
+    count > N/s; the candidates broadcast into a left-semi join on the
+    token scan, and only candidate rows enter the word-count shuffle —
+    |candidates| keys instead of the full distinct-term universe.
+    Building the frame runs no Spark job.
 
     Why not plain groupBy+top-k (ngram_topk's shape)? At 100 TB the
     distinct n-gram universe is billions of keys and the count shuffle
-    dominates; MG caps the shuffle at s·partitions keys while keeping the
-    RESULT exact whenever f_k > N/s (true by construction here: s=64
-    exceeds the corpus vocabulary) — and certified-exact-counts-subset
-    otherwise. The oracle computes the same top-10 with a full GROUP BY,
-    so the green row proves the pruned plan loses nothing.
+    dominates; MG caps the shuffle at s keys while keeping the RESULT
+    exact whenever f_k > N/s (true by construction here: s=64 exceeds
+    the corpus vocabulary) — and certified-exact-counts-subset otherwise.
+    The oracle computes the same top-10 with a full GROUP BY, so the
+    green row proves the pruned plan loses nothing.
     """
     from pyspark.sql import Window
 
@@ -2431,7 +2433,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(X.tokens("text")).alias("term"))
     cands = misra_gries_candidates(toks, "term", s=64)
     counts = (
-        toks.where(F.col("term").isin(cands))
+        toks.join(F.broadcast(cands), "term", "left_semi")
         .groupBy("term")
         .agg(F.count("*").alias("n"))
     )

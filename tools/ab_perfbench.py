@@ -34,6 +34,10 @@ reads, ``append``, ``merge``, ``commit`` (one ingest micro-batch) and
 shows without a traced run, and so does a one-off stall (a kind has about
 four samples a run, so its median hides one).
 
+For ``analytics`` it has one row per query, ``query_s.<name>``, each
+run's median sample of the query from the detail line's ``query_s``; lower
+is better. A change to one query then shows without a traced run.
+
 Exit code 0 only when every run passed its checks.
 """
 
@@ -140,6 +144,10 @@ def main(argv: list[str]) -> int:
                             statistics.median(ts))
                         values[side].setdefault(f"op_max_s.{kind}",
                                                 []).append(max(ts))
+                for name, ts in detail.get("query_s", {}).items():
+                    if ts:
+                        values[side].setdefault(
+                            f"query_s.{name}", []).append(statistics.median(ts))
                 steal = detail.get("cpu_steal_s")
                 if steal is not None:
                     values[side].setdefault("cpu_steal_s", []).append(steal)
@@ -164,7 +172,8 @@ def main(argv: list[str]) -> int:
             continue
         pm, cm = statistics.median(pv), statistics.median(cv)
         ratio = f"{cm / pm:7.3f}" if pm else "      -"
-        direction = ("lower" if name.startswith(("op_s.", "op_max_s."))
+        direction = ("lower" if name.startswith(("op_s.", "op_max_s.",
+                                                 "query_s."))
                      else better.get(name))
         print(f"{name:34s} {side(pv):>30s} {side(cv):>30s} {ratio} "
               + _verdict(pv, cv, direction, bounds.get(name)))

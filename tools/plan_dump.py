@@ -56,8 +56,9 @@ SHOWCASE = [
      "word-count partial agg; vocabulary-sized df table broadcast back — "
      "the tf table never re-shuffles on term"),
     ("heavy_hitters",
-     "Misra–Gries candidate scan (zero shuffle) → isin filter on the scan "
-     "→ count shuffle carries only candidate keys"),
+     "Misra–Gries candidates as the JVM freqItems aggregate (partial per "
+     "task, one merge) → broadcast left-semi join on the token scan → "
+     "count shuffle carries only candidate keys; one plan, no build-time job"),
     ("gapfill_locf",
      "dense grid generated (sequence/explode), never stored; LOCF is one "
      "running window on the same user_id lineage"),
