@@ -25,6 +25,10 @@ from enum import Enum
 from typing import Any, Optional
 
 from pydantic import BaseModel, Field, field_validator
+from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+from .session import ensure_engine_conf
 
 logger = logging.getLogger(__name__)
 
@@ -181,3 +185,38 @@ class IcebergSinkConfig(BaseModel):
             # across 1000 executors:
             "write.distribution-mode": "hash",
         }
+
+
+# -- shared by operators/sink.py and operators/iceberg_sink.py -------------
+
+
+def bind_sink_session(spark: SparkSession, config: Any) -> None:
+    """Check a sink's config type (connector.py:451-454 parity) and apply
+    the engine's runtime confs: on a vanilla driver-provided session,
+    partition-dir type inference is ON, and "0123" read back as int 123 is
+    lossy before any cast."""
+    if not isinstance(config, IcebergSinkConfig):
+        raise TypeError("config must be an IcebergSinkConfig")
+    ensure_engine_conf(spark)
+
+
+def declared_schema(config: IcebergSinkConfig) -> StructType:
+    """``config.table_schema`` as a StructType, to create a missing table
+    without a frame (A9); raises when none is declared, like the
+    reference (connector.py:380-392)."""
+    if not config.table_schema:
+        raise ValueError(
+            "table is missing and no schema is available: pass a "
+            "DataFrame or set config.table_schema (reference "
+            "connector.py:389-392 parity)"
+        )
+    return StructType.fromDDL(config.table_schema)
+
+
+def check_one_pin(as_of: int | None, as_of_timestamp_ms: int | None,
+                  tag: str | None, branch: str | None) -> None:
+    """A read pins at most one of snapshot id, timestamp, tag or branch."""
+    if sum(x is not None for x in (as_of, as_of_timestamp_ms, tag, branch)) > 1:
+        raise ValueError(
+            "pass at most one of as_of / as_of_timestamp_ms / tag / branch"
+        )

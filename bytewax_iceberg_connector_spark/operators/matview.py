@@ -26,14 +26,14 @@ Reference scope: the reference lands rows into Iceberg and leaves rollups
 to the warehouse (connector.py:245); the north star's "hypertable rollup"
 names exactly this maintained-aggregate capability.
 
-Backend scope: the watermark mechanism reads the parquet backend's
-snapshot log; on the iceberg backend neither the base head nor the
-``batch_id`` watermark is visible through that log, so ``refresh()``
-degrades to a FULL recompute every call (correct, never incremental) and
-warns once. Wiring the iceberg path needs the runtime's own snapshot ids
-(``<table>.snapshots``) plus a table-property watermark — untestable in
-this container (no runtime jar), so the degrade is explicit rather than
-pretended away.
+Scope: the watermark mechanism reads a ``LakeSink``'s snapshot log. An
+``IcebergRuntimeSink`` base (operators/iceberg_sink.py) has no such log:
+neither the base head nor the ``batch_id`` watermark is visible, so
+``refresh()`` degrades to a FULL recompute every call (correct, never
+incremental) and warns. Wiring that path needs the runtime's own snapshot
+ids (``<table>.snapshots``) plus a table-property watermark — untestable
+without the runtime jar, so the degrade is explicit rather than pretended
+away.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dec
+from .iceberg_sink import IcebergRuntimeSink
 from .sink import LakeSink
 
 _SUM_SCALE = 2
@@ -91,8 +92,9 @@ class ContinuousAggregate:
         return merged.groupBy(*keys).agg(*sums, F.sum("n_rows").alias("n_rows"))
 
     def last_refreshed(self) -> int | None:
-        """Base-table snapshot id the view currently reflects."""
-        if not self.agg.table_exists():
+        """Base-table snapshot id the view currently reflects (None on an
+        ``IcebergRuntimeSink``: no snapshot log holds the watermark)."""
+        if isinstance(self.agg, IcebergRuntimeSink) or not self.agg.table_exists():
             return None
         ids = self.agg._log.committed_batch_ids()
         return max(ids) if ids else None
@@ -102,7 +104,7 @@ class ContinuousAggregate:
     def refresh(self) -> dict:
         """Advance the view to the base table's head snapshot. Returns
         ``{"refreshed_to": id, "mode": "noop"|"incremental"|"full"}``."""
-        if self.base.backend == "iceberg":  # see module docstring
+        if isinstance(self.base, IcebergRuntimeSink):  # see module docstring
             import warnings
 
             warnings.warn(

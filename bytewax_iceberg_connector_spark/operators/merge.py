@@ -34,6 +34,22 @@ from pyspark.sql import functions as F
 from .partitioning import qcol
 
 
+def latest_per_key(df: DataFrame, keys: list[str],
+                   order_cols: list[str]) -> DataFrame:
+    """One row per ``keys``: the row with the greatest ``order_cols``
+    (compared left to right, NULLs last) — the within-batch winner MERGE
+    needs, since duplicate source keys make it nondeterministic (or abort,
+    on the Iceberg runtime's cardinality check)."""
+    w = Window.partitionBy(*[qcol(k) for k in keys]).orderBy(
+        *[qcol(c).desc() for c in order_cols]
+    )
+    return (
+        df.withColumn("_bic_rn", F.row_number().over(w))
+        .where(F.col("_bic_rn") == 1)
+        .drop("_bic_rn")
+    )
+
+
 def merge_upsert(
     target: DataFrame,
     updates: DataFrame,
@@ -65,14 +81,7 @@ def merge_upsert(
     # parse the dot as struct access and fail on a literally-dotted
     # column name (r10 hostile-column-names find)
     if tiebreak is not None:
-        w = Window.partitionBy(*[qcol(k) for k in keys]).orderBy(
-            qcol(tiebreak).desc()
-        )
-        updates = (
-            updates.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        updates = latest_per_key(updates, keys, [tiebreak])
     missing = [c for c in target.columns if c not in updates.columns]
     for c in missing:
         updates = updates.withColumn(

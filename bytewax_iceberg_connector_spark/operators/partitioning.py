@@ -221,6 +221,12 @@ def encode_hostile_pcol(col: Column, colname: str) -> Column:
     )
 
 
+def as_fields(spec: list[PartitionField | tuple | list]) -> list[PartitionField]:
+    """Spec entries as PartitionFields; tuples and lists are unpacked."""
+    return [f if isinstance(f, PartitionField) else PartitionField(*f)
+            for f in spec]
+
+
 def partition_key(df: DataFrame, spec: list[PartitionField | tuple]) -> DataFrame:
     """Attach the Iceberg-style partition key columns (prefix ``_p_``).
 
@@ -230,7 +236,7 @@ def partition_key(df: DataFrame, spec: list[PartitionField | tuple]) -> DataFram
     loop. An empty spec returns the frame unchanged (unpartitioned table,
     connector.py:286-288).
     """
-    fields = [f if isinstance(f, PartitionField) else PartitionField(*f) for f in spec]
+    fields = as_fields(spec)
     dtypes = dict(df.dtypes)
     out = df
     for f in fields:
@@ -242,5 +248,4 @@ def partition_key(df: DataFrame, spec: list[PartitionField | tuple]) -> DataFram
 
 
 def partition_columns(spec: list[PartitionField | tuple]) -> list[str]:
-    fields = [f if isinstance(f, PartitionField) else PartitionField(*f) for f in spec]
-    return [f"_p_{f.field_name}" for f in fields]
+    return [f"_p_{f.field_name}" for f in as_fields(spec)]

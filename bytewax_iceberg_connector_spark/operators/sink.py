@@ -13,21 +13,16 @@ atomic commits + committed-batch-id dedup give exactly-once (the reference's
 connector.py:137, so its exactly-once is aspirational; ours executes —
 operators/snapshots.py).
 
-Two backends behind one API:
-- **iceberg** (when iceberg-spark-runtime is on the classpath): real hidden
-  partitioning, snapshot commits, `commit.retry.num-retries` for the
-  reference's optimistic-commit loop (connector.py:242-257), MERGE INTO,
-  `VERSION AS OF` time travel. Exercised by tests/test_iceberg_backend.py
-  whenever the runtime is present (no network/jar in the CI container —
-  the suite is capability-gated, not skipped by choice).
-- **parquet warehouse** (always available; the test default): hive-style
-  layout under ``warehouse/table/data/_c=<commit>/`` with partition
-  transforms from operators/partitioning.py materialized as ``_p_*``
-  directory columns, PLUS a real snapshot log (operators/snapshots.py)
-  giving the same co-location/pruning properties AND atomic commits,
-  snapshot isolation, time travel, rollback and streaming exactly-once —
-  so the Iceberg *contract* is proven under test even where the runtime
-  cannot load.
+The parquet-log warehouse: hive-style layout under
+``warehouse/table/data/_c=<commit>/`` with partition transforms from
+operators/partitioning.py materialized as ``_p_*`` directory columns, PLUS
+a real snapshot log (operators/snapshots.py) giving the same
+co-location/pruning properties AND atomic commits, snapshot isolation,
+time travel, rollback and streaming exactly-once — so the Iceberg
+*contract* is proven under test even where the runtime cannot load. When
+iceberg-spark-runtime IS on the classpath, ``LakeSink(spark, config)``
+returns an ``IcebergRuntimeSink`` instead (operators/iceberg_sink.py):
+the same public methods, each one call into the runtime.
 
 Scale: the append path repartitions by partition key before writing
 (`write.distribution-mode=hash` equivalent) so 1000 executors produce
@@ -40,20 +35,28 @@ from __future__ import annotations
 
 import json
 import os
-import re
+from functools import reduce
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
-from ..config import IcebergSinkConfig
+from ..config import (
+    IcebergSinkConfig,
+    bind_sink_session,
+    check_one_pin,
+    declared_schema,
+)
 from ..functions.zorder import zorder_key
-from .merge import merge_upsert
+from .iceberg_sink import IcebergRuntimeSink
+from .merge import latest_per_key, merge_upsert
 from .partitioning import (
     ESC_MARK,
     PartitionField,
+    as_fields,
     encode_hostile_pcol,
     parse_transform,
     partition_columns,
@@ -64,23 +67,6 @@ from .partitioning import (
     unescape_path_name,
 )
 from .snapshots import SnapshotLog
-
-
-def _iceberg_transform_sql(f: PartitionField) -> str:
-    """Render a PartitionField as Iceberg DDL transform syntax
-    (``days(ts)``, ``bucket(16, id)``, ``col``). ``void`` has no DDL
-    partition-field form — rejecting it here is correct (Iceberg models
-    void as a DROPPED field, not an addable one)."""
-    kind, param = parse_transform(f.transform)
-    if kind == "identity":
-        return f.source
-    if kind in ("year", "month", "day", "hour"):
-        return f"{kind}s({f.source})"
-    if kind in ("bucket", "truncate"):
-        return f"{kind}({param}, {f.source})"
-    raise ValueError(
-        f"transform {f.transform!r} has no Iceberg DDL partition-field form"
-    )
 
 
 def iceberg_runtime_available(spark: SparkSession) -> bool:
@@ -129,47 +115,36 @@ class LakeSink:
     streaming trigger interval (time) + the source admission cap compiled
     from ``batch_size`` (config.source_admission_options) — together the
     same "flush at N records or T seconds" envelope.
+
+    Every method below is the parquet-log path. With iceberg-spark-runtime
+    on the classpath, ``LakeSink(spark, config)`` returns a fully built
+    ``IcebergRuntimeSink`` instead (operators/iceberg_sink.py).
     """
 
-    def __init__(self, spark: SparkSession, config: IcebergSinkConfig) -> None:
-        if not isinstance(config, IcebergSinkConfig):
-            # parity: IcebergSink.__init__ validates config type
-            # (connector.py:451-454)
-            raise TypeError("config must be an IcebergSinkConfig")
-        # defensive runtime conf on DRIVER-PROVIDED sessions: the read
-        # path's _restore_pcols contract assumes partition-dir type
-        # inference is OFF (a string partition value "0123" inferred as
-        # int 123 is lossy before any cast) — a session built by
-        # get_spark already has it, but a user driving the sink directly
-        # on a vanilla session would silently re-enter the lossy path
-        from ..session import ensure_engine_conf
+    def __new__(cls, spark: SparkSession, config: IcebergSinkConfig):
+        # Python skips __init__ for an object that is not a LakeSink
+        if iceberg_runtime_available(spark):
+            return IcebergRuntimeSink(spark, config)
+        return super().__new__(cls)
 
-        ensure_engine_conf(spark)
+    def __init__(self, spark: SparkSession, config: IcebergSinkConfig) -> None:
+        bind_sink_session(spark, config)
         self.spark = spark
         self.config = config
-        self.backend = "iceberg" if iceberg_runtime_available(spark) else "parquet"
-        if self.backend == "iceberg":
-            for k, v in config.spark_catalog_conf().items():
-                spark.conf.set(k, v)
 
     # -- identity ----------------------------------------------------------
 
     @property
     def _spec(self) -> list[PartitionField]:
-        # an existing parquet-backend table owns its spec (it may have
-        # EVOLVED past the config since creation — evolve_partition_spec);
-        # config only seeds the spec at create time. Real Iceberg likewise
-        # reads the spec from table metadata, never from writer config.
-        if self.backend == "parquet" and self._log.exists():
+        # an existing table owns its spec (it may have EVOLVED past the
+        # config since creation — evolve_partition_spec); config only
+        # seeds the spec at create time. Real Iceberg likewise reads the
+        # spec from table metadata, never from writer config.
+        if self._log.exists():
             meta_spec = self._log.table_meta().get("partition_spec")
             if meta_spec is not None:
-                return [PartitionField(*f) for f in meta_spec]
-        return [PartitionField(*f) if not isinstance(f, PartitionField) else f
-                for f in (self.config.partition_spec or [])]
-
-    @property
-    def _qualified(self) -> str:
-        return f"{self.config.catalog_name}.{self.config.table_name}"
+                return as_fields(meta_spec)
+        return as_fields(self.config.partition_spec or [])
 
     @property
     def _path(self) -> str:
@@ -185,12 +160,11 @@ class LakeSink:
         return SnapshotLog(self._path)
 
     def _file_format(self) -> str:
-        """Data file format for the parquet-warehouse backend (A20
-        ``file_format``: the reference writes the configured format via
-        pyiceberg, models.py:16-24). parquet and orc are Spark built-ins;
-        avro needs the external spark-avro package — raise the same
-        explicit config error the reference's enum gives rather than
-        silently writing a different format.
+        """Data file format (A20 ``file_format``: the reference writes the
+        configured format via pyiceberg, models.py:16-24). parquet and orc
+        are Spark built-ins; avro needs the external spark-avro package —
+        raise the same explicit config error the reference's enum gives
+        rather than silently writing a different format.
         """
         fmt = self.config.file_format.value
         if fmt in ("parquet", "orc"):
@@ -214,19 +188,9 @@ class LakeSink:
         raise ValueError(f"unsupported file_format: {fmt}")  # pragma: no cover
 
     def table_exists(self) -> bool:
-        if self.backend == "iceberg":
-            return self.spark.catalog.tableExists(self._qualified)
         return self._log.exists()
 
     # -- A9: load-or-create ------------------------------------------------
-
-    def _declared_schema(self) -> StructType | None:
-        """Schema from config.table_schema DDL (A9: the reference creates
-        from the declared schema when the table is missing,
-        connector.py:380-392)."""
-        if not self.config.table_schema:
-            return None
-        return StructType.fromDDL(self.config.table_schema)
 
     def ensure_table(self, like: DataFrame | None = None) -> None:
         """Create the table if missing (A9, connector.py:358-393): schema
@@ -241,54 +205,7 @@ class LakeSink:
         if self.table_exists():
             return
         if like is None:
-            declared = self._declared_schema()
-            if declared is None:
-                raise ValueError(
-                    "table is missing and no schema is available: pass a "
-                    "DataFrame or set config.table_schema (reference "
-                    "connector.py:389-392 parity)"
-                )
-            like = _empty_frame(self.spark, declared)
-        if self.backend == "iceberg":
-            from pyspark.sql.functions import col, partitioning as PT
-
-            _tf = {
-                "year": PT.years, "month": PT.months,
-                "day": PT.days, "hour": PT.hours,
-            }
-            parts = []
-            for f in self._spec:
-                kind, param = parse_transform(f.transform)
-                if kind == "identity":
-                    parts.append(col(f.source))
-                elif kind in _tf:
-                    parts.append(_tf[kind](col(f.source)))
-                elif kind == "bucket":
-                    parts.append(PT.bucket(param, col(f.source)))
-                else:
-                    # NEVER silently degrade to identity — bucket[16] on a
-                    # high-cardinality key as identity is a partition
-                    # explosion that can only be fixed by rewriting
-                    raise ValueError(
-                        f"transform {f.transform!r} has no writeTo"
-                        " partitionedBy form; create the table via SQL DDL"
-                        " (config.table_schema + PARTITIONED BY"
-                        f" ({kind}({param}, {f.source})))"
-                    )
-            writer = like.limit(0).writeTo(self._qualified)
-            for k, v in self.config.table_properties().items():
-                writer = writer.tableProperty(k, v)
-            if parts:
-                writer = writer.partitionedBy(*parts)
-            writer.create()
-            if self.config.sort_order:
-                # reference applies sort_order at creation (connector.py:
-                # 382-392); Iceberg's writer then sorts every future append
-                order = ", ".join(self.config.sort_order)
-                self.spark.sql(
-                    f"ALTER TABLE {self._qualified} WRITE ORDERED BY ({order})"
-                )
-            return
+            like = _empty_frame(self.spark, declared_schema(self.config))
         keyed = partition_key(like.limit(0), self._spec)
         self._log.init_table(
             {
@@ -317,93 +234,34 @@ class LakeSink:
         ``branch`` stages the commit on a named ref instead of main (the
         write step of write-audit-publish — Iceberg's ``spark.wap.branch``
         session conf): main readers never see the rows until
-        :meth:`publish`; :meth:`drop_branch` is the audit-failed arm. On
-        the iceberg backend the runtime routes branch writes through the
-        ``spark.wap.branch`` session conf — this method VERIFIES the conf
-        matches the requested branch and raises otherwise: silently
-        appending to main would defeat exactly the isolation the
-        parameter promises (staged rows visible to main readers before
-        audit).
+        :meth:`publish`; :meth:`drop_branch` is the audit-failed arm.
         """
         self.ensure_table(df)
-        if self.backend == "iceberg":
-            self._assert_wap_routing("append", branch=branch)
-            df.writeTo(self._qualified).append()
-            return
         self._write_commit(df, operation="append", batch_id=batch_id,
                            branch=branch)
 
-    def _assert_wap_routing(self, operation: str, branch: str = "main") -> None:
-        """Two-directional ``spark.wap.branch`` verification for EVERY
-        iceberg write entry point (r08 ADVICE: guarding only append left
-        overwrite/merge/delete/compact/rollback silently redirectable).
-        The runtime routes iceberg writes by the SESSION conf, not by our
-        ``branch`` argument, so both mismatches are silent mis-routing: a
-        branch write without the conf commits straight to main (staged
-        rows visible before audit), and a main-intended write with the
-        conf still set lands on the WAP branch (rows the caller believes
-        committed never reach main readers)."""
-        if self.backend != "iceberg":
-            return
-        wap = self.spark.conf.get("spark.wap.branch", None)
-        if branch != "main" and wap != branch:
-            raise ValueError(
-                f"{operation}(branch={branch!r}) on the iceberg backend "
-                "requires spark.wap.branch to be set to that branch "
-                f"(currently {wap!r}) — without it the runtime "
-                "would commit straight to main and the staged rows "
-                "would be visible before the audit step"
-            )
-        if branch == "main" and wap:
-            raise ValueError(
-                f"{operation}() targets main but spark.wap.branch={wap!r} "
-                "is set — the runtime would silently route the write to "
-                "that branch instead of main; unset the conf or stage "
-                "explicitly via append(branch=...)"
-            )
-
-    @staticmethod
-    def _safe_ref(name: str) -> str:
-        """Validate a branch/tag name before it is interpolated into SQL
-        on the iceberg backend (r11 ADVICE: an embedded quote broke the
-        statement — an injection surface, not just a crash). Iceberg ref
-        names are word-like; anything outside the allowlist raises LOUDLY
-        instead of reaching the parser. The parquet backend accepts
-        arbitrary names (no SQL is built from them), so this guard sits
-        only on the SQL-building paths."""
-        if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._\-]*", name or ""):
-            raise ValueError(
-                f"invalid branch/tag name {name!r}: must match "
-                "[A-Za-z0-9][A-Za-z0-9._-]* on the iceberg backend"
-            )
-        return name
-
-    def _ref(self, branch: str) -> str | None:
-        """Branch name → ``read(branch=)`` ref for copy-on-write
-        maintenance (parquet backend). ``main`` reads the plain head
-        (valid even on an empty table); a branch with NO commits yet
-        also reads main's head — its first commit forks from main, so
-        maintenance staged on a fresh branch rewrites what it forks
-        from, matching Iceberg's ``spark.wap.branch`` fork-on-first-
-        write semantics."""
-        if branch == "main":
-            return None
-        return branch if self._log.current_id(branch) else None
+    def _live_rows(self, branch: str) -> DataFrame:
+        """``branch``'s head minus the ``_p_*`` layout columns: the input of
+        every copy-on-write rewrite. A branch with no commits yet reads
+        main's head, which its first commit forks from (Iceberg's
+        ``spark.wap.branch`` fork-on-first-write)."""
+        ref = None
+        if branch != "main" and self._log.current_id(branch):
+            ref = branch
+        current = self.read(branch=ref)
+        return current.select(*[qcol(c) for c in current.columns
+                                if not c.startswith("_p_")])
 
     def overwrite(self, df: DataFrame, batch_id: int | None = None,
                   branch: str = "main") -> None:
         """Replace the table contents in one snapshot (the copy-on-write
-        commit MERGE compiles to on the parquet backend). ``batch_id``
+        commit MERGE compiles to). ``batch_id``
         tags the snapshot with a caller-meaningful watermark (e.g. the
         base-table snapshot a materialized view was refreshed to).
         ``branch`` stages the replacing commit on a WAP branch (r09
         ADVICE: maintenance is stageable, not append-only — Iceberg
         routes DML through the same ``spark.wap.branch`` conf)."""
         self.ensure_table(df)
-        if self.backend == "iceberg":
-            self._assert_wap_routing("overwrite", branch=branch)
-            df.writeTo(self._qualified).createOrReplace()
-            return
         self._write_commit(df, operation="overwrite", batch_id=batch_id,
                            branch=branch)
 
@@ -415,17 +273,13 @@ class LakeSink:
         dynamic-overwrite mode, the idiom for re-running one day of a
         pipeline without touching the rest of the table.
 
-        Parquet backend: copy-on-write — survivors outside the affected
-        partitions union the new rows into one replacing commit (history
-        stays time-travelable). Iceberg does this with file-level surgery;
-        the fallback's whole-table rewrite is the documented small-scale
-        trade-off, same as merge().
+        Copy-on-write: survivors outside the affected partitions union the
+        new rows into one replacing commit (history stays
+        time-travelable). Iceberg does this with file-level surgery; the
+        whole-table rewrite is the documented small-scale trade-off, same
+        as merge().
         """
         self.ensure_table(df)
-        if self.backend == "iceberg":
-            self._assert_wap_routing("overwrite_partitions", branch=branch)
-            df.writeTo(self._qualified).overwritePartitions()
-            return
         pcols = partition_columns(self._spec)
         if not pcols:
             # unpartitioned table: replacing "its partitions" = everything
@@ -433,39 +287,28 @@ class LakeSink:
             return
         new_keyed = partition_key(df, self._spec)
         affected = new_keyed.select(*[qcol(c) for c in pcols]).distinct()
-        current = self.read(branch=self._ref(branch))
-        data_cols = [c for c in current.columns if not c.startswith("_p_")]
+        live = self._live_rows(branch)
         # partition membership is LOGICAL — the current spec's transforms
         # over the data columns — not the stored _p_* layout: rows from
         # pre-evolution commits carry other (or no) layout columns, so
         # recompute the key for every live row exactly as Iceberg
         # evaluates the current spec against old files
-        cur_keyed = partition_key(
-            current.select(*[qcol(c) for c in data_cols]), self._spec
-        )
+        cur_keyed = partition_key(live, self._spec)
         # NULL-SAFE key match (r10 sweep): plain equality never matches
         # NULL = NULL, so rows in the NULL partition survived the anti
         # join while the new batch still appended — overwriting the NULL
-        # partition silently DUPLICATED it instead of replacing it
-        from functools import reduce as _reduce
-
-        cur_a = cur_keyed.alias("_bic_cur")
-        aff_a = affected.alias("_bic_aff")
+        # partition silently DUPLICATED it instead of replacing it.
         # qname inside the alias qualifier: a dotted/backticked partition
         # field name would otherwise parse as nested access (r10
         # self-review find — the same class qcol fixes elsewhere)
-        cond = _reduce(
-            lambda a, b: a & b,
-            [
-                F.col(f"_bic_cur.{qname(c)}").eqNullSafe(
-                    F.col(f"_bic_aff.{qname(c)}")
-                )
-                for c in pcols
-            ],
-        )
-        survivors = cur_a.join(
-            F.broadcast(aff_a), on=cond, how="left_anti"
-        ).select(*[qcol(c) for c in data_cols])
+        cond = None
+        for c in pcols:
+            eq = F.col(f"_bic_cur.{qname(c)}").eqNullSafe(
+                F.col(f"_bic_aff.{qname(c)}"))
+            cond = eq if cond is None else cond & eq
+        survivors = cur_keyed.alias("_bic_cur").join(
+            F.broadcast(affected.alias("_bic_aff")), on=cond, how="left_anti"
+        ).select(*[qcol(c) for c in live.columns])
         # the incoming batch may predate a schema evolution: align by name
         # with null-fill instead of projecting the table's columns out of
         # a frame that never had them (r06 model-test find)
@@ -669,7 +512,7 @@ class LakeSink:
         return new_fields
 
     def _write_commit_stats(self, commit_path: str,
-                            data_files: list[str] | None = None) -> None:
+                            data_files: list[str]) -> None:
         """Record per-commit column min/max into ``_bic_stats.json`` inside
         the commit dir — the manifest-stats analogue of Iceberg's file
         metrics, harvested the same way Iceberg does: from the already-
@@ -679,14 +522,11 @@ class LakeSink:
         data-file listing; co-locating stats with data (not in the
         snapshot json) means they survive snapshot expiry for as long as
         the dir itself is live. Non-parquet commit formats skip stats
-        (pruning then keeps their dirs — never lossy). ``data_files`` is
-        the commit's files when the caller has already walked the tree.
+        (pruning then keeps their dirs — never lossy). ``data_files`` are
+        the commit's data files, from the walk ``_write_commit`` makes of
+        the written tree.
         """
         if self._file_format() != "parquet":
-            return
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover
             return
         lo: dict = {}
         hi: dict = {}
@@ -699,14 +539,7 @@ class LakeSink:
         # entirely — _prune_dirs' "col not in stats" path then keeps the
         # dir conservatively.
         bad: set = set()
-        if data_files is None:
-            data_files = [os.path.join(root, fn)
-                          for root, _dirs, files in os.walk(commit_path)
-                          for fn in files]
         for fpath in data_files:
-            fn = os.path.basename(fpath)
-            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                continue
             md = pq.ParquetFile(fpath).metadata
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
@@ -775,55 +608,23 @@ class LakeSink:
               branch: str = "main") -> None:
         """MERGE INTO this table: matched keys update, unmatched insert.
 
-        iceberg backend: the real ``MERGE INTO`` statement (copy-on-write /
-        merge-on-read per table properties, file-level pruning for free).
-        parquet backend: read head snapshot → operators/merge.merge_upsert
-        → one overwrite commit — the same copy-on-write plan Iceberg builds
+        Read the head snapshot → operators/merge.merge_upsert → one
+        overwrite commit — the same copy-on-write plan Iceberg builds
         internally, with time travel preserved (the pre-merge snapshot
         remains readable via read(as_of=...)).
 
         ``branch`` stages the merge on a WAP branch instead of main (r09
         ADVICE: WAP-staged maintenance — e.g. a MERGE audited before
         publish — is legitimate; Iceberg routes DML through the same
-        ``spark.wap.branch`` session conf as appends). Parquet backend:
-        the upsert reads the BRANCH head and commits back to the branch.
+        ``spark.wap.branch`` session conf as appends): the upsert reads
+        the BRANCH head and commits back to the branch.
         """
-        if self.backend == "iceberg":
-            self._assert_wap_routing("merge", branch=branch)
-            if tiebreak is not None:
-                # same within-batch winner selection merge_upsert applies
-                # on the parquet path — without it, duplicate source keys
-                # trip Iceberg's MERGE cardinality check and abort, the
-                # opposite outcome of the same call on the fallback
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*[qcol(k) for k in keys]).orderBy(
-                    F.desc(qcol(tiebreak))
-                )
-                updates = (
-                    updates.withColumn("_bic_rn", F.row_number().over(w))
-                    .where(F.col("_bic_rn") == 1)
-                    .drop("_bic_rn")
-                )
-            updates.createOrReplaceTempView("_bic_merge_src")
-            cond = " AND ".join(
-                f"t.{qname(k)} = s.{qname(k)}" for k in keys
-            )
-            self.spark.sql(
-                f"MERGE INTO {self._qualified} t USING _bic_merge_src s "
-                f"ON {cond} "
-                "WHEN MATCHED THEN UPDATE SET * "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-            return
-        current = self.read(branch=self._ref(branch))
-        data_cols = [c for c in current.columns if not c.startswith("_p_")]
         # project updates to THEIR OWN data columns only — merge_upsert
         # null-fills target columns the update batch predates (schema
         # evolution), and rejects columns the target lacks
         upd_cols = [c for c in updates.columns if not c.startswith("_p_")]
         merged = merge_upsert(
-            current.select(*[qcol(c) for c in data_cols]),
+            self._live_rows(branch),
             updates.select(*[qcol(c) for c in upd_cols]),
             keys, tiebreak=tiebreak,
         )
@@ -832,13 +633,8 @@ class LakeSink:
     # -- time travel / maintenance ----------------------------------------
 
     def snapshots(self) -> DataFrame:
-        """The table's snapshot history (Iceberg's ``<table>.snapshots``
-        metadata table; the snapshot-log equivalent on parquet)."""
-        if self.backend == "iceberg":
-            return self.spark.sql(
-                f"SELECT snapshot_id, parent_id, committed_at, operation "
-                f"FROM {self._qualified}.snapshots"
-            )
+        """The table's snapshot history (the snapshot-log equivalent of
+        Iceberg's ``<table>.snapshots`` metadata table)."""
         rows = [
             (s["snapshot_id"], s.get("parent_id"), s["timestamp_ms"],
              s["operation"], s.get("batch_id"), len(s["live"]))
@@ -857,16 +653,9 @@ class LakeSink:
     def current_snapshot_id(self, branch: str = "main") -> int:
         """Head snapshot id of ``branch`` (0 = no commits). Callers that
         need a time-travel anchor should capture THIS after a commit
-        instead of assuming sequential ids: the parquet backend's
-        SnapshotLog happens to issue 1, 2, 3, … but the real Iceberg
-        runtime issues random longs (r09 ADVICE — a literal ``as_of=1``
-        silently misreads there)."""
-        if self.backend == "iceberg":
-            rows = self.spark.sql(
-                f"SELECT snapshot_id FROM {self._qualified}.refs "
-                f"WHERE name = '{self._safe_ref(branch)}'"
-            ).collect()
-            return int(rows[0][0]) if rows else 0
+        instead of assuming sequential ids: SnapshotLog happens to issue
+        1, 2, 3, … but the real Iceberg runtime issues random longs (r09
+        ADVICE — a literal ``as_of=1`` silently misreads there)."""
         return self._log.current_id(branch)
 
     def tag(self, name: str, snapshot_id: int | None = None) -> int:
@@ -875,34 +664,13 @@ class LakeSink:
         ``expire_snapshots`` until the tag is dropped, so a tag is the
         durable handle for "the exact table state release X trained on".
         """
-        if self.backend == "iceberg":
-            as_of = (
-                f" AS OF VERSION {snapshot_id}" if snapshot_id is not None else ""
-            )
-            self.spark.sql(
-                f"ALTER TABLE {self._qualified} "
-                f"CREATE TAG `{self._safe_ref(name)}`{as_of}"
-            )
-            return snapshot_id or 0
         return self._log.set_tag(name, snapshot_id)
 
     def drop_tag(self, name: str) -> None:
-        if self.backend == "iceberg":
-            self.spark.sql(
-                f"ALTER TABLE {self._qualified} "
-                f"DROP TAG `{self._safe_ref(name)}`"
-            )
-            return
         self._log.drop_tag(name)
 
     def tags(self) -> dict[str, int]:
         """Tag name -> snapshot id (Iceberg's ``<table>.refs`` metadata)."""
-        if self.backend == "iceberg":
-            rows = self.spark.sql(
-                f"SELECT name, snapshot_id FROM {self._qualified}.refs "
-                "WHERE type = 'TAG'"
-            ).collect()
-            return {r.name: r.snapshot_id for r in rows}
         return dict(self._log.refs())
 
     def publish(self, branch: str) -> int:
@@ -911,33 +679,12 @@ class LakeSink:
         Raises ``CommitConflict`` if main advanced through any other
         route since the branch forked (rebase by re-staging). Returns
         the publish snapshot id."""
-        if self.backend == "iceberg":
-            cat = self.config.catalog_name
-            self.spark.sql(
-                f"CALL {cat}.system.fast_forward"
-                f"('{self.config.table_name}', 'main', "
-                f"'{self._safe_ref(branch)}')"
-            )
-            # the publish snapshot id = main's post-fast-forward head,
-            # read back from the refs metadata table (returning a dummy 0
-            # would hand callers keying on the id a bogus value)
-            rows = self.spark.sql(
-                f"SELECT snapshot_id FROM {self._qualified}.refs "
-                "WHERE name = 'main'"
-            ).collect()
-            return int(rows[0][0])
         return self._log.publish(branch)
 
     def drop_branch(self, branch: str) -> list[int]:
         """Delete a staged branch and the data only it references — the
         audit-failed arm of write-audit-publish; main is untouched.
-        Returns the unlinked snapshot ids (parquet backend)."""
-        if self.backend == "iceberg":
-            self.spark.sql(
-                f"ALTER TABLE {self._qualified} "
-                f"DROP BRANCH `{self._safe_ref(branch)}`"
-            )
-            return []
+        Returns the unlinked snapshot ids."""
         return self._log.drop_branch(branch)
 
     def rollback(self, snapshot_id: int, branch: str = "main") -> None:
@@ -945,38 +692,20 @@ class LakeSink:
         is append-only — Iceberg's rollback_to_snapshot semantics).
         ``branch`` lands the restoring snapshot on a WAP branch (r09
         ADVICE: stageable maintenance)."""
-        if self.backend == "iceberg":
-            self._assert_wap_routing("rollback", branch=branch)
-            cat = self.config.catalog_name
-            self.spark.sql(
-                f"CALL {cat}.system.rollback_to_snapshot"
-                f"('{self.config.table_name}', {snapshot_id})"
-            )
-            return
         self._log.commit("rollback", [], rollback_to=snapshot_id,
                          branch=branch)
 
     def delete(self, condition: str, branch: str = "main") -> None:
         """Row-level DELETE (SQL predicate string) — the GDPR/right-to-be-
-        forgotten path. iceberg backend: real ``DELETE FROM`` (position/
-        equality deletes per table mode, file-pruned). parquet backend:
-        copy-on-write overwrite commit of the survivors; pre-delete
-        snapshots remain until expire_snapshots reclaims them — matching
-        Iceberg semantics, where hard erasure = DELETE + expire.
+        forgotten path: a copy-on-write overwrite commit of the survivors;
+        pre-delete snapshots remain until expire_snapshots reclaims them —
+        matching Iceberg semantics, where hard erasure = DELETE + expire.
         ``branch`` stages the delete on a WAP branch (r09 ADVICE).
         """
-        if self.backend == "iceberg":
-            self._assert_wap_routing("delete", branch=branch)
-            self.spark.sql(
-                f"DELETE FROM {self._qualified} WHERE {condition}"
-            )
-            return
-        current = self.read(branch=self._ref(branch))
-        data_cols = [c for c in current.columns if not c.startswith("_p_")]
         # coalesce: SQL DELETE removes only cond=TRUE rows; a bare
         # NOT(cond) would also drop rows where cond is NULL (NOT NULL is
-        # NULL, filtered) — silent data loss vs the iceberg branch
-        survivors = current.select(*[qcol(c) for c in data_cols]).where(
+        # NULL, filtered) — silent data loss vs Iceberg's DELETE FROM
+        survivors = self._live_rows(branch).where(
             f"NOT coalesce(({condition}), false)"
         )
         self._write_commit(survivors, operation="delete", branch=branch)
@@ -996,24 +725,7 @@ class LakeSink:
         hash-distribution on write. ``branch`` stages the rewrite on a
         WAP branch (r09 ADVICE: stageable maintenance).
         """
-        if self.backend == "iceberg":
-            self._assert_wap_routing("compact", branch=branch)
-            cat = self.config.catalog_name
-            if zorder_by:
-                zcols = ", ".join(zorder_by)
-                self.spark.sql(
-                    f"CALL {cat}.system.rewrite_data_files("
-                    f"table => '{self.config.table_name}', "
-                    f"strategy => 'sort', sort_order => 'zorder({zcols})')"
-                )
-            else:
-                self.spark.sql(
-                    f"CALL {cat}.system.rewrite_data_files('{self.config.table_name}')"
-                )
-            return
-        current = self.read(branch=self._ref(branch))
-        data_cols = [c for c in current.columns if not c.startswith("_p_")]
-        live = current.select(*[qcol(c) for c in data_cols])
+        live = self._live_rows(branch)
         cluster = zorder_key(live, zorder_by) if zorder_by else None
         self._write_commit(live, operation="replace", cluster_expr=cluster,
                            branch=branch)
@@ -1022,12 +734,6 @@ class LakeSink:
         """Drop history older than the newest ``keep_last`` snapshots and
         physically remove data no retained snapshot references (Iceberg's
         expire_snapshots maintenance procedure). Returns snapshots expired."""
-        if self.backend == "iceberg":
-            self.spark.sql(
-                f"CALL {self.config.catalog_name}.system.expire_snapshots"
-                f"(table => '{self.config.table_name}', retain_last => {keep_last})"
-            )
-            return 0
         expired, _ = self._log.expire(keep_last)
         return len(expired)
 
@@ -1063,14 +769,6 @@ class LakeSink:
         disjoint id ranges.
         """
         trigger = trigger_override or self.config.trigger()
-        if self.backend == "iceberg":
-            return (
-                df.writeStream.format("iceberg")
-                .outputMode("append")
-                .trigger(**trigger)
-                .option("checkpointLocation", checkpoint)
-                .toTable(self._qualified)
-            )
 
         def _commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
             if self._replayed_batch(epoch_id):
@@ -1124,34 +822,20 @@ class LakeSink:
         ``order_by`` picks the within-batch winner when one micro-batch
         carries several changes for a key (latest ``order_by`` wins;
         required for correctness on compacted changelogs — MERGE forbids
-        duplicate source keys). Replay safety on the parquet backend:
-        batch ids are recorded in the snapshot log exactly as in
-        write_stream, so a replayed micro-batch after a crash is detected
-        and skipped instead of double-merged. The iceberg backend relies
-        on the engine-side checkpoint only (documented gap: a crash
-        between MERGE commit and checkpoint ack can re-merge one batch —
-        idempotent when updates are full-row, same caveat the Iceberg
-        docs give for foreachBatch MERGE).
+        duplicate source keys). Replay safety: batch ids are recorded in
+        the snapshot log exactly as in write_stream, so a replayed
+        micro-batch after a crash is detected and skipped instead of
+        double-merged.
         """
         trigger = trigger_override or self.config.trigger()
+        order = [order_by] if isinstance(order_by, str) else order_by
 
         def _merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            if self.backend == "parquet" and self._replayed_batch(epoch_id):
+            if self._replayed_batch(epoch_id):
                 return  # replayed micro-batch — already merged
-            if order_by is not None:
-                from pyspark.sql import Window
-
-                cols = [order_by] if isinstance(order_by, str) else order_by
-                w = Window.partitionBy(*keys).orderBy(
-                    *[F.desc(c) for c in cols]
-                )
-                batch_df = (
-                    batch_df.withColumn("_bic_rn", F.row_number().over(w))
-                    .where(F.col("_bic_rn") == 1)
-                    .drop("_bic_rn")
-                )
-            if not self.table_exists():
-                self.ensure_table(batch_df)
+            if order:
+                batch_df = latest_per_key(batch_df, keys, order)
+            self.ensure_table(batch_df)
             self.merge(batch_df, keys, batch_id=epoch_id)
 
         return (
@@ -1173,13 +857,6 @@ class LakeSink:
         Iceberg's append-only incremental read, this raises if the range
         crosses a replacing snapshot.
         """
-        if self.backend == "iceberg":
-            reader = self.spark.read.format("iceberg").option(
-                "start-snapshot-id", str(from_snapshot)
-            )
-            if to_snapshot is not None:
-                reader = reader.option("end-snapshot-id", str(to_snapshot))
-            return reader.load(self._qualified)
         head = self._log.current_id() if to_snapshot is None else to_snapshot
         # walk the ACTUAL lineage (parent chain), not the raw id range:
         # snapshot ids interleave across branches and expire()/
@@ -1232,15 +909,6 @@ class LakeSink:
         this is the correct-for-everything fallback, and at 100 TB you'd
         bound it by diffing only the partitions the log says were touched.
         """
-        if self.backend == "iceberg":
-            self.spark.sql(
-                f"CALL {self.config.catalog_name}.system.create_changelog_view("
-                f"table => '{self.config.table_name}', "
-                f"options => map('start-snapshot-id', '{from_snapshot}'"
-                + (f", 'end-snapshot-id', '{to_snapshot}'" if to_snapshot else "")
-                + "), changelog_view => '_bic_changes')"
-            )
-            return self.spark.table("_bic_changes")
         # each side reads its own snapshot's columns, so a column added
         # between the two snapshots exists on one side only — null-fill
         # it on the other (both directions), exactly how the evolved read
@@ -1271,14 +939,6 @@ class LakeSink:
         """Latest snapshot committed at or before ``ts_ms`` (epoch millis)
         — the resolution step behind ``TIMESTAMP AS OF``. None if the
         table had no commits yet at that time."""
-        if self.backend == "iceberg":
-            rows = (
-                self.snapshots()
-                .where(F.col("committed_at") <= F.timestamp_millis(F.lit(ts_ms)))
-                .agg(F.max("snapshot_id"))
-                .collect()
-            )
-            return rows[0][0]
         # MAIN lineage only: staged WAP-branch commits and detached
         # tag survivors must never resolve from a wall-clock read —
         # TIMESTAMP AS OF on unpublished data would expose rows main
@@ -1310,29 +970,22 @@ class LakeSink:
         add reads without the column. Building the frame runs no Spark
         job.
 
-        ``prune={"col": (lo, hi)}`` (parquet backend) skips whole commit
-        dirs whose recorded min/max stats cannot intersect the bounds
-        (None = open end) — the manifest-pruning analogue of Iceberg's
-        file metrics. Pruning restricts which FILES are read; callers
-        still apply their row filter (same contract as partition
-        pruning). On the iceberg backend the runtime already prunes from
-        footer metrics, so ``prune`` is ignored there.
+        ``prune={"col": (lo, hi)}`` skips whole commit dirs whose
+        recorded min/max stats cannot intersect the bounds (None = open
+        end) — the manifest-pruning analogue of Iceberg's file metrics.
+        Pruning restricts which FILES are read; callers still apply their
+        row filter (same contract as partition pruning).
 
-        ``with_spec_id=True`` (parquet backend) adds Iceberg's
-        ``_spec_id`` metadata column — the spec each row's commit was
-        written under; on the iceberg backend select the runtime's own
-        ``_spec_id`` metadata column instead.
+        ``with_spec_id=True`` adds Iceberg's ``_spec_id`` metadata column
+        — the spec each row's commit was written under.
 
         ``branch`` reads a staged branch's head (Iceberg's
         ``VERSION AS OF 'branch'``) — the audit step of
         write-audit-publish reads exactly what :meth:`publish` would make
         visible on main.
         """
-        if sum(x is not None for x in (as_of, as_of_timestamp_ms, tag, branch)) > 1:
-            raise ValueError(
-                "pass at most one of as_of / as_of_timestamp_ms / tag / branch"
-            )
-        if branch is not None and self.backend != "iceberg":
+        check_one_pin(as_of, as_of_timestamp_ms, tag, branch)
+        if branch is not None:
             head = self._log.current_id(branch)
             if head == 0:
                 raise LookupError(f"branch {branch!r} has no commits")
@@ -1343,31 +996,8 @@ class LakeSink:
                 raise ValueError(
                     f"no snapshot existed at timestamp {as_of_timestamp_ms}"
                 )
-        if tag is not None and self.backend != "iceberg":
+        if tag is not None:
             as_of = self._log.resolve_tag(tag)
-        if self.backend == "iceberg":
-            # prune is NATIVELY satisfied here (file pruning from footer
-            # metrics) — accepting it is not a silent drop. The one
-            # argument that changes the RESULT schema, with_spec_id, is
-            # honored by selecting the runtime's own _spec_id metadata
-            # column so no path silently returns a narrower frame than
-            # the parquet backend would.
-            cols = "*, _spec_id" if with_spec_id else "*"
-            ref = branch if branch is not None else tag
-            if ref is not None:
-                return self.spark.sql(
-                    f"SELECT {cols} FROM {self._qualified} "
-                    f"VERSION AS OF '{self._safe_ref(ref)}'"
-                )
-            if as_of is not None:
-                return self.spark.sql(
-                    f"SELECT {cols} FROM {self._qualified} "
-                    f"VERSION AS OF {as_of}"
-                )
-            df = self.spark.table(self._qualified)
-            if with_spec_id:
-                df = df.select("*", "_spec_id")
-            return df
         dirs = self._log.commit_paths(as_of)
         if prune:
             dirs = self._prune_dirs(dirs, prune)
@@ -1488,16 +1118,10 @@ class LakeSink:
             return df
 
         groups = self._dirs_by_layout(markers, meta)
-        if len(groups) == 1:
-            (key, group), = groups.items()
-            return _load(group, key[0])
-        out = None
-        for key, group in sorted(groups.items()):
-            part = _load(group, key[0])
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
-        return out
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [_load(group, key[0]) for key, group in sorted(groups.items())],
+        )
 
     def _dirs_by_layout(self, markers: dict[str, dict],
                         meta: dict) -> dict[tuple, list[str]]:
@@ -1513,9 +1137,7 @@ class LakeSink:
             "0", meta.get("partition_spec")
         )
         if original is not None:
-            fallback = tuple(
-                partition_columns([PartitionField(*f) for f in original])
-            )
+            fallback = tuple(partition_columns(original))
         else:
             fallback = tuple(partition_columns(self._spec))
         groups: dict[tuple, list[str]] = {}
@@ -1538,7 +1160,7 @@ class LakeSink:
             raw = meta.get("partition_spec", [])
         else:
             raw = meta.get("spec_history", {}).get(str(spec_id), [])
-        return [PartitionField(*f) for f in raw]
+        return as_fields(raw)
 
     def _restore_pcols(self, df: DataFrame, spec_id: int,
                        esc_cols: set, meta: dict) -> DataFrame:
@@ -1595,16 +1217,15 @@ class LakeSink:
             want = declared.get(c) or _spec_type(c)
             if want and dtypes.get(c) != want:
                 df = df.withColumn(c, qcol(c).cast(want))
-        if esc_cols:
-            for c in sorted(esc_cols):
-                f = fields.get(c)
-                if f is not None and f.source in df.columns:
-                    df = df.withColumn(
-                        c,
-                        transform_column(
-                            f.source, f.transform, dtypes.get(f.source, "")
-                        ),
-                    )
+        for c in sorted(esc_cols):
+            f = fields.get(c)
+            if f is not None and f.source in df.columns:
+                df = df.withColumn(
+                    c,
+                    transform_column(
+                        f.source, f.transform, dtypes.get(f.source, "")
+                    ),
+                )
         return df
 
     # -- partition evolution ----------------------------------------------
@@ -1619,33 +1240,8 @@ class LakeSink:
         and :meth:`read` unions across spec boundaries with null-fill on
         the layout columns — the split-planning behavior of Iceberg's
         per-manifest spec ids.
-
-        Iceberg backend: issued as ALTER TABLE DROP/ADD PARTITION FIELD
-        statements (the runtime records the new spec in table metadata).
-        The fields to DROP come from the spec THIS sink last applied
-        (config at first call, then each evolution's result) — the
-        runtime metadata is the source of truth, but Spark SQL exposes no
-        portable way to read it back, so evolving a table some OTHER sink
-        instance already evolved requires passing that state explicitly.
         """
-        fields = [
-            f if isinstance(f, PartitionField) else PartitionField(*f)
-            for f in new_spec
-        ]
-        if self.backend == "iceberg":
-            current = getattr(self, "_iceberg_spec", None)
-            for f in (current if current is not None else self._spec):
-                self.spark.sql(
-                    f"ALTER TABLE {self._qualified} "
-                    f"DROP PARTITION FIELD {_iceberg_transform_sql(f)}"
-                )
-            for f in fields:
-                self.spark.sql(
-                    f"ALTER TABLE {self._qualified} "
-                    f"ADD PARTITION FIELD {_iceberg_transform_sql(f)}"
-                )
-            self._iceberg_spec = fields
-            return
+        fields = as_fields(new_spec)
         if not self._log.exists():
             raise ValueError(
                 "cannot evolve the partition spec of a table that does not "

@@ -414,13 +414,15 @@ def test_safe_ref_rejects_sql_hostile_branch_names():
     the iceberg backend (refs lookup, VERSION AS OF, CREATE/DROP
     TAG/BRANCH) — an embedded quote broke the statement and was an
     injection surface. The allowlist validator raises loudly instead."""
-    from bytewax_iceberg_connector_spark.operators.sink import LakeSink
+    from bytewax_iceberg_connector_spark.operators.iceberg_sink import (
+        _safe_ref,
+    )
 
     for ok in ("main", "audit", "release-1.2", "a_b.c", "2024", "X"):
-        assert LakeSink._safe_ref(ok) == ok
+        assert _safe_ref(ok) == ok
     for bad in (
         "au'dit", "a' OR '1'='1", 'a"b', "a`b", "a b", "", None,
         ".lead", "-lead", "a;DROP TABLE t", "日本語", "a\nb",
     ):
         with pytest.raises(ValueError, match="invalid branch/tag name"):
-            LakeSink._safe_ref(bad)
+            _safe_ref(bad)

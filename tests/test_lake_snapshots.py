@@ -611,6 +611,7 @@ def test_commit_stats_omit_column_with_partial_coverage(spark, tmp_path, batches
     yield usable min/max for a column, the column must be omitted from
     _bic_stats.json entirely — partial bounds recorded as dir-wide bounds
     would let prune() drop a dir that actually holds matching rows."""
+    import glob as _glob
     import json as _json
     import os as _os
 
@@ -645,7 +646,9 @@ def test_commit_stats_omit_column_with_partial_coverage(spark, tmp_path, batches
         write_statistics=["event_id"],
     )
     _os.unlink(stats_file)
-    sink._write_commit_stats(d)
+    sink._write_commit_stats(
+        d, _glob.glob(_os.path.join(d, "**", "*.parquet"), recursive=True)
+    )
     with open(stats_file) as f:
         after = _json.load(f)
     # v=9000 is invisible to v's stats now — recording the old [0,9] bound

@@ -383,25 +383,38 @@ def test_dropped_branch_leaves_schema_undeclared(spark, tmp_path, events_df):
     assert sink.read().where("q = 0.5").count() == 30
 
 
-def test_wap_routing_guard_covers_all_write_paths(spark, tmp_path, events_df):
+def test_wap_routing_guard_covers_all_write_paths(tmp_path):
     """r08 ADVICE (low): every iceberg write entry point must verify
     spark.wap.branch routing, not just append. The guard is a pure conf
-    check, so it is testable without the iceberg runtime by flipping the
-    backend marker."""
-    sink = _sink(spark, tmp_path)
-    sink.backend = "iceberg"
-    spark.conf.set("spark.wap.branch", "audit")
-    try:
-        for op in ("append", "overwrite", "merge", "delete", "compact",
-                   "rollback"):
-            with pytest.raises(ValueError, match="spark.wap.branch"):
-                sink._assert_wap_routing(op)
-        # matching branch append passes; mismatched branch raises
-        sink._assert_wap_routing("append", branch="audit")
+    check, so it is testable without the iceberg runtime: the adapter
+    runs on a mock session whose conf is a dict."""
+    from unittest.mock import MagicMock
+
+    from bytewax_iceberg_connector_spark.operators.iceberg_sink import (
+        IcebergRuntimeSink,
+    )
+
+    conf = {}
+    session = MagicMock()
+    session.conf.get.side_effect = lambda k, default=None: conf.get(k, default)
+    session.conf.set.side_effect = conf.__setitem__
+    sink = IcebergRuntimeSink(session, IcebergSinkConfig(
+        table_name="db.events", warehouse_path=str(tmp_path)))
+    conf["spark.wap.branch"] = "audit"
+    for op in ("append", "overwrite", "merge", "delete", "compact",
+               "rollback"):
         with pytest.raises(ValueError, match="spark.wap.branch"):
-            sink._assert_wap_routing("append", branch="other")
-    finally:
-        spark.conf.unset("spark.wap.branch")
-        sink.backend = "parquet"
-    # parquet backend: no-op regardless of conf
+            sink._assert_wap_routing(op)
+    # matching branch append passes; mismatched branch raises
+    sink._assert_wap_routing("append", branch="audit")
+    with pytest.raises(ValueError, match="spark.wap.branch"):
+        sink._assert_wap_routing("append", branch="other")
+    # the public write paths run the guard before any write
+    df = MagicMock()
+    with pytest.raises(ValueError, match="spark.wap.branch"):
+        sink.overwrite_partitions(df)
+    df.writeTo.assert_not_called()
+    del conf["spark.wap.branch"]
     sink._assert_wap_routing("overwrite")
+    with pytest.raises(ValueError, match="spark.wap.branch"):
+        sink._assert_wap_routing("append", branch="audit")

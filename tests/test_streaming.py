@@ -353,6 +353,56 @@ def test_stream_merge_builds_latest_state(spark, sf_dir, tmp_path):
     assert sink._log.committed_batch_ids()
 
 
+def test_stream_merge_on_column_names_that_need_quoting(spark, tmp_path):
+    """write_stream_merge keyed on a name that needs quoting, with
+    ``order_by`` on a second one: the within-batch winner comes from a
+    window over quoted names (merge.latest_per_key), so the drain leaves
+    the latest row per key instead of failing with
+    INVALID_ATTRIBUTE_NAME_SYNTAX. Two files, one micro-batch each: the
+    second batch's winner for key 2 replaces the first batch's row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from bytewax_iceberg_connector_spark.config import IcebergSinkConfig
+    from bytewax_iceberg_connector_spark.operators.sink import LakeSink
+
+    key, order = "a.b c`d日", "o.r d`er"
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, (keys, orders, vals) in enumerate([
+        ([1, 1, 2], [1.0, 3.0, 5.0], [10, 30, 50]),
+        ([2, 2], [2.0, 4.0], [20, 40]),
+    ]):
+        path = str(src / f"part-{i}.parquet")
+        pq.write_table(pa.table({key: keys, order: orders, "v": vals}), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    schema = StructType([StructField(key, LongType()),
+                         StructField(order, DoubleType()),
+                         StructField("v", LongType())])
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(str(src)))
+    sink = LakeSink(spark, IcebergSinkConfig(
+        table_name="db.quoted_state", warehouse_path=str(tmp_path / "wh"),
+        num_partitions=1,
+    ))
+    q = sink.write_stream_merge(
+        stream, str(tmp_path / "cp"), keys=[key], order_by=order,
+        trigger_override={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    got = {(r[key], r[order], r["v"]) for r in sink.read().collect()}
+    assert got == {(1, 3.0, 30), (2, 4.0, 40)}
+    assert sorted(sink._log.committed_batch_ids()) == [0, 1]
+
+
 def test_streaming_enrich_dim_unknown_segment(spark, tmp_path):
     """A stream row whose user has NO dimension row survives the LEFT
     enrichment as segment 'unknown' (dim misses must not drop facts);
