@@ -10,7 +10,11 @@ writer; here they COMPILE to Spark/Iceberg writer settings —
   batch_size             → per-trigger source admission cap (maxOffsetsPerTrigger
                            / maxFilesPerTrigger — Spark has no exact count
                            trigger; documented gap, SURVEY.md §7)
-  num_partitions         → repartition(n) before the write (A2 list_parts)
+  num_partitions         → repartition(n) before the write (A2 list_parts);
+                           at n=1 an input whose Catalyst size estimate is
+                           at most sink._COALESCE_MAX_BYTES (set from the
+                           crossover tools/write_crossover.py measures)
+                           goes through coalesce(1) instead: one Spark job
   file_format            → Iceberg `write.format.default` table property
   catalog_*              → spark.sql.catalog.<name>.* conf
 Guardrail ranges and the >60 s / >50 partitions warnings mirror

@@ -26,7 +26,9 @@ the same public methods, each one call into the runtime.
 
 Scale: the append path repartitions by partition key before writing
 (`write.distribution-mode=hash` equivalent) so 1000 executors produce
-|partitions| files per commit, not |executors|×|partitions| small files.
+|partitions| files per commit, not |executors|×|partitions| small files. A
+single-writer commit whose plan Catalyst estimates as small coalesces into
+one task instead (`none`), which writes the same files without the exchange.
 Snapshot JSONs carry the cumulative commit list — O(commits); real Iceberg's
 manifest lists make this O(1), the documented small-scale trade-off.
 """
@@ -81,6 +83,32 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
 #: commit operations whose snapshot REPLACES the live set (vs appending)
 _REPLACING_OPS = frozenset({"overwrite", "replace", "delete"})
 
+#: Catalyst's size estimate (bytes) at or below which a single-writer
+#: (``num_partitions=1``) write goes through ``coalesce(1)`` instead of
+#: the ``repartition(1, _p_*)`` exchange — Iceberg's per-table
+#: ``write.distribution-mode`` choice of ``none`` over ``hash``, made per
+#: commit from the plan. Under AQE the exchange is a Spark job of its own;
+#: ``coalesce(1)`` saves it but runs everything upstream of the write in
+#: one task. ``tools/write_crossover.py`` times both (4 vCPU, local[4],
+#: 1 GiB heap; ms per append, exchange vs coalesce): a 4-file parquet scan
+#: with sha2-512 columns upstream 124 vs 104 at a 0.08 MB estimate, 163 vs
+#: 141 at 0.53 MB, 443 vs 431 at 4.6 MB, 935 vs 1045 at 13.6 MB and
+#: 2914 vs 3224 at 34.7 MB; an Arrow frame 163 vs 137 at 0.68 MB. The
+#: crossover sits near 5 MB for hashing upstream and moves lower the more
+#: work each byte costs, so the threshold stays well under it. A join's
+#: estimate is the product of its sides, so a join upstream keeps the
+#: exchange (the tool measured no gain there). Re-run the tool to derive
+#: the value on other hardware.
+_COALESCE_MAX_BYTES = 1 << 20
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan, in bytes: the
+    statistic Spark's broadcast-join rule reads. Computing it plans the
+    query but runs no Spark job."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
 
 def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
     """An empty frame of exactly ``schema``, built by the JVM from the
@@ -110,11 +138,16 @@ class LakeSink:
     """A1 ``IcebergSink`` equivalent: batch append + streaming micro-batch.
 
     The reference's ``num_partitions`` fixed writer fan-out (A2 list_parts,
-    connector.py:456-468) maps to ``repartition(num_partitions, keys)``; its
-    dual size/time flush trigger (A4, connector.py:187-191) maps to the
-    streaming trigger interval (time) + the source admission cap compiled
-    from ``batch_size`` (config.source_admission_options) — together the
-    same "flush at N records or T seconds" envelope.
+    connector.py:456-468) maps to ``repartition(num_partitions, keys)``.
+    At ``num_partitions=1`` a commit whose input Catalyst estimates at
+    ``_COALESCE_MAX_BYTES`` or less (1 MiB, below the crossover that
+    ``tools/write_crossover.py`` measures) goes through ``coalesce(1)``
+    instead: the same one file per partition value, in one Spark job
+    rather than two. Its dual size/time flush trigger (A4,
+    connector.py:187-191) maps to the streaming trigger interval (time) +
+    the source admission cap compiled from ``batch_size``
+    (config.source_admission_options) — together the same "flush at N
+    records or T seconds" envelope.
 
     Every method below is the parquet-log path. With iceberg-spark-runtime
     on the classpath, ``LakeSink(spark, config)`` returns a fully built
@@ -136,14 +169,17 @@ class LakeSink:
 
     @property
     def _spec(self) -> list[PartitionField]:
+        log = self._log
+        return self._spec_of(log.table_meta() if log.exists() else None)
+
+    def _spec_of(self, meta: dict | None) -> list[PartitionField]:
         # an existing table owns its spec (it may have EVOLVED past the
         # config since creation — evolve_partition_spec); config only
         # seeds the spec at create time. Real Iceberg likewise reads the
         # spec from table metadata, never from writer config.
-        if self._log.exists():
-            meta_spec = self._log.table_meta().get("partition_spec")
-            if meta_spec is not None:
-                return as_fields(meta_spec)
+        meta_spec = (meta or {}).get("partition_spec")
+        if meta_spec is not None:
+            return as_fields(meta_spec)
         return as_fields(self.config.partition_spec or [])
 
     @property
@@ -226,8 +262,11 @@ class LakeSink:
         """Atomic-append a batch (the reference's _flush, collapsed).
 
         Partition-key grouping (A6) + per-group Arrow write + commit (A5)
-        become: compute transform columns → hash-repartition on them →
-        (sort within partitions per config.sort_order) → columnar write →
+        become: compute transform columns → hash-repartition on them (at
+        ``num_partitions=1`` with a size estimate of at most
+        ``_COALESCE_MAX_BYTES``, set from ``tools/write_crossover.py``'s
+        crossover: ``coalesce(1)``, no exchange) → (sort within
+        partitions per config.sort_order) → columnar write →
         ONE snapshot commit (operators/snapshots.py), optimistic-retried
         exactly like the reference's commit loop (connector.py:242-257).
 
@@ -320,9 +359,23 @@ class LakeSink:
     def _write_commit(self, df: DataFrame, operation: str,
                       batch_id: int | None = None,
                       cluster_expr=None, branch: str = "main") -> None:
-        new_fields = self._check_write_schema(df, branch=branch)
-        keyed = partition_key(df, self._spec)
-        pcols = partition_columns(self._spec)
+        log = self._log
+        # self-heal torn publish folds BEFORE reading the declared schema:
+        # a publish whose fold step crashed left its branch-added columns
+        # undeclared, so a type-changing write of one would pass the
+        # schema check as "new" (r09 ADVICE) — folding here closes that
+        # window at the next write, the exact moment the declaration
+        # matters
+        log.heal_publish_folds()
+        # ONE table.json read per commit: the spec, the partition columns,
+        # the declared schema and the marker's spec_id all come from it, so
+        # an evolve_partition_spec landing mid-write cannot give a commit
+        # written in one layout a marker naming another
+        meta = log.table_meta()
+        spec = self._spec_of(meta)
+        new_fields = self._check_write_schema(df, meta, branch=branch)
+        keyed = partition_key(df, spec)
+        pcols = partition_columns(spec)
         # dir-encoding-hostile string partition VALUES ("" / the literal
         # Hive default sentinel / overlong / marker-spoofing) are diverted
         # to injective marker strings (r10 sweep: "" and NULL and the
@@ -354,6 +407,12 @@ class LakeSink:
                 .sortWithinPartitions(*[qcol(c) for c in pcols], "_bic_z")
                 .drop("_bic_z")
             )
+        elif (self.config.num_partitions == 1
+              and _plan_bytes(keyed) <= _COALESCE_MAX_BYTES):
+            # a small single-writer input: a narrow dependency into one
+            # task writes the same files as the exchange below, without
+            # the shuffle-map job AQE runs for it (one Spark job, not two)
+            keyed = keyed.coalesce(1)
         else:
             keyed = keyed.repartition(
                 self.config.num_partitions, *[qcol(c) for c in pcols]
@@ -368,14 +427,15 @@ class LakeSink:
                 *[qcol(c) for c in pcols],
                 *_sort_exprs(self.config.sort_order)
             )
-        name, path = self._log.new_commit_dir()
-        w = keyed.write.mode("errorifexists").format(self._file_format())
+        name, path = log.new_commit_dir()
+        fmt = self._file_format()
+        w = keyed.write.mode("errorifexists").format(fmt)
         if pcols:
             w = w.partitionBy(*pcols)
         w.save(path)
         # ONE walk of the written tree feeds the footer stats, n_files and
         # esc_pcols
-        ext = f".{self._file_format()}"
+        ext = f".{fmt}"
         data_files: list[str] = []
         esc_pcols: set[str] = set()
         for root, dirnames, files in os.walk(path):
@@ -401,8 +461,9 @@ class LakeSink:
         # instead of re-walking every commit dir per read (the manifest's
         # added-data-files count in Iceberg) — at scale the per-read walk
         # is an O(total files) driver-side stat storm.
-        marker = {"spec_id": self._log.current_spec_id()
-                  if self._log.exists() else 0,
+        # (a table from before spec evolution has no spec_id: spec 0, the
+        # same default-spec convention as Iceberg)
+        marker = {"spec_id": int(meta.get("spec_id", 0)),
                   "pcols": pcols,
                   "n_files": len(data_files),
                   # the commit's data fields as written (Iceberg's
@@ -420,7 +481,6 @@ class LakeSink:
         with open(mtmp, "w") as f:
             json.dump(marker, f)
         os.replace(mtmp, os.path.join(path, "_bic_spec.json"))
-        log = self._log
         sid = log.commit(
             operation, [name],
             overwrite=operation in _REPLACING_OPS, batch_id=batch_id,
@@ -448,7 +508,7 @@ class LakeSink:
             log.retire_fold_flag(sid)  # fold done; crash above → heal
 
     def _check_write_schema(
-        self, df: DataFrame, branch: str = "main"
+        self, df: DataFrame, meta: dict, branch: str = "main"
     ) -> list[StructField]:
         """Write-time schema compatibility (Iceberg's contract: evolution
         is additive; a TYPE change is rejected at write, never stored):
@@ -469,20 +529,14 @@ class LakeSink:
         as long and commit 2 staging ``x`` as double stored a conflict the
         additive-only contract promises can never be stored.
 
+        ``meta`` is the table metadata the caller read once for the whole
+        commit, after healing torn publish folds.
+
         Returns the batch's NEW fields; the caller records them via
         ``evolve_schema`` after the data commit succeeds (main commits
         directly; branch commits carry them on the snapshot and
         ``publish`` folds them in — see _write_commit).
         """
-        if not self._log.exists():
-            return []
-        # self-heal torn publish folds BEFORE reading the declared schema:
-        # a publish whose fold step crashed left its branch-added columns
-        # undeclared, so a type-changing write of one would pass this
-        # check as "new" (r09 ADVICE) — folding here closes that window
-        # at the next write, the exact moment the declaration matters
-        self._log.heal_publish_folds()
-        meta = self._log.table_meta()
         declared = StructType.fromJson(meta["schema_json"])
         declared_types = {f.name: f.dataType for f in declared.fields}
         binding = {

@@ -247,11 +247,6 @@ class SnapshotLog:
 
     # -- partition-spec evolution ------------------------------------------
 
-    def current_spec_id(self) -> int:
-        """Current partition-spec id (0 for tables created before
-        evolution existed — same default-spec-0 convention as Iceberg)."""
-        return int(self.table_meta().get("spec_id", 0))
-
     def evolve_spec(self, new_spec: list[list]) -> int:
         """Install a NEW partition spec (Iceberg partition evolution):
         the current spec is archived under ``spec_history``, ``spec_id``

@@ -8,6 +8,7 @@ exercises that branch whenever iceberg-spark-runtime is on the classpath)."""
 
 import contextlib
 import datetime as dt
+import json
 import os
 
 import pytest
@@ -1145,6 +1146,170 @@ def test_single_writer_append_writes_one_file_per_partition_value(
         vs = pq.read_table(files[0], columns=["v"]).column("v").to_pylist()
         assert vs == sorted(vs, reverse=True), day
     assert sorted(r.event_id for r in sink.read().collect()) == list(range(40))
+
+
+def _single_writer(spark, tmp_path, **kw):
+    return LakeSink(spark, IcebergSinkConfig(
+        table_name="db.single_writer",
+        warehouse_path=str(tmp_path),
+        num_partitions=1,
+        partition_spec=[("ts", "day")],
+        **kw,
+    ))
+
+
+def _arrow_events(spark, n: int):
+    """An ``n``-row frame over 3 days built from one Arrow table (a
+    ``LocalRelation``, so running it starts no Python worker)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 1 + i % 3, 10)
+                        for i in range(n)], pa.timestamp("us", tz="UTC")),
+        "v": pa.array([float(i * 7 % n) for i in range(n)]),
+    }))
+
+
+def _files_by_dir(commit: str) -> dict[str, list[str]]:
+    out: dict[str, list[str]] = {}
+    for root, _dirs, files in os.walk(commit):
+        for f in files:
+            if f.endswith(".parquet"):
+                out.setdefault(os.path.basename(root), []).append(
+                    os.path.join(root, f))
+    return out
+
+
+def test_small_single_writer_append_runs_one_spark_job(spark, tmp_path):
+    """A 1000-row Arrow append whose size estimate is under the sink's
+    threshold is written through ``coalesce(1)``: one Spark job, with no
+    exchange for AQE to run as a job of its own, and still one data file
+    per partition value."""
+    sink = _single_writer(spark, tmp_path)
+    df = _arrow_events(spark, 1000)
+    assert jobs_run_by(spark, lambda: sink.append(df)) == 1
+    (commit,) = sink._log.commit_paths()
+    files = _files_by_dir(commit)
+    assert len(files) == 3 and all(len(f) == 1 for f in files.values())
+    assert sink.read().count() == 1000
+
+
+def test_micro_batch_shaped_append_runs_one_spark_job(spark, tmp_path):
+    """A frame built the way a streaming micro-batch reaches the sink (one
+    landed parquet file -> validate_schema -> enrich_with_metadata) is
+    small by Catalyst's estimate, so its commit is one Spark job too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bytewax_iceberg_connector_spark.operators import (
+        enrich_with_metadata,
+        validate_schema,
+    )
+
+    landed = str(tmp_path / "part-000000.parquet")
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(1000), pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 1 + i % 3, 10)
+                        for i in range(1000)], pa.timestamp("us", tz="UTC")),
+        "props": pa.array([f'{{"k": {i % 5}}}' for i in range(1000)]),
+    }), landed)
+    checked = validate_schema(spark.read.parquet(landed), {
+        "props_json": F.get_json_object("props", "$.k").isNotNull(),
+    })
+    batch = enrich_with_metadata(checked.oks, {
+        "props_k": F.get_json_object("props", "$.k").cast("bigint"),
+    }).oks
+    sink = _single_writer(spark, tmp_path / "wh")
+    assert jobs_run_by(spark, lambda: sink.append(batch, batch_id=0)) == 1
+    assert sink.read().count() == 1000
+
+
+def test_append_over_size_threshold_keeps_the_exchange(
+        spark, tmp_path, monkeypatch):
+    """An input whose estimate is over the threshold (forced here by a
+    threshold of 0) keeps the ``repartition(1, _p_*)`` exchange, which AQE
+    runs as a job of its own: 2 Spark jobs, one data file per partition
+    value, each ordered by ``config.sort_order``."""
+    import pyarrow.parquet as pq
+
+    from bytewax_iceberg_connector_spark.operators import sink as sink_mod
+
+    monkeypatch.setattr(sink_mod, "_COALESCE_MAX_BYTES", 0)
+    sink = _single_writer(spark, tmp_path, sort_order=["v desc"])
+    df = spark.range(0, 40, 1, numPartitions=4).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(
+            F.lit(1704103200) + F.col("id") % 3 * 86400
+        ).alias("ts"),
+        (F.col("id") * 7 % 40).cast("double").alias("v"),
+    )
+    assert sink_mod._plan_bytes(df) > 0
+    assert jobs_run_by(spark, lambda: sink.append(df)) == 2
+    (commit,) = sink._log.commit_paths()
+    files = _files_by_dir(commit)
+    assert len(files) == 3
+    for day, paths in files.items():
+        assert len(paths) == 1, day
+        vs = pq.read_table(paths[0], columns=["v"]).column("v").to_pylist()
+        assert vs == sorted(vs, reverse=True), day
+
+
+def test_write_path_size_decision_runs_no_spark_job(spark, tmp_path):
+    """The sink's size estimate reads plan statistics only: it runs no
+    Spark job, also with a Python UDF upstream and on a table read."""
+    from bytewax_iceberg_connector_spark.operators import sink as sink_mod
+
+    df = _arrow_events(spark, 1000)
+    sink = _single_writer(spark, tmp_path)
+    sink.append(df)
+    frames = {
+        "arrow": df,
+        "python_udf": df.withColumn(
+            "w", F.udf(lambda v: v + 1.0, "double")("v")),
+        "table_read": sink.read(),
+    }
+    sizes = {}
+    for name, frame in frames.items():
+        assert jobs_run_by(spark, lambda: sizes.__setitem__(
+            name, sink_mod._plan_bytes(frame))) == 0, name
+    assert all(0 < s <= sink_mod._COALESCE_MAX_BYTES
+               for s in sizes.values()), sizes
+
+
+def test_append_racing_a_spec_evolution_keeps_its_own_spec_id(
+        spark, tmp_path, monkeypatch):
+    """An append reads table metadata once: when a partition-spec
+    evolution lands after that read, the commit is written in the old
+    layout AND its marker names the old spec, so a ``_spec_id`` read
+    attributes the row to the spec it was written under."""
+    cfg = IcebergSinkConfig(
+        table_name="db.spec_race",
+        warehouse_path=str(tmp_path),
+        partition_spec=[("ts", "day")],
+    )
+    sink = LakeSink(spark, cfg)
+    row = spark.createDataFrame(
+        [Row(id=1, ts=dt.datetime(2024, 1, 1, 10), v=1.0)])
+    sink.ensure_table(row)
+    reserve = SnapshotLog.new_commit_dir
+
+    def evolve_then_reserve(self):
+        monkeypatch.setattr(SnapshotLog, "new_commit_dir", reserve)
+        LakeSink(spark, cfg).evolve_partition_spec([("id", "bucket[4]")])
+        return reserve(self)
+
+    monkeypatch.setattr(SnapshotLog, "new_commit_dir", evolve_then_reserve)
+    sink.append(row)
+    assert sink._log.table_meta()["spec_id"] == 1  # the evolve landed
+    (commit,) = sink._log.commit_paths()
+    with open(os.path.join(commit, "_bic_spec.json")) as f:
+        marker = json.load(f)
+    assert (marker["spec_id"], marker["pcols"]) == (0, ["_p_ts_day"])
+    (got,) = sink.read(with_spec_id=True).collect()
+    assert got._spec_id == 0
+    assert got._p_ts_day is not None
+    assert got.asDict().get("_p_id_bucket") is None
 
 
 def test_type_change_rejected_at_write_history_stays_readable(spark, tmp_path):

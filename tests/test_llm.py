@@ -53,6 +53,26 @@ def test_simhash_audit_flags_all_green(spark, sf_dir):
     assert all(r.jaccard >= 0.8 for r in rows)
 
 
+@pytest.mark.xfail(
+    strict=True, raises=AssertionError,
+    reason="known defect (ROADMAP open item 2): the four exact 16-bit "
+           "bands propose 15 of the 51 exact pairs of this corpus, whose "
+           "pairs sit at Hamming distance 7-8, below the 0.60 recall floor",
+)
+def test_simhash_recall_on_perfbench_corpus(spark, tmp_path):
+    """The same audit on the perfbench corpus (seed 3, sf0.02), whose
+    near-duplicate pairs sit further apart than the test corpus's: every
+    exact pair must still carry ``recall_ok``. Strict, so the test fails
+    once the banding reaches the floor and the marker has to go."""
+    from bytewax_iceberg_connector_spark.plans.llm import dedup_simhash
+    from perfbench import gen
+
+    gen.write_corpus(3, 0.02, str(tmp_path))
+    rows = dedup_simhash(spark, str(tmp_path)).collect()
+    assert rows, "corpus should contain planted near-duplicates"
+    assert all(r.recall_ok == 1 for r in rows)
+
+
 def test_ann_recall_floor(spark, sf_dir):
     """Sign-LSH ANN top-5 must overlap the exact top-5 (recall ≥ 0.2 on
     random-ish embeddings; buckets trade recall for the pruned cross join)."""

@@ -174,7 +174,7 @@ def test_partition_evolution_time_travel(spark, tmp_path, events_df):
     assert old.count() == 30
     assert "_p_ts_day" in old.columns
     assert "_p_event_id_bucket" not in old.columns
-    assert sink._log.current_spec_id() == 1
+    assert sink._log.table_meta()["spec_id"] == 1
 
 
 def test_partition_evolution_values_survive(spark, tmp_path, events_df):
