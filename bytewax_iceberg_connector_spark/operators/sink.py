@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from functools import reduce
 
 import pyarrow as pa
@@ -68,7 +69,7 @@ from .partitioning import (
     transform_column,
     unescape_path_name,
 )
-from .snapshots import SnapshotLog
+from .snapshots import CommitConflict, SnapshotLog
 
 
 def iceberg_runtime_available(spark: SparkSession) -> bool:
@@ -164,23 +165,9 @@ class LakeSink:
         bind_sink_session(spark, config)
         self.spark = spark
         self.config = config
+        self._log = SnapshotLog(self._path)
 
     # -- identity ----------------------------------------------------------
-
-    @property
-    def _spec(self) -> list[PartitionField]:
-        log = self._log
-        return self._spec_of(log.table_meta() if log.exists() else None)
-
-    def _spec_of(self, meta: dict | None) -> list[PartitionField]:
-        # an existing table owns its spec (it may have EVOLVED past the
-        # config since creation — evolve_partition_spec); config only
-        # seeds the spec at create time. Real Iceberg likewise reads the
-        # spec from table metadata, never from writer config.
-        meta_spec = (meta or {}).get("partition_spec")
-        if meta_spec is not None:
-            return as_fields(meta_spec)
-        return as_fields(self.config.partition_spec or [])
 
     @property
     def _path(self) -> str:
@@ -190,10 +177,6 @@ class LakeSink:
             return self.config.location
         wh = self.config.warehouse_path or "/tmp/bic_spark_warehouse"
         return os.path.join(wh, *self.config.table_name.split("."))
-
-    @property
-    def _log(self) -> SnapshotLog:
-        return SnapshotLog(self._path)
 
     def _file_format(self) -> str:
         """Data file format (A20 ``file_format``: the reference writes the
@@ -242,13 +225,17 @@ class LakeSink:
             return
         if like is None:
             like = _empty_frame(self.spark, declared_schema(self.config))
-        keyed = partition_key(like.limit(0), self._spec)
+        # config seeds the spec at create time only: from then on the
+        # table's snapshots own it (evolve_partition_spec), as Iceberg
+        # reads the spec from table metadata, never from writer config
+        spec = as_fields(self.config.partition_spec or [])
+        keyed = partition_key(like.limit(0), spec)
         self._log.init_table(
             {
                 "table_name": self.config.table_name,
                 "schema_json": keyed.schema.jsonValue(),
                 "partition_spec": [
-                    [f.source, f.transform, f.field_name] for f in self._spec
+                    [f.source, f.transform, f.field_name] for f in spec
                 ],
                 "sort_order": self.config.sort_order or [],
                 "properties": self.config.table_properties(),
@@ -279,17 +266,19 @@ class LakeSink:
         self._write_commit(df, operation="append", batch_id=batch_id,
                            branch=branch)
 
-    def _live_rows(self, branch: str) -> DataFrame:
-        """``branch``'s head minus the ``_p_*`` layout columns: the input of
-        every copy-on-write rewrite. A branch with no commits yet reads
-        main's head, which its first commit forks from (Iceberg's
-        ``spark.wap.branch`` fork-on-first-write)."""
-        ref = None
-        if branch != "main" and self._log.current_id(branch):
-            ref = branch
-        current = self.read(branch=ref)
+    def _live_rows(self, head: dict | None) -> tuple[DataFrame, list[str]]:
+        """The rows of ``head`` (``SnapshotLog.head(branch)``: a branch
+        with no commits yet reads main's head, which its first commit
+        forks from) minus the ``_p_*`` layout columns, and the commit dirs
+        they come from: the input and the ``replaces`` list of every
+        copy-on-write rewrite."""
+        live = [] if head is None else list(head["live"])
+        current = self._load_commit_dirs(
+            [] if head is None else self._log.commit_paths(snap=head),
+            self._log.table_state(head),
+        )
         return current.select(*[qcol(c) for c in current.columns
-                                if not c.startswith("_p_")])
+                                if not c.startswith("_p_")]), live
 
     def overwrite(self, df: DataFrame, batch_id: int | None = None,
                   branch: str = "main") -> None:
@@ -313,26 +302,33 @@ class LakeSink:
         pipeline without touching the rest of the table.
 
         Copy-on-write: survivors outside the affected partitions union the
-        new rows into one replacing commit (history stays
-        time-travelable). Iceberg does this with file-level surgery; the
-        whole-table rewrite is the documented small-scale trade-off, same
-        as merge().
+        new rows into one commit that replaces the dirs it read (history
+        stays time-travelable, and an append landing meanwhile survives).
+        Iceberg does this with file-level surgery; the whole-table rewrite
+        is the documented small-scale trade-off, same as merge(). The
+        spec, the live rows and the commit's base all come from one read
+        of the head.
         """
         self.ensure_table(df)
-        pcols = partition_columns(self._spec)
+        head = self._log.head(branch)
+        spec = as_fields(self._log.table_state(head)["partition_spec"])
+        pcols = partition_columns(spec)
         if not pcols:
             # unpartitioned table: replacing "its partitions" = everything
-            self.overwrite(df, branch=branch)
+            self._write_commit(
+                df, operation="overwrite", branch=branch, head=head,
+                replaces=[] if head is None else list(head["live"]),
+            )
             return
-        new_keyed = partition_key(df, self._spec)
+        live, dirs = self._live_rows(head)
+        new_keyed = partition_key(df, spec)
         affected = new_keyed.select(*[qcol(c) for c in pcols]).distinct()
-        live = self._live_rows(branch)
         # partition membership is LOGICAL — the current spec's transforms
         # over the data columns — not the stored _p_* layout: rows from
         # pre-evolution commits carry other (or no) layout columns, so
         # recompute the key for every live row exactly as Iceberg
         # evaluates the current spec against old files
-        cur_keyed = partition_key(live, self._spec)
+        cur_keyed = partition_key(live, spec)
         # NULL-SAFE key match (r10 sweep): plain equality never matches
         # NULL = NULL, so rows in the NULL partition survived the anti
         # join while the new batch still appended — overwriting the NULL
@@ -353,27 +349,29 @@ class LakeSink:
         # a frame that never had them (r06 model-test find)
         self._write_commit(
             survivors.unionByName(df, allowMissingColumns=True),
-            operation="overwrite", branch=branch,
+            operation="overwrite", branch=branch, replaces=dirs, head=head,
         )
 
     def _write_commit(self, df: DataFrame, operation: str,
                       batch_id: int | None = None,
-                      cluster_expr=None, branch: str = "main") -> None:
+                      cluster_expr=None, branch: str = "main",
+                      replaces: list[str] | None = None,
+                      head: dict | None = None) -> None:
+        """Write ``df`` as one commit dir and commit it on ``branch``.
+        ``replaces``: the dirs a rewrite read (see ``SnapshotLog.commit``);
+        without it a replacing operation overwrites the live set.
+        ``head``: the head snapshot the caller read, else read here."""
         log = self._log
-        # self-heal torn publish folds BEFORE reading the declared schema:
-        # a publish whose fold step crashed left its branch-added columns
-        # undeclared, so a type-changing write of one would pass the
-        # schema check as "new" (r09 ADVICE) — folding here closes that
-        # window at the next write, the exact moment the declaration
-        # matters
-        log.heal_publish_folds()
-        # ONE table.json read per commit: the spec, the partition columns,
-        # the declared schema and the marker's spec_id all come from it, so
-        # an evolve_partition_spec landing mid-write cannot give a commit
-        # written in one layout a marker naming another
-        meta = log.table_meta()
-        spec = self._spec_of(meta)
-        new_fields = self._check_write_schema(df, meta, branch=branch)
+        if head is None:
+            head = log.head(branch)
+        # ONE table state per commit: the spec, the partition columns, the
+        # schema checked against and the marker's spec_id all come from
+        # the head snapshot, so an evolve_partition_spec landing mid-write
+        # cannot give a commit written in one layout a marker naming
+        # another
+        state = log.table_state(head)
+        spec = as_fields(state["partition_spec"])
+        new_fields = self._check_write_schema(df, state, branch=branch)
         keyed = partition_key(df, spec)
         pcols = partition_columns(spec)
         # dir-encoding-hostile string partition VALUES ("" / the literal
@@ -463,7 +461,7 @@ class LakeSink:
         # is an O(total files) driver-side stat storm.
         # (a table from before spec evolution has no spec_id: spec 0, the
         # same default-spec convention as Iceberg)
-        marker = {"spec_id": int(meta.get("spec_id", 0)),
+        marker = {"spec_id": int(state["spec_id"]),
                   "pcols": pcols,
                   "n_files": len(data_files),
                   # the commit's data fields as written (Iceberg's
@@ -481,83 +479,59 @@ class LakeSink:
         with open(mtmp, "w") as f:
             json.dump(marker, f)
         os.replace(mtmp, os.path.join(path, "_bic_spec.json"))
-        sid = log.commit(
-            operation, [name],
-            overwrite=operation in _REPLACING_OPS, batch_id=batch_id,
-            branch=branch,
-            # EVERY commit carries its column adds ON the snapshot: branch
-            # commits so publish() can fold them into the declared schema
-            # (r08 ADVICE: without the fold, a post-publish type-changing
-            # main write of a branch-added column passed the additive-only
-            # guard and poisoned cross-commit reads); main commits so
-            # heal_publish_folds() can re-fold if the evolve_schema below
-            # never runs (r11 crash-injection find: a crash in that window
-            # reopened the same r08 hole on the main path)
-            new_fields=[f.jsonValue() for f in new_fields]
-            if new_fields else None,
-        )
-        # record column adds AFTER the commit succeeds, and only for MAIN
-        # commits: a failed write can then never leave a declared column
-        # with no data, and a staged WAP branch's new columns don't leak
-        # into main's declared shape before publish (snapshots.publish
-        # folds the branch-carried new_fields in; reads take each
-        # commit's own marker fields, so the declared schema is only
-        # the fallback for markers that predate them)
-        if new_fields and branch == "main":
-            log.evolve_schema([f.jsonValue() for f in new_fields])
-            log.retire_fold_flag(sid)  # fold done; crash above → heal
+        try:
+            # the column adds land in the snapshot's schema, in the same
+            # atomic create as the data: a branch's stay on the branch
+            # until publish copies them to main
+            log.commit(
+                operation, [name],
+                overwrite=replaces is None and operation in _REPLACING_OPS,
+                replaces=replaces, batch_id=batch_id, branch=branch,
+                new_fields=[f.jsonValue() for f in new_fields] or None,
+                base=head,
+            )
+        except (ValueError, CommitConflict):
+            shutil.rmtree(path, ignore_errors=True)  # rejected: no orphan
+            raise
 
     def _check_write_schema(
-        self, df: DataFrame, meta: dict, branch: str = "main"
+        self, df: DataFrame, state: dict, branch: str = "main"
     ) -> list[StructField]:
         """Write-time schema compatibility (Iceberg's contract: evolution
         is additive; a TYPE change is rejected at write, never stored):
-        every batch column that already exists in the table's declared
-        schema must keep its type; NEW columns are recorded via
-        ``evolve_schema`` (schema union), so later conflicts on evolved
-        columns are also caught here. Before this check, a long→double
-        rewrite of an existing column committed fine and every subsequent
-        read failed with CANNOT_MERGE_SCHEMAS (loud, but the bad commit
-        was already in history); now the WRITE fails and history stays
-        readable — which is also why the read side's union of commit
-        marker fields can never hold two types for one name.
-        Nullability is not compared (parquet unions relax it anyway).
+        every batch column that already exists in the schema of the
+        branch head (``state``, from ``SnapshotLog.table_state``) must
+        keep its type. Before this check, a long→double rewrite of an
+        existing column committed fine and every subsequent read failed
+        with CANNOT_MERGE_SCHEMAS (loud, but the bad commit was already
+        in history); now the WRITE fails and history stays readable —
+        which is also why the read side's union of commit marker fields
+        can never hold two types for one name. Nullability is not
+        compared (parquet unions relax it anyway).
 
-        Branch writes ALSO check against the branch's own pending column
-        adds (snapshot-carried ``new_fields``): a pending column is as
-        binding as a declared one — without this, commit 1 staging ``x``
-        as long and commit 2 staging ``x`` as double stored a conflict the
-        additive-only contract promises can never be stored.
+        A branch head's schema holds the columns staged on the branch, so
+        a staged column binds like a declared one: commit 1 staging ``x``
+        as long and commit 2 staging ``x`` as double is rejected.
 
-        ``meta`` is the table metadata the caller read once for the whole
-        commit, after healing torn publish folds.
-
-        Returns the batch's NEW fields; the caller records them via
-        ``evolve_schema`` after the data commit succeeds (main commits
-        directly; branch commits carry them on the snapshot and
-        ``publish`` folds them in — see _write_commit).
+        Returns the batch's NEW fields; the commit appends them to its
+        snapshot's schema, and rejects them if a racing commit added the
+        same name with another type.
         """
-        declared = StructType.fromJson(meta["schema_json"])
-        declared_types = {f.name: f.dataType for f in declared.fields}
+        where = ("declared" if branch == "main"
+                 else f"declared or staged on branch {branch!r}")
         binding = {
-            n: (t, "declared") for n, t in declared_types.items()
+            f.name: f.dataType
+            for f in StructType.fromJson(state["schema_json"]).fields
         }
-        if branch != "main":
-            for fj in self._log.branch_new_fields(branch):
-                binding.setdefault(
-                    fj["name"],
-                    (StructField.fromJson(fj).dataType,
-                     f"staged on branch {branch!r}"),
-                )
         new_fields = []
         for f in df.schema.fields:
             have = binding.get(f.name)
             if have is None:
                 new_fields.append(f)
-            elif f.dataType.simpleString() != have[0].simpleString():
+            elif f.dataType.simpleString() != have.simpleString():
                 raise ValueError(
                     f"schema evolution is additive-only: column {f.name!r} "
-                    f"is {have[1]} as {have[0].simpleString()} but this "
+                    f"is {where} as {have.simpleString()} but this "
                     f"batch writes {f.dataType.simpleString()} — rewrite "
                     "the batch (cast) or create a new table; a type change "
                     "would make every cross-commit read fail with "
@@ -663,9 +637,10 @@ class LakeSink:
         """MERGE INTO this table: matched keys update, unmatched insert.
 
         Read the head snapshot → operators/merge.merge_upsert → one
-        overwrite commit — the same copy-on-write plan Iceberg builds
-        internally, with time travel preserved (the pre-merge snapshot
-        remains readable via read(as_of=...)).
+        overwrite commit that replaces the dirs it read — the same
+        copy-on-write plan Iceberg builds internally, with time travel
+        preserved (the pre-merge snapshot remains readable via
+        read(as_of=...)) and an append landing meanwhile kept.
 
         ``branch`` stages the merge on a WAP branch instead of main (r09
         ADVICE: WAP-staged maintenance — e.g. a MERGE audited before
@@ -677,12 +652,14 @@ class LakeSink:
         # null-fills target columns the update batch predates (schema
         # evolution), and rejects columns the target lacks
         upd_cols = [c for c in updates.columns if not c.startswith("_p_")]
+        head = self._log.head(branch)
+        live, dirs = self._live_rows(head)
         merged = merge_upsert(
-            self._live_rows(branch),
-            updates.select(*[qcol(c) for c in upd_cols]),
+            live, updates.select(*[qcol(c) for c in upd_cols]),
             keys, tiebreak=tiebreak,
         )
-        self.overwrite(merged, batch_id=batch_id, branch=branch)
+        self._write_commit(merged, operation="overwrite", batch_id=batch_id,
+                           branch=branch, replaces=dirs, head=head)
 
     # -- time travel / maintenance ----------------------------------------
 
@@ -759,10 +736,11 @@ class LakeSink:
         # coalesce: SQL DELETE removes only cond=TRUE rows; a bare
         # NOT(cond) would also drop rows where cond is NULL (NOT NULL is
         # NULL, filtered) — silent data loss vs Iceberg's DELETE FROM
-        survivors = self._live_rows(branch).where(
-            f"NOT coalesce(({condition}), false)"
-        )
-        self._write_commit(survivors, operation="delete", branch=branch)
+        head = self._log.head(branch)
+        live, dirs = self._live_rows(head)
+        survivors = live.where(f"NOT coalesce(({condition}), false)")
+        self._write_commit(survivors, operation="delete", branch=branch,
+                           replaces=dirs, head=head)
 
     def compact(self, zorder_by: list[str] | None = None,
                 branch: str = "main") -> None:
@@ -776,13 +754,15 @@ class LakeSink:
         snapshots/day; unmaintained, file count — not data size — becomes
         the scan bottleneck (driver-side file listing + per-file open
         cost). Compaction is the amortizing counterpart of the sink's
-        hash-distribution on write. ``branch`` stages the rewrite on a
-        WAP branch (r09 ADVICE: stageable maintenance).
+        hash-distribution on write. The rewrite replaces only the dirs it
+        read, so appends that land meanwhile stay live. ``branch`` stages
+        the rewrite on a WAP branch (r09 ADVICE: stageable maintenance).
         """
-        live = self._live_rows(branch)
+        head = self._log.head(branch)
+        live, dirs = self._live_rows(head)
         cluster = zorder_key(live, zorder_by) if zorder_by else None
         self._write_commit(live, operation="replace", cluster_expr=cluster,
-                           branch=branch)
+                           branch=branch, replaces=dirs, head=head)
 
     def expire_snapshots(self, keep_last: int = 1) -> int:
         """Drop history older than the newest ``keep_last`` snapshots and
@@ -911,16 +891,18 @@ class LakeSink:
         Iceberg's append-only incremental read, this raises if the range
         crosses a replacing snapshot.
         """
-        head = self._log.current_id() if to_snapshot is None else to_snapshot
+        log = self._log
+        to = log.head() if to_snapshot is None else log.snapshot(to_snapshot)
+        head = 0 if to is None else to["snapshot_id"]
         # walk the ACTUAL lineage (parent chain), not the raw id range:
         # snapshot ids interleave across branches and expire()/
         # drop_branch() punch holes in the sequence — iterating raw ids
         # would crash on a hole and wrongly veto on an unrelated branch's
         # replacing commit
-        for sid in self._log.ancestors(head):
+        for sid in log.ancestors(head):
             if sid <= from_snapshot:
                 break
-            snap = self._log._maybe_snapshot(sid)
+            snap = log._maybe_snapshot(sid)
             if snap is None:
                 # retention punched a hole INSIDE the range (possible when
                 # from_snapshot survives only via a tag): the expired
@@ -940,12 +922,13 @@ class LakeSink:
                     f"snapshot {sid} is a replacing commit ({op}); "
                     "incremental append-scan is undefined across it"
                 )
-        base = set(self._log.live_commits(from_snapshot))
-        new = [c for c in self._log.live_commits(head) if c not in base]
-        dirs = [os.path.join(self._log.data_dir, c) for c in new]
+        base = set(log.live_commits(from_snapshot))
+        new = [c for c in ([] if to is None else to["live"])
+               if c not in base]
+        dirs = [os.path.join(log.data_dir, c) for c in new]
         # layout-aware: an incremental range can cross a partition-spec
         # evolution (evolve is metadata-only, not a replacing commit)
-        return self._load_commit_dirs(dirs)
+        return self._load_commit_dirs(dirs, log.table_state(to))
 
     # -- read-back ---------------------------------------------------------
 
@@ -1039,11 +1022,7 @@ class LakeSink:
         visible on main.
         """
         check_one_pin(as_of, as_of_timestamp_ms, tag, branch)
-        if branch is not None:
-            head = self._log.current_id(branch)
-            if head == 0:
-                raise LookupError(f"branch {branch!r} has no commits")
-            as_of = head
+        log = self._log
         if as_of_timestamp_ms is not None:
             as_of = self.snapshot_as_of_timestamp(as_of_timestamp_ms)
             if as_of is None:
@@ -1051,13 +1030,22 @@ class LakeSink:
                     f"no snapshot existed at timestamp {as_of_timestamp_ms}"
                 )
         if tag is not None:
-            as_of = self._log.resolve_tag(tag)
-        dirs = self._log.commit_paths(as_of)
+            as_of = log.resolve_tag(tag)
+        if as_of is not None:
+            snap = log.snapshot(as_of) if as_of else None
+        else:
+            snap = log.head(branch or "main")
+            if branch is not None and (
+                    snap is None or snap.get("branch", "main") != branch):
+                raise LookupError(f"branch {branch!r} has no commits")
+        # the live list and the table state come from the one v-file
+        dirs = [] if snap is None else log.commit_paths(snap=snap)
         if prune:
             dirs = self._prune_dirs(dirs, prune)
-        return self._load_commit_dirs(dirs, with_spec_id=with_spec_id)
+        return self._load_commit_dirs(dirs, log.table_state(snap),
+                                      with_spec_id=with_spec_id)
 
-    def _load_commit_dirs(self, dirs: list[str],
+    def _load_commit_dirs(self, dirs: list[str], state: dict,
                           with_spec_id: bool = False) -> DataFrame:
         """Load commit dirs, layout-aware. Commits written under different
         partition specs carry different ``_p_*`` directory keys; Spark's
@@ -1073,9 +1061,10 @@ class LakeSink:
         before a column add reads without it). Writes are additive-only
         (_check_write_schema), so the union never holds two types for
         one name. A marker without ``fields`` (a dir from before the
-        field existed) contributes the declared data columns of
-        ``table.json``. ``_p_*`` and ``_c`` stay out of the given schema:
-        partition discovery adds them from the directory names.
+        field existed) contributes the data columns of the read
+        snapshot's schema (``state``, from ``SnapshotLog.table_state``).
+        ``_p_*`` and ``_c`` stay out of the given schema: partition
+        discovery adds them from the directory names.
 
         ``with_spec_id=True`` materializes Iceberg's ``_spec_id`` metadata
         column (the spec each row's commit was written under) — the ONLY
@@ -1089,8 +1078,7 @@ class LakeSink:
         every later read die with UNABLE_TO_INFER_SCHEMA (r06 model-based
         find); a fileless commit contributes no rows by construction, and
         an all-empty dir list reads as the declared-schema empty frame."""
-        meta = self._log.table_meta()
-        declared = StructType.fromJson(meta["schema_json"])
+        declared = StructType.fromJson(state["schema_json"])
 
         def _marker(d: str) -> dict:
             try:
@@ -1166,34 +1154,29 @@ class LakeSink:
                 for c in markers[d].get("esc_pcols", []):
                     esc.add(c)
                     esc.add(unescape_path_name(c))
-            df = self._restore_pcols(df, spec_id, esc, meta)
+            df = self._restore_pcols(df, spec_id, esc, state)
             if with_spec_id:
                 df = df.withColumn("_spec_id", F.lit(spec_id).cast("int"))
             return df
 
-        groups = self._dirs_by_layout(markers, meta)
+        groups = self._dirs_by_layout(markers, state)
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [_load(group, key[0]) for key, group in sorted(groups.items())],
         )
 
     def _dirs_by_layout(self, markers: dict[str, dict],
-                        meta: dict) -> dict[tuple, list[str]]:
+                        state: dict) -> dict[tuple, list[str]]:
         """Group commit dirs by (spec_id, partition layout) as written at
         commit time (their parsed ``_bic_spec.json`` markers) — the
         per-manifest spec id of Iceberg. Keys are ``(spec_id, pcols...)``.
         Dirs from before the marker existed (marker ``{}``) group under
-        the table's ORIGINAL spec (id 0) — markerless dirs can only
-        predate evolution support, so their layout is whatever the table
-        was created with (``spec_history['0']`` once evolved, else the
-        current spec)."""
-        original = meta.get("spec_history", {}).get(
-            "0", meta.get("partition_spec")
-        )
-        if original is not None:
-            fallback = tuple(partition_columns(original))
-        else:
-            fallback = tuple(partition_columns(self._spec))
+        the table's ORIGINAL spec (id 0 in ``state["specs"]``) —
+        markerless dirs can only predate evolution support, so their
+        layout is whatever the table was created with."""
+        fallback = tuple(partition_columns(
+            state["specs"].get("0", state["partition_spec"])
+        ))
         groups: dict[tuple, list[str]] = {}
         for d, marker in markers.items():
             if marker:
@@ -1205,19 +1188,14 @@ class LakeSink:
         return groups
 
     def _spec_fields_for_id(self, spec_id: int,
-                            meta: dict) -> list[PartitionField]:
-        """The partition spec a commit group was written under: the
-        current spec when ids match, else the archived entry in
-        ``spec_history`` (evolve_spec archives the outgoing spec under
-        its id — Iceberg's per-manifest spec lookup)."""
-        if spec_id == int(meta.get("spec_id", 0)):
-            raw = meta.get("partition_spec", [])
-        else:
-            raw = meta.get("spec_history", {}).get(str(spec_id), [])
-        return as_fields(raw)
+                            state: dict) -> list[PartitionField]:
+        """The partition spec a commit group was written under, from the
+        read snapshot's ``specs`` map of every spec id issued so far
+        (Iceberg's per-manifest spec lookup)."""
+        return as_fields(state["specs"].get(str(spec_id), []))
 
     def _restore_pcols(self, df: DataFrame, spec_id: int,
-                       esc_cols: set, meta: dict) -> DataFrame:
+                       esc_cols: set, state: dict) -> DataFrame:
         """Make directory-decoded ``_p_*`` columns exact again (r10
         hostile-partition-values sweep):
 
@@ -1238,17 +1216,17 @@ class LakeSink:
         """
         declared = {
             f.name: f.dataType.simpleString()
-            for f in StructType.fromJson(meta["schema_json"]).fields
+            for f in StructType.fromJson(state["schema_json"]).fields
         }
         dtypes = dict(df.dtypes)
         fields = {
             f"_p_{f.field_name}": f
-            for f in self._spec_fields_for_id(spec_id, meta)
+            for f in self._spec_fields_for_id(spec_id, state)
         }
 
         def _spec_type(c: str) -> str | None:
-            """Transform-derived type for _p_ columns the declared schema
-            missed: init_table declares the ORIGINAL spec's _p_ columns,
+            """Transform-derived type for _p_ columns the schema missed:
+            init_table declares the ORIGINAL spec's _p_ columns,
             but spec EVOLUTION adds new layout columns only to the data
             dirs — without this fallback a post-evolution bucket column
             silently regressed from int to string once dir inference

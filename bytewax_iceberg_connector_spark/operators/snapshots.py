@@ -17,20 +17,28 @@ Design (Iceberg's HadoopTableOperations in miniature):
 - each snapshot is ``metadata/v<N>.json`` holding the FULL live commit
   list (real Iceberg uses manifest lists for O(1) snapshot metadata; the
   cumulative list is the honest small-scale stand-in, noted here so the
-  trade-off is explicit);
+  trade-off is explicit) AND the table state its branch has as of N:
+  ``schema_json``, ``spec_id``/``partition_spec`` and ``specs`` (every
+  spec id issued so far) — Iceberg keeps schemas and specs in the one
+  metadata file it swaps atomically, for the same reason;
 - the head is ``max(N)``; committing is "write tmp, hard-link to
   v<head+1>.json" — ``os.link`` is atomic-exclusive, so two writers
   racing produce one winner and one ``FileExistsError`` → the loser
-  recomputes its live set against the new head and retries (snapshot
-  isolation: readers holding an older N never see half a commit).
+  recomputes its live set and schema against the new head and retries
+  (snapshot isolation: readers holding an older N never see half a
+  commit). That link is the ONLY commit point: a column add, a spec
+  change and a publish land in the same file as the live list they
+  describe, so no crash can leave them apart;
+- ``metadata/table.json`` is written once, at creation: name, sort order,
+  properties, and the schema and spec a table has before its first
+  commit. It is never rewritten. v-files written before snapshots carried
+  their state read it from there (``table_state``).
 """
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
-import re
 import time
 import uuid
 
@@ -39,15 +47,61 @@ import uuid
 #: Iceberg remove_orphan_files' older_than)
 _ORPHAN_GRACE_S = 3600.0
 
-#: heal-gate flag files — the STRICT pattern matters: _atomic_write's
-#: in-flight temp files ("pending_fold.7.json.tmp.<hex>") share the
-#: prefix, and a heal that swept one would crash the raiser's os.replace
-#: mid-commit (r11 second-review find)
-_FOLD_FLAG_RE = re.compile(r"^pending_fold\.(\d+)\.json$")
+#: the table state every v-file carries for its branch
+_STATE_KEYS = ("schema_json", "spec_id", "partition_spec", "specs")
+
+#: field-JSON keys that do not change a column's type
+_NOT_TYPE = frozenset({"nullable", "containsNull", "valueContainsNull",
+                       "metadata"})
 
 
 class CommitConflict(RuntimeError):
-    """Raised when the optimistic commit loop exhausts its retries."""
+    """Raised when the optimistic commit loop exhausts its retries, or a
+    rewrite finds a dir it replaces already replaced by another commit."""
+
+
+def _type_key(t):
+    """A field-JSON type with nullability and metadata stripped: two
+    columns of one name conflict only when these differ."""
+    if isinstance(t, dict):
+        return {k: _type_key(v) for k, v in t.items() if k not in _NOT_TYPE}
+    if isinstance(t, list):
+        return [_type_key(v) for v in t]
+    return t
+
+
+def _add_fields(schema: dict, new_fields: list[dict]) -> dict:
+    """``schema`` plus the ``new_fields`` it lacks, appended in order.
+    A name it already holds with another type raises ``ValueError``:
+    evolution is additive-only, so a racing writer that committed the
+    same column first decides its type."""
+    fields = list(schema.get("fields", []))
+    have = {f["name"]: f for f in fields}
+    for f in new_fields:
+        cur = have.get(f["name"])
+        if cur is None:
+            fields.append(f)
+            have[f["name"]] = f
+        elif _type_key(cur["type"]) != _type_key(f["type"]):
+            raise ValueError(
+                f"schema evolution is additive-only: column {f['name']!r} "
+                f"was committed as {json.dumps(cur['type'])} but this "
+                f"commit writes {json.dumps(f['type'])}"
+            )
+    return {**schema, "fields": fields}
+
+
+def _heads(snaps: list[dict]) -> dict:
+    """Branch name -> head snapshot, from one ascending snapshot list
+    (detached snapshots, ``branch=None``, are keyed under None)."""
+    return {s.get("branch", "main"): s for s in snaps}
+
+
+def _base(snaps: list[dict], branch: str) -> dict | None:
+    """The snapshot a commit on ``branch`` builds on: the branch head, or
+    main's head while the branch has no commits (fork-on-first-write)."""
+    heads = _heads(snaps)
+    return heads[branch] if branch in heads else heads.get("main")
 
 
 class SnapshotLog:
@@ -57,143 +111,6 @@ class SnapshotLog:
         self.table_path = table_path
         self.meta_dir = os.path.join(table_path, "metadata")
         self.data_dir = os.path.join(table_path, "data")
-        #: heal-gate flag files live in their own subdir so the per-write
-        #: gate check lists O(#flags) entries — almost always zero — not
-        #: the O(history) v-file population (r11 second-review find)
-        self.folds_dir = os.path.join(self.meta_dir, "pending_folds")
-
-    @contextlib.contextmanager
-    def _meta_lock(self, timeout_s: float = 15.0, stale_s: float = 10.0):
-        """Advisory cross-process lock serializing table.json
-        read-modify-writes (``evolve_schema``, ``evolve_spec``, the
-        legacy flag clear). Without it two concurrent evolutions could
-        interleave their RMWs and the loser's column add was silently
-        erased — and since each writer retires its own heal-gate flag
-        after its evolve returns, the erased fold lost its gate too,
-        reopening the r08 type-change hole (r11 second-review find).
-        O_EXCL-create is the acquire; a crashed holder's lock goes stale
-        after ``stale_s`` and is stolen (the steal re-races through
-        O_EXCL, so two stealers still serialize). ``timeout_s`` >
-        ``stale_s`` deliberately: a waiter arriving just after a kill
-        outlives the staleness window and steals instead of erroring, so
-        a crashed holder costs at most ``stale_s`` of blocking, never a
-        CommitConflict storm.
-
-        Identity discipline (r12 ADVICE): every acquirer writes a
-        pid+uuid token into its lock file; release unlinks only if the
-        file still holds the releaser's own token, so a slow-but-alive
-        holder whose lock was stolen can never delete its successor's
-        lock.
-
-        Steal protocol (r12 second review — the earlier rename-AWAY
-        steal let a waiter acting on a pre-computed stale flag rename a
-        LIVE successor's lock, and while the path sat absent a third
-        O_EXCL acquirer could slip in before the no-clobber restore:
-        two holders in the critical section, the lost-update class this
-        lock exists to close). Stealers now (1) serialize on an O_EXCL
-        steal-mutex beside the lock, (2) RE-VERIFY the lock is still
-        stale under that mutex — a pre-computed flag is never acted on,
-        so a live successor's lock is never touched — and (3) REPLACE
-        the stale lock in place: write their own token to a temp name
-        and ``os.rename`` it onto the path. The path never transitions
-        through absent during a steal, so no O_EXCL acquirer can slip
-        into the window; the mutex itself goes stale after ``stale_s``
-        (a stealer's hold is ms-scale) so a stealer crash cannot wedge
-        stealing. The remaining overlap requires a holder ALIVE past
-        ``stale_s`` (1000x the ms-scale RMW) releasing in the sub-ms
-        between the mutex-held re-stat and the rename, with a third
-        acquirer landing in that same window — staleness is the
-        explicit backstop for holders that outlive it."""
-        path = os.path.join(self.meta_dir, "table.json.lock")
-        mutex = f"{path}.steal"
-        token = f"{os.getpid()}:{uuid.uuid4().hex}"
-        deadline = time.time() + timeout_s
-        while True:
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                try:
-                    os.write(fd, token.encode())
-                finally:
-                    os.close(fd)
-                break
-            except FileExistsError:
-                try:
-                    stale = (
-                        time.time() - os.path.getmtime(path) > stale_s
-                    )
-                except OSError:
-                    stale = False  # released between checks — re-race
-                stole = False
-                if stale:
-                    try:
-                        mfd = os.open(
-                            mutex, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                        )
-                    except FileExistsError:
-                        # another stealer is active; clear THEIR mutex
-                        # only if it outlived the staleness window (a
-                        # stealer crash — live steals are ms-scale)
-                        with contextlib.suppress(OSError):
-                            if (
-                                time.time() - os.path.getmtime(mutex)
-                                > stale_s
-                            ):
-                                os.unlink(mutex)
-                    except OSError:  # pragma: no cover
-                        pass  # mutex dir unwritable — fall to deadline
-                    else:
-                        os.close(mfd)
-                        try:
-                            # re-verify UNDER the mutex: the lock must
-                            # still be stale NOW (never act on the
-                            # pre-computed flag — the old TOCTOU)
-                            try:
-                                still = (
-                                    time.time() - os.path.getmtime(path)
-                                    > stale_s
-                                )
-                            except OSError:
-                                still = False  # released — re-race
-                            if still:
-                                tmp = f"{path}.claim.{uuid.uuid4().hex}"
-                                fd = os.open(
-                                    tmp,
-                                    os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-                                )
-                                try:
-                                    os.write(fd, token.encode())
-                                finally:
-                                    os.close(fd)
-                                # atomic in-place replace: the path never
-                                # goes absent, so no O_EXCL window opens
-                                os.rename(tmp, path)
-                                stole = True
-                        finally:
-                            with contextlib.suppress(OSError):
-                                os.unlink(mutex)
-                if stole:
-                    break
-                # deadline applies on EVERY loop path (r12 ADVICE: a
-                # persistent getmtime/unlink error must not spin forever)
-                if time.time() > deadline:
-                    raise CommitConflict(
-                        "timed out waiting for the table.json lock"
-                    )
-                # unconditional: a stale lock with a busy steal-mutex
-                # must not tight-spin (r12 review — the old stale branch
-                # skipped the sleep entirely)
-                time.sleep(0.005)
-        try:
-            yield
-        finally:
-            try:
-                with open(path) as f:
-                    mine = f.read() == token
-            except OSError:  # pragma: no cover
-                mine = False  # stolen/vanished — successor owns the path
-            if mine:
-                with contextlib.suppress(OSError):
-                    os.unlink(path)
 
     # -- identity ----------------------------------------------------------
 
@@ -202,7 +119,9 @@ class SnapshotLog:
 
     def init_table(self, table_meta: dict) -> None:
         """Create the table skeleton (idempotent): data/ + metadata/ and the
-        static table descriptor (schema, partition spec, sort order)."""
+        static table descriptor (name, sort order, properties, and the
+        schema and spec of the table before its first commit). This is
+        the only writer of ``table.json``."""
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.meta_dir, exist_ok=True)
         path = os.path.join(self.meta_dir, "table.json")
@@ -213,64 +132,69 @@ class SnapshotLog:
         with open(os.path.join(self.meta_dir, "table.json")) as f:
             return json.load(f)
 
-    def evolve_schema(self, new_fields_json: list[dict]) -> None:
-        """Record an ADDITIVE schema evolution in table metadata: the old
-        schema is archived under ``schema_history`` and the named fields
-        are APPENDED to ``schema_json`` — Iceberg's schema-evolution
-        metadata swap. The union is computed HERE against a fresh read of
-        the metadata (not from a caller-supplied full schema) UNDER the
-        table.json lock: two concurrent writers adding DIFFERENT columns
-        used to interleave this read-modify-write and the loser's add was
-        silently erased — which, once r11's carry-and-heal retired the
-        loser's heal-gate flag (its evolve "succeeded"), reopened the
-        r08 type-change hole with no gate left (r11 second-review find).
-        Callers invoke this AFTER the data commit succeeds, so a failed
-        write can never leave a declared column with no data. Fields
-        already present (by name) are skipped — idempotent."""
-        with self._meta_lock():
-            meta = self.table_meta()
-            schema = meta.get("schema_json") or {
-                "type": "struct", "fields": []
-            }
-            have = {f["name"] for f in schema.get("fields", [])}
-            fresh = [f for f in new_fields_json if f["name"] not in have]
-            if not fresh:
-                return
-            history = meta.setdefault("schema_history", [])
-            history.append(json.loads(json.dumps(schema)))
-            schema = dict(schema)
-            schema["fields"] = list(schema.get("fields", [])) + fresh
-            meta["schema_json"] = schema
-            self._atomic_write(
-                os.path.join(self.meta_dir, "table.json"), meta
-            )
+    def table_state(self, snap: dict | None = None) -> dict:
+        """Schema and partition spec as of ``snap`` (None: the table
+        before its first commit): ``schema_json``, ``spec_id``,
+        ``partition_spec`` and ``specs`` (spec id as a string -> spec).
+        A snapshot carries its own state, so this opens no file. A v-file
+        written before snapshots carried state takes ``table.json``'s,
+        plus the column adds that such v-files carried for main and for
+        its own branch — a read-only fold, so a column an interrupted
+        older writer never declared in ``table.json`` still binds."""
+        if snap is not None and "schema_json" in snap:
+            return {k: snap[k] for k in _STATE_KEYS}
+        meta = self.table_meta()
+        spec_id = int(meta.get("spec_id", 0))
+        spec = meta.get("partition_spec") or []
+        schema = meta.get("schema_json") or {"type": "struct", "fields": []}
+        if snap is not None:
+            names = {f["name"] for f in schema.get("fields", [])}
+            lines = ("main", snap.get("branch", "main"))
+            adds = []
+            for s in self.snapshots():
+                if s.get("branch", "main") not in lines:
+                    continue
+                for f in (s.get("staged_new_fields") or []) + (
+                        s.get("new_fields") or []):
+                    if f["name"] not in names:
+                        names.add(f["name"])
+                        adds.append(f)
+            schema = _add_fields(schema, adds)
+        return {"schema_json": schema, "spec_id": spec_id,
+                "partition_spec": spec,
+                "specs": {**meta.get("spec_history", {}), str(spec_id): spec}}
 
     # -- partition-spec evolution ------------------------------------------
 
-    def evolve_spec(self, new_spec: list[list]) -> int:
-        """Install a NEW partition spec (Iceberg partition evolution):
-        the current spec is archived under ``spec_history``, ``spec_id``
-        bumps, and only commits written AFTER this call use the new
-        layout — existing data files are never rewritten, exactly the
-        Iceberg contract (spec evolution is a metadata-only operation).
+    def evolve_spec(self, new_spec: list[list], retries: int = 3) -> int:
+        """Install a NEW partition spec (Iceberg partition evolution) as a
+        metadata-only main commit: operation ``evolve``, main's live list
+        unchanged, no batch id, the next spec id recorded in ``specs``.
+        Only commits written AFTER it use the new layout — existing data
+        files are never rewritten, exactly the Iceberg contract. A branch
+        keeps the spec it forked with until it publishes. Returns the new
+        spec id."""
+        spec = [list(f) for f in new_spec]
 
-        Returns the new spec id. Safe against concurrent data commits:
-        they create v-files and never touch table.json; concurrent
-        evolves and schema folds serialize on the table.json lock (so a
-        spec swap can no longer erase a concurrent evolve_schema's
-        column add, or vice versa).
-        """
-        with self._meta_lock():
-            meta = self.table_meta()
-            old_id = int(meta.get("spec_id", 0))
-            history = meta.setdefault("spec_history", {})
-            history[str(old_id)] = meta.get("partition_spec", [])
-            meta["partition_spec"] = [list(f) for f in new_spec]
-            meta["spec_id"] = old_id + 1
-            self._atomic_write(
-                os.path.join(self.meta_dir, "table.json"), meta
-            )
-            return old_id + 1
+        def build(version: int, snaps: list[dict]) -> dict:
+            head = _heads(snaps).get("main")
+            state = self.table_state(head)
+            new_id = max(map(int, state["specs"])) + 1
+            return {
+                "snapshot_id": version + 1,
+                "parent_id": None if head is None else head["snapshot_id"],
+                "timestamp_ms": int(time.time() * 1000),
+                "operation": "evolve",
+                "added": [],
+                "live": [] if head is None else list(head["live"]),
+                "batch_id": None,
+                "schema_json": state["schema_json"],
+                "spec_id": new_id,
+                "partition_spec": spec,
+                "specs": {**state["specs"], str(new_id): spec},
+            }
+
+        return self._create_next(build, retries, "evolve")["spec_id"]
 
     # -- snapshot access ---------------------------------------------------
 
@@ -302,21 +226,28 @@ class SnapshotLog:
                 ids.append(int(core))
         return max(ids, default=0)
 
-    def current_id(self, branch: str = "main") -> int:
-        """Head snapshot id of ``branch`` (default main); 0 = no commits.
+    def head(self, branch: str = "main") -> dict | None:
+        """The snapshot the next commit on ``branch`` builds on: the
+        branch's head, or main's head while the branch has no commits
+        (Iceberg's fork-on-first-write under ``spark.wap.branch``); None
+        for a table with no commits. Its ``live`` list and its
+        ``table_state`` describe one table version, read from one file.
 
         Branch heads are DERIVED by scanning the per-version files rather
         than kept in a pointer file: a read-modify-write ``branches.json``
         would race between writers on different branches, while the
         version-file create is already the single atomic commit point.
         Real Iceberg stores refs in the one table-metadata file it swaps
-        atomically; per-version scan is the honest equivalent here.
+        atomically; the per-version scan is the honest equivalent here.
         """
-        head = 0
-        for s in self.snapshots():
-            if s.get("branch", "main") == branch:
-                head = max(head, s["snapshot_id"])
-        return head
+        return _base(self.snapshots(), branch)
+
+    def current_id(self, branch: str = "main") -> int:
+        """Head snapshot id of ``branch`` (default main); 0 = no commits."""
+        s = self.head(branch)
+        if s is None or s.get("branch", "main") != branch:
+            return 0
+        return s["snapshot_id"]
 
     def snapshot(self, snapshot_id: int) -> dict:
         try:
@@ -335,17 +266,25 @@ class SnapshotLog:
         except LookupError:
             return None
 
+    def _maybe_snapshot(self, snapshot_id: int) -> dict | None:
+        """``snapshot`` that returns None for expired/missing ids."""
+        try:
+            return self.snapshot(snapshot_id)
+        except LookupError:
+            return None
+
+    def _scan(self) -> tuple[int, list[dict]]:
+        """(highest id ever issued, every retained snapshot ascending):
+        one pass over the v-files."""
+        top = self._max_version()
+        snaps = [self._maybe_snapshot(i) for i in range(1, top + 1)]
+        return top, [s for s in snaps if s is not None]
+
     def snapshots(self) -> list[dict]:
         """All retained snapshots, ascending — the ``<table>.snapshots``
         metadata table of the iceberg backend. Ids expired by ``expire``
         are simply absent (numbering is never rewritten)."""
-        out = []
-        for i in range(1, self._max_version() + 1):
-            try:
-                out.append(self.snapshot(i))
-            except LookupError:
-                continue
-        return out
+        return self._scan()[1]
 
     def live_commits(self, snapshot_id: int | None = None,
                      branch: str = "main") -> list[str]:
@@ -357,9 +296,14 @@ class SnapshotLog:
         return self.snapshot(sid)["live"]
 
     def commit_paths(self, snapshot_id: int | None = None,
-                     branch: str = "main") -> list[str]:
-        return [os.path.join(self.data_dir, c)
-                for c in self.live_commits(snapshot_id, branch)]
+                     branch: str = "main", *,
+                     snap: dict | None = None) -> list[str]:
+        """Absolute live commit dirs at ``snapshot_id`` (default: head of
+        ``branch``); ``snap`` hands in a snapshot the caller already
+        read, so it is not opened again."""
+        live = (snap["live"] if snap is not None
+                else self.live_commits(snapshot_id, branch))
+        return [os.path.join(self.data_dir, c) for c in live]
 
     # -- named refs (tags) -------------------------------------------------
 
@@ -437,83 +381,114 @@ class SnapshotLog:
         added: list[str],
         *,
         overwrite: bool = False,
+        replaces: list[str] | None = None,
         rollback_to: int | None = None,
         batch_id: int | None = None,
         branch: str = "main",
         new_fields: list[dict] | None = None,
+        base: dict | None = None,
         retries: int = 3,
     ) -> int:
         """Commit a snapshot; returns its id.
 
-        ``operation``: append | overwrite | rollback | publish (audit field).
-        ``overwrite=True`` replaces the live set with ``added``;
-        ``rollback_to`` restores the live set of an earlier snapshot.
+        ``operation``: append | overwrite | delete | replace | rollback
+        (audit field). The live set of each attempt is computed against
+        the head it reads:
+        - default: head live + ``added`` (appends compose);
+        - ``replaces``: head live − ``replaces`` + ``added`` — a rewrite
+          (merge, delete, partition overwrite, compaction) drops exactly
+          the dirs it read, so an append that lands meanwhile survives.
+          If a replaced dir is no longer live, another rewrite took it
+          first, and this raises ``CommitConflict`` (Iceberg's validation
+          for replace and overwrite snapshots);
+        - ``overwrite=True``: ``added`` alone (latest-wins: the contract
+          of a full-table overwrite);
+        - ``rollback_to``: the live set of that earlier snapshot.
+
         ``branch`` commits onto a named mutable ref (forked from main's
         head on its first commit) — main is just the default branch.
-        The loop re-reads the head each attempt, so a concurrent winner's
-        appends are preserved (append-over-append composes; overwrite is
-        latest-wins, the documented simplification of Iceberg's
-        serializable validation). Snapshot ids are globally unique across
-        branches (one version sequence), so two writers on different
-        branches still serialize through the same atomic v-file create.
+        Snapshot ids are globally unique across branches (one version
+        sequence), so two writers on different branches still serialize
+        through the same atomic v-file create.
 
-        ``new_fields``: the columns this commit ADDS relative to the
-        declared schema, carried ON the snapshot. Branch commits: so
-        :meth:`publish` can fold them into the declared schema when the
-        branch fast-forwards to main — without it, branch-added columns
-        stayed undeclared after publish and a later type-changing main
-        write of the same column slipped past the additive-only write
-        guard (r08 ADVICE, medium). Main commits (r11 crash-injection
-        find): so :meth:`heal_publish_folds` can re-fold them if the
-        caller crashes between this commit and its evolve_schema —
-        main commits also raise the heal-gate flag file here, retired
-        by the caller via :meth:`retire_fold_flag` after a successful
-        fold.
+        The snapshot carries its branch's table state: the head's, with
+        ``new_fields`` (column JSON) appended to the schema — so a column
+        add lands in the same ``os.link`` as the data that needs it, and
+        two concurrent adds of different columns compose through the
+        retry. A ``new_fields`` column that a racing winner committed
+        under another type raises ``ValueError``.
+
+        Each attempt reads the log in one pass. ``base`` is the head
+        snapshot the caller already read (``head(branch)``): while it is
+        still the newest v-file, the first attempt builds on it without
+        that pass.
         """
-        for _ in range(retries + 1):
-            version = self._max_version()
-            # parent = branch head; a branch's FIRST commit forks from main
-            head = self.current_id(branch)
-            base = head if (head or branch == "main") else self.current_id()
+
+        def build(version: int, snaps: list[dict]) -> dict:
+            head = _base(snaps, branch)
+            head_live = [] if head is None else head["live"]
             if rollback_to is not None:
-                live = list(self.live_commits(rollback_to))
+                live = list(self.snapshot(rollback_to)["live"])
             elif overwrite:
                 live = list(added)
+            elif replaces is not None:
+                gone = set(replaces).difference(head_live)
+                if gone:
+                    raise CommitConflict(
+                        f"{operation} replaces {sorted(gone)}, which a "
+                        "concurrent commit already replaced"
+                    )
+                drop = set(replaces)
+                live = [c for c in head_live if c not in drop] + added
             else:
-                live = self.live_commits(base) + list(added)
+                live = head_live + list(added)
+            state = self.table_state(head)
+            if new_fields:
+                state["schema_json"] = _add_fields(
+                    state["schema_json"], new_fields
+                )
             snap = {
                 "snapshot_id": version + 1,
-                "parent_id": base or None,
+                "parent_id": None if head is None else head["snapshot_id"],
                 "timestamp_ms": int(time.time() * 1000),
                 "operation": operation,
                 "added": list(added),
                 "live": live,
                 "batch_id": batch_id,
+                **state,
             }
             if branch != "main":
                 snap["branch"] = branch
-            if new_fields:
-                # ALL commits carry their column adds on the snapshot
-                # (r11 crash-injection find: main commits used to rely on
-                # the caller's post-commit evolve_schema alone — a crash
-                # between the two left the column in committed data but
-                # undeclared, reopening the r08 type-change hole on the
-                # MAIN path; branch commits already carried theirs for
-                # publish to fold). Main-carried fields are folded by
-                # heal_publish_folds; the flag file below gates that scan
-                # exactly like publish's.
-                snap["new_fields"] = list(new_fields)
-                if branch == "main":
-                    self._raise_fold_flag(version + 1, "main")
+            return snap
+
+        return self._create_next(
+            build, retries, operation, known=base
+        )["snapshot_id"]
+
+    def _create_next(self, build, retries: int, what: str,
+                     known: dict | None = None) -> dict:
+        """The optimistic commit loop: read the log, ``build(version,
+        snapshots)`` the next snapshot and create ``v<version+1>.json``;
+        on losing that race, re-read and rebuild. ``known``: a snapshot
+        the caller read — if it is still the newest v-file, nothing was
+        committed since, and the first attempt builds on it alone.
+        Returns the created snapshot."""
+        for attempt in range(retries + 1):
+            if (attempt == 0 and known is not None
+                    and self._max_version() == known["snapshot_id"]):
+                version, snaps = known["snapshot_id"], [known]
+            else:
+                version, snaps = self._scan()
+            snap = build(version, snaps)
             try:
                 self._atomic_create(
                     os.path.join(self.meta_dir, f"v{version + 1}.json"), snap
                 )
-                return version + 1
+                return snap
             except FileExistsError:
-                continue  # lost the race — recompute against the new head
+                continue  # lost the race — rebuild against the new head
         raise CommitConflict(
-            f"commit of {operation} lost the version race {retries + 1} times"
+            f"commit of {what} lost the version race {retries + 1} times"
         )
 
     # -- branches (write-audit-publish) ------------------------------------
@@ -521,13 +496,10 @@ class SnapshotLog:
     def branches(self) -> dict[str, int]:
         """Branch name -> head snapshot id, for every branch with at least
         one commit (main included when non-empty)."""
-        heads: dict[str, int] = {}
-        for s in self.snapshots():
-            b = s.get("branch", "main")
-            if b is None:  # detached (tag-pinned survivor of drop_branch)
-                continue
-            heads[b] = max(heads.get(b, 0), s["snapshot_id"])
-        return heads
+        return {b: s["snapshot_id"]
+                for b, s in _heads(self.snapshots()).items()
+                # detached (tag-pinned survivor of drop_branch)
+                if b is not None}
 
     def ancestors(self, snapshot_id: int) -> list[int]:
         """Snapshot lineage from ``snapshot_id`` back to the root (parent
@@ -544,162 +516,6 @@ class SnapshotLog:
                 break
         return chain
 
-    def branch_new_fields(self, branch: str) -> list[dict]:
-        """Columns the named branch's commits ADDED relative to the declared
-        schema at their write time — oldest commit first, deduped by name
-        (first declaration wins, matching main's evolve_schema contract).
-        Consumed by (a) the write-time schema check, so a later branch
-        commit cannot re-add a pending column with a conflicting type, and
-        (b) :meth:`publish`, which folds them into the declared schema.
-
-        ONE snapshots() directory scan: branch commits are totally
-        ordered by snapshot id (a branch has a single lineage), so
-        ascending-id iteration over branch-tagged snapshots equals the
-        ancestor walk without re-reading one v-file per ancestor (review
-        find: the walk form doubled the per-write O(history) cost)."""
-        out: list[dict] = []
-        have: set[str] = set()
-        for s in sorted(self.snapshots(), key=lambda s: s["snapshot_id"]):
-            if s.get("branch", "main") != branch:
-                continue
-            for fj in s.get("new_fields", []):
-                if fj["name"] not in have:
-                    have.add(fj["name"])
-                    out.append(fj)
-        return out
-
-    def heal_publish_folds(self) -> int:
-        """Re-apply publish-recorded column folds the declared schema is
-        missing. publish() writes its fast-forward snapshot and folds the
-        branch's staged columns (``evolve_schema``) as TWO metadata
-        writes; a crash between them left published branch-added columns
-        undeclared — re-opening the r08 type-change hole — and nothing
-        re-folded later (r09 ADVICE). Publish snapshots therefore carry
-        their fold set (``staged_new_fields``), and this heal — run
-        before every write-time schema check (sink._check_write_schema)
-        and at the top of every publish — folds any still-undeclared
-        ones back in. ``evolve_schema`` is idempotent, so repeated heals
-        are no-ops. Returns the number of fields folded.
-
-        Expiry note (corner CLOSED in r11): ``expire`` folds a doomed
-        main-line snapshot's still-undeclared fold set forward into the
-        retained fold target's ``new_fields`` — the same carry-the-
-        lineage mechanism as streaming batch ids — so even
-        crash-then-expire-with-zero-intervening-writes keeps the heal
-        chain alive.
-
-        Cost: the scan is O(retained history), so it is gated on the
-        heal-gate flags publish() raises BEFORE staging a fold and this
-        heal clears after folding — the common no-publish write path pays
-        one meta-dir listing, not a v-file sweep (r10 self-review find: a
-        streaming sink paid a full metadata parse per micro-batch for a
-        fold set that is almost always empty).
-
-        Flag protocol (r11, second revision): each raise is its OWN file
-        ``pending_fold.<target snapshot id>.json`` (atomic rename-in) and
-        the heal unlinks ONLY files whose target id its scan covered
-        (id ≤ max snapshot id seen). No read-modify-write exists anywhere
-        in the protocol, so concurrent raises and clears cannot clobber
-        each other — the first r11 design kept the flag as a table.json
-        field with a watermark, and its clear was still an RMW that could
-        erase a publish racing between the heal's re-read and its write
-        (self-review find). A file whose raiser crashed before creating
-        its v-file stays until the table's next commit takes that id
-        (ids are max+1) — one extra scan per write until then, never
-        forever, and a real fold is never lost. A legacy table.json
-        ``pending_publish_folds`` field (pre-revision crash artifact) is
-        honored and cleared under the old watermark rule."""
-        if not self.exists():
-            return 0
-        try:
-            # strict-match: _atomic_write temp files share the prefix and
-            # must never be swept (the raiser's os.replace would crash)
-            flag_files = [
-                fn for fn in os.listdir(self.folds_dir)
-                if _FOLD_FLAG_RE.match(fn)
-            ]
-        except FileNotFoundError:
-            flag_files = []
-        meta = self.table_meta()
-        legacy = meta.get("pending_publish_folds")
-        if not flag_files and not legacy:
-            return 0
-        have = {
-            f["name"]
-            for f in (meta.get("schema_json") or {}).get("fields", [])
-        }
-        pending: list[dict] = []
-        seen_max = 0
-        for s in self.snapshots():
-            seen_max = max(seen_max, int(s.get("snapshot_id") or 0))
-            if s.get("branch", "main") != "main":
-                # branch snapshots are deliberately EXCLUDED (their adds
-                # fold at publish, never before) and so are detached
-                # ones (branch=None — a dropped branch's tag-pinned
-                # survivor must not declare a column main has no data
-                # for). Publish snapshots carry no branch field, so they
-                # pass this gate.
-                continue
-            # both fold-carrying keys: ``staged_new_fields`` (a publish's
-            # fold set — the branch's staged columns) and ``new_fields``
-            # (a MAIN commit's own adds, r11 crash-injection find: a
-            # crash between commit and evolve_schema left them
-            # undeclared with nothing re-folding; ALSO the key expire()
-            # folds doomed snapshots' sets forward into)
-            carried = (s.get("staged_new_fields") or []) + (
-                s.get("new_fields") or []
-            )
-            for fj in carried:
-                if fj["name"] not in have:
-                    pending.append(fj)
-                    have.add(fj["name"])
-        if pending:
-            self.evolve_schema(pending)
-        # clear = unlink exactly the flag files this scan covered; a
-        # concurrent raise is a DIFFERENT file name and stays untouched
-        for fn in flag_files:
-            tid = int(_FOLD_FLAG_RE.match(fn).group(1))
-            if tid <= seen_max:
-                try:
-                    os.unlink(os.path.join(self.folds_dir, fn))
-                except FileNotFoundError:
-                    pass  # another heal got it first — same outcome
-        if legacy and int(legacy) <= seen_max:
-            # legacy-field clear under the table.json lock: this RMW
-            # could otherwise erase a concurrent evolve_schema's column
-            # add (r11 second-review find) — live only while a
-            # pre-revision crash artifact exists, but that upgrade
-            # window is exactly when correctness matters most
-            with self._meta_lock():
-                meta = self.table_meta()
-                if meta.pop("pending_publish_folds", None) is not None:
-                    self._atomic_write(
-                        os.path.join(self.meta_dir, "table.json"), meta
-                    )
-        return len(pending)
-
-    def _raise_fold_flag(self, target: int, source_branch: str) -> None:
-        """Raise the heal gate for the commit/publish targeting snapshot
-        ``target`` — one file per raise in ``pending_folds/`` (its own
-        subdir so the per-write gate check lists O(#flags) entries,
-        almost always zero, not the O(history) v-file population)."""
-        os.makedirs(self.folds_dir, exist_ok=True)
-        self._atomic_write(
-            os.path.join(self.folds_dir, f"pending_fold.{target}.json"),
-            {"target": target, "source_branch": source_branch},
-        )
-
-    def retire_fold_flag(self, snapshot_id: int) -> None:
-        """Remove the heal-gate flag a commit/publish raised for
-        ``snapshot_id`` — called by the owner AFTER its fold succeeded
-        (a crash before this leaves the flag for the next heal)."""
-        try:
-            os.unlink(os.path.join(
-                self.folds_dir, f"pending_fold.{snapshot_id}.json"
-            ))
-        except FileNotFoundError:
-            pass  # a heal swept it first — same outcome
-
     def publish(self, branch: str, retries: int = 3) -> int:
         """Fast-forward main to ``branch``'s head (Iceberg's
         ``fast_forward`` procedure — the publish step of write-audit-
@@ -707,112 +523,79 @@ class SnapshotLog:
         head — OR a previous publish of this same branch (Iceberg's
         fast_forward leaves main and the branch pointing at the same
         snapshot, so stage→publish→stage-more→publish is the normal
-        steady-state loop, not a conflict). If main advanced through any
-        OTHER route since the branch forked, publishing would silently
-        drop those commits, so raise instead (rebase by re-staging).
+        steady-state loop, not a conflict). Main's metadata-only
+        ``evolve`` snapshots are skipped in that check: they change no
+        data, so a branch forked before a spec change still
+        fast-forwards. If main advanced through any OTHER route since the
+        branch forked, publishing would silently drop those commits, so
+        raise instead (rebase by re-staging).
 
-        The publish snapshot records ``published_head`` (the branch head
-        it fast-forwarded — what makes re-publish recognizable) and
-        ``batch_ids`` (every streaming batch id in the published branch
-        lineage — what keeps exactly-once dedup alive after the branch
-        is dropped).
+        The publish snapshot is one v-file create, like any commit. It
+        records ``published_head`` (the branch head it fast-forwarded —
+        what makes re-publish recognizable) and ``batch_ids`` (every
+        streaming batch id in the published branch lineage — what keeps
+        exactly-once dedup alive after the branch is dropped). It carries
+        the branch head's schema, so the staged column adds are declared
+        on main from that snapshot on, and main head's partition spec and
+        ``specs``, so a spec evolved on main while the branch was staged
+        stays in force."""
 
-        Publishing also FOLDS the branch's staged column adds into the
-        declared schema (``branch_new_fields`` → ``evolve_schema``): the
-        staged columns were deliberately kept out of main's declared shape
-        while unpublished (a dropped branch must not leave a declared
-        column with no data), but once its commits become main's live set
-        the declaration must follow — otherwise a later main write of the
-        same column with a DIFFERENT type passes the additive-only check
-        and poisons cross-commit reads (r08 ADVICE, medium)."""
-        b_head = self.current_id(branch)
-        if b_head == 0:
-            raise LookupError(f"branch {branch!r} has no commits")
-        # fold-before-this-publish healing: a PRIOR publish that crashed
-        # between its snapshot write and its schema fold left published
-        # columns undeclared (r09 ADVICE) — repair before stacking more
-        self.heal_publish_folds()
-        staged = self.branch_new_fields(branch)
-        b_chain = self.ancestors(b_head)
-        batch_ids = sorted({
-            s["batch_id"]
-            for sid in b_chain
-            for s in [self._maybe_snapshot(sid)]
-            if s is not None
-            and s.get("branch", "main") == branch
-            and s.get("batch_id") is not None
-        })
-        for _ in range(retries + 1):
-            m_head = self.current_id()
-            if m_head and m_head not in b_chain:
-                m_snap = self._maybe_snapshot(m_head)
-                republish_of_self = (
-                    m_snap is not None
-                    and m_snap.get("operation") == "publish"
-                    and m_snap.get("source_branch") == branch
-                    and m_snap.get("published_head") in b_chain
-                )
-                if not republish_of_self:
+        def build(version: int, snaps: list[dict]) -> dict:
+            by_id = {s["snapshot_id"]: s for s in snaps}
+            heads = _heads(snaps)
+            b = heads.get(branch)
+            if b is None:
+                raise LookupError(f"branch {branch!r} has no commits")
+            b_chain = []
+            sid = b["snapshot_id"]
+            while sid in by_id:  # an expired parent ends the lineage
+                b_chain.append(sid)
+                sid = by_id[sid].get("parent_id")
+            m = heads.get("main")
+            mid = 0 if m is None else m["snapshot_id"]
+            while (mid and mid not in b_chain
+                   and by_id.get(mid, {}).get("operation") == "evolve"):
+                mid = by_id[mid].get("parent_id") or 0
+            if mid and mid not in b_chain:
+                ms = by_id.get(mid, {})
+                if not (ms.get("operation") == "publish"
+                        and ms.get("source_branch") == branch
+                        and ms.get("published_head") in b_chain):
                     raise CommitConflict(
-                        f"cannot fast-forward: main advanced to {m_head} after "
-                        f"branch {branch!r} forked (not an ancestor of {b_head})"
+                        f"cannot fast-forward: main advanced to {mid} after "
+                        f"branch {branch!r} forked (not an ancestor of "
+                        f"{b['snapshot_id']})"
                     )
-            snap = {
-                "snapshot_id": self._max_version() + 1,
-                "parent_id": m_head or None,
+            batch_ids = sorted({
+                by_id[i]["batch_id"] for i in b_chain
+                if by_id[i].get("branch", "main") == branch
+                and by_id[i].get("batch_id") is not None
+            })
+            return {
+                "snapshot_id": version + 1,
+                "parent_id": None if m is None else m["snapshot_id"],
                 "timestamp_ms": int(time.time() * 1000),
                 "operation": "publish",
                 "added": [],
-                "live": list(self.live_commits(b_head)),
+                "live": list(b["live"]),
                 "batch_id": None,
                 "batch_ids": batch_ids,
                 "source_branch": branch,
-                "published_head": b_head,
+                "published_head": b["snapshot_id"],
+                **self.table_state(m),
+                "schema_json": self.table_state(b)["schema_json"],
             }
-            if staged:
-                # the publish snapshot CARRIES its fold set: if the
-                # evolve_schema below never runs (crash between the two
-                # non-atomic metadata writes — r09 ADVICE), the next
-                # heal_publish_folds() re-derives it from the snapshot
-                # instead of leaving published columns undeclared forever
-                snap["staged_new_fields"] = list(staged)
-                # raise the heal gate FIRST: flag-then-snapshot-then-fold
-                # means a crash at any point leaves either nothing to do
-                # or a raised flag the next heal acts on. The flag is its
-                # OWN file named by THIS attempt's target snapshot id —
-                # the heal unlinks a flag only after its scan covered
-                # that id, and since no read-modify-write exists in the
-                # protocol a racing heal/raise pair cannot clobber each
-                # other (r11 self-review: the previous table.json-field
-                # watermark still lost a concurrent raise to the clear's
-                # RMW). One file per retry attempt; superseded attempts'
-                # files are swept by the next heal once any commit takes
-                # their target id.
-                self._raise_fold_flag(snap["snapshot_id"], branch)
-            try:
-                self._atomic_create(
-                    os.path.join(self.meta_dir, f"v{snap['snapshot_id']}.json"),
-                    snap,
-                )
-                if staged:
-                    # fold AFTER the publish snapshot lands: the staged
-                    # data is now main-visible, so declaring its columns
-                    # can no longer strand a declared column without data
-                    self.evolve_schema(staged)
-                    # fold done: retire this attempt's heal-gate flag
-                    # (crash before this line → the next heal sweeps it)
-                    self.retire_fold_flag(snap["snapshot_id"])
-                return snap["snapshot_id"]
-            except FileExistsError:
-                continue
-        raise CommitConflict(f"publish of {branch!r} lost the version race")
+
+        return self._create_next(build, retries, "publish")["snapshot_id"]
 
     def drop_branch(self, branch: str) -> list[int]:
         """Delete a branch: unlink its snapshot files and remove commit
         dirs no remaining snapshot references (the audit-failed arm of
         write-audit-publish — staged data vanishes, main is untouched).
         Published data survives because the publish snapshot on main
-        carries the live list itself.
+        carries the live list itself. The branch's staged column adds
+        live only on its own v-files, so they go with it: dropping a
+        branch leaves no declared column behind.
 
         Tags pin snapshots (the same rule ``expire`` honors): a TAGGED
         branch snapshot is not deleted — it is re-homed as a detached
@@ -894,8 +677,6 @@ class SnapshotLog:
             removed.append(d)
         return removed
 
-    # -- maintenance -------------------------------------------------------
-
     def expire(self, keep_last: int) -> tuple[list[int], list[str]]:
         """Drop all but the newest ``keep_last`` snapshots and delete every
         commit directory no retained snapshot references (Iceberg's
@@ -914,6 +695,13 @@ class SnapshotLog:
           ``publish`` still finds its fork point);
         - every TAGGED snapshot (a release tag keeps its data alive
           until the tag is dropped), including detached ones.
+
+        Every retained v-file carries its own schema and spec, so expiry
+        never moves table state; only the batch-id lineage is carried
+        forward (below). On a table whose older v-files predate that,
+        each retained one of them is first rewritten with the state it
+        reads as (``table_state``), since that state folds in column adds
+        carried by the v-files about to go.
 
         Concurrency contract: retention is a SINGLE-MAINTAINER operation
         (the same assumption Iceberg's maintenance procedures make).
@@ -939,6 +727,17 @@ class SnapshotLog:
             if snap is not None:
                 retained_live.update(snap["live"])
         doomed = [s for s in snaps if s["snapshot_id"] not in retained_ids]
+        # an older v-file's state is table.json plus the column adds its
+        # fellow older v-files carry: fix it in before any carrier goes
+        if any(s.get("new_fields") or s.get("staged_new_fields")
+               for s in doomed):
+            for s in snaps:
+                sid = s["snapshot_id"]
+                if sid in retained_ids and "schema_json" not in s:
+                    self._atomic_write(
+                        os.path.join(self.meta_dir, f"v{sid}.json"),
+                        {**s, **self.table_state(s)},
+                    )
         # Exactly-once across restart + retention: a replayed micro-batch
         # is detected by its batch id recorded in some retained v-file. If
         # expiry deletes the snapshot that carried the id while the
@@ -957,32 +756,7 @@ class SnapshotLog:
             if s.get("batch_id") is not None:
                 expired_batch_ids.add(s["batch_id"])
             expired_batch_ids.update(s.get("batch_ids", []))
-        # Schema folds ride the same forward-carry (r11: closes the
-        # documented crash-then-expire corner): a doomed MAIN-LINE
-        # snapshot carrying a fold set the declared schema is still
-        # missing (torn publish or torn main evolve whose heal never ran)
-        # would take the fold record with it — a later conflicting-type
-        # write would then pass the additive-only guard. Merge those
-        # still-undeclared sets into the fold target's ``new_fields``;
-        # heal_publish_folds reads that key on main-line snapshots, so
-        # the heal chain survives expiry exactly like the batch-id chain.
-        declared_names = {
-            f["name"]
-            for f in (self.table_meta().get("schema_json") or {}).get(
-                "fields", []
-            )
-        }
-        doomed_folds: list[dict] = []
-        for s in doomed:
-            if s.get("branch", "main") != "main":
-                continue  # dropped-branch leftovers never fold
-            for fj in (s.get("staged_new_fields") or []) + (
-                s.get("new_fields") or []
-            ):
-                if fj["name"] not in declared_names:
-                    declared_names.add(fj["name"])
-                    doomed_folds.append(fj)
-        if expired_batch_ids or doomed_folds:
+        if expired_batch_ids:
             # fold target: oldest retained MAIN snapshot, else ANY oldest
             # retained snapshot (a branch-only history — every main
             # snapshot expired, survivors retained via refs/branches —
@@ -1009,22 +783,6 @@ class SnapshotLog:
             merged = set(tgt.get("batch_ids", []))
             merged |= expired_batch_ids
             tgt["batch_ids"] = sorted(merged)
-            if doomed_folds and tgt.get("branch", "main") == "main":
-                # fold_ids prefers main snapshots, so a non-main target
-                # only happens in a branch-only history where every main
-                # snapshot (and its data) is leaving — the undeclared-
-                # column hazard leaves with it, dropping the fold is
-                # correct there
-                have_t = {
-                    f["name"]
-                    for f in (tgt.get("new_fields") or [])
-                    + (tgt.get("staged_new_fields") or [])
-                }
-                add = [f for f in doomed_folds if f["name"] not in have_t]
-                if add:
-                    tgt["new_fields"] = list(
-                        tgt.get("new_fields") or []
-                    ) + add
             self._atomic_write(
                 os.path.join(self.meta_dir, f"v{tgt_id}.json"),
                 tgt,

@@ -167,8 +167,9 @@ def test_iceberg_wap_branch_routing_and_publish(iceberg_sink, batch, spark):
     """WAP on the real backend: branch append requires spark.wap.branch
     (two-directional _assert_wap_routing), fast_forward publishes, and a
     post-publish type change of a branch-added column is rejected —
-    the parquet backend proves the same contract via the snapshot-carried
-    new_fields fold (test_sink.py::test_publish_folds_branch_added_columns)."""
+    the parquet backend proves the same contract by committing the branch
+    schema with the publish snapshot
+    (test_sink.py::test_publish_folds_branch_added_columns)."""
     from pyspark.sql import functions as F
 
     iceberg_sink.append(batch)

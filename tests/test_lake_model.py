@@ -18,19 +18,7 @@ from pyspark.sql import Row
 
 from bytewax_iceberg_connector_spark.config import IcebergSinkConfig
 from bytewax_iceberg_connector_spark.operators.sink import LakeSink
-from bytewax_iceberg_connector_spark.operators.snapshots import (
-    CommitConflict,
-    SnapshotLog,
-)
-
-
-class _TornDead(BaseException):
-    """Simulated mid-fold process death (BaseException so nothing in
-    the engine can swallow it and carry on half-dead)."""
-
-
-def _crash_evolve(self, fields):
-    raise _TornDead()
+from bytewax_iceberg_connector_spark.operators.snapshots import CommitConflict
 
 # op grammar: each op consumes the next fresh id block where it needs rows
 _OPS = st.lists(
@@ -67,14 +55,11 @@ _OPS = st.lists(
         # snapshots must survive expire AND drop_branch (re-homed)
         st.tuples(st.just("tag_set"), st.integers(0, 100)),
         st.tuples(st.just("tag_drop"), st.integers(0, 0)),
-        # torn-process injection (family #18, r11): the op's schema fold
-        # dies mid-flight (evolve_schema crashes after the data commit /
-        # publish v-file landed). The MODEL is unchanged — the committed
-        # data is main-visible either way — and every later op's
-        # write-time heal plus the final time-travel/CDC sweeps prove no
-        # silent divergence survives the tear.
-        st.tuples(st.just("torn_evolve"), st.integers(1, 2)),
-        st.tuples(st.just("torn_publish"), st.integers(0, 0)),
+        # partition-spec evolution: a metadata-only main snapshot (live
+        # set unchanged) that a staged branch still publishes across.
+        # It re-installs the day spec under a new spec id, so the
+        # overwrite_partitions model below stays exact
+        st.tuples(st.just("evolve_spec"), st.integers(0, 0)),
     ),
     min_size=1,
     max_size=5,
@@ -158,7 +143,6 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
     main_commit_ops = {
         "append", "overwrite", "delete_below", "rollback", "merge",
         "append_evolved", "overwrite_partitions", "compact",
-        "torn_evolve",
     }
 
     for op, arg in ops:
@@ -278,43 +262,9 @@ def test_lake_matches_in_memory_model(spark, tmp_path_factory, ops):
             else:
                 with pytest.raises(LookupError):
                     sink.drop_tag("t_missing")
-        elif op == "torn_evolve":
-            # drain any pending folds FIRST so the crash window below is
-            # exactly this op's own fold, not a prior tear's heal
-            sink._log.heal_publish_folds()
-            ids = fresh(arg)
-            orig_ev = SnapshotLog.evolve_schema
-            SnapshotLog.evolve_schema = _crash_evolve
-            try:
-                try:
-                    sink.append(_rows(spark, ids, evolved=True))
-                except _TornDead:
-                    pass  # data commit landed; the fold died — heal owns it
-            finally:
-                SnapshotLog.evolve_schema = orig_ev
-            # either way the rows are main-visible (evolve runs after the
-            # commit; when q is already declared no fold even runs)
-            live |= set(ids)
-        elif op == "torn_publish":
-            sink._log.heal_publish_folds()
-            orig_ev = SnapshotLog.evolve_schema
-            SnapshotLog.evolve_schema = _crash_evolve
-            try:
-                if branch_live is None:
-                    with pytest.raises(LookupError):
-                        sink.publish("wap")
-                elif publish_ok:
-                    try:
-                        sink.publish("wap")
-                    except _TornDead:
-                        pass  # fast-forward v-file landed; fold torn
-                    live = set(branch_live)
-                    published = True
-                else:
-                    with pytest.raises(CommitConflict):
-                        sink.publish("wap")
-            finally:
-                SnapshotLog.evolve_schema = orig_ev
+        elif op == "evolve_spec":
+            sink.evolve_partition_spec([("ts", "day")])
+            committed("evolve")
         elif op == "expire":
             # reclaims unreferenced data; live set and the retained
             # trailing window of snapshots must be untouched. NOTE: while

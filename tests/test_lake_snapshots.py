@@ -50,6 +50,12 @@ def _sink(spark, tmp_path, **kw):
     return LakeSink(spark, cfg)
 
 
+def _declared(log, branch="main"):
+    """Column name -> type JSON of the schema ``branch``'s head holds."""
+    state = log.table_state(log.head(branch))
+    return {f["name"]: f["type"] for f in state["schema_json"]["fields"]}
+
+
 def test_time_travel_reads_pinned_snapshot(spark, tmp_path, batches):
     b1, b2 = batches
     sink = _sink(spark, tmp_path)
@@ -377,25 +383,37 @@ def test_split_materialization_prunes_per_split(spark, tmp_path, sf_dir):
 
 
 def test_concurrent_appends_all_land(spark, tmp_path, batches):
-    """4 writers committing simultaneously: the version-file race resolves
-    by retry, no append is lost and no snapshot id is skipped — the
-    optimistic-commit property the reference's retry loop aims for
-    (connector.py:242-257), proven under real thread concurrency."""
+    """4 writers committing simultaneously while a 5th thread compacts:
+    the version-file race resolves by retry, no append is lost — the
+    compaction replaces only the dirs it read — and no snapshot id is
+    skipped: the optimistic-commit property the reference's retry loop
+    aims for (connector.py:242-257), proven under real thread
+    concurrency."""
     from concurrent.futures import ThreadPoolExecutor
 
     b1, _ = batches
     sink = _sink(spark, tmp_path)
     sink.ensure_table(b1)
-    parts = [b1.where(F.col("event_id") % 4 == i) for i in range(4)]
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        list(ex.map(lambda df: sink.append(df), parts))
     log = sink._log
-    assert log.current_id() == 4
-    assert len(log.live_commits()) == 4
-    assert sink.read().count() == 10
+    parts = [b1.where(F.col("event_id") % 4 == i) for i in range(4)]
+
+    def compact_after_first_append():
+        deadline = time.monotonic() + 60
+        while log.current_id() == 0 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        sink.compact()
+
+    with ThreadPoolExecutor(max_workers=5) as ex:
+        futures = [ex.submit(sink.append, df) for df in parts]
+        futures.append(ex.submit(compact_after_first_append))
+        for f in futures:
+            f.result()
+    ops = [s["operation"] for s in log.snapshots()]
+    assert sorted(ops) == ["append"] * 4 + ["replace"]
+    assert log.current_id() == 5
     assert sorted(r.event_id for r in sink.read().collect()) == list(range(10))
     # every intermediate snapshot is a consistent prefix-union of commits
-    sizes = [sink.read(as_of=i).count() for i in range(1, 5)]
+    sizes = [sink.read(as_of=i).count() for i in range(1, 6)]
     assert sizes == sorted(sizes) and sizes[-1] == 10
 
 
@@ -1301,7 +1319,8 @@ def test_append_racing_a_spec_evolution_keeps_its_own_spec_id(
 
     monkeypatch.setattr(SnapshotLog, "new_commit_dir", evolve_then_reserve)
     sink.append(row)
-    assert sink._log.table_meta()["spec_id"] == 1  # the evolve landed
+    # the evolve landed
+    assert sink._log.table_state(sink._log.head())["spec_id"] == 1
     (commit,) = sink._log.commit_paths()
     with open(os.path.join(commit, "_bic_spec.json")) as f:
         marker = json.load(f)
@@ -1420,210 +1439,6 @@ def test_current_snapshot_id_tracks_head(spark, tmp_path, batches):
     # branch heads are tracked independently
     sink.append(b2.limit(0), branch="audit")
     assert sink.current_snapshot_id("audit") != s2
-
-
-def test_torn_publish_fold_self_heals(spark, tmp_path, batches):
-    """A publish that crashes BETWEEN its fast-forward snapshot and its
-    schema fold must not reopen the r08 type-change hole (r09 ADVICE):
-    the publish snapshot carries its fold set, and the next write-time
-    schema check heals the declaration before validating — so a
-    type-changing write of the published-but-undeclared column is still
-    rejected, and heal_publish_folds() reports the repair."""
-    b1, _ = batches
-    sink = _sink(spark, tmp_path)
-    sink.append(b1)
-
-    # stage a branch commit that ADDS column q (double)
-    sink.append(
-        spark.createDataFrame(
-            [Row(event_id=100, ts=dt.datetime(2024, 1, 2, 10),
-                 v=1.0, q=2.5)]
-        ),
-        branch="audit",
-    )
-
-    # publish, but simulate the crash: the process DIES at the fold step
-    # (a raising stub, not a no-op — publish retires its heal-gate flag
-    # inline after a successful fold, so a no-op stub would wrongly run
-    # that cleanup and gate the heal off)
-    class _Died(BaseException):
-        pass
-
-    def _crash(self, fields):
-        raise _Died()
-
-    orig = SnapshotLog.evolve_schema
-    SnapshotLog.evolve_schema = _crash
-    try:
-        with pytest.raises(_Died):
-            sink.publish("audit")
-    finally:
-        SnapshotLog.evolve_schema = orig
-
-    # torn state: q is main-visible data but NOT in the declared schema
-    assert "q" in sink.read().columns
-    declared = {f["name"] for f in
-                sink._log.table_meta()["schema_json"]["fields"]}
-    assert "q" not in declared
-
-    # the hole the heal closes: a LONG write of q must still be rejected
-    with pytest.raises(ValueError, match="additive-only"):
-        sink.append(spark.createDataFrame(
-            [Row(event_id=101, ts=dt.datetime(2024, 1, 3, 10),
-                 v=2.0, q=7)]))  # q: long vs published double
-
-    # and the heal itself declared the column (idempotent thereafter)
-    declared = {f["name"] for f in
-                sink._log.table_meta()["schema_json"]["fields"]}
-    assert "q" in declared
-    assert sink._log.heal_publish_folds() == 0
-
-
-def test_torn_main_evolve_self_heals(spark, tmp_path, batches):
-    """r11 crash-injection find (family #18's first real hole): a MAIN
-    commit that ADDS a column writes the v-file and THEN declares the
-    column (evolve_schema) — a crash between the two left the column in
-    committed data but undeclared, and unlike the publish path nothing
-    re-folded it: a later type-changing write of that column passed the
-    additive-only guard and poisoned cross-commit reads (repro'd live:
-    'q' stored double, conflicting long write ACCEPTED). Main commits
-    now carry their new_fields on the snapshot + raise the heal-gate
-    flag, exactly like publish — the next write-time heal re-folds."""
-    b1, _ = batches
-    sink = _sink(spark, tmp_path)
-    sink.append(b1)
-    log = sink._log
-
-    class _Died(BaseException):
-        pass
-
-    def _crash(self, fields):
-        raise _Died()
-
-    orig = SnapshotLog.evolve_schema
-    SnapshotLog.evolve_schema = _crash
-    try:
-        with pytest.raises(_Died):
-            sink.append(spark.createDataFrame(
-                [Row(event_id=100, ts=dt.datetime(2024, 1, 2, 10),
-                     v=1.0, q=2.5)]))
-    finally:
-        SnapshotLog.evolve_schema = orig
-
-    # torn state: q is committed main data but NOT declared; gate raised
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert "q" not in declared
-    assert _pending_flags(log)
-
-    # the hole: a LONG write of q must be rejected (heal runs pre-check)
-    with pytest.raises(ValueError, match="additive-only"):
-        sink.append(spark.createDataFrame(
-            [Row(event_id=101, ts=dt.datetime(2024, 1, 3, 10),
-                 v=2.0, q=7)]))
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert "q" in declared
-    assert _pending_flags(log) == []
-
-    # clean evolved append retires its own flag inline, no heal debt
-    sink.append(spark.createDataFrame(
-        [Row(event_id=102, ts=dt.datetime(2024, 1, 4, 10),
-             v=3.0, q=4.5, r="x")]))
-    assert _pending_flags(log) == []
-    back = sink.read()
-    assert back.count() == 12 and {"q", "r"} <= set(back.columns)
-
-
-def _pending_flags(log):
-    try:
-        return sorted(
-            fn for fn in os.listdir(log.folds_dir)
-            if fn.startswith("pending_fold.")
-        )
-    except FileNotFoundError:
-        return []
-
-
-def test_heal_clear_cannot_lose_concurrent_publish_fold(spark, tmp_path,
-                                                        batches):
-    """r11 ADVICE (low): the heal's flag clear raced a concurrent
-    publish — publish raises the heal gate, a heal scans (publish v-file
-    not yet written) and clears the gate afterward; if the publisher
-    then crashes before its fold, nothing ever heals it. The gate is now
-    one FILE per raise, named by the raiser's target snapshot id; the
-    heal unlinks only files whose id its scan covered, and — second r11
-    revision, self-review find — there is no read-modify-write anywhere
-    in the protocol, so a racing raise can never be clobbered by a
-    clear (the first revision's table.json watermark field still could
-    be)."""
-    import os as _os
-
-    b1, _ = batches
-    sink = _sink(spark, tmp_path)
-    sink.append(b1)
-    log = sink._log
-
-    # (1) flag raised for a snapshot that hasn't landed (the racing-heal
-    # window) PLUS one whose target a commit already covered: the heal
-    # must fold nothing, sweep only the covered file, and keep the
-    # uncovered one — a concurrent raiser's file is untouchable by name
-    covered, uncovered = log._max_version(), log._max_version() + 1
-    for t in (covered, uncovered):
-        log._raise_fold_flag(t, "main")
-    assert log.heal_publish_folds() == 0
-    assert _pending_flags(log) == [f"pending_fold.{uncovered}.json"]
-
-    # (2) the publisher's v-file now lands, carrying its fold set, and
-    # the publisher crashes pre-fold (simulated: fold step disabled).
-    # The next heal both folds the staged column and sweeps every flag
-    # (the crash attempt's and the stale one from part 1).
-    sink.append(
-        spark.createDataFrame(
-            [Row(event_id=100, ts=dt.datetime(2024, 1, 2, 10),
-                 v=1.0, q=2.5)]
-        ),
-        branch="audit",
-    )
-    class _Died(BaseException):
-        pass
-
-    def _crash(self, fields):
-        raise _Died()
-
-    orig = SnapshotLog.evolve_schema
-    SnapshotLog.evolve_schema = _crash
-    try:
-        with pytest.raises(_Died):
-            sink.publish("audit")
-    finally:
-        SnapshotLog.evolve_schema = orig
-    assert _pending_flags(log)
-    assert log.heal_publish_folds() == 1
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert "q" in declared
-    assert _pending_flags(log) == []
-
-    # (3) a clean publish retires its own flag inline — no heal needed
-    sink.append(
-        spark.createDataFrame(
-            [Row(event_id=101, ts=dt.datetime(2024, 1, 3, 10),
-                 v=2.0, q=3.5, r="x")]
-        ),
-        branch="audit2",
-    )
-    sink.publish("audit2")
-    assert _pending_flags(log) == []
-
-    # (4) legacy table.json field (pre-revision crash artifact) whose
-    # target a commit covered: one heal clears it — the gate can never
-    # stick forever on an active table
-    meta = log.table_meta()
-    meta["pending_publish_folds"] = log._max_version()
-    log._atomic_write(_os.path.join(log.meta_dir, "table.json"), meta)
-    assert log.heal_publish_folds() == 0
-    assert log.table_meta().get("pending_publish_folds") is None
 
 
 @pytest.mark.deep
@@ -1807,8 +1622,7 @@ def test_wide_schema_evolution_fifty_commits_scales(spark, tmp_path):
     assert len(back.inputFiles()) >= n_commits
 
     # the declared schema evolved additively through all 50 commits
-    declared = {f["name"] for f in
-                sink._log.table_meta()["schema_json"]["fields"]}
+    declared = set(_declared(sink._log))
     assert added <= declared
 
     # incremental scan across 49 evolution boundaries
@@ -2070,9 +1884,10 @@ def test_review_findings_partition_hardening(spark, tmp_path):
 
 # -- hostile family #18: torn-process crash injection (r10 VERDICT item 5)
 #
-# Every multi-step metadata operation (publish's flag→v-file→fold,
-# expire's fold→tombstone→rmtree, drop_branch's rehome→tombstone→rmtree)
-# is swept with a simulated process kill between EVERY pair of steps: run
+# Every metadata operation (a write's dir reservation→v-file, publish's
+# and evolve's single v-file, expire's fold→tombstone→rmtree,
+# drop_branch's rehome→tombstone→rmtree) is swept with a simulated
+# process kill before EVERY one of its steps: run
 # the op on a fresh copy of a pristine table with a step budget, let the
 # injected kill fire, REOPEN the table cold, and assert either a
 # consistent model state (pre-op, post-op, or a documented harmless
@@ -2087,8 +1902,9 @@ class _InjectedCrash(BaseException):
 @contextlib.contextmanager
 def _crash_after_steps(log, limit):
     """Patch the SnapshotLog instance's torn-able step primitives —
-    ``_atomic_write`` (flag/fold/rehome), ``_atomic_create`` (v-file
-    commit), ``_unlink_snapshot`` (tombstone rename) — plus
+    ``new_commit_dir`` (a write reserving its data dir), ``_atomic_write``
+    (batch-id fold/rehome), ``_atomic_create`` (v-file commit),
+    ``_unlink_snapshot`` (tombstone rename) — plus
     ``shutil.rmtree`` (data-dir removal) so that after ``limit``
     completed steps the next one raises :class:`_InjectedCrash`.
     ``limit=None`` counts steps without crashing. Yields the counter
@@ -2108,6 +1924,7 @@ def _crash_after_steps(log, limit):
         return inner
 
     orig_rm = _sh.rmtree
+    log.new_commit_dir = wrap(SnapshotLog.new_commit_dir.__get__(log))
     log._atomic_write = wrap(SnapshotLog._atomic_write.__get__(log))
     log._atomic_create = wrap(SnapshotLog._atomic_create.__get__(log))
     log._unlink_snapshot = wrap(SnapshotLog._unlink_snapshot.__get__(log))
@@ -2116,7 +1933,8 @@ def _crash_after_steps(log, limit):
         yield state
     finally:
         _sh.rmtree = orig_rm
-        for n in ("_atomic_write", "_atomic_create", "_unlink_snapshot"):
+        for n in ("new_commit_dir", "_atomic_write", "_atomic_create",
+                  "_unlink_snapshot"):
             log.__dict__.pop(n, None)
 
 
@@ -2133,7 +1951,7 @@ def _sweep(pristine_table, op, tmp_path, tag):
     with _crash_after_steps(counter_log, None) as st:
         op(counter_log)
     total = st["steps"]
-    assert total >= 2, f"{tag}: op is not multi-step ({total})"
+    assert total >= 1, f"{tag}: op makes no metadata step"
     for k in range(total + 1):
         dst = str(tmp_path / f"{tag}_{k}")
         _sh.copytree(pristine_table, dst)
@@ -2148,11 +1966,11 @@ def _sweep(pristine_table, op, tmp_path, tag):
 
 
 def test_crash_sweep_torn_publish(spark, tmp_path, batches):
-    """Kill publish between ANY two of its metadata steps (heal-gate
-    flag write → fast-forward v-file → schema fold): reopened main must
-    read as exactly pre-publish or post-publish live state, streaming
-    batch ids are never lost, and whenever the v-file landed, a retried
-    publish + heal converges to the fully-published, fully-declared
+    """Kill publish before its one metadata step (the fast-forward
+    v-file): reopened main must read as exactly pre-publish or
+    post-publish live state, the staged column is declared exactly when
+    the published data is, streaming batch ids are never lost, and a
+    retried publish converges to the fully-published, fully-declared
     state."""
     b1, _ = batches
     pristine = tmp_path / "pristine"
@@ -2176,17 +1994,13 @@ def test_crash_sweep_torn_publish(spark, tmp_path, batches):
         log = SnapshotLog(dst)
         live = frozenset(log.live_commits())
         assert live in (pre_live, post_live), (k, live)
+        assert ("q" in _declared(log)) == (live == post_live), k
         assert 11 in log.committed_batch_ids(), k
         # retry from the reopened state: publish is re-enterable
-        # (republish-of-self) and the heal folds any torn declaration
+        # (republish-of-self)
         log.publish("audit")
-        log.heal_publish_folds()
         assert frozenset(log.live_commits()) == post_live, k
-        declared = {f["name"] for f in
-                    log.table_meta()["schema_json"]["fields"]}
-        assert "q" in declared, k
-        assert not log.table_meta().get("pending_publish_folds"), k
-        assert _pending_flags(log) == [], k
+        assert "q" in _declared(log), k
         converged.append(dst)
     # the converged state is actually readable (one Spark read, last copy)
     reopened = LakeSink(spark, IcebergSinkConfig(
@@ -2306,10 +2120,8 @@ def test_crash_sweep_torn_publish_then_audit_fail_drop(spark, tmp_path,
     fast-forward v-file never landed, main must read exactly pre-publish
     and the staged rows vanish with the branch; if it landed, the
     published rows are main's and must survive the drop (the publish
-    snapshot carries its own live list). Either way the heal-gate flag
-    must not stick forever: the next main commit covers the torn
-    publish's target id and one heal clears it (the r11 watermark's
-    liveness guarantee)."""
+    snapshot carries its own live list), and so must its declared
+    column. Either way the next main write lands on top."""
     b1, _ = batches
     pristine = tmp_path / "pristine"
     sink = _sink(spark, pristine)
@@ -2338,77 +2150,17 @@ def test_crash_sweep_torn_publish_then_audit_fail_drop(spark, tmp_path,
         live = frozenset(log.live_commits())
         assert live == (post_live if published else pre_live), k
         assert 11 in log.committed_batch_ids(), k
+        assert ("q" in _declared(log)) == published, k
         for d in live:
             assert os.path.isdir(os.path.join(log.data_dir, d)), (k, d)
-        # flag liveness: one more main commit + heal clears any torn
-        # heal-gate flag (its watermark id is now covered)
         reopened = LakeSink(spark, IcebergSinkConfig(
             table_name=os.path.basename(dst), warehouse_path=str(tmp_path),
             num_partitions=2, partition_spec=[("ts", "day")],
             location=dst,
         ))
         reopened.append(b1.limit(1))
-        log.heal_publish_folds()
-        assert not log.table_meta().get("pending_publish_folds"), k
-        assert _pending_flags(log) == [], k
         want = 10 + (1 if published else 0) + 1
         assert reopened.read().count() == want, k
-
-
-def test_torn_fold_survives_expiry_of_its_carrier(spark, tmp_path, batches):
-    """r11: the heal docstring used to document a crash-then-expire
-    corner — if the torn snapshot carrying an undeclared fold set was
-    itself expired before any heal ran, the fold record died with it.
-    expire() now folds doomed main-line snapshots' undeclared sets
-    forward into the retained fold target (the batch-id carry mechanism),
-    so the additive-only guard still fires afterward."""
-    b1, _ = batches
-    sink = _sink(spark, tmp_path)
-    sink.append(b1)
-    log = sink._log
-
-    class _Died(BaseException):
-        pass
-
-    def _crash(self, fields):
-        raise _Died()
-
-    orig = SnapshotLog.evolve_schema
-    SnapshotLog.evolve_schema = _crash
-    try:
-        with pytest.raises(_Died):
-            sink.append(spark.createDataFrame(
-                [Row(event_id=100, ts=dt.datetime(2024, 1, 2, 10),
-                     v=1.0, q=2.5)]))
-    finally:
-        SnapshotLog.evolve_schema = orig
-
-    # bury the torn carrier under plain commits, then expire it away —
-    # WITHOUT any intervening schema check (append of existing columns
-    # does trigger the heal; monkeypatch it off to model the
-    # zero-intervening-heal corner exactly)
-    orig_heal = SnapshotLog.heal_publish_folds
-    SnapshotLog.heal_publish_folds = lambda self: 0
-    try:
-        sink.append(b1.limit(1))
-        sink.append(b1.limit(1))
-        expired, _ = log.expire(keep_last=1)
-    finally:
-        SnapshotLog.heal_publish_folds = orig_heal
-    assert expired  # the torn carrier is gone
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert "q" not in declared  # still torn — only the CARRY moved
-
-    # the guard must still fire: the fold set rode the expire carry
-    with pytest.raises(ValueError, match="additive-only"):
-        sink.append(spark.createDataFrame(
-            [Row(event_id=101, ts=dt.datetime(2024, 1, 3, 10),
-                 v=2.0, q=7)]))
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert "q" in declared
-    assert _pending_flags(log) == []
 
 
 def test_corrupted_metadata_fails_loudly_never_silently(spark, tmp_path,
@@ -2528,12 +2280,10 @@ def test_sci_notation_dir_components_never_reach_the_parser(spark,
 
 
 # ---------------------------------------------------------------------------
-# r12 crash-grammar family #19: REAL multi-process lock contention + crash
-# INSIDE the table.json.lock hold window (r11 verdict item 5). The r11 lock
-# tests proved the protocol under threads; threads share the GIL and an
-# address space, so they cannot produce the interleavings that matter for an
-# O_EXCL file lock — forked processes can. Children touch ONLY files and
-# os._exit (never the inherited JVM gateway).
+# REAL multi-process commit contention: threads share the GIL and an
+# address space, so they cannot produce every interleaving of the v-file
+# race — forked processes can. Children touch ONLY files and os._exit
+# (never the inherited JVM gateway).
 # ---------------------------------------------------------------------------
 
 
@@ -2556,187 +2306,244 @@ def _wait_all(pids):
 
 
 def test_forked_processes_contend_evolve_no_lost_update(tmp_path):
-    """8 REAL processes evolve 8 distinct columns concurrently: the
-    table.json RMW is lock-serialized, so every column must be declared
-    afterward (the r11 lost-update bug was exactly a loser's add erased
-    by an interleaved RMW — A/B-proven 8/8 lost unlocked) and no lock or
-    steal residue may remain."""
+    """8 REAL processes each commit one distinct column add at once: every
+    attempt rebuilds its schema from the head it read, and the loser of
+    each v-file race retries against the winner's, so every column is
+    declared afterward and table.json is never touched."""
     log = _bare_log(tmp_path)
+    table_json = os.path.join(log.meta_dir, "table.json")
+    before = open(table_json, "rb").read()
     pids = []
     for i in range(8):
         pid = os.fork()
-        if pid == 0:  # child: evolve one column, exit hard
+        if pid == 0:  # child: commit one column add, exit hard
             code = 1
             try:
-                log.evolve_schema([{"name": f"c{i}", "type": "long"}])
+                log.commit("append", [], retries=64,
+                           new_fields=[{"name": f"c{i}", "type": "long",
+                                        "nullable": True, "metadata": {}}])
                 code = 0
             finally:
                 os._exit(code)  # never run pytest teardown in the child
         pids.append(pid)
     assert _wait_all(pids) == []
-    declared = {f["name"] for f in log.table_meta()["schema_json"]["fields"]}
-    assert {f"c{i}" for i in range(8)} <= declared
-    # history archived once per successful evolve, in some serial order
-    assert len(log.table_meta().get("schema_history", [])) == 8
-    residue = [fn for fn in os.listdir(log.meta_dir)
-               if fn.startswith("table.json.lock")]
-    assert residue == [], residue
+    assert {f"c{i}" for i in range(8)} <= set(_declared(log))
+    assert log.current_id() == 8
+    assert open(table_json, "rb").read() == before
 
 
-def test_holder_killed_inside_lock_window_is_stolen(tmp_path):
-    """Crash INSIDE the critical section: a child acquires the lock and
-    dies (os._exit mid-hold = SIGKILL semantics — no finally, no unlink).
-    A waiter must block at most ~stale_s, steal the dead holder's lock by
-    RENAME (never unlink-in-place, r12 ADVICE), and complete its evolve;
-    the dead holder's token must be gone afterward."""
-    log = _bare_log(tmp_path)
-    pid = os.fork()
-    if pid == 0:
-        code = 1
+# -- rewrites racing appends: a rewrite replaces only the dirs it read ------
+
+
+def _land_during(monkeypatch, operation, concurrent):
+    """Run ``concurrent()`` in a thread, to completion, when the first
+    ``operation`` commit starts — after that operation read the table
+    and wrote its data dir, before its snapshot commit. Returns the list
+    the thread's exception lands in."""
+    import threading
+
+    orig = SnapshotLog.commit
+    errors: list[BaseException] = []
+    fired = []
+
+    def run():
         try:
-            with log._meta_lock():
-                os._exit(9)  # die holding the lock
-        finally:
-            os._exit(code)
-    _, status = os.waitpid(pid, 0)
-    assert os.waitstatus_to_exitcode(status) == 9
-    lock_path = os.path.join(log.meta_dir, "table.json.lock")
-    assert os.path.exists(lock_path)  # the orphaned lock is really there
-    dead_token = open(lock_path).read()
+            concurrent()
+        except BaseException as e:  # pragma: no cover
+            errors.append(e)
 
-    t0 = time.monotonic()
-    log.evolve_schema([{"name": "post_crash", "type": "long"}])
-    waited = time.monotonic() - t0
-    declared = {f["name"] for f in log.table_meta()["schema_json"]["fields"]}
-    assert "post_crash" in declared
-    # blocked through the staleness window (evolve defaults stale_s=10),
-    # then stole and finished — NOT a CommitConflict storm
-    assert 9.0 <= waited < 20.0, waited
-    assert not os.path.exists(lock_path)
-    assert not any(fn.startswith("table.json.lock.steal")
-                   for fn in os.listdir(log.meta_dir))
-    assert dead_token  # the dead holder really had written its identity
+    def commit(self, op, added, **kw):
+        if op == operation and not fired:
+            fired.append(op)
+            t = threading.Thread(target=run)
+            t.start()
+            t.join()
+        return orig(self, op, added, **kw)
+
+    monkeypatch.setattr(SnapshotLog, "commit", commit)
+    return errors
 
 
-def test_two_stealers_race_a_dead_holder_both_land(tmp_path):
-    """Kill a holder, then TWO processes contend for the stale lock with
-    short windows: the rename-steal serializes them (only one rename of
-    the same inode can win), both evolves land, no residue. This is the
-    TOCTOU the r12 ADVICE closed — the old unlink-steal let the second
-    stealer delete the first stealer's freshly re-acquired lock and run
-    the RMW concurrently."""
-    log = _bare_log(tmp_path)
-    pid = os.fork()
-    if pid == 0:
-        try:
-            with log._meta_lock():
-                os._exit(9)
-        finally:
-            os._exit(1)
-    os.waitpid(pid, 0)
-    lock_path = os.path.join(log.meta_dir, "table.json.lock")
-    assert os.path.exists(lock_path)
-    # age the lock into staleness for the SHORT windows used below
-    old = time.time() - 5
-    os.utime(lock_path, (old, old))
-
-    pids = []
-    for i in range(2):
-        pid = os.fork()
-        if pid == 0:
-            code = 1
-            try:
-                with log._meta_lock(timeout_s=8.0, stale_s=2.0):
-                    meta = log.table_meta()
-                    meta.setdefault("steal_order", []).append(i)
-                    log._atomic_write(
-                        os.path.join(log.meta_dir, "table.json"), meta)
-                code = 0
-            finally:
-                os._exit(code)
-        pids.append(pid)
-    assert _wait_all(pids) == []
-    # both critical sections ran, serialized (no lost update on the list)
-    assert sorted(log.table_meta()["steal_order"]) == [0, 1]
-    assert not os.path.exists(lock_path)
-    assert not any(fn.startswith("table.json.lock.steal")
-                   for fn in os.listdir(log.meta_dir))
+def _ids(sink, **kw):
+    return sorted(r.event_id for r in sink.read(**kw).select("event_id")
+                  .collect())
 
 
-def test_stealer_killed_mid_steal_does_not_wedge(tmp_path):
-    """Crash grammar #19c: a stealer that dies BETWEEN its rename and its
-    O_EXCL re-acquire leaves path absent + a .steal.<hex> residue. That
-    state must not wedge anyone: the next writer's O_EXCL acquires
-    IMMEDIATELY (no staleness wait — the lock file is simply gone) and
-    the orphaned grab file is inert."""
-    log = _bare_log(tmp_path)
-    lock_path = os.path.join(log.meta_dir, "table.json.lock")
-    # materialize the dead-stealer state by hand: an aged lock renamed
-    # away, owner gone before restore-or-unlink
-    with open(lock_path, "w") as f:
-        f.write("999999:deadbeef")
-    old = time.time() - 60
-    os.utime(lock_path, (old, old))
-    grab = f"{lock_path}.steal.{'f' * 32}"
-    os.rename(lock_path, grab)
-
-    t0 = time.monotonic()
-    log.evolve_schema([{"name": "after_dead_stealer", "type": "long"}])
-    waited = time.monotonic() - t0
-    assert waited < 2.0, waited  # immediate O_EXCL, no stale window
-    declared = {f["name"] for f in log.table_meta()["schema_json"]["fields"]}
-    assert "after_dead_stealer" in declared
-    assert not os.path.exists(lock_path)
-    assert os.path.exists(grab)  # inert residue, never re-linked
+def test_compact_racing_an_append_keeps_its_rows(spark, tmp_path, batches,
+                                                 monkeypatch):
+    b1, b2 = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1, batch_id=0)
+    errors = _land_during(monkeypatch, "replace",
+                          lambda: sink.append(b2, batch_id=1))
+    sink.compact()
+    assert errors == []
+    assert _ids(sink) == list(range(30))
+    assert sink._log.committed_batch_ids() >= {0, 1}
 
 
-def test_future_mtime_lock_fails_loudly_at_timeout(tmp_path):
-    """Crash grammar #19d: clock skew — a lock whose mtime sits in the
-    FUTURE never ages into staleness, so a waiter must raise
-    CommitConflict at timeout_s (loud, bounded) rather than stealing a
-    lock it cannot prove dead or spinning forever."""
-    import pytest
-
-    log = _bare_log(tmp_path)
-    lock_path = os.path.join(log.meta_dir, "table.json.lock")
-    with open(lock_path, "w") as f:
-        f.write("999999:skewed")
-    future = time.time() + 3600
-    os.utime(lock_path, (future, future))
-
-    t0 = time.monotonic()
-    with pytest.raises(CommitConflict):
-        with log._meta_lock(timeout_s=2.0, stale_s=1.0):
-            pass
-    waited = time.monotonic() - t0
-    assert 1.8 <= waited < 6.0, waited
-    # the skewed lock was NOT stolen or deleted
-    assert os.path.exists(lock_path)
-    assert open(lock_path).read() == "999999:skewed"
+def test_merge_racing_an_append_keeps_its_rows(spark, tmp_path, batches,
+                                               monkeypatch):
+    b1, b2 = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1, batch_id=0)
+    errors = _land_during(monkeypatch, "overwrite",
+                          lambda: sink.append(b2, batch_id=1))
+    sink.merge(spark.createDataFrame(
+        [Row(event_id=5, ts=dt.datetime(2024, 1, 3, 10), v=99.0)]),
+        keys=["event_id"])
+    assert errors == []
+    assert _ids(sink) == list(range(30))
+    assert [r.v for r in sink.read().where("event_id = 5").collect()] == [99.0]
 
 
-def test_dead_stealer_holding_the_steal_mutex_cannot_wedge_stealing(tmp_path):
-    """Crash grammar #19e: a stealer that dies while HOLDING the
-    steal-mutex leaves (stale lock + stale mutex). A later writer must
-    clear the stale mutex, re-verify and steal the lock, and finish —
-    bounded by ~stale_s, never a deadlock or CommitConflict storm."""
-    log = _bare_log(tmp_path)
-    lock_path = os.path.join(log.meta_dir, "table.json.lock")
-    mutex = lock_path + ".steal"
-    old = time.time() - 60
-    for p in (lock_path, mutex):
-        with open(p, "w") as f:
-            f.write("999999:dead")
-        os.utime(p, (old, old))
+def test_two_rewrites_of_one_read_conflict(spark, tmp_path, batches,
+                                           monkeypatch):
+    """A delete that lands between a compaction's read and its commit
+    replaced the dirs the compaction read: the compaction raises
+    CommitConflict instead of resurrecting the deleted rows, and leaves
+    no data dir behind."""
+    b1, _ = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    errors = _land_during(monkeypatch, "replace",
+                          lambda: sink.delete("event_id < 5"))
+    with pytest.raises(CommitConflict, match="already replaced"):
+        sink.compact()
+    assert errors == []
+    assert _ids(sink) == list(range(5, 10))
+    assert sorted(os.listdir(sink._log.data_dir)) == sorted(
+        sink._log.live_commits() + sink._log.snapshot(1)["live"])
 
-    t0 = time.monotonic()
-    log.evolve_schema([{"name": "after_dead_mutex", "type": "long"}])
-    waited = time.monotonic() - t0
-    # one loop iteration clears the stale mutex, the next steals the
-    # (still-stale) lock — well under the evolve default stale_s=10
-    assert waited < 5.0, waited
-    declared = {f["name"] for f in log.table_meta()["schema_json"]["fields"]}
-    assert "after_dead_mutex" in declared
-    assert not os.path.exists(lock_path)
-    assert not os.path.exists(mutex)
-    assert not any(".claim." in fn for fn in os.listdir(log.meta_dir))
+
+def test_concurrent_column_adds_both_land(spark, tmp_path, batches,
+                                          monkeypatch):
+    """Two appends that add different columns compose through the commit
+    retry; one that adds a column a racing append committed with another
+    type is rejected, and its data dir removed."""
+    b1, _ = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    one = b1.limit(1)
+    errors = _land_during(monkeypatch, "append", lambda: sink.append(
+        one.withColumn("y", F.lit(1.5))))
+    sink.append(one.withColumn("x", F.lit(1).cast("long")))
+    assert errors == []
+    assert {"x": "long", "y": "double"}.items() <= _declared(sink._log).items()
+    assert {"x", "y"} <= set(sink.read().columns)
+    with pytest.raises(ValueError, match="additive-only"):
+        sink.append(one.withColumn("y", F.lit(2).cast("long")))
+
+    monkeypatch.undo()
+    errors = _land_during(monkeypatch, "append", lambda: sink.append(
+        one.withColumn("z", F.lit("s"))))
+    with pytest.raises(ValueError, match="additive-only"):
+        sink.append(one.withColumn("z", F.lit(3).cast("long")))
+    assert errors == []
+    assert _declared(sink._log)["z"] == "string"
+    live = set(sink._log.live_commits())
+    assert {d for d in os.listdir(sink._log.data_dir)} == live
+
+
+def test_table_json_never_changes_after_creation(spark, tmp_path, batches):
+    """Column adds, spec evolution, publish, rollback and expiry all
+    commit v-files; table.json keeps the bytes it was created with."""
+    b1, b2 = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    path = os.path.join(sink._log.meta_dir, "table.json")
+    with open(path, "rb") as f:
+        created = f.read()
+    first = sink.current_snapshot_id()
+    sink.append(b2.limit(2).withColumn("q", F.lit(2.5)))
+    sink.evolve_partition_spec([("event_id", "bucket[2]")])
+    sink.append(b2.limit(1).withColumn("r", F.lit(1).cast("long")),
+                branch="audit")
+    sink.publish("audit")
+    sink.rollback(first)
+    sink.expire_snapshots(keep_last=1)
+    with open(path, "rb") as f:
+        assert f.read() == created
+    # rollback restores data, never the schema: q and r stay declared
+    assert {"q", "r"} <= set(_declared(sink._log))
+    assert _ids(sink) == list(range(10))
+
+
+def test_branch_forked_before_partition_evolution_publishes(spark, tmp_path,
+                                                            batches):
+    b1, b2 = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    sink.append(b2.withColumn("q", F.lit(1.5)), branch="audit")
+    sink.evolve_partition_spec([("event_id", "bucket[2]")])
+    sink.publish("audit")
+    assert _ids(sink) == list(range(30))
+    assert _declared(sink._log)["q"] == "double"
+    # later main commits use the evolved spec; the staged rows keep theirs
+    sink.append(b1.limit(1).withColumn("event_id", F.lit(99).cast("long")))
+    spec_ids = {r._spec_id for r in sink.read(with_spec_id=True).collect()}
+    assert spec_ids == {0, 1}
+
+
+def test_crash_sweep_schema_invariants(spark, tmp_path, batches):
+    """Kill a column-adding write, a publish, a spec evolution, an expiry
+    and a branch drop before each of their metadata steps, reopen the
+    table, and check: a committed column keeps binding its type (a
+    type-changing commit is rejected), a staged column is declared on
+    main exactly when its publish landed and never after a drop, and the
+    head's live set, schema and spec read as exactly pre-op or post-op."""
+    b1, _ = batches
+    sink = _sink(spark, tmp_path / "pristine")
+    sink.append(b1, batch_id=1)
+    sink.append(b1.limit(2).withColumn("q", F.lit(2.5)))
+    sink.append(b1.limit(1).withColumn("r", F.lit(7).cast("long")),
+                branch="audit")
+    # two metadata-only main snapshots after the fork: the branch still
+    # publishes across them, and expire has one to drop (the branch
+    # retains main's lineage up to its fork)
+    for _ in range(2):
+        sink.evolve_partition_spec([("ts", "day")])
+    src = SnapshotLog(sink._path)
+    pre_live = frozenset(src.live_commits())
+    q_long = {"name": "q", "type": "long", "nullable": True, "metadata": {}}
+
+    def reopened(dst):
+        return LakeSink(spark, IcebergSinkConfig(
+            table_name=os.path.basename(dst), warehouse_path=str(tmp_path),
+            num_partitions=2, partition_spec=[("ts", "day")], location=dst,
+        ))
+
+    def write(log):
+        s = reopened(log.table_path)
+        s._log = log
+        s.append(b1.limit(1).withColumn("w", F.lit("x")))
+
+    ops = {
+        "write": write,
+        "publish": lambda lg: lg.publish("audit"),
+        "evolve": lambda lg: lg.evolve_spec([["event_id", "bucket[2]",
+                                              "event_id_bucket"]]),
+        "expire": lambda lg: lg.expire(keep_last=1),
+        "drop": lambda lg: lg.drop_branch("audit"),
+    }
+    for name, op in ops.items():
+        seen = []
+        for k, dst in _sweep(sink._path, op, tmp_path, name):
+            log = SnapshotLog(dst)
+            declared = _declared(log)
+            live = frozenset(log.live_commits())
+            head = (frozenset(live & pre_live), len(live - pre_live),
+                    tuple(sorted(declared)),
+                    log.table_state(log.head())["spec_id"])
+            seen.append(head)
+            assert declared["q"] == "double", (name, k)
+            with pytest.raises(ValueError, match="additive-only"):
+                log.commit("append", [], new_fields=[q_long])
+            if name != "publish":
+                assert "r" not in declared, (name, k)
+            assert 1 in log.committed_batch_ids(), (name, k)
+            assert reopened(dst).read().count() in (12, 13), (name, k)
+        assert all(h in (seen[0], seen[-1]) for h in seen), (name, seen)
+        if name == "publish":
+            assert ["r" in h[2] for h in (seen[0], seen[-1])] == [False, True]
+

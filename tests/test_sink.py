@@ -174,7 +174,7 @@ def test_partition_evolution_time_travel(spark, tmp_path, events_df):
     assert old.count() == 30
     assert "_p_ts_day" in old.columns
     assert "_p_event_id_bucket" not in old.columns
-    assert sink._log.table_meta()["spec_id"] == 1
+    assert sink._log.table_state(sink._log.head())["spec_id"] == 1
 
 
 def test_partition_evolution_values_survive(spark, tmp_path, events_df):
@@ -316,7 +316,12 @@ def test_timestamp_as_of_ignores_branch_snapshots(spark, tmp_path, events_df):
     assert sid == 1  # main's head, not the staged branch snapshot
 
 
-# -- r09: WAP-branch schema evolution folds at publish (r08 ADVICE medium) --
+# -- r09: WAP-branch schema evolution lands at publish (r08 ADVICE medium) --
+
+
+def _declared(sink, branch="main"):
+    state = sink._log.table_state(sink._log.head(branch))
+    return {f["name"] for f in state["schema_json"]["fields"]}
 
 
 def test_publish_folds_branch_added_columns(spark, tmp_path, events_df):
@@ -332,13 +337,9 @@ def test_publish_folds_branch_added_columns(spark, tmp_path, events_df):
     sink.append(staged, branch="audit")
     # unpublished: the staged column must NOT be declared yet (a dropped
     # branch must not leave a declared column with no main data)
-    declared = {f["name"] for f in
-                sink._log.table_meta()["schema_json"]["fields"]}
-    assert "quality" not in declared
+    assert "quality" not in _declared(sink)
     sink.publish("audit")
-    declared = {f["name"] for f in
-                sink._log.table_meta()["schema_json"]["fields"]}
-    assert "quality" in declared
+    assert "quality" in _declared(sink)
     # post-publish type change on the published column: rejected at write
     bad = events_df.withColumn("quality", F.col("v") / 10.0)  # double
     with pytest.raises(ValueError, match="additive-only"):
@@ -375,9 +376,7 @@ def test_dropped_branch_leaves_schema_undeclared(spark, tmp_path, events_df):
     sink.append(events_df.withColumn("q", F.lit(1).cast("long")),
                 branch="audit")
     sink.drop_branch("audit")
-    declared = {f["name"] for f in
-                sink._log.table_meta()["schema_json"]["fields"]}
-    assert "q" not in declared
+    assert "q" not in _declared(sink)
     # main may now declare q as double — the staged long never landed
     sink.append(events_df.withColumn("q", F.lit(0.5)))
     assert sink.read().where("q = 0.5").count() == 30

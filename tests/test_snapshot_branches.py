@@ -11,6 +11,9 @@ the SnapshotLog — the round-3 advice findings:
 4. ``publish`` carries the branch lineage's streaming batch ids so
    exactly-once dedup survives commit→publish→drop_branch.
 
+Then the table state each v-file carries (schema, partition spec) and the
+rewrite validation of ``commit(replaces=)``.
+
 All tests drive SnapshotLog directly (no Spark session needed): commits are
 fake data dirs containing one marker file.
 """
@@ -316,80 +319,37 @@ def test_expire_folds_batch_ids_without_main_snapshots(log):
     assert 8 in log.committed_batch_ids()
 
 
-def test_publish_vs_heal_thread_race_never_loses_a_fold(log):
-    """r11: the heal-gate flag is one FILE per raise precisely so a
-    racing heal can never clobber a concurrent publish's raise (the
-    table.json-field design lost that race via read-modify-write). Hammer
-    it for real: publishers fold columns on staged branches while a heal
-    thread spins heal_publish_folds() the whole time. Afterward every
-    published column must be declared and every flag drained."""
-    import threading
+def _field(name: str, typ: str = "long") -> dict:
+    return {"name": name, "type": typ, "nullable": True, "metadata": {}}
 
-    rounds = 6
-    errors: list[BaseException] = []
-    stop = threading.Event()
 
-    def healer():
-        while not stop.is_set():
-            try:
-                log.heal_publish_folds()
-            except BaseException as e:  # pragma: no cover
-                errors.append(e)
-                return
+def _declared(log: SnapshotLog, branch: str = "main") -> dict[str, str]:
+    head = log.head(branch)
+    return {f["name"]: f["type"]
+            for f in log.table_state(head)["schema_json"]["fields"]}
 
-    t = threading.Thread(target=healer)
-    t.start()
-    try:
-        for i in range(rounds):
-            b = f"b{i}"
-            name, path = log.new_commit_dir()
-            os.makedirs(path)
-            with open(os.path.join(path, "part-0.parquet"), "w") as f:
-                f.write("x")
-            log.commit(
-                "append", [name], branch=b,
-                new_fields=[{"name": f"c{i}", "type": "double",
-                             "nullable": True, "metadata": {}}],
-            )
-            log.publish(b)
-    finally:
-        stop.set()
-        t.join()
-    assert not errors, errors
-    # one final heal (publishes may have finished after the last spin)
-    log.heal_publish_folds()
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert {f"c{i}" for i in range(rounds)} <= declared
-    try:
-        flags = [fn for fn in os.listdir(log.folds_dir)
-                 if fn.startswith("pending_fold.")]
-    except FileNotFoundError:
-        flags = []
-    assert flags == []
-    assert not log.table_meta().get("pending_publish_folds")
+
+def _add_column(log: SnapshotLog, name: str, typ: str = "long", *,
+                branch: str = "main", retries: int = 3) -> int:
+    cname, path = log.new_commit_dir()
+    os.makedirs(path)
+    return log.commit("append", [cname], branch=branch,
+                      new_fields=[_field(name, typ)], retries=retries)
 
 
 def test_concurrent_evolve_schema_never_loses_a_column(log):
-    """r11 second-review find: evolve_schema was a table.json
-    read-modify-write, so two concurrent evolutions could interleave
-    and the loser's column add was silently erased — and since r11's
-    carry-and-heal retires each owner's heal-gate flag after its evolve
-    RETURNS, the erased fold also lost its gate. The table.json lock
-    serializes the RMW; hammer it with two threads adding disjoint
-    column sets and require every add to survive."""
+    """Two threads each commit 25 column adds: every commit's schema is
+    its head's plus its own adds, recomputed on every retry, so the adds
+    compose and none is lost."""
     import threading
 
-    log.evolve_schema([{"name": "base", "type": "long",
-                        "nullable": True, "metadata": {}}])
+    _add_column(log, "base")
     errors: list[BaseException] = []
 
     def evolver(prefix):
         try:
             for i in range(25):
-                log.evolve_schema([{"name": f"{prefix}{i}",
-                                    "type": "double",
-                                    "nullable": True, "metadata": {}}])
+                _add_column(log, f"{prefix}{i}", "double", retries=50)
         except BaseException as e:  # pragma: no cover
             errors.append(e)
 
@@ -399,27 +359,150 @@ def test_concurrent_evolve_schema_never_loses_a_column(log):
     for t in ts:
         t.join()
     assert not errors, errors
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
     want = {"base"} | {f"a{i}" for i in range(25)} | {
         f"b{i}" for i in range(25)}
-    assert want <= declared, sorted(want - declared)
+    assert want <= set(_declared(log)), sorted(want - set(_declared(log)))
 
 
-def test_meta_lock_steals_a_dead_holders_lock(log):
-    """A process killed while holding the table.json lock must not brick
-    the table: once the lock file goes stale (mtime older than stale_s)
-    the next writer steals it and proceeds."""
-    import time
+def test_column_add_racing_another_type_is_rejected(log):
+    """A column a racing winner committed binds its type: a commit that
+    adds the same name with another type raises, and commits nothing."""
+    _add_column(log, "q", "double")
+    before = log.current_id()
+    with pytest.raises(ValueError, match="additive-only"):
+        _add_column(log, "q", "long")
+    assert log.current_id() == before
+    _add_column(log, "q", "double")  # the same type composes
+    assert _declared(log)["q"] == "double"
 
-    lock_path = os.path.join(log.meta_dir, "table.json.lock")
-    with open(lock_path, "w"):
-        pass
-    old = time.time() - 120
-    os.utime(lock_path, (old, old))  # a long-dead holder
-    log.evolve_schema([{"name": "stolen", "type": "long",
-                        "nullable": True, "metadata": {}}])
-    declared = {f["name"] for f in
-                log.table_meta()["schema_json"]["fields"]}
-    assert "stolen" in declared
-    assert not os.path.exists(lock_path)  # released after the steal
+
+def test_rewrite_keeps_an_append_that_lands_after_its_read(log):
+    """The lost-append defect: a rewrite that read ``[a]`` and commits
+    while an append ``b`` landed in between must keep ``b`` live, since
+    ``b``'s batch id stays recorded as committed and a replay of it is
+    skipped."""
+    _, a = _append(log, batch_id=0)
+    read = log.live_commits()                   # the rewrite reads [a]
+    _, b = _append(log, batch_id=1)             # a concurrent append
+    name, path = log.new_commit_dir()
+    os.makedirs(path)
+    log.commit("replace", [name], replaces=read)
+    assert log.live_commits() == [b, name]
+    assert log.committed_batch_ids() == {0, 1}
+    # a second rewrite of the same read set lost the race to the first
+    with pytest.raises(CommitConflict, match="already replaced"):
+        log.commit("replace", [], replaces=read)
+
+
+def test_commit_reads_each_vfile_once_per_attempt(log, monkeypatch):
+    """Each commit attempt derives the branch heads and its base from
+    one pass over the v-files, on main and on a branch's first commit."""
+    for _ in range(12):
+        _append(log)
+    n = len(log.snapshots())
+    reads = []
+    orig = SnapshotLog.snapshot
+    monkeypatch.setattr(SnapshotLog, "snapshot",
+                        lambda self, sid: reads.append(sid) or orig(self, sid))
+    _append(log)
+    assert sorted(reads) == list(range(1, n + 1))
+    reads.clear()
+    _append(log, branch="fresh")
+    assert sorted(reads) == list(range(1, n + 2))
+    # a caller that already read the head hands it in: while that is
+    # still the newest v-file, the commit makes no second pass
+    _append(log)
+    head = log.head()
+    reads.clear()
+    name, path = log.new_commit_dir()
+    os.makedirs(path)
+    log.commit("append", [name], base=head)
+    assert reads == []
+
+
+def test_table_json_is_written_once(log):
+    """Every kind of metadata change commits a v-file; table.json keeps
+    the bytes ``init_table`` wrote."""
+    path = os.path.join(log.meta_dir, "table.json")
+    with open(path, "rb") as f:
+        before = f.read()
+    first, _ = _append(log, batch_id=0)
+    _add_column(log, "q", "double")
+    log.evolve_spec([["q", "identity", "q"]])
+    _add_column(log, "r", branch="wap")
+    log.publish("wap")
+    log.commit("rollback", [], rollback_to=first)
+    log.expire(keep_last=1)
+    log.drop_branch("wap")
+    with open(path, "rb") as f:
+        assert f.read() == before
+    assert set(_declared(log)) == {"q", "r"}
+    state = log.table_state(log.head())
+    assert state["spec_id"] == 1
+    assert state["specs"] == {"0": [], "1": [["q", "identity", "q"]]}
+
+
+def test_branch_schema_lives_on_the_branch_until_publish(log):
+    """A staged column add binds on its branch only; publish declares it
+    on main, and a dropped branch leaves no declared column."""
+    _append(log)
+    _add_column(log, "r", "double", branch="wap")
+    _add_column(log, "s", branch="gone")
+    assert "r" in _declared(log, "wap")
+    assert "r" not in _declared(log)
+    log.drop_branch("gone")
+    assert "s" not in _declared(log)
+    log.publish("wap")
+    assert _declared(log)["r"] == "double"
+    with pytest.raises(ValueError, match="additive-only"):
+        _add_column(log, "r", "long")
+
+
+def test_branch_forked_before_spec_evolution_publishes(log):
+    """A spec change is a metadata-only main commit: a branch forked
+    before it still fast-forwards, and the publish snapshot keeps main's
+    new spec with the branch's schema."""
+    _append(log, batch_id=0)
+    _add_column(log, "r", branch="wap")
+    new_id = log.evolve_spec([["r", "bucket[2]", "r_bucket"]])
+    assert log.snapshot(log.current_id())["operation"] == "evolve"
+    pid = log.publish("wap")
+    assert log.current_id() == pid
+    assert log.live_commits() == log.live_commits(branch="wap")
+    state = log.table_state(log.head())
+    assert state["spec_id"] == new_id
+    assert "r" in {f["name"] for f in state["schema_json"]["fields"]}
+    # a DATA commit on main after the fork still blocks the fast-forward
+    _add_column(log, "t", branch="wap2")
+    log.evolve_spec([])
+    _append(log)
+    with pytest.raises(CommitConflict):
+        log.publish("wap2")
+
+
+def test_upgraded_table_binds_columns_its_old_vfiles_carried(tmp_path):
+    """A table written before v-files carried their state: its schema is
+    table.json's plus the column adds its main-line v-files carried, so
+    a column an interrupted older writer never declared in table.json
+    still binds — through the first new commit and through expiry."""
+    import json as _json
+
+    log = SnapshotLog(str(tmp_path / "old"))
+    log.init_table({"schema_json": {"type": "struct",
+                                    "fields": [_field("a")]},
+                    "partition_spec": [], "spec_id": 0})
+    for sid, extra in ((1, {}), (2, {"new_fields": [_field("q", "double")]}),
+                       (3, {})):
+        snap = {"snapshot_id": sid, "parent_id": sid - 1 or None,
+                "timestamp_ms": 0, "operation": "append", "added": [],
+                "live": [], "batch_id": sid, **extra}
+        with open(os.path.join(log.meta_dir, f"v{sid}.json"), "w") as f:
+            _json.dump(snap, f)
+    assert _declared(log) == {"a": "long", "q": "double"}
+    with pytest.raises(ValueError, match="additive-only"):
+        _add_column(log, "q", "long")
+    log.expire(keep_last=1)   # the carrier v2 goes
+    assert _declared(log) == {"a": "long", "q": "double"}
+    assert log.committed_batch_ids() == {1, 2, 3}
+    _add_column(log, "z")
+    assert _declared(log) == {"a": "long", "q": "double", "z": "long"}
