@@ -2485,6 +2485,90 @@ def test_branch_forked_before_partition_evolution_publishes(spark, tmp_path,
     assert spec_ids == {0, 1}
 
 
+def test_torn_publish_fold_self_heals(spark, tmp_path, batches):
+    """A publish killed at its one metadata step leaves no torn fold: the
+    published column and its data land in the same v-file create, so
+    main either holds both or neither. The type-change hole stays shut
+    on the branch while the publish is dead, and a retried publish
+    declares the column, after which a type-changing main write of it
+    is rejected."""
+    b1, _ = batches
+    sink = _sink(spark, tmp_path)
+    sink.append(b1)
+    # stage a branch commit that ADDS column q (double)
+    sink.append(
+        spark.createDataFrame(
+            [Row(event_id=100, ts=dt.datetime(2024, 1, 2, 10),
+                 v=1.0, q=2.5)]
+        ),
+        branch="audit",
+    )
+    q_long = spark.createDataFrame(
+        [Row(event_id=101, ts=dt.datetime(2024, 1, 3, 10), v=2.0, q=7)])
+
+    with _crash_after_steps(sink._log, 0):
+        with pytest.raises(_InjectedCrash):
+            sink.publish("audit")
+
+    # nothing torn: q is neither main-visible data nor declared on main
+    assert "q" not in sink.read().columns
+    assert "q" not in _declared(sink._log)
+    assert _declared(sink._log, "audit")["q"] == "double"
+    with pytest.raises(ValueError, match="additive-only"):
+        sink.append(q_long, branch="audit")
+
+    sink.publish("audit")
+    assert "q" in sink.read().columns
+    assert _declared(sink._log)["q"] == "double"
+    with pytest.raises(ValueError, match="additive-only"):
+        sink.append(q_long)
+    assert _declared(sink._log)["q"] == "double"
+
+
+def test_torn_main_evolve_self_heals(spark, tmp_path, batches):
+    """A main write that ADDS a column, killed before each of its steps
+    (data-dir reservation, v-file create), never leaves the column in
+    committed data without its declaration: the column binds exactly
+    when its rows are visible. Once the add commits — at once, or by
+    retrying the killed write — a type-changing write of the column is
+    rejected and the column reads back with its first type."""
+    b1, _ = batches
+    sink = _sink(spark, tmp_path / "pristine")
+    sink.append(b1)
+    q_double = [Row(event_id=100, ts=dt.datetime(2024, 1, 2, 10),
+                    v=1.0, q=2.5)]
+    q_long = [Row(event_id=101, ts=dt.datetime(2024, 1, 3, 10), v=2.0, q=7)]
+
+    def reopened(log):
+        s = LakeSink(spark, IcebergSinkConfig(
+            table_name=os.path.basename(log.table_path),
+            warehouse_path=str(tmp_path), num_partitions=2,
+            partition_spec=[("ts", "day")], location=log.table_path,
+        ))
+        s._log = log
+        return s
+
+    crashed = 0
+    for k, dst in _sweep(
+            sink._path,
+            lambda lg: reopened(lg).append(spark.createDataFrame(q_double)),
+            tmp_path, "evolve"):
+        s = reopened(SnapshotLog(dst))
+        visible = "q" in s.read().columns
+        assert visible == ("q" in _declared(s._log)), k
+        if not visible:
+            crashed += 1
+            assert s.read().count() == 10, k
+            s.append(spark.createDataFrame(q_double))
+        with pytest.raises(ValueError, match="additive-only"):
+            s.append(spark.createDataFrame(q_long))
+        assert _declared(s._log)["q"] == "double", k
+        back = s.read()
+        assert back.count() == 11, k
+        assert [r.q for r in back.where("event_id = 100").collect()] == [2.5]
+    assert crashed >= 1
+
+
 def test_crash_sweep_schema_invariants(spark, tmp_path, batches):
     """Kill a column-adding write, a publish, a spec evolution, an expiry
     and a branch drop before each of their metadata steps, reopen the
