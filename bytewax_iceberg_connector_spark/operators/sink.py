@@ -488,7 +488,6 @@ class LakeSink:
                 overwrite=replaces is None and operation in _REPLACING_OPS,
                 replaces=replaces, batch_id=batch_id, branch=branch,
                 new_fields=[f.jsonValue() for f in new_fields] or None,
-                base=head,
             )
         except (ValueError, CommitConflict):
             shutil.rmtree(path, ignore_errors=True)  # rejected: no orphan
@@ -817,31 +816,16 @@ class LakeSink:
         )
 
     def _replayed_batch(self, epoch_id: int) -> bool:
-        """Incremental replay-dedup check: parse only the v-files
-        committed since this sink's previous check instead of re-reading
-        EVERY retained snapshot per micro-batch — the full scan is
-        O(commits) driver IO per trigger, which at the sink's own cited
-        rate (~5 760 commits/day at a 15 s trigger) compounds to O(N²)
-        metadata reads per day and eventually outruns the trigger
-        interval. An id whose snapshot has since been EXPIRED stays in
-        the cache: its data was reclaimed by retention on purpose, and
-        re-appending a replay would resurrect it.
+        """Replay-dedup check: whether ``epoch_id`` is committed
+        (``SnapshotLog.committed_batch_ids``). Every head carries its
+        lineage's batch ids, so this reads the newest v-file and the heads
+        it names, at any history length, and a fresh sink instance sees
+        the same ids as a long-running one. An id whose snapshot has since
+        been EXPIRED stays committed: its data was reclaimed by retention
+        on purpose, and re-appending a replay would resurrect it.
         """
-        if not self.table_exists():
-            return False
-        log = self._log
-        maxv = log._max_version()
-        seen_v, ids = getattr(self, "_bid_cache", (0, set()))
-        if maxv > seen_v:
-            for i in range(seen_v + 1, maxv + 1):
-                s = log._maybe_snapshot(i)
-                if s is None:
-                    continue
-                if s.get("batch_id") is not None:
-                    ids.add(s["batch_id"])
-                ids.update(s.get("batch_ids", []))
-            self._bid_cache = (maxv, ids)
-        return epoch_id in ids
+        return (self.table_exists()
+                and epoch_id in self._log.committed_batch_ids())
 
     def write_stream_merge(self, df: DataFrame, checkpoint: str,
                            keys: list[str],
@@ -1060,11 +1044,8 @@ class LakeSink:
         sees exactly the columns its commits wrote (a snapshot from
         before a column add reads without it). Writes are additive-only
         (_check_write_schema), so the union never holds two types for
-        one name. A marker without ``fields`` (a dir from before the
-        field existed) contributes the data columns of the read
-        snapshot's schema (``state``, from ``SnapshotLog.table_state``).
-        ``_p_*`` and ``_c`` stay out of the given schema: partition
-        discovery adds them from the directory names.
+        one name. ``_p_*`` and ``_c`` stay out of the given schema:
+        partition discovery adds them from the directory names.
 
         ``with_spec_id=True`` materializes Iceberg's ``_spec_id`` metadata
         column (the spec each row's commit was written under) — the ONLY
@@ -1072,51 +1053,34 @@ class LakeSink:
         ``_p_* IS NOT NULL`` misattributes rows whose partition VALUE is
         legitimately NULL (r06 adversarial find).
 
-        Commits with ZERO data files are skipped before the scan: a
-        partitioned write of an EMPTY frame (a delete-all's survivor
-        commit, an empty micro-batch) produces a fileless dir that made
-        every later read die with UNABLE_TO_INFER_SCHEMA (r06 model-based
-        find); a fileless commit contributes no rows by construction, and
-        an all-empty dir list reads as the declared-schema empty frame."""
+        Commits with ZERO data files (``n_files`` in the marker) are
+        skipped before the scan: a partitioned write of an EMPTY frame (a
+        delete-all's survivor commit, an empty micro-batch) produces a
+        fileless dir that made every later read die with
+        UNABLE_TO_INFER_SCHEMA (r06 model-based find); a fileless commit
+        contributes no rows by construction, and an all-empty dir list
+        reads as the declared-schema empty frame."""
         declared = StructType.fromJson(state["schema_json"])
 
         def _marker(d: str) -> dict:
             try:
                 with open(os.path.join(d, "_bic_spec.json")) as f:
                     return json.load(f)
-            except FileNotFoundError:
-                return {}  # pre-marker-era commit dir: legacy defaults
-            except ValueError as exc:
+            except (FileNotFoundError, ValueError) as exc:
                 # marker writes are atomic (rename-in) and precede the
-                # commit, so a referenced dir can never carry a torn
-                # marker from our own crashes — unparseable means
-                # EXTERNAL damage, and degrading to {} here would
-                # silently skip the esc_pcols recompute (marker values
-                # leaking into reads) and mis-read the commit's layout
-                # and fields. Refuse loudly instead.
+                # commit, so a referenced dir always carries a whole
+                # marker: a missing or unparseable one means EXTERNAL
+                # damage, and guessing would mis-read the commit's
+                # layout and fields or skip the esc_pcols recompute
+                # (marker values leaking into reads). Refuse loudly.
                 raise ValueError(
                     f"corrupt commit marker {d}/_bic_spec.json — external "
                     "damage; restore the file or expire the snapshot(s) "
                     f"referencing this commit: {exc}"
                 ) from exc
 
-        ext = f".{self._file_format()}"
-
-        def _has_files(d: str, marker: dict) -> bool:
-            # commit-time metadata first (n_files in _bic_spec.json) —
-            # one small json read instead of walking the data tree; dirs
-            # from before the field existed fall back to the walk
-            n = marker.get("n_files")
-            if n is not None:
-                return n > 0
-            return any(
-                f.endswith(ext)
-                for _, _, files in os.walk(d)
-                for f in files
-            )
-
         markers = {d: _marker(d) for d in dirs}
-        markers = {d: m for d, m in markers.items() if _has_files(d, m)}
+        markers = {d: m for d, m in markers.items() if m["n_files"] > 0}
         if not markers:
             empty = _empty_frame(self.spark, declared)
             if with_spec_id:
@@ -1124,15 +1088,11 @@ class LakeSink:
                     "_spec_id", F.lit(None).cast("int")
                 )
             return empty
-        legacy_fields = [f for f in declared.fields
-                         if f.name != "_c" and not f.name.startswith("_p_")]
 
         def _load(group: list[str], spec_id: int) -> DataFrame:
             fields: dict[str, StructField] = {}
             for d in group:
-                recorded = markers[d].get("fields")
-                for f in (legacy_fields if recorded is None
-                          else map(StructField.fromJson, recorded)):
+                for f in map(StructField.fromJson, markers[d]["fields"]):
                     fields.setdefault(f.name, f)
             reader = (
                 self.spark.read.option("basePath", self._log.data_dir)
@@ -1141,58 +1101,22 @@ class LakeSink:
             # `_c` is the commit-dir partition component — implementation
             # detail, dropped from the user-visible schema
             df = reader.format(self._file_format()).load(group).drop("_c")
-            # keep BOTH spellings: markers written before the r11 fix
-            # recorded the Hive-escaped dir spelling (needs the
-            # unescape), new markers record the logical name — which may
-            # itself contain a literal %XX sequence that a second
-            # unescape would corrupt (self-review find: a column named
-            # 'a%3Ab' double-unescaped to 'a:b' and skipped the
-            # recompute). Spurious entries are harmless: _restore_pcols
-            # only acts on names present in the spec-field map.
-            esc = set()
-            for d in group:
-                for c in markers[d].get("esc_pcols", []):
-                    esc.add(c)
-                    esc.add(unescape_path_name(c))
+            # markers record the LOGICAL (unescaped) column names
+            esc = {c for d in group for c in markers[d].get("esc_pcols", [])}
             df = self._restore_pcols(df, spec_id, esc, state)
             if with_spec_id:
                 df = df.withColumn("_spec_id", F.lit(spec_id).cast("int"))
             return df
 
-        groups = self._dirs_by_layout(markers, state)
+        # group by (spec_id, partition layout) as written at commit time:
+        # the per-manifest spec id of Iceberg
+        groups: dict[tuple, list[str]] = {}
+        for d, m in markers.items():
+            groups.setdefault((m["spec_id"], *m["pcols"]), []).append(d)
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True),
             [_load(group, key[0]) for key, group in sorted(groups.items())],
         )
-
-    def _dirs_by_layout(self, markers: dict[str, dict],
-                        state: dict) -> dict[tuple, list[str]]:
-        """Group commit dirs by (spec_id, partition layout) as written at
-        commit time (their parsed ``_bic_spec.json`` markers) — the
-        per-manifest spec id of Iceberg. Keys are ``(spec_id, pcols...)``.
-        Dirs from before the marker existed (marker ``{}``) group under
-        the table's ORIGINAL spec (id 0 in ``state["specs"]``) —
-        markerless dirs can only predate evolution support, so their
-        layout is whatever the table was created with."""
-        fallback = tuple(partition_columns(
-            state["specs"].get("0", state["partition_spec"])
-        ))
-        groups: dict[tuple, list[str]] = {}
-        for d, marker in markers.items():
-            if marker:
-                key = (int(marker.get("spec_id", 0)),
-                       *marker.get("pcols", []))
-            else:
-                key = (0, *fallback)  # pre-marker-era commit dir
-            groups.setdefault(key, []).append(d)
-        return groups
-
-    def _spec_fields_for_id(self, spec_id: int,
-                            state: dict) -> list[PartitionField]:
-        """The partition spec a commit group was written under, from the
-        read snapshot's ``specs`` map of every spec id issued so far
-        (Iceberg's per-manifest spec lookup)."""
-        return as_fields(state["specs"].get(str(spec_id), []))
 
     def _restore_pcols(self, df: DataFrame, spec_id: int,
                        esc_cols: set, state: dict) -> DataFrame:
@@ -1219,9 +1143,11 @@ class LakeSink:
             for f in StructType.fromJson(state["schema_json"]).fields
         }
         dtypes = dict(df.dtypes)
+        # the spec the commit group was written under, from the read
+        # snapshot's map of every spec id issued so far
         fields = {
             f"_p_{f.field_name}": f
-            for f in self._spec_fields_for_id(spec_id, state)
+            for f in as_fields(state["specs"].get(str(spec_id), []))
         }
 
         def _spec_type(c: str) -> str | None:

@@ -17,22 +17,28 @@ Design (Iceberg's HadoopTableOperations in miniature):
 - each snapshot is ``metadata/v<N>.json`` holding the FULL live commit
   list (real Iceberg uses manifest lists for O(1) snapshot metadata; the
   cumulative list is the honest small-scale stand-in, noted here so the
-  trade-off is explicit) AND the table state its branch has as of N:
-  ``schema_json``, ``spec_id``/``partition_spec`` and ``specs`` (every
-  spec id issued so far) — Iceberg keeps schemas and specs in the one
-  metadata file it swaps atomically, for the same reason;
-- the head is ``max(N)``; committing is "write tmp, hard-link to
-  v<head+1>.json" — ``os.link`` is atomic-exclusive, so two writers
-  racing produce one winner and one ``FileExistsError`` → the loser
-  recomputes its live set and schema against the new head and retries
-  (snapshot isolation: readers holding an older N never see half a
-  commit). That link is the ONLY commit point: a column add, a spec
-  change and a publish land in the same file as the live list they
+  trade-off is explicit), the table state its branch has as of N
+  (``schema_json``, ``spec_id``/``partition_spec`` and ``specs``, every
+  spec id issued so far), ``heads`` (branch -> head snapshot id as of N)
+  and ``batch_ids`` (the streaming batch ids committed in its lineage, as
+  sorted inclusive ``[lo, hi]`` ranges). Iceberg keeps schemas, specs and
+  refs in the one metadata file it swaps atomically, for the same reason:
+  the newest v-file and the heads it names answer every head, branch and
+  batch-id lookup, whatever the length of the history;
+- committing is "write tmp, hard-link to v<N+1>.json", where N is the
+  highest id ever issued — ``os.link`` is atomic-exclusive, so two
+  writers racing produce one winner and one ``FileExistsError`` → the
+  loser rebuilds against the new newest v-file and retries (snapshot
+  isolation: readers holding an older N never see half a commit). That
+  link is the ONLY commit point: a column add, a spec change, a publish
+  and the moved branch head land in the same file as the live list they
   describe, so no crash can leave them apart;
+- a head whose v-file is gone (a dropped branch's tombstone) or no longer
+  names its branch (a tagged snapshot re-homed detached by
+  ``drop_branch``) is absent, so dropping a branch writes no v-file;
 - ``metadata/table.json`` is written once, at creation: name, sort order,
   properties, and the schema and spec a table has before its first
-  commit. It is never rewritten. v-files written before snapshots carried
-  their state read it from there (``table_state``).
+  commit. It is never rewritten.
 """
 
 from __future__ import annotations
@@ -91,17 +97,17 @@ def _add_fields(schema: dict, new_fields: list[dict]) -> dict:
     return {**schema, "fields": fields}
 
 
-def _heads(snaps: list[dict]) -> dict:
-    """Branch name -> head snapshot, from one ascending snapshot list
-    (detached snapshots, ``branch=None``, are keyed under None)."""
-    return {s.get("branch", "main"): s for s in snaps}
-
-
-def _base(snaps: list[dict], branch: str) -> dict | None:
-    """The snapshot a commit on ``branch`` builds on: the branch head, or
-    main's head while the branch has no commits (fork-on-first-write)."""
-    heads = _heads(snaps)
-    return heads[branch] if branch in heads else heads.get("main")
+def _merge_ranges(*range_lists: list[list[int]]) -> list[list[int]]:
+    """The union of inclusive ``[lo, hi]`` batch-id ranges, sorted, with
+    overlapping and adjacent ranges joined: batch ids committed in order
+    stay one range however many there are."""
+    out: list[list[int]] = []
+    for lo, hi in sorted(r for rs in range_lists for r in rs):
+        if out and lo <= out[-1][1] + 1:
+            out[-1][1] = max(out[-1][1], hi)
+        else:
+            out.append([lo, hi])
+    return out
 
 
 class SnapshotLog:
@@ -134,60 +140,41 @@ class SnapshotLog:
 
     def table_state(self, snap: dict | None = None) -> dict:
         """Schema and partition spec as of ``snap`` (None: the table
-        before its first commit): ``schema_json``, ``spec_id``,
-        ``partition_spec`` and ``specs`` (spec id as a string -> spec).
-        A snapshot carries its own state, so this opens no file. A v-file
-        written before snapshots carried state takes ``table.json``'s,
-        plus the column adds that such v-files carried for main and for
-        its own branch — a read-only fold, so a column an interrupted
-        older writer never declared in ``table.json`` still binds."""
-        if snap is not None and "schema_json" in snap:
+        before its first commit, from ``table.json``): ``schema_json``,
+        ``spec_id``, ``partition_spec`` and ``specs`` (spec id as a
+        string -> spec). A snapshot carries its own state, so this opens
+        no file for one."""
+        if snap is not None:
             return {k: snap[k] for k in _STATE_KEYS}
         meta = self.table_meta()
-        spec_id = int(meta.get("spec_id", 0))
         spec = meta.get("partition_spec") or []
-        schema = meta.get("schema_json") or {"type": "struct", "fields": []}
-        if snap is not None:
-            names = {f["name"] for f in schema.get("fields", [])}
-            lines = ("main", snap.get("branch", "main"))
-            adds = []
-            for s in self.snapshots():
-                if s.get("branch", "main") not in lines:
-                    continue
-                for f in (s.get("staged_new_fields") or []) + (
-                        s.get("new_fields") or []):
-                    if f["name"] not in names:
-                        names.add(f["name"])
-                        adds.append(f)
-            schema = _add_fields(schema, adds)
-        return {"schema_json": schema, "spec_id": spec_id,
-                "partition_spec": spec,
-                "specs": {**meta.get("spec_history", {}), str(spec_id): spec}}
+        return {"schema_json": (meta.get("schema_json")
+                                or {"type": "struct", "fields": []}),
+                "spec_id": 0, "partition_spec": spec, "specs": {"0": spec}}
 
     # -- partition-spec evolution ------------------------------------------
 
     def evolve_spec(self, new_spec: list[list], retries: int = 3) -> int:
         """Install a NEW partition spec (Iceberg partition evolution) as a
         metadata-only main commit: operation ``evolve``, main's live list
-        unchanged, no batch id, the next spec id recorded in ``specs``.
-        Only commits written AFTER it use the new layout — existing data
-        files are never rewritten, exactly the Iceberg contract. A branch
-        keeps the spec it forked with until it publishes. Returns the new
-        spec id."""
+        and batch ids unchanged, no batch id, the next spec id recorded in
+        ``specs``. Only commits written AFTER it use the new layout —
+        existing data files are never rewritten, exactly the Iceberg
+        contract. A branch keeps the spec it forked with until it
+        publishes. Returns the new spec id."""
         spec = [list(f) for f in new_spec]
 
-        def build(version: int, snaps: list[dict]) -> dict:
-            head = _heads(snaps).get("main")
+        def build(tip: tuple) -> dict:
+            head = self._ref(tip, "main")
             state = self.table_state(head)
             new_id = max(map(int, state["specs"])) + 1
             return {
-                "snapshot_id": version + 1,
                 "parent_id": None if head is None else head["snapshot_id"],
-                "timestamp_ms": int(time.time() * 1000),
                 "operation": "evolve",
                 "added": [],
                 "live": [] if head is None else list(head["live"]),
                 "batch_id": None,
+                "batch_ids": [] if head is None else head["batch_ids"],
                 "schema_json": state["schema_json"],
                 "spec_id": new_id,
                 "partition_spec": spec,
@@ -198,33 +185,77 @@ class SnapshotLog:
 
     # -- snapshot access ---------------------------------------------------
 
-    def _max_version(self) -> int:
-        """Highest snapshot id EVER ISSUED, across all branches — the
-        version-race counter (ids are globally unique, branches share one
-        sequence). Counts ``.dropped`` tombstones too (see
+    def _listing(self) -> tuple[int, list[int]]:
+        """(highest snapshot id EVER ISSUED, ids of the v-files that exist,
+        ascending), from one ``listdir``. The first is the version-race
+        counter (ids are globally unique, branches share one sequence),
+        and it counts ``.dropped`` tombstones too (see
         ``_unlink_snapshot``): the counter must be monotone over deleted
         ids, or a post-drop commit would reuse one — aliasing two table
-        states under one ``VERSION AS OF`` handle and slipping UNDER live
-        instances' incremental batch-id caches (which scan only
-        (seen_v, max_v]), reopening the replay double-apply window."""
+        states under one ``VERSION AS OF`` handle."""
         try:
             names = os.listdir(self.meta_dir)
         except FileNotFoundError:
-            return 0
-        ids = []
+            return 0, []
+        top, present = 0, []
         for n in names:
-            if not n.startswith("v"):
+            core, _, ext = n[1:].partition(".")
+            if not (n.startswith("v") and core.isdigit()
+                    and ext in ("json", "json.dropped")):
                 continue
-            core = n[1:]
-            if core.endswith(".json.dropped"):
-                core = core[: -len(".json.dropped")]
-            elif core.endswith(".json"):
-                core = core[: -len(".json")]
-            else:
-                continue
-            if core.isdigit():
-                ids.append(int(core))
-        return max(ids, default=0)
+            top = max(top, int(core))
+            if ext == "json":
+                present.append(int(core))
+        return top, sorted(present)
+
+    def _tip(self) -> tuple[int, dict | None, dict[str, int]]:
+        """(highest id ever issued, the newest existing v-file, its
+        ``heads`` restricted to v-files that exist): one ``listdir`` and
+        one v-file read, the starting point of every head, branch and
+        batch-id lookup and of every commit attempt. A newest v-file
+        without ``heads`` is of a layout this log does not read."""
+        while True:
+            top, present = self._listing()
+            if not present:
+                return top, None, {}
+            newest = self._maybe_snapshot(present[-1])
+            if newest is None:
+                continue  # expired or dropped since the listing
+            if "heads" not in newest:
+                raise ValueError(
+                    f"{self.meta_dir}/v{present[-1]}.json has no 'heads': it "
+                    "is of a v-file layout without branch heads and "
+                    "batch-id ranges, which this log does not read"
+                )
+            have = set(present)
+            return top, newest, {b: i for b, i in newest["heads"].items()
+                                 if i in have}
+
+    def _ref(self, tip: tuple, branch: str) -> dict | None:
+        """``branch``'s head snapshot as of ``tip`` (see ``_tip``); None
+        when the branch has no commits, its head's v-file is gone, or
+        that v-file no longer names the branch (re-homed detached)."""
+        _, newest, heads = tip
+        sid = heads.get(branch)
+        if sid is None:
+            return None
+        snap = (newest if sid == newest["snapshot_id"]
+                else self._maybe_snapshot(sid))
+        if snap is None or snap.get("branch", "main") != branch:
+            return None
+        return snap
+
+    def _refs(self, tip: tuple) -> dict[str, dict]:
+        """Branch name -> head snapshot, for every head ``tip`` names
+        that ``_ref`` resolves."""
+        refs = {b: self._ref(tip, b) for b in tip[2]}
+        return {b: s for b, s in refs.items() if s is not None}
+
+    def _base(self, tip: tuple, branch: str) -> dict | None:
+        """The snapshot a commit on ``branch`` builds on: the branch head,
+        or main's head while the branch has no commits (fork-on-first-
+        write)."""
+        return self._ref(tip, branch) or self._ref(tip, "main")
 
     def head(self, branch: str = "main") -> dict | None:
         """The snapshot the next commit on ``branch`` builds on: the
@@ -233,21 +264,16 @@ class SnapshotLog:
         for a table with no commits. Its ``live`` list and its
         ``table_state`` describe one table version, read from one file.
 
-        Branch heads are DERIVED by scanning the per-version files rather
-        than kept in a pointer file: a read-modify-write ``branches.json``
-        would race between writers on different branches, while the
-        version-file create is already the single atomic commit point.
-        Real Iceberg stores refs in the one table-metadata file it swaps
-        atomically; the per-version scan is the honest equivalent here.
+        The newest v-file names every branch head (``heads``), as
+        Iceberg's table-metadata file holds its refs, so this reads that
+        file and at most two heads it names, at any history length.
         """
-        return _base(self.snapshots(), branch)
+        return self._base(self._tip(), branch)
 
     def current_id(self, branch: str = "main") -> int:
         """Head snapshot id of ``branch`` (default main); 0 = no commits."""
-        s = self.head(branch)
-        if s is None or s.get("branch", "main") != branch:
-            return 0
-        return s["snapshot_id"]
+        s = self._ref(self._tip(), branch)
+        return 0 if s is None else s["snapshot_id"]
 
     def snapshot(self, snapshot_id: int) -> dict:
         try:
@@ -266,34 +292,21 @@ class SnapshotLog:
         except LookupError:
             return None
 
-    def _maybe_snapshot(self, snapshot_id: int) -> dict | None:
-        """``snapshot`` that returns None for expired/missing ids."""
-        try:
-            return self.snapshot(snapshot_id)
-        except LookupError:
-            return None
-
-    def _scan(self) -> tuple[int, list[dict]]:
-        """(highest id ever issued, every retained snapshot ascending):
-        one pass over the v-files."""
-        top = self._max_version()
-        snaps = [self._maybe_snapshot(i) for i in range(1, top + 1)]
-        return top, [s for s in snaps if s is not None]
-
     def snapshots(self) -> list[dict]:
         """All retained snapshots, ascending — the ``<table>.snapshots``
         metadata table of the iceberg backend. Ids expired by ``expire``
         are simply absent (numbering is never rewritten)."""
-        return self._scan()[1]
+        snaps = (self._maybe_snapshot(i) for i in self._listing()[1])
+        return [s for s in snaps if s is not None]
 
     def live_commits(self, snapshot_id: int | None = None,
                      branch: str = "main") -> list[str]:
         """Commit dir names visible at ``snapshot_id`` (default: head of
         ``branch``)."""
-        sid = self.current_id(branch) if snapshot_id is None else snapshot_id
-        if sid == 0:
-            return []
-        return self.snapshot(sid)["live"]
+        if snapshot_id is None:
+            s = self._ref(self._tip(), branch)
+            return [] if s is None else s["live"]
+        return self.snapshot(snapshot_id)["live"] if snapshot_id else []
 
     def commit_paths(self, snapshot_id: int | None = None,
                      branch: str = "main", *,
@@ -343,16 +356,16 @@ class SnapshotLog:
         return refs[name]
 
     def committed_batch_ids(self) -> set[int]:
-        """Batch ids recorded by streaming commits — the replay-dedup set.
-
-        Publish snapshots carry the batch ids of the branch lineage they
-        fast-forwarded (``batch_ids``), so the exactly-once guarantee
-        survives the full WAP sequence commit→publish→drop_branch."""
+        """Batch ids recorded by streaming commits — the replay-dedup set:
+        the ``batch_ids`` lineage of every branch head. Each commit
+        carries its base's ids plus its own, so expiring the snapshot a
+        batch committed in keeps its id, and ``publish`` carries a
+        branch's ids to main, so they survive ``drop_branch``. A dropped,
+        unpublished branch's ids go with it."""
         out: set[int] = set()
-        for s in self.snapshots():
-            if s.get("batch_id") is not None:
-                out.add(s["batch_id"])
-            out.update(s.get("batch_ids", []))
+        for s in self._refs(self._tip()).values():
+            for lo, hi in s["batch_ids"]:
+                out.update(range(lo, hi + 1))
         return out
 
     # -- commit protocol ---------------------------------------------------
@@ -386,7 +399,6 @@ class SnapshotLog:
         batch_id: int | None = None,
         branch: str = "main",
         new_fields: list[dict] | None = None,
-        base: dict | None = None,
         retries: int = 3,
     ) -> int:
         """Commit a snapshot; returns its id.
@@ -416,16 +428,16 @@ class SnapshotLog:
         add lands in the same ``os.link`` as the data that needs it, and
         two concurrent adds of different columns compose through the
         retry. A ``new_fields`` column that a racing winner committed
-        under another type raises ``ValueError``.
+        under another type raises ``ValueError``. Its ``batch_ids`` are
+        the head's plus ``batch_id`` (a rollback keeps the head's: the
+        batches it undoes stay committed).
 
-        Each attempt reads the log in one pass. ``base`` is the head
-        snapshot the caller already read (``head(branch)``): while it is
-        still the newest v-file, the first attempt builds on it without
-        that pass.
+        Each attempt reads the newest v-file and the head it names
+        (``_tip``), not the history.
         """
 
-        def build(version: int, snaps: list[dict]) -> dict:
-            head = _base(snaps, branch)
+        def build(tip: tuple) -> dict:
+            head = self._base(tip, branch)
             head_live = [] if head is None else head["live"]
             if rollback_to is not None:
                 live = list(self.snapshot(rollback_to)["live"])
@@ -447,42 +459,40 @@ class SnapshotLog:
                 state["schema_json"] = _add_fields(
                     state["schema_json"], new_fields
                 )
-            snap = {
-                "snapshot_id": version + 1,
+            return {
                 "parent_id": None if head is None else head["snapshot_id"],
-                "timestamp_ms": int(time.time() * 1000),
                 "operation": operation,
                 "added": list(added),
                 "live": live,
                 "batch_id": batch_id,
+                "batch_ids": _merge_ranges(
+                    [] if head is None else head["batch_ids"],
+                    [] if batch_id is None else [[batch_id, batch_id]],
+                ),
                 **state,
             }
-            if branch != "main":
-                snap["branch"] = branch
-            return snap
 
-        return self._create_next(
-            build, retries, operation, known=base
-        )["snapshot_id"]
+        return self._create_next(build, retries, operation,
+                                 branch)["snapshot_id"]
 
     def _create_next(self, build, retries: int, what: str,
-                     known: dict | None = None) -> dict:
-        """The optimistic commit loop: read the log, ``build(version,
-        snapshots)`` the next snapshot and create ``v<version+1>.json``;
-        on losing that race, re-read and rebuild. ``known``: a snapshot
-        the caller read — if it is still the newest v-file, nothing was
-        committed since, and the first attempt builds on it alone.
-        Returns the created snapshot."""
-        for attempt in range(retries + 1):
-            if (attempt == 0 and known is not None
-                    and self._max_version() == known["snapshot_id"]):
-                version, snaps = known["snapshot_id"], [known]
-            else:
-                version, snaps = self._scan()
-            snap = build(version, snaps)
+                     branch: str = "main") -> dict:
+        """The optimistic commit loop: read the tip (``_tip``), ``build``
+        the next snapshot of ``branch`` from it, and create
+        ``v<top+1>.json`` with ``branch``'s head moved to it; on losing
+        that race, re-read and rebuild. Returns the created snapshot."""
+        for _attempt in range(retries + 1):
+            tip = self._tip()
+            sid = tip[0] + 1
+            snap = {"snapshot_id": sid,
+                    "timestamp_ms": int(time.time() * 1000),
+                    **build(tip),
+                    "heads": {**tip[2], branch: sid}}
+            if branch != "main":
+                snap["branch"] = branch
             try:
                 self._atomic_create(
-                    os.path.join(self.meta_dir, f"v{version + 1}.json"), snap
+                    os.path.join(self.meta_dir, f"v{sid}.json"), snap
                 )
                 return snap
             except FileExistsError:
@@ -497,9 +507,7 @@ class SnapshotLog:
         """Branch name -> head snapshot id, for every branch with at least
         one commit (main included when non-empty)."""
         return {b: s["snapshot_id"]
-                for b, s in _heads(self.snapshots()).items()
-                # detached (tag-pinned survivor of drop_branch)
-                if b is not None}
+                for b, s in self._refs(self._tip()).items()}
 
     def ancestors(self, snapshot_id: int) -> list[int]:
         """Snapshot lineage from ``snapshot_id`` back to the root (parent
@@ -528,62 +536,52 @@ class SnapshotLog:
         data, so a branch forked before a spec change still
         fast-forwards. If main advanced through any OTHER route since the
         branch forked, publishing would silently drop those commits, so
-        raise instead (rebase by re-staging).
+        raise instead (rebase by re-staging). The check walks the
+        branch's lineage.
 
         The publish snapshot is one v-file create, like any commit. It
         records ``published_head`` (the branch head it fast-forwarded —
-        what makes re-publish recognizable) and ``batch_ids`` (every
-        streaming batch id in the published branch lineage — what keeps
-        exactly-once dedup alive after the branch is dropped). It carries
-        the branch head's schema, so the staged column adds are declared
-        on main from that snapshot on, and main head's partition spec and
-        ``specs``, so a spec evolved on main while the branch was staged
-        stays in force."""
+        what makes re-publish recognizable), and its ``batch_ids`` are
+        main's plus the branch's, so exactly-once dedup survives the
+        branch being dropped. It carries the branch head's schema, so the
+        staged column adds are declared on main from that snapshot on,
+        and main head's partition spec and ``specs``, so a spec evolved
+        on main while the branch was staged stays in force."""
 
-        def build(version: int, snaps: list[dict]) -> dict:
-            by_id = {s["snapshot_id"]: s for s in snaps}
-            heads = _heads(snaps)
-            b = heads.get(branch)
+        def build(tip: tuple) -> dict:
+            b = self._ref(tip, branch)
             if b is None:
                 raise LookupError(f"branch {branch!r} has no commits")
-            b_chain = []
-            sid = b["snapshot_id"]
-            while sid in by_id:  # an expired parent ends the lineage
-                b_chain.append(sid)
-                sid = by_id[sid].get("parent_id")
-            m = heads.get("main")
-            mid = 0 if m is None else m["snapshot_id"]
-            while (mid and mid not in b_chain
-                   and by_id.get(mid, {}).get("operation") == "evolve"):
-                mid = by_id[mid].get("parent_id") or 0
-            if mid and mid not in b_chain:
-                ms = by_id.get(mid, {})
-                if not (ms.get("operation") == "publish"
-                        and ms.get("source_branch") == branch
-                        and ms.get("published_head") in b_chain):
-                    raise CommitConflict(
-                        f"cannot fast-forward: main advanced to {mid} after "
-                        f"branch {branch!r} forked (not an ancestor of "
-                        f"{b['snapshot_id']})"
-                    )
-            batch_ids = sorted({
-                by_id[i]["batch_id"] for i in b_chain
-                if by_id[i].get("branch", "main") == branch
-                and by_id[i].get("batch_id") is not None
-            })
+            # an expired parent ends the lineage
+            b_chain = self.ancestors(b["snapshot_id"])
+            m = self._ref(tip, "main")
+            mid, ms = (0, None) if m is None else (m["snapshot_id"], m)
+            while (mid and mid not in b_chain and ms is not None
+                   and ms["operation"] == "evolve"):
+                mid = ms.get("parent_id") or 0
+                ms = self._maybe_snapshot(mid) if mid else None
+            if mid and mid not in b_chain and not (
+                    ms is not None and ms["operation"] == "publish"
+                    and ms.get("source_branch") == branch
+                    and ms.get("published_head") in b_chain):
+                raise CommitConflict(
+                    f"cannot fast-forward: main advanced to {mid} after "
+                    f"branch {branch!r} forked (not an ancestor of "
+                    f"{b['snapshot_id']})"
+                )
             return {
-                "snapshot_id": version + 1,
                 "parent_id": None if m is None else m["snapshot_id"],
-                "timestamp_ms": int(time.time() * 1000),
                 "operation": "publish",
                 "added": [],
                 "live": list(b["live"]),
                 "batch_id": None,
-                "batch_ids": batch_ids,
+                "batch_ids": _merge_ranges(
+                    [] if m is None else m["batch_ids"], b["batch_ids"]
+                ),
                 "source_branch": branch,
                 "published_head": b["snapshot_id"],
                 **self.table_state(m),
-                "schema_json": self.table_state(b)["schema_json"],
+                "schema_json": b["schema_json"],
             }
 
         return self._create_next(build, retries, "publish")["snapshot_id"]
@@ -594,8 +592,9 @@ class SnapshotLog:
         write-audit-publish — staged data vanishes, main is untouched).
         Published data survives because the publish snapshot on main
         carries the live list itself. The branch's staged column adds
-        live only on its own v-files, so they go with it: dropping a
-        branch leaves no declared column behind.
+        and batch ids live only on its own v-files, so they go with it:
+        dropping a branch leaves no declared column behind, and an
+        unpublished batch of it may be written again.
 
         Tags pin snapshots (the same rule ``expire`` honors): a TAGGED
         branch snapshot is not deleted — it is re-homed as a detached
@@ -696,20 +695,11 @@ class SnapshotLog:
         - every TAGGED snapshot (a release tag keeps its data alive
           until the tag is dropped), including detached ones.
 
-        Every retained v-file carries its own schema and spec, so expiry
-        never moves table state; only the batch-id lineage is carried
-        forward (below). On a table whose older v-files predate that,
-        each retained one of them is first rewritten with the state it
-        reads as (``table_state``), since that state folds in column adds
-        carried by the v-files about to go.
-
-        Concurrency contract: retention is a SINGLE-MAINTAINER operation
-        (the same assumption Iceberg's maintenance procedures make).
-        Expire is safe against concurrent COMMITS (commits create new
-        v-files and never touch old ones; the batch-id fold rewrites only
-        an old file), but two concurrent expires race read-modify-write
-        on the fold target and the loser's folded ids could be lost —
-        run retention from one place.
+        Expiry writes no v-file: every branch head is retained and
+        carries its lineage's batch ids and its table state, so the
+        snapshots that go take nothing the log still needs. Only
+        tombstone renames and dir removals happen, so a concurrent commit
+        is unaffected.
         """
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
@@ -722,75 +712,13 @@ class SnapshotLog:
             if b != "main":
                 retained_ids.update(self.ancestors(b_head))
         retained_live: set[str] = set()
-        for sid in retained_ids:
-            snap = self._maybe_snapshot(sid)
-            if snap is not None:
-                retained_live.update(snap["live"])
-        doomed = [s for s in snaps if s["snapshot_id"] not in retained_ids]
-        # an older v-file's state is table.json plus the column adds its
-        # fellow older v-files carry: fix it in before any carrier goes
-        if any(s.get("new_fields") or s.get("staged_new_fields")
-               for s in doomed):
-            for s in snaps:
-                sid = s["snapshot_id"]
-                if sid in retained_ids and "schema_json" not in s:
-                    self._atomic_write(
-                        os.path.join(self.meta_dir, f"v{sid}.json"),
-                        {**s, **self.table_state(s)},
-                    )
-        # Exactly-once across restart + retention: a replayed micro-batch
-        # is detected by its batch id recorded in some retained v-file. If
-        # expiry deletes the snapshot that carried the id while the
-        # batch's DATA lives on in later snapshots' live lists, a sink
-        # instance restarted after this point would rebuild its dedup
-        # cache without the id and re-append the replay — duplicating
-        # committed rows. So fold expired batch ids FORWARD into the
-        # oldest retained main snapshot's ``batch_ids`` (the same
-        # carry-the-lineage mechanism ``publish`` uses for dropped WAP
-        # branches); when that snapshot expires in turn, its folded ids
-        # roll forward again, so the chain never breaks. The fold is
-        # written BEFORE any unlink: a crash mid-expire then leaves
-        # duplicate id records (harmless), never a lost one.
-        expired_batch_ids: set[int] = set()
-        for s in doomed:
-            if s.get("batch_id") is not None:
-                expired_batch_ids.add(s["batch_id"])
-            expired_batch_ids.update(s.get("batch_ids", []))
-        if expired_batch_ids:
-            # fold target: oldest retained MAIN snapshot, else ANY oldest
-            # retained snapshot (a branch-only history — every main
-            # snapshot expired, survivors retained via refs/branches —
-            # must still carry the dedup lineage somewhere). If NOTHING
-            # is retained, folding is impossible and expiring the id-
-            # bearing snapshots would let a restarted sink re-apply those
-            # batches — refuse instead of silently dropping the ids.
-            fold_ids = sorted(main_ids[-keep_last:]) or sorted(retained_ids)
-            tgt_id = None
-            tgt = None
-            for i in fold_ids:
-                snap = self._maybe_snapshot(i)
-                if snap is not None:
-                    tgt_id, tgt = i, snap
-                    break
-            if tgt is None:
-                raise ValueError(
-                    "expire() would drop committed batch ids "
-                    f"{sorted(expired_batch_ids)} with no retained snapshot "
-                    "to fold them into — a restarted sink could re-apply "
-                    "those batches; retain at least one snapshot (or drop "
-                    "the refs pinning only id-free history) before expiring"
-                )
-            merged = set(tgt.get("batch_ids", []))
-            merged |= expired_batch_ids
-            tgt["batch_ids"] = sorted(merged)
-            self._atomic_write(
-                os.path.join(self.meta_dir, f"v{tgt_id}.json"),
-                tgt,
-            )
         expired = []
         expired_live: set[str] = set()
-        for s in doomed:
+        for s in snaps:
             sid = s["snapshot_id"]
+            if sid in retained_ids:
+                retained_live.update(s["live"])
+                continue
             path = os.path.join(self.meta_dir, f"v{sid}.json")
             if os.path.exists(path):
                 self._unlink_snapshot(path)
@@ -805,7 +733,7 @@ class SnapshotLog:
 
     def _unlink_snapshot(self, path: str) -> None:
         """Remove a snapshot file but leave a ``.dropped`` tombstone (an
-        atomic rename), so ``_max_version`` never re-issues its id.
+        atomic rename), so ``_listing`` never re-issues its id.
         Tombstones are tiny, invisible to every snapshot reader (which
         look up exact ``v{sid}.json`` names), and live as long as the
         table's metadata directory."""
@@ -814,7 +742,7 @@ class SnapshotLog:
     def _atomic_write(self, path: str, obj: dict) -> None:
         tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump(obj, f, indent=1)
+            json.dump(obj, f, separators=(",", ":"))
         os.replace(tmp, path)
 
     def _atomic_create(self, path: str, obj: dict) -> None:
@@ -823,7 +751,7 @@ class SnapshotLog:
         racing writer gets FileExistsError (the commit conflict signal)."""
         tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump(obj, f, indent=1)
+            json.dump(obj, f, separators=(",", ":"))
         try:
             os.link(tmp, path)
         finally:

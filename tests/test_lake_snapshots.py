@@ -156,9 +156,8 @@ def test_commit_conflict_retries_against_new_head(spark, tmp_path, batches):
     # simulate a concurrent writer claiming v2 (same live set, no-op commit)
     log._atomic_create(
         os.path.join(log.meta_dir, "v2.json"),
-        {"snapshot_id": 2, "parent_id": 1, "timestamp_ms": 0,
-         "operation": "append", "added": [], "live": log.live_commits(1),
-         "batch_id": None},
+        {**log.snapshot(1), "snapshot_id": 2, "parent_id": 1,
+         "timestamp_ms": 0, "added": [], "heads": {"main": 2}},
     )
     sink.append(b2)  # must land as v3, preserving v2's live set
     assert log.current_id() == 3
@@ -850,9 +849,9 @@ def test_replay_after_restart_and_expiry_stays_exactly_once(
     then maintenance + retention expiring ITS snapshot, then a process
     restart, left the rebuilt batch-id cache blind to the batch — a
     checkpoint-window replay re-appended rows whose data was still live
-    (duplication). expire() now folds expired snapshots' batch ids
-    forward into the oldest retained main snapshot, and the fold must
-    CHAIN through further expiries."""
+    (duplication). Every commit now carries its base's batch ids plus its
+    own, so the retained head holds the expired snapshot's id, and it
+    must stay held through further expiries."""
     b1, _ = batches
 
     def mk():
@@ -863,7 +862,7 @@ def test_replay_after_restart_and_expiry_stays_exactly_once(
     s.append(b1, batch_id=7)
     s.compact()                       # later batchless snapshot
     s.expire_snapshots(keep_last=1)   # drops batch-7's own snapshot
-    s2 = mk()                         # restart: cache rebuilt from files
+    s2 = mk()                         # restart: ids read from the head
     assert s2._replayed_batch(7), "expired batch id lost across restart"
     assert s2.read().count() == b1.count()
     # chain: another batch, another expiry — BOTH ids must survive
@@ -1885,7 +1884,7 @@ def test_review_findings_partition_hardening(spark, tmp_path):
 # -- hostile family #18: torn-process crash injection (r10 VERDICT item 5)
 #
 # Every metadata operation (a write's dir reservation→v-file, publish's
-# and evolve's single v-file, expire's fold→tombstone→rmtree,
+# and evolve's single v-file, expire's tombstone→rmtree,
 # drop_branch's rehome→tombstone→rmtree) is swept with a simulated
 # process kill before EVERY one of its steps: run
 # the op on a fresh copy of a pristine table with a step budget, let the
@@ -1903,7 +1902,7 @@ class _InjectedCrash(BaseException):
 def _crash_after_steps(log, limit):
     """Patch the SnapshotLog instance's torn-able step primitives —
     ``new_commit_dir`` (a write reserving its data dir), ``_atomic_write``
-    (batch-id fold/rehome), ``_atomic_create`` (v-file commit),
+    (rehome), ``_atomic_create`` (v-file commit),
     ``_unlink_snapshot`` (tombstone rename) — plus
     ``shutil.rmtree`` (data-dir removal) so that after ``limit``
     completed steps the next one raises :class:`_InjectedCrash`.
@@ -2013,10 +2012,10 @@ def test_crash_sweep_torn_publish(spark, tmp_path, batches):
 
 
 def test_crash_sweep_torn_expire(spark, tmp_path, batches):
-    """Kill expire between ANY two steps (batch-id fold → per-snapshot
-    tombstone unlinks → data-dir rmtrees): the head live set never
-    changes, committed batch ids are NEVER lost (the fold-before-unlink
-    exactly-once design), every still-retained snapshot stays readable,
+    """Kill expire between ANY two steps (per-snapshot tombstone unlinks
+    → data-dir rmtrees): the head live set never changes, committed
+    batch ids are NEVER lost (the retained head carries them all, and
+    expire writes no v-file), every still-retained snapshot stays readable,
     an unlinked one fails loudly, and a re-run of expire from the torn
     state converges."""
     b1, b2 = batches
@@ -2167,38 +2166,61 @@ def test_corrupted_metadata_fails_loudly_never_silently(spark, tmp_path,
                                                         batches):
     """Family #19 seed (external tampering / disk corruption): a v-file
     that no longer parses — or parses to an empty object — must make
-    metadata consumers RAISE, never silently skip the snapshot (a silent
-    skip would shrink live sets and regress heads with no signal; our
-    own crashes can't produce torn v-files — writes are atomic renames —
-    so any unparseable file is external damage the engine must refuse to
-    guess around)."""
+    every metadata consumer that reads it RAISE, never silently skip the
+    snapshot (a silent skip would shrink live sets and regress heads with
+    no signal; our own crashes can't produce torn v-files — writes are
+    atomic renames — so any unparseable file is external damage the
+    engine must refuse to guess around). Head, id and batch-id lookups
+    read only the newest v-file and the heads it names, so a damaged
+    OLDER v-file leaves them exact, and a damaged newest one fails them
+    all."""
     b1, b2 = batches
     sink = _sink(spark, tmp_path)
     sink.append(b1)
     sink.append(b2)
     log = sink._log
-    target = os.path.join(log.meta_dir, "v1.json")
-    original = open(target).read()
+    older = os.path.join(log.meta_dir, "v1.json")
+    newest = os.path.join(log.meta_dir, "v2.json")
+    originals = {p: open(p).read() for p in (older, newest)}
 
-    # (1) garbled JSON: every metadata consumer raises
-    with open(target, "w") as f:
-        f.write(original[: len(original) // 2])
-    for fn in (log.snapshots, log.current_id, lambda: log.snapshot(1),
-               log.committed_batch_ids, lambda: sink.read().count()):
+    def raises_loudly(fn):
         with pytest.raises(Exception) as exc:
             fn()
         assert not isinstance(exc.value, LookupError)  # not "expired"
 
+    # (1) garbled JSON: every metadata consumer reading the file raises
+    with open(older, "w") as f:
+        f.write(originals[older][: len(originals[older]) // 2])
+    for fn in (log.snapshots, lambda: log.snapshot(1),
+               lambda: sink.read(as_of=1).count(),
+               lambda: log.expire(keep_last=1)):
+        raises_loudly(fn)
+    assert log.current_id() == 2 and sink.read().count() == 30
+    with open(older, "w") as f:
+        f.write(originals[older])
+    with open(newest, "w") as f:
+        f.write(originals[newest][: len(originals[newest]) // 2])
+    for fn in (log.snapshots, log.current_id, lambda: log.snapshot(2),
+               log.committed_batch_ids, lambda: sink.read().count()):
+        raises_loudly(fn)
+
     # (2) valid-but-empty JSON object: consumers that need its fields
     # still fail loudly instead of treating it as an empty snapshot
-    with open(target, "w") as f:
+    with open(newest, "w") as f:
+        f.write("{}")
+    for fn in (log.current_id, lambda: sink.read().count()):
+        with pytest.raises(ValueError, match="layout"):
+            fn()
+    with open(newest, "w") as f:
+        f.write(originals[newest])
+    with open(older, "w") as f:
         f.write("{}")
     with pytest.raises(Exception):
         sink.read(as_of=1).count()
 
     # (3) restored: everything reads again, nothing was "healed" away
-    with open(target, "w") as f:
-        f.write(original)
+    with open(older, "w") as f:
+        f.write(originals[older])
     assert sink.read().count() == 30
     assert sink.read(as_of=1).count() == 10
 
@@ -2209,8 +2231,8 @@ def test_corrupted_commit_marker_fails_loudly(spark, tmp_path, batches):
     torn marker from our own crashes — an unparseable marker is external
     damage, and the old degrade-to-{} path silently skipped the
     esc_pcols recompute (marker values leaking into reads) and
-    mis-grouped the schema fingerprint. Reads must refuse loudly;
-    a MISSING marker (pre-marker-era dir) keeps its legacy fallback."""
+    mis-grouped the schema fingerprint. Reads must refuse loudly, and
+    so for a MISSING marker: every commit dir is written with one."""
     b1, _ = batches
     sink = _sink(spark, tmp_path)
     sink.append(b1)
@@ -2224,8 +2246,9 @@ def test_corrupted_commit_marker_fails_loudly(spark, tmp_path, batches):
     with pytest.raises(ValueError, match="corrupt commit marker"):
         sink.read().count()
 
-    os.unlink(marker)  # legacy dir: falls back, still readable
-    assert sink.read().count() == 10
+    os.unlink(marker)
+    with pytest.raises(ValueError, match="corrupt commit marker"):
+        sink.read().count()
 
     with open(marker, "w") as f:
         f.write(original)

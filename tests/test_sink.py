@@ -234,27 +234,6 @@ def test_overwrite_partitions_after_evolution_uses_logical_membership(
     assert back.where("event_id = 5").select("v").first().v == 999.0
 
 
-def test_partition_evolution_markerless_dirs_use_original_spec(
-    spark, tmp_path, events_df
-):
-    """Commit dirs from before the _bic_spec.json marker existed must
-    group under the table's ORIGINAL spec, not the current one — an
-    upgraded table that then evolves would otherwise mix layouts in one
-    load and crash partition discovery."""
-    sink = _sink(spark, tmp_path)                      # day(ts)
-    sink.append(events_df)
-    data_dir = os.path.join(str(tmp_path), "db", "events", "data")
-    for c in os.listdir(data_dir):
-        marker = os.path.join(data_dir, c, "_bic_spec.json")
-        if os.path.exists(marker):
-            os.remove(marker)                          # simulate pre-upgrade
-    sink.evolve_partition_spec([("event_id", "bucket[4]")])
-    sink.append(events_df)
-    back = sink.read()
-    assert back.count() == 60
-    assert back.where("_p_ts_day IS NULL").count() == 30
-
-
 def test_delete_keeps_null_condition_rows(spark, tmp_path):
     """SQL DELETE semantics: only cond=TRUE rows go; rows where the
     condition evaluates to NULL must SURVIVE (NOT(cond) would drop them

@@ -11,8 +11,10 @@ the SnapshotLog — the round-3 advice findings:
 4. ``publish`` carries the branch lineage's streaming batch ids so
    exactly-once dedup survives commit→publish→drop_branch.
 
-Then the table state each v-file carries (schema, partition spec) and the
-rewrite validation of ``commit(replaces=)``.
+Then the table state each v-file carries (schema, partition spec), the
+rewrite validation of ``commit(replaces=)``, and the branch heads and
+batch-id lineage each v-file carries, which bound every head and batch-id
+lookup to the newest v-file and the heads it names.
 
 All tests drive SnapshotLog directly (no Spark session needed): commits are
 fake data dirs containing one marker file.
@@ -296,10 +298,11 @@ def test_snapshot_ids_never_reused_after_expire_of_detached_max(log):
 
 
 def test_expire_folds_batch_ids_without_main_snapshots(log):
-    """A history with NO main snapshots (branch-only) must still carry
-    expired batch ids forward: the fold falls back to the oldest retained
-    snapshot instead of silently dropping the ids (a restarted sink would
-    re-apply those batches)."""
+    """A history with NO main snapshots (branch-only) must keep expired
+    batch ids: the branch head carries its lineage's ids, so expiring
+    the snapshot a batch committed in drops no id (a restarted sink
+    would otherwise re-apply that batch), even when the head no longer
+    links back to it."""
     s1, _ = _append(log, branch="feature", batch_id=7)
     s2, _ = _append(log, branch="feature", batch_id=8)
     # detach s1 from the branch lineage: rewrite s2 as the branch's sole
@@ -314,7 +317,7 @@ def test_expire_folds_batch_ids_without_main_snapshots(log):
 
     expired, _removed = log.expire(keep_last=1)
     assert expired == [s1]
-    # batch id 7 folded into the retained branch snapshot, dedup intact
+    # batch id 7 is still in the retained branch head's lineage
     assert 7 in log.committed_batch_ids()
     assert 8 in log.committed_batch_ids()
 
@@ -395,29 +398,39 @@ def test_rewrite_keeps_an_append_that_lands_after_its_read(log):
 
 
 def test_commit_reads_each_vfile_once_per_attempt(log, monkeypatch):
-    """Each commit attempt derives the branch heads and its base from
-    one pass over the v-files, on main and on a branch's first commit."""
-    for _ in range(12):
-        _append(log)
-    n = len(log.snapshots())
+    """Head, id and batch-id lookups and each commit attempt read the
+    newest v-file and the heads it names: a number of v-files that does
+    not grow with the history."""
+    for i in range(300):
+        _append(log, batch_id=i)
+    _append(log, branch="side", batch_id=1000)
+    _append(log)
+    assert len(log.snapshots()) == 302
     reads = []
     orig = SnapshotLog.snapshot
     monkeypatch.setattr(SnapshotLog, "snapshot",
                         lambda self, sid: reads.append(sid) or orig(self, sid))
-    _append(log)
-    assert sorted(reads) == list(range(1, n + 1))
-    reads.clear()
-    _append(log, branch="fresh")
-    assert sorted(reads) == list(range(1, n + 2))
-    # a caller that already read the head hands it in: while that is
-    # still the newest v-file, the commit makes no second pass
-    _append(log)
-    head = log.head()
-    reads.clear()
-    name, path = log.new_commit_dir()
-    os.makedirs(path)
-    log.commit("append", [name], base=head)
-    assert reads == []
+
+    def count(fn):
+        reads.clear()
+        fn()
+        return len(reads)
+
+    newest = log.current_id()
+    # the newest v-file is main's head: one read serves both
+    assert count(log.head) == 1
+    assert count(log.current_id) == 1
+    assert count(lambda: log.head("side")) == 2
+    # the newest v-file plus each other head it names
+    assert count(log.branches) == 2
+    assert count(log.committed_batch_ids) == 2
+    assert count(lambda: _append(log)) == 1             # a main commit
+    assert count(lambda: _append(log, branch="side")) == 2
+    # a branch's first commit: the newest v-file and main's head
+    assert count(lambda: _append(log, branch="fresh")) == 2
+    assert count(lambda: _append(log, branch="fresh")) == 1
+    assert log.committed_batch_ids() == set(range(300)) | {1000}
+    assert log.current_id() == newest + 1
 
 
 def test_table_json_is_written_once(log):
@@ -480,29 +493,108 @@ def test_branch_forked_before_spec_evolution_publishes(log):
         log.publish("wap2")
 
 
-def test_upgraded_table_binds_columns_its_old_vfiles_carried(tmp_path):
-    """A table written before v-files carried their state: its schema is
-    table.json's plus the column adds its main-line v-files carried, so
-    a column an interrupted older writer never declared in table.json
-    still binds — through the first new commit and through expiry."""
+# -- branch heads and batch-id lineage in every v-file ---------------------
+
+
+def _vfile_bytes(log: SnapshotLog) -> dict[str, bytes]:
+    out = {}
+    for n in os.listdir(log.meta_dir):
+        if n.startswith("v") and n.endswith(".json"):
+            with open(os.path.join(log.meta_dir, n), "rb") as f:
+                out[n] = f.read()
+    return out
+
+
+def test_expire_writes_no_vfile_and_keeps_every_batch_id(log):
+    for i in range(5):
+        _append(log, batch_id=i)
+    _append(log, branch="wap", batch_id=50)
+    log.publish("wap")
+    log.drop_branch("wap")
+    log.commit("replace", [], overwrite=True)
+    before = _vfile_bytes(log)
+    expired, _ = log.expire(keep_last=1)
+    assert expired
+    after = _vfile_bytes(log)
+    assert set(after) < set(before)
+    assert all(after[n] == before[n] for n in after)
+    assert log.committed_batch_ids() == set(range(5)) | {50}
+
+
+def test_rollback_keeps_the_heads_batch_ids(log):
+    first, _ = _append(log, batch_id=0)
+    _append(log, batch_id=1)
+    _append(log, batch_id=2)
+    sid = log.commit("rollback", [], rollback_to=first)
+    assert log.live_commits() == log.live_commits(first)
+    assert log.snapshot(sid)["batch_ids"] == [[0, 2]]
+    log.expire(keep_last=1)
+    assert log.committed_batch_ids() == {0, 1, 2}
+
+
+def test_publish_carries_the_branch_ids_to_main(log):
+    _append(log, batch_id=0)
+    _append(log, branch="wap", batch_id=7)
+    _append(log, branch="wap", batch_id=8)
+    pid = log.publish("wap")
+    assert log.snapshot(pid)["batch_ids"] == [[0, 0], [7, 8]]
+    assert log.head()["batch_ids"] == [[0, 0], [7, 8]]
+
+
+def test_dropping_an_unpublished_branch_drops_its_ids(log):
+    _append(log, batch_id=0)
+    _append(log, branch="wap", batch_id=7)
+    assert log.committed_batch_ids() == {0, 7}
+    log.drop_branch("wap")
+    assert log.committed_batch_ids() == {0}
+
+
+def test_dropping_the_branch_holding_the_newest_vfile(log):
+    _append(log)
+    m2, _ = _append(log)
+    b, _ = _append(log, branch="wap", batch_id=3)
+    log.drop_branch("wap")
+    assert log.current_id() == m2
+    assert log.head("wap")["snapshot_id"] == m2
+    assert log.branches() == {"main": m2}
+    sid, _ = _append(log)
+    assert sid == b + 1
+    assert log.snapshot(sid)["parent_id"] == m2
+
+
+def test_branch_name_reused_after_a_drop_forks_from_main(log):
+    _append(log, batch_id=0)
+    _, staged = _append(log, branch="wap", batch_id=5)
+    tagged, _ = _append(log, branch="wap", batch_id=6)
+    log.set_tag("keep", tagged)       # re-homed detached by the drop
+    log.drop_branch("wap")
+    main_head = log.current_id()
+    sid, name = _append(log, branch="wap", batch_id=9)
+    assert log.snapshot(sid)["parent_id"] == main_head
+    assert log.live_commits(branch="wap") == log.live_commits() + [name]
+    assert staged not in log.live_commits(branch="wap")
+    assert log.committed_batch_ids() == {0, 9}
+
+
+def test_epochs_committed_in_order_store_one_range(log):
+    name, path = log.new_commit_dir()
+    os.makedirs(path)
+    for epoch in range(1000):
+        log.commit("append", [], batch_id=epoch)
+    assert log.head()["batch_ids"] == [[0, 999]]
+    assert log.committed_batch_ids() == set(range(1000))
+
+
+def test_vfile_without_heads_raises(log):
     import json as _json
 
-    log = SnapshotLog(str(tmp_path / "old"))
-    log.init_table({"schema_json": {"type": "struct",
-                                    "fields": [_field("a")]},
-                    "partition_spec": [], "spec_id": 0})
-    for sid, extra in ((1, {}), (2, {"new_fields": [_field("q", "double")]}),
-                       (3, {})):
-        snap = {"snapshot_id": sid, "parent_id": sid - 1 or None,
-                "timestamp_ms": 0, "operation": "append", "added": [],
-                "live": [], "batch_id": sid, **extra}
-        with open(os.path.join(log.meta_dir, f"v{sid}.json"), "w") as f:
-            _json.dump(snap, f)
-    assert _declared(log) == {"a": "long", "q": "double"}
-    with pytest.raises(ValueError, match="additive-only"):
-        _add_column(log, "q", "long")
-    log.expire(keep_last=1)   # the carrier v2 goes
-    assert _declared(log) == {"a": "long", "q": "double"}
-    assert log.committed_batch_ids() == {1, 2, 3}
-    _add_column(log, "z")
-    assert _declared(log) == {"a": "long", "q": "double", "z": "long"}
+    _append(log)
+    path = os.path.join(log.meta_dir, f"v{log.current_id()}.json")
+    with open(path) as f:
+        snap = _json.load(f)
+    del snap["heads"]
+    log._atomic_write(path, snap)
+    for fn in (log.head, log.current_id, log.committed_batch_ids,
+               lambda: _append(log)):
+        with pytest.raises(ValueError, match="layout"):
+            fn()
